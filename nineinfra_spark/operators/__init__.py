@@ -13,6 +13,7 @@ from nineinfra_spark.operators.bloomindex import (
 from nineinfra_spark.operators.components import star_components, star_contract
 from nineinfra_spark.operators.ivf import IvfTrainResult, assign_cells, refine_centroids
 from nineinfra_spark.operators.ivf import train as ivf_train
+from nineinfra_spark.operators.lsh import band_pairs
 from nineinfra_spark.operators.merge import (
     delete_where,
     merge_into_table,
@@ -50,6 +51,7 @@ __all__ = [
     "refine_centroids",
     "ivf_train",
     "IvfTrainResult",
+    "band_pairs",
     "star_components",
     "star_contract",
     "merge_upsert",

@@ -41,14 +41,16 @@ _load_all()
 #: queries that most need a fresh driver-green differential row are
 #: pinned first — r17 composition (verdict item 3): every query whose
 #: PLAN changed in the r17 optimization session first (standing "plan
-#: changes take a window slot" rule), then the 13 r16 plan-changed
+#: changes take a window slot" rule; `dedup_incremental_batch` joined
+#: them when the LSH band joins moved to operators/lsh.py, displacing
+#: the last r12-cohort fill row), then the 13 r16 plan-changed
 #: queries that carried only builder-side verification, then the
 #: staged debt (`agg_cms_heavy_hitters`, `events_rolling_active_users`
 #: — displaced in r16 — plus `text_trigram_lm_score`,
 #: `catalog_merge_timetravel`), then r12-cohort fill (the oldest
 #: artifact stamps, alphabetical). ZERO new registrations: the
 #: registry stays at rotation steady state (250 = 5 windows x 50).
-#: The 18 r12-stamped rows that did not fit lead the r18 window
+#: The 17 r12-stamped rows that did not fit lead the r18 window
 #: (enumerated in the trailing comment; derivation pinned by
 #: tests/test_window_rotation.py).
 _VERIFY_FIRST = [
@@ -63,6 +65,7 @@ _VERIFY_FIRST = [
     "agg_weighted_median",
     "dedup_embedding_clusters",
     "dedup_connected_clusters",
+    "dedup_incremental_batch",
     # plan-changed in r16, builder-verified only (r16 verdict item 5)
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -105,7 +108,6 @@ _VERIFY_FIRST = [
     "src_python_datasource",
     "stream_dedup_index",
     "stream_dedup_watermark",
-    "stream_python_datasource",
     # deferred to r18 (latest stamp r12 — artifact-derived; pinned by
     # tests/test_window_rotation.py):
     # stream_rollup_maintenance

@@ -19,13 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nineinfra_spark.plans._util import t
-from nineinfra_spark.plans.ext_dedup import (
-    N_EVAL_DOCS,
-    SH_DUCK,
-    SH_SPARK,
-    _cpu_spread,
-)
+from nineinfra_spark.plans._util import cpu_spread, t
+from nineinfra_spark.plans.ext_dedup import N_EVAL_DOCS, SH_DUCK, SH_SPARK
 from nineinfra_spark.plans.ext_text import TOKS_DUCK, TOKS_SPARK, _STOP
 from nineinfra_spark.plans.registry import query
 
@@ -120,10 +115,10 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the in-body comment). Shuffle bound: two corpus-keyed window
     exchanges, both on the same uniform md5 key."""
     docs = t(spark, sf_dir, "documents")
-    # corpus side: spread the CPU-heavy tokenize (see ext_dedup
-    # _cpu_spread); eval side below reads the raw table so its
+    # corpus side: spread the CPU-heavy tokenize (see
+    # _util.cpu_spread); eval side below reads the raw table so its
     # doc_id < N_EVAL_DOCS filter still reaches the scan
-    tok = _cpu_spread(docs).select(
+    tok = cpu_spread(docs).select(
         "doc_id", "lang", "source", F.expr(TOKS_SPARK).alias("toks")
     )
     feat = tok.filter(F.size("toks") > 0).select(
@@ -258,7 +253,7 @@ def curate_rejection_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates instead of row output — no new shuffle shape.
     """
     docs = t(spark, sf_dir, "documents")
-    tok = _cpu_spread(docs).select(
+    tok = cpu_spread(docs).select(
         "doc_id", F.expr(TOKS_SPARK).alias("toks")
     )
     corpus = tok.filter(F.col("doc_id") >= N_EVAL_DOCS)

@@ -19,12 +19,15 @@ Scale design (the 100 TB posture):
   hash — no skew by construction.
 - Near-dup: NEVER all-pairs. Candidate pairs come only from shared
   5-gram shingles (selective: random docs rarely share an exact
-  5-token sequence) or shared LSH band buckets. The self-join is keyed
-  on shingle/bucket, so the shuffle is bounded by the posting lists,
-  and a hot shingle (boilerplate) is exactly what AQE skew-join
-  splits. For adversarial corpora, add a document-frequency cutoff on
-  shingles before the join (drop shingles with DF > K) — standard
-  positional-filtering; not needed at the tested scale.
+  5-token sequence) or shared LSH band buckets
+  (``operators/lsh.py:band_pairs``, the one banded self-join every
+  LSH query here and in the multimodal/similarity modules uses). The
+  self-join is keyed on shingle/bucket, so the shuffle is bounded by
+  the posting lists, and a hot shingle (boilerplate) is exactly what
+  AQE skew-join splits. For adversarial corpora, add a
+  document-frequency cutoff on shingles before the join (drop
+  shingles with DF > K) — standard positional-filtering; not needed
+  at the tested scale.
 - Verification: exact Jaccard via array_intersect on the two docs'
   distinct-shingle arrays — per-candidate-pair work, no re-explosion.
 - Thresholding: ``jaccard >= 0.5`` is evaluated as the integer
@@ -36,9 +39,10 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nineinfra_spark.operators.lsh import band_pairs
 from nineinfra_spark.plans._util import cpu_spread, t
 from nineinfra_spark.plans.ext_text import TOKS_DUCK, TOKS_SPARK
 from nineinfra_spark.plans.registry import query
@@ -70,15 +74,9 @@ def _h_duck(expr: str) -> str:
     return f"CAST(CONCAT('0x', SUBSTR(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def _cpu_spread(docs: DataFrame) -> DataFrame:
-    """See plans/_util.cpu_spread — kept under its historical name for
-    this module's callers (the shingle family is the main CPU hog)."""
-    return cpu_spread(docs)
-
-
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id + distinct 5-gram shingle array (docs with ≥1 shingle)."""
-    docs = _cpu_spread(t(spark, sf_dir, "documents"))
+    docs = cpu_spread(t(spark, sf_dir, "documents"))
     return (
         docs.select("doc_id", F.expr(TOKS_SPARK).alias("toks"))
         .select("doc_id", F.expr(SH_SPARK).alias("shingles"))
@@ -136,6 +134,57 @@ _JAC6_SPARK = (
 )
 _JAC6_DUCK = "((2000000 * common + union_sz) // (2 * union_sz)) / 1e6"
 
+#: DuckDB: exact-Jaccard ≥ 0.5 verify of ``cand(doc_a, doc_b)`` against
+#: ``sz(doc_id, shingles, n)`` — the tail of every pair oracle below.
+_VERIFY_DUCK = f"""ver AS (
+        SELECT doc_a, doc_b,
+               len(list_intersect(a.shingles, b.shingles)) AS common,
+               a.n + b.n - len(list_intersect(a.shingles, b.shingles)) AS union_sz,
+               a.n + b.n AS total
+        FROM cand
+        JOIN sz a ON cand.doc_a = a.doc_id
+        JOIN sz b ON cand.doc_b = b.doc_id
+    )
+    SELECT doc_a, doc_b, common, union_sz, {_JAC6_DUCK} AS jaccard
+    FROM ver WHERE 3 * common >= total
+    """
+
+
+def _verify_jaccard(cand: DataFrame, sz: DataFrame) -> DataFrame:
+    """Exact shingle-Jaccard ≥ 0.5 verify of candidate pairs
+    ``cand(doc_a, doc_b)`` against ``sz(doc_id, shingles, n)``: both
+    docs' shingle arrays are re-attached and intersected, so the work
+    is per candidate pair, with no re-explosion. Returns ``(doc_a,
+    doc_b, common, union_sz, jaccard)``."""
+    a = sz.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("shingles").alias("sh_a"),
+        F.col("n").alias("na"),
+    )
+    b = sz.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("shingles").alias("sh_b"),
+        F.col("n").alias("nb"),
+    )
+    return (
+        cand.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("common"),
+            (F.col("na") + F.col("nb")).alias("total"),
+        )
+        .filter(3 * F.col("common") >= F.col("total"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "common",
+            (F.col("total") - F.col("common")).alias("union_sz"),
+        )
+        .select("doc_a", "doc_b", "common", "union_sz", F.expr(_JAC6_SPARK).alias("jaccard"))
+    )
+
 
 @query(
     "dedup_shingle_jaccard",
@@ -150,18 +199,7 @@ _JAC6_DUCK = "((2000000 * common + union_sz) // (2 * union_sz)) / 1e6"
         SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
         FROM ex x JOIN ex y ON x.s = y.s AND x.doc_id < y.doc_id
     ),
-    ver AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(a.shingles, b.shingles)) AS common,
-               a.n + b.n - len(list_intersect(a.shingles, b.shingles)) AS union_sz,
-               a.n + b.n AS total
-        FROM cand
-        JOIN sz a ON cand.doc_a = a.doc_id
-        JOIN sz b ON cand.doc_b = b.doc_id
-    )
-    SELECT doc_a, doc_b, common, union_sz, {_JAC6_DUCK} AS jaccard
-    FROM ver WHERE 3 * common >= total
-    """,
+    {_VERIFY_DUCK}""",
     tags=("ext", "dedup", "jaccard"),
 )
 def dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,34 +229,7 @@ def dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
-    a = sz.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("n").alias("na"),
-    )
-    b = sz.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("common"),
-            (F.col("na") + F.col("nb")).alias("total"),
-        )
-        .filter(3 * F.col("common") >= F.col("total"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "common",
-            (F.col("total") - F.col("common")).alias("union_sz"),
-        )
-        .select("doc_a", "doc_b", "common", "union_sz", F.expr(_JAC6_SPARK).alias("jaccard"))
-    )
+    return _verify_jaccard(cand, sz)
 
 
 # -- banded MinHash LSH ----------------------------------------------------
@@ -231,8 +242,61 @@ def dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: allowed to happen).
 _H2_MOD = 1 << 56
 
+#: Band-key columns of :func:`minhash_bands`, in band order.
+MINHASH_BAND_COLS = [f"b{b}" for b in range(N_BANDS)]
 
-def _minhash_oracle() -> str:
+#: Set-similarity length filter on band-pair candidates carrying the
+#: full shingle count ``n``: common <= min(na, nb), so a pair with
+#: 3*min(na, nb) < na + nb can never verify at Jaccard ≥ 0.5. Pruning
+#: it in the band join is result-identical.
+_LENGTH_OK = "3 * least(n_a, n_b) >= n_a + n_b"
+
+
+def minhash_bands(ex: DataFrame, *aggs: Column) -> DataFrame:
+    """MinHash band keys: ``ex(doc_id, s, ...)``, one row per distinct
+    shingle → ``(doc_id, *aggs, b0 .. b{N_BANDS-1})``.
+
+    The N_PERM double-hashed minhashes are one groupBy (mins computed
+    map-side); band ``b`` is the md5 of its ROWS_PER_BAND minhashes.
+    ``aggs`` ride the same aggregate (e.g. the shingle count for the
+    length filter)."""
+    sig = ex.select(
+        "*",
+        F.expr(_h_spark("concat('a:', s)")).alias("h1"),
+        (F.expr(_h_spark("concat('b:', s)")) % _H2_MOD).alias("h2"),
+    ).groupBy("doc_id").agg(
+        *[F.min(F.col("h1") + k * F.col("h2")).alias(f"m{k}") for k in range(N_PERM)],
+        *aggs,
+    )
+    return sig.select(
+        "doc_id",
+        *sig.columns[1 + N_PERM :],
+        *[
+            F.md5(
+                F.concat_ws(
+                    ":", *[F.col(f"m{b * ROWS_PER_BAND + j}") for j in range(ROWS_PER_BAND)]
+                )
+            ).alias(col)
+            for b, col in enumerate(MINHASH_BAND_COLS)
+        ],
+    )
+
+
+_EX_DUCK = "ex AS (SELECT doc_id, unnest(shingles) AS s FROM sz)"
+_SELF_CAND_DUCK = """
+        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+        FROM bb x JOIN bb y
+          ON x.band_idx = y.band_idx AND x.band_key = y.band_key
+         AND x.doc_id < y.doc_id"""
+
+
+def _minhash_oracle(
+    ex: str = _EX_DUCK, cand: str = _SELF_CAND_DUCK, tail: str = _VERIFY_DUCK
+) -> str:
+    """DuckDB twin of the MinHash pipeline: shingles → ``ex(doc_id, s)``
+    → signatures → band buckets ``bb(doc_id, band_idx, band_key)`` →
+    ``cand`` → ``tail``. Written from the hash and shingle constants
+    alone, so it checks the Spark path instead of sharing its code."""
     mins = ",\n           ".join(
         f"MIN(h1 + {k} * h2) AS m{k}" for k in range(N_PERM)
     )
@@ -250,11 +314,12 @@ def _minhash_oracle() -> str:
     WITH d AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM documents),
     sh AS (SELECT doc_id, {SH_DUCK} AS shingles FROM d),
     sz AS (SELECT doc_id, shingles, len(shingles) AS n FROM sh WHERE len(shingles) > 0),
+    {ex},
     hs AS (
         SELECT doc_id,
                {_h_duck("'a:' || s")} AS h1,
                {_h_duck("'b:' || s")} % {_H2_MOD} AS h2
-        FROM (SELECT doc_id, unnest(shingles) AS s FROM sz)
+        FROM ex
     ),
     sig AS (
         SELECT doc_id,
@@ -269,24 +334,9 @@ def _minhash_oracle() -> str:
     bb AS (
         {band_union}
     ),
-    cand AS (
-        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        FROM bb x JOIN bb y
-          ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-         AND x.doc_id < y.doc_id
+    cand AS ({cand}
     ),
-    ver AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(a.shingles, b.shingles)) AS common,
-               a.n + b.n - len(list_intersect(a.shingles, b.shingles)) AS union_sz,
-               a.n + b.n AS total
-        FROM cand
-        JOIN sz a ON cand.doc_a = a.doc_id
-        JOIN sz b ON cand.doc_b = b.doc_id
-    )
-    SELECT doc_a, doc_b, common, union_sz, {_JAC6_DUCK} AS jaccard
-    FROM ver WHERE 3 * common >= total
-    """
+    {tail}"""
 
 
 @query("dedup_minhash_pairs", oracle=_minhash_oracle(), tags=("ext", "dedup", "lsh"))
@@ -303,98 +353,30 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: signatures are one explode + one groupBy (16 mins computed
     map-side); candidates come from equality self-join on (band_idx,
     band_key) — shuffle bounded by bucket posting lists, never
-    all-pairs; verification touches candidate pairs only.
+    all-pairs; verification touches candidate pairs only. The shingle
+    count rides the signature aggregate for free (``ex`` has exactly n
+    rows per doc), so the band join applies the length filter and only
+    surviving pairs reach the distinct and the verify joins.
     """
     sz = _shingled(spark, sf_dir).select(
         "doc_id", "shingles", F.size("shingles").alias("n")
     )
     # Same three-consumer reuse as dedup_shingle_jaccard (see above).
     sz = sz.localCheckpoint(eager=False)
-    ex = sz.select("doc_id", F.explode("shingles").alias("s")).select(
-        "doc_id",
-        F.expr(_h_spark("concat('a:', s)")).alias("h1"),
-        (F.expr(_h_spark("concat('b:', s)")) % _H2_MOD).alias("h2"),
-    )
-    # r17 (verdict item 7, guide §2.3 "shuffle keys/metadata, not
-    # payloads"): the 8-byte shingle COUNT rides the signature
-    # aggregate for free (ex has exactly n rows per doc — shingles are
-    # distinct), the band join prunes length-incompatible candidates
-    # with the classic set-similarity length filter — common <=
-    # min(na, nb), so 3*min(na, nb) < na+nb can never verify — and
-    # only surviving pairs reach the pair-dedup distinct and the two
-    # shingle-payload re-attach joins. Result-identical by the bound.
-    sig = ex.groupBy("doc_id").agg(
-        *[F.min(F.col("h1") + k * F.col("h2")).alias(f"m{k}") for k in range(N_PERM)],
-        F.count(F.lit(1)).alias("n"),
-    )
-    bands = sig.select(
-        "doc_id",
-        "n",
-        *[
-            F.md5(
-                F.concat_ws(
-                    ":", *[F.col(f"m{b * ROWS_PER_BAND + j}") for j in range(ROWS_PER_BAND)]
-                )
-            ).alias(f"b{b}")
-            for b in range(N_BANDS)
-        ],
-    )
-    # Pin the per-doc signature table before the band self-join: the
-    # sig subtree (per-shingle double-md5 + 16 partial mins) is the
-    # most expensive stage of this query and WITHOUT the pin both
-    # sides of the self-join compute it independently (no exchange
-    # reuse across aliased subtrees under AQE — two concurrent
-    # fact-sized stage jobs, measured 3.3 s + 3.5 s at sf0.1). Same
-    # device as the phash queries' `hashes` checkpoint; |docs|-sized,
-    # the standard persisted-intermediate at warehouse scale.
+    ex = sz.select("doc_id", F.explode("shingles").alias("s"))
+    bands = minhash_bands(ex, F.count(F.lit(1)).alias("n"))
+    # The signature subtree is this query's most expensive stage (see
+    # operators/lsh.py on pinning a self-join input).
     bands = bands.localCheckpoint(eager=False)
-    bb = bands.select(
+    cand = band_pairs(
+        bands,
         "doc_id",
-        "n",
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(N_BANDS)])).alias(
-            "band_idx", "band_key"
-        ),
+        MINHASH_BAND_COLS,
+        names=("doc_a", "doc_b"),
+        carry=["n"],
+        keep=F.expr(_LENGTH_OK),
     )
-    cand = (
-        bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (3 * F.least("x.n", "y.n") >= F.col("x.n") + F.col("y.n")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    a = sz.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("n").alias("na"),
-    )
-    b = sz.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("common"),
-            (F.col("na") + F.col("nb")).alias("total"),
-        )
-        .filter(3 * F.col("common") >= F.col("total"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "common",
-            (F.col("total") - F.col("common")).alias("union_sz"),
-        )
-        .select("doc_a", "doc_b", "common", "union_sz", F.expr(_JAC6_SPARK).alias("jaccard"))
-    )
+    return _verify_jaccard(cand, sz)
 
 
 # -- SimHash ---------------------------------------------------------------
@@ -823,51 +805,13 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- incremental (delta-vs-index) near-dup dedup ---------------------------
 
-
-def _incremental_oracle() -> str:
-    mins = ",\n           ".join(
-        f"MIN(h1 + {k} * h2) AS m{k}" for k in range(N_PERM)
-    )
-    band_cols = ",\n           ".join(
-        "md5(concat_ws(':', "
-        + ", ".join(f"m{b * ROWS_PER_BAND + j}" for j in range(ROWS_PER_BAND))
-        + f")) AS b{b}"
-        for b in range(N_BANDS)
-    )
-    band_union = "\n        UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, b{b} AS band_key FROM bands"
-        for b in range(N_BANDS)
-    )
-    return f"""
-    WITH d AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM documents),
-    sh AS (SELECT doc_id, {SH_DUCK} AS shingles FROM d),
-    sz AS (SELECT doc_id, shingles, len(shingles) AS n FROM sh WHERE len(shingles) > 0),
-    hs AS (
-        SELECT doc_id,
-               {_h_duck("'a:' || s")} AS h1,
-               {_h_duck("'b:' || s")} % {_H2_MOD} AS h2
-        FROM (SELECT doc_id, unnest(shingles) AS s FROM sz)
-    ),
-    sig AS (
-        SELECT doc_id,
-           {mins}
-        FROM hs GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id,
-           {band_cols}
-        FROM sig
-    ),
-    bb AS (
-        {band_union}
-    ),
-    cand AS (
+_PROBE_CAND_DUCK = """
         SELECT DISTINCT x.doc_id AS delta_id, y.doc_id AS index_id
         FROM bb x JOIN bb y
           ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-        WHERE x.doc_id % 2 = 1 AND y.doc_id % 2 = 0
-    ),
-    ver AS (
+        WHERE x.doc_id % 2 = 1 AND y.doc_id % 2 = 0"""
+
+_INCREMENTAL_TAIL_DUCK = """ver AS (
         SELECT delta_id,
                CASE WHEN 3 * len(list_intersect(a.shingles, b.shingles))
                          >= a.n + b.n
@@ -894,7 +838,7 @@ def _incremental_oracle() -> str:
 
 @query(
     "dedup_incremental_batch",
-    oracle=_incremental_oracle(),
+    oracle=_minhash_oracle(cand=_PROBE_CAND_DUCK, tail=_INCREMENTAL_TAIL_DUCK),
     tags=("ext", "dedup", "lsh", "incremental"),
 )
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -920,44 +864,13 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "shingles", F.size("shingles").alias("n")
     )
     sz = sz.localCheckpoint(eager=False)
-    ex = sz.select("doc_id", F.explode("shingles").alias("s")).select(
+    bands = minhash_bands(sz.select("doc_id", F.explode("shingles").alias("s")))
+    cand = band_pairs(
+        bands.filter(F.col("doc_id") % 2 == 1),
         "doc_id",
-        F.expr(_h_spark("concat('a:', s)")).alias("h1"),
-        (F.expr(_h_spark("concat('b:', s)")) % _H2_MOD).alias("h2"),
-    )
-    sig = ex.groupBy("doc_id").agg(
-        *[F.min(F.col("h1") + k * F.col("h2")).alias(f"m{k}") for k in range(N_PERM)]
-    )
-    bands = sig.select(
-        "doc_id",
-        *[
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    *[F.col(f"m{b * ROWS_PER_BAND + j}") for j in range(ROWS_PER_BAND)],
-                )
-            ).alias(f"b{b}")
-            for b in range(N_BANDS)
-        ],
-    )
-    bb = bands.select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(N_BANDS)])).alias(
-            "band_idx", "band_key"
-        ),
-    )
-    cand = (
-        bb.filter(F.col("doc_id") % 2 == 1)
-        .alias("x")
-        .join(
-            bb.filter(F.col("doc_id") % 2 == 0).alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_key") == F.col("y.band_key")),
-        )
-        .select(
-            F.col("x.doc_id").alias("delta_id"), F.col("y.doc_id").alias("index_id")
-        )
-        .distinct()
+        MINHASH_BAND_COLS,
+        names=("delta_id", "index_id"),
+        probe=bands.filter(F.col("doc_id") % 2 == 0),
     )
     a = sz.select(
         F.col("doc_id").alias("delta_id"),
@@ -1007,72 +920,16 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 DF_CAP = 20  # drop shingles occurring in more than this many docs
 
 
-def _minhash_capped_oracle() -> str:
-    mins = ",\n           ".join(
-        f"MIN(h1 + {k} * h2) AS m{k}" for k in range(N_PERM)
-    )
-    band_cols = ",\n           ".join(
-        "md5(concat_ws(':', "
-        + ", ".join(f"m{b * ROWS_PER_BAND + j}" for j in range(ROWS_PER_BAND))
-        + f")) AS b{b}"
-        for b in range(N_BANDS)
-    )
-    band_union = "\n        UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, b{b} AS band_key FROM bands"
-        for b in range(N_BANDS)
-    )
-    return f"""
-    WITH d AS (SELECT doc_id, {TOKS_DUCK} AS toks FROM documents),
-    sh AS (SELECT doc_id, {SH_DUCK} AS shingles FROM d),
-    sz AS (SELECT doc_id, shingles, len(shingles) AS n FROM sh WHERE len(shingles) > 0),
-    ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sz),
+@query(
+    "dedup_minhash_df_capped",
+    oracle=_minhash_oracle(
+        ex=f"""ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sz),
     df AS (SELECT s, COUNT(*) AS nd FROM ex0 GROUP BY s),
     ex AS (
         SELECT ex0.doc_id, ex0.s FROM ex0
         JOIN df ON ex0.s = df.s WHERE df.nd <= {DF_CAP}
+    )"""
     ),
-    hs AS (
-        SELECT doc_id,
-               {_h_duck("'a:' || s")} AS h1,
-               {_h_duck("'b:' || s")} % {_H2_MOD} AS h2
-        FROM ex
-    ),
-    sig AS (
-        SELECT doc_id,
-           {mins}
-        FROM hs GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id,
-           {band_cols}
-        FROM sig
-    ),
-    bb AS (
-        {band_union}
-    ),
-    cand AS (
-        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        FROM bb x JOIN bb y
-          ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-         AND x.doc_id < y.doc_id
-    ),
-    ver AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(a.shingles, b.shingles)) AS common,
-               a.n + b.n - len(list_intersect(a.shingles, b.shingles)) AS union_sz,
-               a.n + b.n AS total
-        FROM cand
-        JOIN sz a ON cand.doc_a = a.doc_id
-        JOIN sz b ON cand.doc_b = b.doc_id
-    )
-    SELECT doc_a, doc_b, common, union_sz, {_JAC6_DUCK} AS jaccard
-    FROM ver WHERE 3 * common >= total
-    """
-
-
-@query(
-    "dedup_minhash_df_capped",
-    oracle=_minhash_capped_oracle(),
     tags=("ext", "dedup", "lsh", "df-cap"),
 )
 def dedup_minhash_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1094,14 +951,10 @@ def dedup_minhash_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "shingles", F.size("shingles").alias("n")
     )
     sz = sz.localCheckpoint(eager=False)
-    # r17 (verdict item 7): the FULL shingle count n (the verify uses
-    # uncapped sets, so the length filter must bound against the full
-    # n, not the capped survivor count) rides the per-shingle rows —
-    # 8 bytes each — through the DF-cap semi-join and the signature
-    # aggregate (max(n) is exact: n is functionally dependent on
-    # doc_id), then the band join prunes length-incompatible pairs
-    # before the distinct and the payload re-attach joins; common <=
-    # min(na, nb) makes the prune result-identical.
+    # The length filter must bound against the FULL shingle count (the
+    # verify uses uncapped sets), not the capped survivor count, so n
+    # rides the per-shingle rows through the DF-cap semi-join and the
+    # signature aggregate (max(n) is exact: n is a function of doc_id).
     ex0 = sz.select("doc_id", "n", F.explode("shingles").alias("s"))
     keep = (
         ex0.groupBy("s")
@@ -1109,87 +962,17 @@ def dedup_minhash_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nd") <= DF_CAP)
         .select("s")
     )
-    ex = ex0.join(keep, "s", "left_semi").select(
+    bands = minhash_bands(ex0.join(keep, "s", "left_semi"), F.max("n").alias("n"))
+    bands = bands.localCheckpoint(eager=False)  # as in dedup_minhash_pairs
+    cand = band_pairs(
+        bands,
         "doc_id",
-        "n",
-        F.expr(_h_spark("concat('a:', s)")).alias("h1"),
-        (F.expr(_h_spark("concat('b:', s)")) % _H2_MOD).alias("h2"),
+        MINHASH_BAND_COLS,
+        names=("doc_a", "doc_b"),
+        carry=["n"],
+        keep=F.expr(_LENGTH_OK),
     )
-    sig = ex.groupBy("doc_id").agg(
-        *[F.min(F.col("h1") + k * F.col("h2")).alias(f"m{k}") for k in range(N_PERM)],
-        F.max("n").alias("n"),
-    )
-    bands = sig.select(
-        "doc_id",
-        "n",
-        *[
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    *[F.col(f"m{b * ROWS_PER_BAND + j}") for j in range(ROWS_PER_BAND)],
-                )
-            ).alias(f"b{b}")
-            for b in range(N_BANDS)
-        ],
-    )
-    # Pin the per-doc signature table before the band self-join: the
-    # sig subtree (per-shingle double-md5 + 16 partial mins) is the
-    # most expensive stage of this query and WITHOUT the pin both
-    # sides of the self-join compute it independently (no exchange
-    # reuse across aliased subtrees under AQE — two concurrent
-    # fact-sized stage jobs, measured 3.3 s + 3.5 s at sf0.1). Same
-    # device as the phash queries' `hashes` checkpoint; |docs|-sized,
-    # the standard persisted-intermediate at warehouse scale.
-    bands = bands.localCheckpoint(eager=False)
-    bb = bands.select(
-        "doc_id",
-        "n",
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(N_BANDS)])).alias(
-            "band_idx", "band_key"
-        ),
-    )
-    cand = (
-        bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (3 * F.least("x.n", "y.n") >= F.col("x.n") + F.col("y.n")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    a = sz.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("n").alias("na"),
-    )
-    b = sz.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("common"),
-            (F.col("na") + F.col("nb")).alias("total"),
-        )
-        .filter(3 * F.col("common") >= F.col("total"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "common",
-            (F.col("total") - F.col("common")).alias("union_sz"),
-        )
-        .select(
-            "doc_a", "doc_b", "common", "union_sz", F.expr(_JAC6_SPARK).alias("jaccard")
-        )
-    )
+    return _verify_jaccard(cand, sz)
 
 
 @query(

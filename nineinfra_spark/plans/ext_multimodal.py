@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nineinfra_spark.operators.lsh import band_pairs
 from nineinfra_spark.plans._util import spread, t
 from nineinfra_spark.plans.registry import query
 
@@ -622,47 +623,21 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`dedup_embedding_clusters` shape) instead of the pair relation."""
     src = ppm_payloads(spark, sf_dir)
     hashes = src.mapInPandas(_phash_batches, "doc_id long, phash long")
-    hashes = hashes.localCheckpoint(eager=False)  # both sides of the band self-join
-
-    # The 8-byte phash RIDES THROUGH the band join (guide §2.3 "shuffle
-    # keys and metadata instead of payloads" — here the metadata IS the
-    # payload), so each collision verifies hamming inline and only the
-    # ~true-pair survivors reach the pair-dedup exchange. The previous
-    # shape distinct-ed the RAW candidate pairs (quadratic in posting-
-    # list occupancy — ~2M rows at sf0.1 under this 5-bit band key)
-    # and then re-attached the hashes with TWO more joins; measured
-    # 2.20 s → see OPTIMIZATION_r16.md. Same pair set by construction:
-    # banding recall is exact at this radius (pigeonhole, above), and
-    # distinct-after-verify == verify-after-distinct for a filter that
-    # is a pure function of the pair.
-    bands = hashes.select(
+    hashes = hashes.localCheckpoint(eager=False)  # self-join input, see operators/lsh.py
+    # The 5-bit band keys crowd (~2M raw candidates at sf0.1), so the
+    # 8-byte phash rides through the band join and hamming is verified
+    # before the pair distinct; distinct-then-re-attach measured 2.20 s
+    # (OPTIMIZATION_r16.md). Banding recall is exact at this radius
+    # (pigeonhole, above).
+    hamming = F.expr("cast(bit_count(phash_a ^ phash_b) as int)").alias("hamming")
+    return band_pairs(
+        hashes,
         "doc_id",
-        "phash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.expr(f"(phash >> {b * _BAND_BITS}) & 31").alias("key"),
-                )
-                for b in range(_PHASH_BANDS)
-            ])
-        ).alias("bk"),
-    ).select("doc_id", "phash", "bk.band", "bk.key")
-    return (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.expr("cast(bit_count(x.phash ^ y.phash) as int)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= PHASH_HAM_T)
-        .distinct()
+        [F.expr(f"(phash >> {b * _BAND_BITS}) & 31") for b in range(_PHASH_BANDS)],
+        names=("doc_a", "doc_b"),
+        carry=["phash"],
+        out=[hamming],
+        keep=F.col("hamming") <= PHASH_HAM_T,
     )
 
 
@@ -789,46 +764,20 @@ def mm_phash_neardup_64(spark: SparkSession, sf_dir: str) -> DataFrame:
     are sign-transparent, so the signed representation is free."""
     src = ppm64_payloads(spark, sf_dir)
     hashes = src.mapInPandas(_phash64_batches, "doc_id long, phash long")
-    hashes = hashes.localCheckpoint(eager=False)  # both sides of the band self-join
-
-    # DELIBERATELY the re-attach shape, diverging from the 25-bit
-    # `mm_phash_neardup` (r17, verdict item 6): there the 5-bit band
-    # key space crowds (~2M raw candidates at sf0.1), so carrying the
-    # phash through the band join and verifying inline deletes a
-    # quadratic distinct — measured 1.9×. HERE the 65k-key bands never
-    # crowd (posting lists 1-2; candidates ≈ true pairs), so the carry
-    # buys nothing and costs wider band-join rows: A/B median-of-5 ×2
-    # interleaved rounds, carry 1.59/1.25 s vs re-attach 1.35/1.19 s —
-    # the carry never wins; the r16 driver run agreed (×0.63). Pair
-    # set identical either way (pigeonhole recall above; hamming is a
-    # pure pair function).
-    bands = hashes.select(
+    hashes = hashes.localCheckpoint(eager=False)  # self-join input, see operators/lsh.py
+    # Distinct-then-re-attach, unlike the 25-bit query: the 65k-key
+    # bands never crowd (posting lists 1-2, candidates ≈ true pairs),
+    # so carrying the phash only widens the band-join rows. A/B
+    # median-of-5 ×2 interleaved: carry 1.59/1.25 s vs re-attach
+    # 1.35/1.19 s.
+    cand = band_pairs(
+        hashes,
         "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.expr(
-                        f"(phash >> {b * _BAND64_BITS}) & 65535"
-                    ).alias("key"),
-                )
-                for b in range(_PHASH64_BANDS)
-            ])
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-        )
-        .distinct()
+        [
+            F.expr(f"(phash >> {b * _BAND64_BITS}) & 65535")
+            for b in range(_PHASH64_BANDS)
+        ],
+        names=("doc_a", "doc_b"),
     )
     ha = hashes.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("pa"))
     hb = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("pb"))

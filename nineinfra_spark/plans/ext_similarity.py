@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nineinfra_spark.operators.lsh import band_pairs
 from nineinfra_spark.plans._util import cpu_spread, t
 from nineinfra_spark.plans.registry import query
 
@@ -194,22 +195,8 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replicates it exactly; recall vs the exact join is
     tolerance-tested in pytest."""
     emb = t(spark, sf_dir, "embeddings")
-    bb = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.expr(_band_spark(b)) for b in range(N_SIM_BANDS)])
-        ).alias("band_idx", "code"),
-    )
-    cand = (
-        bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.code") == F.col("y.code"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("id_a"), F.col("y.vec_id").alias("id_b"))
-        .distinct()
+    cand = band_pairs(
+        emb, "vec_id", [F.expr(_band_spark(b)) for b in range(N_SIM_BANDS)]
     )
     # Verify with per-vector norms precomputed ONCE (r16 optimization
     # round; guide §1.2 "per-task work" — the same factoring

@@ -19,13 +19,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from nineinfra_spark.operators.lsh import band_pairs
 from nineinfra_spark.plans.ext_dedup import (
+    MINHASH_BAND_COLS,
     N_BANDS,
-    N_PERM,
     ROWS_PER_BAND,
-    _H2_MOD,
-    _h_spark,
     _shingled,
+    minhash_bands,
 )
 
 # property sweep: LSH collision curve over two SFs — excluded from the
@@ -78,44 +78,9 @@ def _jaccard_all_sharing_pairs(spark, sf_dir):
 def _minhash_collided_pairs(spark, sf_dir):
     """Pairs sharing ≥1 (band_idx, band_key) — the candidate set the
     production query would exact-verify (same pipeline, pre-verify)."""
-    sz = _shingled(spark, sf_dir).select("doc_id", "shingles")
-    ex = sz.select("doc_id", F.explode("shingles").alias("s")).select(
-        "doc_id",
-        F.expr(_h_spark("concat('a:', s)")).alias("h1"),
-        (F.expr(_h_spark("concat('b:', s)")) % _H2_MOD).alias("h2"),
-    )
-    sig = ex.groupBy("doc_id").agg(
-        *[F.min(F.col("h1") + k * F.col("h2")).alias(f"m{k}") for k in range(N_PERM)]
-    )
-    bb = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"m{b * ROWS_PER_BAND + j}")
-                                for j in range(ROWS_PER_BAND)
-                            ],
-                        )
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    cand = (
-        bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
+    ex = _shingled(spark, sf_dir).select("doc_id", F.explode("shingles").alias("s"))
+    cand = band_pairs(
+        minhash_bands(ex), "doc_id", MINHASH_BAND_COLS, names=("doc_a", "doc_b")
     )
     return {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
 
@@ -181,24 +146,11 @@ def test_sign_lsh_collision_monotone_in_cosine(spark, sf_dir):
         .collect()
     }
 
-    bb = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.expr(_band_spark(k)) for k in range(N_SIM_BANDS)])
-        ).alias("band_idx", "code"),
-    )
     collided = {
         (r["id_a"], r["id_b"])
-        for r in bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.code") == F.col("y.code"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("id_a"), F.col("y.vec_id").alias("id_b"))
-        .distinct()
-        .collect()
+        for r in band_pairs(
+            emb, "vec_id", [F.expr(_band_spark(k)) for k in range(N_SIM_BANDS)]
+        ).collect()
     }
 
     def rate(pairs):
