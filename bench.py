@@ -16,8 +16,10 @@ JSON to stdout, in order:
 
 3. as the FINAL line, a <200-char summary with the same metric/value
    fields plus ``calib_sec`` (the full 4-decimal map is also written
-   to ``BENCH_FULL.json`` beside this script so no artifact
-   truncation can lose the per-query numbers).
+   beside this script so no artifact truncation can lose the
+   per-query numbers: ``BENCH_FULL.json`` on 32 cores, the core count
+   of the committed stamps, else ``BENCH_FULL_c<N>.json`` — see
+   :func:`full_artifact_name`).
 
 ``calib_sec`` is an UNTIMED fixed-work single-thread host-speed probe
 (Python + JVM legs, ~2 s nominal, run before and after the timed
@@ -314,7 +316,7 @@ def main() -> int:
     print(json.dumps(compact, separators=(",", ":")), flush=True)
     try:
         full_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
+            os.path.dirname(os.path.abspath(__file__)), full_artifact_name()
         )
         with open(full_path, "w") as f:
             json.dump(result, f, indent=1)
@@ -336,11 +338,19 @@ def main() -> int:
         "calib_sec": round(
             calib_start["py_sec"] + calib_start["jvm_sec"], 3
         ),
-        "full": "BENCH_FULL.json",
+        "full": full_artifact_name(),
     }
     print(json.dumps(summary), flush=True)
     engine.close()
     return 0
+
+
+def full_artifact_name() -> str:
+    """File name of the full per-query map, keyed by the core count
+    the engine runs on (``$SPARK_GRAFT_CPUS``, else the host's), so a
+    run on another core count never overwrites the 32-core map."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
+    return "BENCH_FULL.json" if cpus == "32" else f"BENCH_FULL_c{cpus}.json"
 
 
 if __name__ == "__main__":

@@ -30,17 +30,23 @@ Scale posture:
 - **bitmap storage** (default ``bits_storage="table"``): the bitmaps
   live as a parquet ``(fid, word-index, 63-bit word)`` INDEX TABLE
   under the data directory — the same shape as the dedup band index —
-  built and merged entirely Spark-side, so at 10⁵–10⁶ files the
-  multi-GB bitmap set never becomes a driver-resident object. The
-  tiny JSON sidecar holds only the grid contract (bounds, sizes,
-  schema, replay marker) plus a pointer to the current bits table.
-  ``bits_storage="json"`` keeps the original all-in-sidecar form for
-  SMALL indexes probed driver-side (gateway point-lookup caches);
-  legacy sidecars stay read-compatible.
-- **probe**: for table storage, a BROADCAST JOIN — the probe keys'
-  ``(position → word, mask)`` pairs (len(keys) × k rows, tiny)
-  broadcast against the bits table, admission = all-k distinct hash
-  matches per (fid, key); output is fid ids, file-count-bounded. For
+  built and merged entirely Spark-side, so at the 4096-file ceiling
+  :func:`bloom_index_write` enforces (≈ 5 GB of packed bitmap at 1M
+  keys per file) the bitmap set never becomes a driver-resident
+  object. The tiny JSON sidecar holds only the grid contract (bounds,
+  sizes, schema, replay marker) plus a pointer to the current bits
+  table. ``bits_storage="json"`` keeps the original all-in-sidecar
+  form for SMALL indexes probed driver-side (gateway point-lookup
+  caches); legacy sidecars stay read-compatible.
+- **probe**: a probe needs only the bits-table rows of the words its
+  keys hash to — ``n_files`` × distinct probed words rows of 16 B.
+  When that slice fits under the session's
+  ``spark.sql.autoBroadcastJoinThreshold``, the driver reads just
+  those rows from the bits-table parquet (pyarrow, no Spark job);
+  otherwise the probe keys' ``(position → word, mask)`` pairs
+  (len(keys) × k rows, tiny) are BROADCAST against the bits table.
+  Admission is the same on both paths: all k distinct hash positions
+  set, per (fid, key); output is fid ids, file-count-bounded. For
   JSON storage the consult is driver-side over ``n_files`` bitmaps ×
   len(keys) probes. Either way surviving files are read via
   PARTITION PRUNING (``fid`` is a partition column), so skipped
@@ -155,6 +161,30 @@ WORD_BITS = 63
 
 _BITS_TABLE = "_bloomindex_bits"  # initial bits-table dir (appends version it)
 
+#: the bits table's columns, declared on every read: inferring them
+#: from the parquet footers costs a Spark job per read
+BITS_SCHEMA = "fid int, w int, word bigint"
+
+#: bytes per bits-table row (fid + w + word) in the probe-slice size
+#: estimate that picks the driver or the broadcast-join consult
+_BITS_ROW_BYTES = 16
+
+
+def _read_bits(spark: SparkSession, path: str, bits_dir: str) -> DataFrame:
+    return spark.read.schema(BITS_SCHEMA).parquet(os.path.join(path, bits_dir))
+
+
+def _data_schema(meta: dict):
+    """The table's schema as the sidecar stores it, plus the ``fid``
+    partition column — declared on data reads for the same reason as
+    :data:`BITS_SCHEMA`, and it also reads an index with no data files
+    (an empty build writes none)."""
+    from pyspark.sql import types as T
+
+    return T.StructType.fromJson(json.loads(meta["schema"])).add(
+        "fid", T.IntegerType()
+    )
+
 
 def _words_df(pairs: DataFrame, word_bits: int = WORD_BITS) -> DataFrame:
     """``(fid, bit)`` pairs (duplicates welcome — ``bit_or`` dedups
@@ -185,7 +215,7 @@ def load_bits(spark: SparkSession, path: str) -> dict[int, set[int]]:
         return _decode_bits(meta)
     wb = meta.get("word_bits", WORD_BITS)
     out: dict[int, set[int]] = {}
-    rows = spark.read.parquet(os.path.join(path, meta["bits_dir"])).collect()
+    rows = _read_bits(spark, path, meta["bits_dir"]).collect()
     for r in rows:
         s = out.setdefault(r["fid"], set())
         word, base = r["word"], r["w"] * wb
@@ -201,7 +231,7 @@ def bloom_fill_ratios_table(spark: SparkSession, path: str) -> dict[int, float]:
     the driver); same fill^k reading as :func:`bloom_fill_ratios`."""
     meta = read_index_meta(path)
     m = meta["m_bits"]
-    bits = spark.read.parquet(os.path.join(path, meta["bits_dir"]))
+    bits = _read_bits(spark, path, meta["bits_dir"])
     return {
         r["fid"]: r["nb"] / m
         for r in bits.groupBy("fid")
@@ -625,7 +655,7 @@ def bloom_index_append(
         # in-flight probe may still hold the old pointer).
         wb = meta.get("word_bits", WORD_BITS)
         old_dir = meta["bits_dir"]
-        old_words = spark.read.parquet(os.path.join(path, old_dir))
+        old_words = _read_bits(spark, path, old_dir)
         merged = (
             old_words.unionByName(_words_df(delta_pairs, wb))
             .groupBy("fid", "w")
@@ -641,10 +671,10 @@ def bloom_index_append(
         # signed-tag aggregate job (r17; was two separate read+agg
         # jobs — same sums, same difference)
         new_bits = (
-            spark.read.parquet(os.path.join(path, new_dir))
+            _read_bits(spark, path, new_dir)
             .select(F.lit(1).alias("_t"), "word")
             .unionByName(
-                spark.read.parquet(os.path.join(path, old_dir)).select(
+                _read_bits(spark, path, old_dir).select(
                     F.lit(-1).alias("_t"), "word"
                 )
             )
@@ -682,23 +712,11 @@ def bloom_index_append(
         return {"rows_appended": 0, "files_touched": 0, "new_bits": new_bits}
     # step 2: the data
     if key_cols:
-        from pyspark.sql import types as T
-
-        have_files = any(
-            d.startswith("fid=") and os.path.isdir(os.path.join(path, d))
-            for d in os.listdir(path)
+        existing_dirty = (
+            spark.read.schema(_data_schema(meta))
+            .parquet(path)
+            .filter(F.col("fid").isin(dirty))
         )
-        if have_files:
-            existing_dirty = (
-                spark.read.parquet(path)
-                .filter(F.col("fid").isin(dirty))
-                .select(*data_cols, "fid")
-            )
-        else:  # empty index wrote no parquet at all
-            schema = T.StructType.fromJson(json.loads(meta["schema"])).add(
-                "fid", T.IntegerType()
-            )
-            existing_dirty = spark.createDataFrame([], schema)
         # rows whose key the delta carries are superseded — the
         # delta-keys side is delta-sized and broadcast; NULL-SAFE
         # equality (eqNullSafe) only when the delta carries NULL keys,
@@ -1057,27 +1075,37 @@ def bloom_probe_files(meta: dict, keys: Sequence) -> list[int]:
 def bloom_probe_files_table(
     spark: SparkSession, path: str, keys: Sequence, meta: dict | None = None
 ) -> list[int]:
-    """Table-backed twin of :func:`bloom_probe_files`: the probe keys'
-    ``(word, mask)`` pairs (len(keys) × k rows — probe-sized, tiny)
-    BROADCAST against the parquet bits table; admission = all k hash
-    functions matched per (fid, key). The bits table — the side that
-    is 10⁵–10⁶ rows × ~1 MB bitmaps at 100 TB — never moves and never
-    reaches the driver; the output is fid ids, file-count-bounded."""
+    """Table-backed twin of :func:`bloom_probe_files`. The consult
+    needs only the probed words' rows of the bits table, ``n_files`` ×
+    distinct probed words × 16 B: under the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` the driver reads just
+    those rows (:func:`_probe_hits_local`, no Spark job); above it the
+    probe keys' ``(word, mask)`` pairs are BROADCAST against the bits
+    table (:func:`_probe_hits_df`), which never moves and never
+    reaches the driver. The output is fid ids, file-count-bounded."""
     if meta is None:
         meta = read_index_meta(path)
-    hits = _probe_hits_df(spark, path, meta, keys)
-    if hits is None:
+    rows = _probe_rows(meta, keys)
+    if not rows:
         return []
+    n_words = len({r[2] for r in rows})
+    # the session's threshold as Spark itself parses it (byte units,
+    # -1 = broadcast off, which sends every probe to the join)
+    threshold = (
+        spark._jsparkSession.sessionState()  # noqa: SLF001
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if meta["n_files"] * n_words * _BITS_ROW_BYTES <= threshold:
+        return _probe_hits_local(path, meta, rows)
+    hits = _probe_hits_df(spark, path, meta, keys)
     return sorted(r["fid"] for r in hits.collect())
 
 
-def _probe_hits_df(
-    spark: SparkSession, path: str, meta: dict, keys: Sequence
-) -> DataFrame | None:
-    """The hit-fids plan of the table probe (None when no non-null
-    keys) — factored out so tests can pin its SHAPE: the probe side
-    broadcast (BroadcastHashJoin on ``w``, never a shuffle of the
-    bits table, never a cartesian)."""
+def _probe_rows(meta: dict, keys: Sequence) -> list[tuple[str, int, int, int]]:
+    """``(pkey, j, w, m)`` for every non-null probe key and hash
+    function ``j``: the word index ``w`` and bit mask ``m`` of the
+    key's j-th position."""
     m_bits, k = meta["m_bits"], meta["k"]
     wb = meta.get("word_bits", WORD_BITS)
     rows = []
@@ -1087,6 +1115,55 @@ def _probe_hits_df(
         rk = _render_key(key)
         for j, p in enumerate(_positions_py(rk, m_bits, k)):
             rows.append((rk, j, p // wb, 1 << (p % wb)))
+    return rows
+
+
+def _probe_hits_local(path: str, meta: dict, rows: list) -> list[int]:
+    """Driver twin of :func:`_probe_hits_df` for a probe slice under
+    the broadcast threshold: read only the probed words' rows of the
+    bits-table parquet and apply the same admission rule, vectorised
+    in Arrow — join on ``w``, test ``word & m``, keep (fid, key) groups
+    with all k distinct ``j`` set. Sorted hit fids."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    cols = list(zip(*rows))
+    probe = pa.table(
+        {
+            "pkey": pa.array(cols[0], pa.string()),
+            "j": pa.array(cols[1], pa.int32()),
+            "w": pa.array(cols[2], pa.int32()),
+            "m": pa.array(cols[3], pa.int64()),
+        }
+    )
+    # BITS_SCHEMA in Arrow types; declared so a bits dir with no data
+    # files (an empty build) reads as zero rows
+    schema = pa.schema(
+        [("fid", pa.int32()), ("w", pa.int32()), ("word", pa.int64())]
+    )
+    bits = pads.dataset(
+        os.path.join(path, meta["bits_dir"]), schema=schema, format="parquet"
+    ).to_table(filter=pc.field("w").isin(sorted(set(cols[2]))))
+    joined = bits.join(probe, "w", join_type="inner")
+    set_bits = joined.filter(
+        pc.not_equal(pc.bit_wise_and(joined["word"], joined["m"]), 0)
+    )
+    per_key = set_bits.group_by(["fid", "pkey"]).aggregate(
+        [("j", "count_distinct")]
+    )
+    admitted = per_key.filter(pc.equal(per_key["j_count_distinct"], meta["k"]))
+    return sorted(pc.unique(admitted["fid"]).to_pylist())
+
+
+def _probe_hits_df(
+    spark: SparkSession, path: str, meta: dict, keys: Sequence
+) -> DataFrame | None:
+    """The hit-fids plan of the table probe (None when no non-null
+    keys) — factored out so tests can pin its SHAPE: the probe side
+    broadcast (BroadcastHashJoin on ``w``, never a shuffle of the
+    bits table, never a cartesian)."""
+    rows = _probe_rows(meta, keys)
     if not rows:
         return None
     probe_df = spark.createDataFrame(
@@ -1097,7 +1174,7 @@ def _probe_hits_df(
     # stats skip everything outside it (the join alone would still
     # read every row group of the (n_files x m/63)-row table)
     words = sorted({r[2] for r in rows})
-    bits = spark.read.parquet(os.path.join(path, meta["bits_dir"])).filter(
+    bits = _read_bits(spark, path, meta["bits_dir"]).filter(
         F.col("w").isin(words)
     )
     return (
@@ -1105,7 +1182,7 @@ def _probe_hits_df(
         .filter(F.col("word").bitwiseAND(F.col("m")) != 0)
         .groupBy("fid", "pkey")
         .agg(F.count_distinct("j").alias("nj"))
-        .filter(F.col("nj") == F.lit(k))
+        .filter(F.col("nj") == F.lit(meta["k"]))
         .select("fid")
         .distinct()
     )
@@ -1115,12 +1192,14 @@ def bloom_skipping_read(
     spark: SparkSession, path: str, keys: Sequence
 ) -> tuple[DataFrame, dict]:
     """Point-lookup over a :func:`bloom_index_write` directory: consult
-    the bitmaps (broadcast-join probe for table storage, driver-side
-    for JSON sidecars), read ONLY the files whose bitmap admits some
-    probe key (partition pruning on ``fid`` — skipped files are never
-    opened), then apply the exact ``key IN (...)`` filter over the
-    survivors. Returns ``(rows_df, stats)`` with
-    ``stats = {"files_total", "files_hit", "files_skipped"}``.
+    the bitmaps (:func:`bloom_probe_files_table` for table storage,
+    driver-side for JSON sidecars), read ONLY the files whose bitmap
+    admits some probe key (partition pruning on ``fid`` — skipped
+    files are never opened), then apply the exact ``key IN (...)``
+    filter over the survivors. Returns ``(rows_df, stats)`` with
+    ``stats = {"files_total", "files_hit", "files_skipped"}``. The
+    data read declares the sidecar schema, so a small-index probe runs
+    one Spark job: the pruned read of the hit files.
 
     Exactness: the bitmap has no false negatives, so the pruned read
     returns exactly the rows a full-table filter would — pinned by
@@ -1154,7 +1233,7 @@ def bloom_skipping_read(
         # list the directory
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         return spark.createDataFrame([], schema), stats
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_data_schema(meta)).parquet(path)
     out = (
         df.filter(F.col("fid").isin(hit))
         .filter(F.col(key_col).isin(probe))

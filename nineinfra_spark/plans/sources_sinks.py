@@ -2088,9 +2088,10 @@ def bloom_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the index build is one bounds agg + one hash
     exchange + a map-side-combined (fid, bit) aggregate written as a
     parquet bits TABLE (index-sized, never driver-resident — the r13
-    verdict's sharding fix); the probe is a broadcast join of the
-    probe keys' (word, mask) pairs against that table; the data read
-    is partition-pruned to the hit files (skipped files never open —
+    verdict's sharding fix); the probe reads only the probed words
+    of that table, on the driver while that slice fits under the
+    broadcast threshold, else as a broadcast join of the probe keys'
+    (word, mask) pairs against it; the data read is partition-pruned to the hit files (skipped files never open —
     plan-asserted in tests/test_bloomindex.py). Reference scope:
     storage-tier indexing over the object store the reference
     provisions (``internal/controller/minio.go:286-319``); index

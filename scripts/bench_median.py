@@ -22,7 +22,11 @@ import sys
 
 N = max(1, int(os.environ.get("SPARK_GRAFT_STAMP_RUNS", "3")))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-FULL = os.path.join(REPO, "BENCH_FULL.json")
+sys.path.insert(0, REPO)
+
+from bench import full_artifact_name  # noqa: E402
+
+FULL = os.path.join(REPO, full_artifact_name())
 
 
 def main() -> int:

@@ -94,19 +94,32 @@ def main() -> int:
         with fh as f:
             for line in f:
                 _ingest(json.loads(line), jobs)
-    print("\njob_id  sec     gap     stages  description")
-    prev_end = None
-    for jid in sorted(jobs):
+    print("\njob_id         sec     gap  stages  description")
+    for jid, gap in job_gaps(jobs):
         j = jobs[jid]
-        gap = (
-            (j["t0"] - prev_end) / 1000.0 if prev_end is not None else 0.0
-        )
-        prev_end = j["t0"] + j.get("sec", 0.0) * 1000.0
+        sec = f"{j['sec']:.3f}" if "sec" in j else "unfinished"
         print(
-            f"{jid:>6}  {j.get('sec', float('nan')):6.3f}  {gap:6.3f}  "
-            f"{j['stages']:>6}  {j['desc'][:100]}"
+            f"{jid:>6}  {sec:>10}  {gap:6.3f}  {j['stages']:>6}  "
+            f"{j['desc'][:100]}"
         )
     return 0
+
+
+def job_gaps(jobs: dict) -> list[tuple[int, float]]:
+    """``(job id, gap seconds)`` in submission order. A job's gap is
+    the driver-side time before it: from the end of the union of the
+    intervals of every job submitted earlier to its own start, 0 when
+    an earlier job still runs (jobs overlap). A job with no end event
+    is taken to run to the end of the log, so it never opens a gap."""
+    out = []
+    covered = None  # end of the union of earlier jobs' intervals, ms
+    for jid in sorted(jobs, key=lambda i: (jobs[i]["t0"], i)):
+        j = jobs[jid]
+        gap = 0.0 if covered is None else max(0.0, j["t0"] - covered) / 1000.0
+        end = j["t0"] + j["sec"] * 1000.0 if "sec" in j else float("inf")
+        covered = end if covered is None else max(covered, end)
+        out.append((jid, gap))
+    return out
 
 
 def _ingest(ev: dict, jobs: dict) -> None:

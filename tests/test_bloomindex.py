@@ -12,6 +12,7 @@ from nineinfra_spark.operators.bloomindex import (
     _positions_py,
     bloom_index_write,
     bloom_probe_files,
+    bloom_probe_files_table,
     bloom_skipping_read,
     read_index_meta,
 )
@@ -137,11 +138,13 @@ def test_empty_frame_and_empty_probe(spark, tmp_path):
     bloom_index_write(empty, path, "day", "key", 4)
     out, stats = bloom_skipping_read(spark, path, ["x"])
     assert out.count() == 0 and stats["files_hit"] == 0
+    assert bloom_probe_files_table(spark, path, ["x", 7]) == []
     df = _frame(spark)
     path2 = str(tmp_path / "e2")
     bloom_index_write(df, path2, "day", "key", 4)
     out2, stats2 = bloom_skipping_read(spark, path2, [])
     assert out2.count() == 0 and stats2["files_hit"] == 0
+    assert bloom_probe_files_table(spark, path2, [None, None]) == []
 
 
 def test_guards(spark, tmp_path):
@@ -1003,3 +1006,123 @@ def test_grace_window_keeps_inflight_probe_readable(spark, tmp_path):
     assert not _os.path.isdir(_os.path.join(path, old_meta["bits_dir"])) or (
         old_meta["bits_dir"] == read_index_meta(path)["bits_dir"]
     )
+
+
+def _jobs_run(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``, counted under a job
+    group once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _mixed_probe_groups(present):
+    """About 200 probe keys (present and absent str keys, int keys,
+    NULLs), shuffled into groups of 40: a handful of present keys
+    per group keeps each group's hit set well short of every file, so
+    equal fid sets compare the admission rule, not the file count."""
+    import random
+
+    keys = (
+        list(present)
+        + [f"absent-{i}" for i in range(100)]
+        + list(range(0, 5000, 100))
+        + [None] * 25
+    )
+    random.Random(7).shuffle(keys)
+    return [keys[i : i + 40] for i in range(0, len(keys), 40)]
+
+
+def test_driver_consult_matches_broadcast_join(spark, indexed, tmp_path):
+    """The driver-side consult of a small probe slice admits exactly
+    the fids the broadcast-join plan admits — on the fixture index and
+    on an index whose bits table was merged by an append."""
+    import hashlib
+
+    from nineinfra_spark.operators.bloomindex import (
+        _probe_hits_df,
+        _probe_hits_local,
+        _probe_rows,
+        bloom_index_append,
+    )
+
+    def md5s(ids):
+        return [hashlib.md5(str(i).encode()).hexdigest() for i in ids]
+
+    path, meta, _ = indexed
+    appended = str(tmp_path / "ap")
+    bloom_index_write(_frame(spark), appended, "day", "key", 8)
+    delta = spark.range(N, N + 200).select(
+        (F.col("id") % 100).alias("day"),
+        F.md5(F.col("id").cast("string")).alias("key"),
+        (F.col("id") * 3).alias("payload"),
+    )
+    bloom_index_append(spark, appended, delta, batch_id=0)
+    cases = [
+        (path, meta, md5s(range(0, N, 80))),
+        (
+            appended,
+            read_index_meta(appended),
+            md5s(range(0, N, 160)) + md5s(range(N, N + 200, 16)),
+        ),
+    ]
+    for p, m, present in cases:
+        n_hit = 0
+        for keys in _mixed_probe_groups(present):
+            want = sorted(r["fid"] for r in _probe_hits_df(spark, p, m, keys).collect())
+            got = _probe_hits_local(p, m, _probe_rows(m, keys))
+            assert got == want, keys
+            assert len(got) < m["n_files"]
+            n_hit += len(got)
+        assert n_hit > 0
+
+
+def test_probe_path_follows_broadcast_threshold(spark, indexed):
+    """The public table probe consults on the driver (no Spark job)
+    while the probe slice fits under autoBroadcastJoinThreshold, takes
+    the broadcast-join plan above it, and both return the same fids."""
+    import hashlib
+
+    path, _, _ = indexed
+    keys = [hashlib.md5(str(i).encode()).hexdigest() for i in (3, 500, 1777)]
+    keys += ["absent", None, 12]
+    local, local_jobs = _jobs_run(
+        spark, lambda: bloom_probe_files_table(spark, path, keys)
+    )
+    assert local_jobs == 0
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        joined, joined_jobs = _jobs_run(
+            spark, lambda: bloom_probe_files_table(spark, path, keys)
+        )
+    finally:
+        spark.conf.set(conf, old)
+    assert joined_jobs > 0
+    assert joined == local and 0 < len(local) < N_FILES
+
+
+def test_small_index_probe_runs_one_job(spark, indexed):
+    """A small-index point lookup is one Spark job: the consult runs on
+    the driver and the data read declares the sidecar schema, so only
+    the pruned read of the hit files is left."""
+    import hashlib
+
+    path, _, df = indexed
+    key = hashlib.md5(b"42").hexdigest()
+    rows, jobs = _jobs_run(
+        spark, lambda: bloom_skipping_read(spark, path, [key])[0].collect()
+    )
+    assert jobs == 1
+    assert [(r["key"], r["payload"]) for r in rows] == [(key, 126)]
+
