@@ -5,7 +5,6 @@ from nineinfra_spark.operators.bloomindex import (
     bloom_index_append,
     bloom_index_compact,
     bloom_index_write,
-    bloom_probe_files,
     bloom_probe_files_table,
     bloom_skipping_read,
     maintain_bloom_stream,
@@ -43,7 +42,6 @@ __all__ = [
     "bloom_index_append",
     "bloom_index_compact",
     "bloom_index_write",
-    "bloom_probe_files",
     "bloom_probe_files_table",
     "bloom_skipping_read",
     "maintain_bloom_stream",

@@ -27,17 +27,17 @@ Scale posture:
   map-side-combined ``(fid, bit)`` distinct — output bounded by
   ``n_files × m_bits``, index-sized (the same "bytes per file" budget
   real bloom indexes spend). Nothing corpus-sized reaches the driver.
-- **bitmap storage** (default ``bits_storage="table"``): the bitmaps
-  live as a parquet ``(fid, word-index, 63-bit word)`` INDEX TABLE
-  under the data directory — the same shape as the dedup band index —
-  built and merged entirely Spark-side, so at the 4096-file ceiling
+- **bitmap storage**: one form. The bitmaps live as a parquet
+  ``(fid, word-index, 63-bit word)`` INDEX TABLE under the data
+  directory — the same shape as the dedup band index — built and
+  merged entirely Spark-side, so at the 4096-file ceiling
   :func:`bloom_index_write` enforces (≈ 5 GB of packed bitmap at 1M
   keys per file) the bitmap set never becomes a driver-resident
   object. The tiny JSON sidecar holds only the grid contract (bounds,
   sizes, schema, replay marker) plus a pointer to the current bits
-  table. ``bits_storage="json"`` keeps the original all-in-sidecar
-  form for SMALL indexes probed driver-side (gateway point-lookup
-  caches); legacy sidecars stay read-compatible.
+  table, marked ``"bits_storage": "table"``; a sidecar without that
+  marker (an old all-in-sidecar index) is refused with a rebuild
+  message by every entry point.
 - **probe**: a probe needs only the bits-table rows of the words its
   keys hash to — ``n_files`` × distinct probed words rows of 16 B.
   When that slice fits under the session's
@@ -46,12 +46,10 @@ Scale posture:
   otherwise the probe keys' ``(position → word, mask)`` pairs
   (len(keys) × k rows, tiny) are BROADCAST against the bits table.
   Admission is the same on both paths: all k distinct hash positions
-  set, per (fid, key); output is fid ids, file-count-bounded. For
-  JSON storage the consult is driver-side over ``n_files`` bitmaps ×
-  len(keys) probes. Either way surviving files are read via
-  PARTITION PRUNING (``fid`` is a partition column), so skipped
-  files are never opened, and the residual exact filter runs only
-  over the hit files.
+  set, per (fid, key); output is fid ids, file-count-bounded.
+  Surviving files are read via PARTITION PRUNING (``fid`` is a
+  partition column), so skipped files are never opened, and the
+  residual exact filter runs only over the hit files.
 
 NULL keys are never indexed and never probe-able (SQL equality on
 NULL matches nothing) — same semantics as a filter, not a gap.
@@ -114,45 +112,6 @@ def m_bits_for(keys_per_file: int, fp: float = 0.01, k: int = K_HASHES) -> int:
     return ((m + 63) // 64) * 64
 
 
-def _pack_bits(positions) -> str:
-    """Sorted bit positions → base64 little-endian packed bitmap.
-    Packed encoding is DENSITY-PROOF: m/8 bytes whatever the fill
-    (a positions list grows with the key count and explodes exactly
-    when files are dense)."""
-    import base64
-
-    if not positions:
-        return ""
-    size = (max(positions) // 8) + 1
-    buf = bytearray(size)
-    for p in positions:
-        buf[p >> 3] |= 1 << (p & 7)
-    return base64.b64encode(bytes(buf)).decode("ascii")
-
-
-def _unpack_bits(b64: str) -> set[int]:
-    import base64
-
-    if not b64:
-        return set()
-    raw = base64.b64decode(b64)
-    out = set()
-    for i, byte in enumerate(raw):
-        while byte:
-            low = byte & -byte
-            out.add((i << 3) + low.bit_length() - 1)
-            byte ^= low
-    return out
-
-
-def _decode_bits(meta: dict) -> dict[int, set[int]]:
-    """fid → set(bit) from either sidecar encoding (packed base64
-    under ``enc: "b64"``, or the legacy positions-list)."""
-    if meta.get("enc") == "b64":
-        return {int(f): _unpack_bits(b) for f, b in meta["bits"].items()}
-    return {int(f): set(b) for f, b in meta["bits"].items()}
-
-
 #: usable bits per signed-long word in the table-backed bitmap
 #: encoding — 63 keeps every shift amount ≤ 62, portable to engines
 #: that refuse ``1 << 63`` (the DuckDB convention the repo's bitmap
@@ -186,6 +145,25 @@ def _data_schema(meta: dict):
     )
 
 
+def _fid_dirs(path: str) -> dict[int, str]:
+    """fid → its ``fid=<n>`` partition directory: the one listing of
+    the data files' directories (a free driver-side walk, no Spark
+    job)."""
+    return {
+        int(d.split("=", 1)[1]): os.path.join(path, d)
+        for d in os.listdir(path)
+        if d.startswith("fid=") and os.path.isdir(os.path.join(path, d))
+    }
+
+
+def _n_data_files(fid_dir: str) -> int:
+    return sum(
+        1
+        for f in os.listdir(fid_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
 def _words_df(pairs: DataFrame, word_bits: int = WORD_BITS) -> DataFrame:
     """``(fid, bit)`` pairs (duplicates welcome — ``bit_or`` dedups
     for free, so callers skip the extra distinct exchange) → the
@@ -206,13 +184,11 @@ def _words_df(pairs: DataFrame, word_bits: int = WORD_BITS) -> DataFrame:
 
 
 def load_bits(spark: SparkSession, path: str) -> dict[int, set[int]]:
-    """fid → set(bit) for EITHER storage — a driver-side materializer
-    for tests and small-index introspection only (it is exactly the
-    driver-resident object the table storage exists to avoid; never
-    call it on a production-sized index)."""
+    """fid → set(bit) — a driver-side materializer for tests and
+    small-index introspection only (it is exactly the driver-resident
+    object the bits table exists to avoid; never call it on a
+    production-sized index)."""
     meta = read_index_meta(path)
-    if meta.get("bits_storage") != "table":
-        return _decode_bits(meta)
     wb = meta.get("word_bits", WORD_BITS)
     out: dict[int, set[int]] = {}
     rows = _read_bits(spark, path, meta["bits_dir"]).collect()
@@ -226,9 +202,11 @@ def load_bits(spark: SparkSession, path: str) -> dict[int, set[int]]:
 
 
 def bloom_fill_ratios_table(spark: SparkSession, path: str) -> dict[int, float]:
-    """Per-file fill ratio for a table-backed index — one popcount
+    """Per-file bitmap fill ratio (set bits / m_bits) — one popcount
     aggregation over the bits table (never materializes bitmaps on
-    the driver); same fill^k reading as :func:`bloom_fill_ratios`."""
+    the driver). The expected false-positive rate per file is
+    ``fill^k`` — fills past ~0.5 mean the bitmap is undersized for the
+    file's key count (:func:`bloom_index_compact` resizes it)."""
     meta = read_index_meta(path)
     m = meta["m_bits"]
     bits = _read_bits(spark, path, meta["bits_dir"])
@@ -238,19 +216,6 @@ def bloom_fill_ratios_table(spark: SparkSession, path: str) -> dict[int, float]:
         .agg(F.sum(F.bit_count("word")).alias("nb"))
         .collect()
     }
-
-
-def bloom_fill_ratios(meta: dict) -> dict[int, float]:
-    """Per-file bitmap fill ratio (set bits / m_bits). The expected
-    false-positive rate per file is ``fill^k`` — fills past ~0.5 mean
-    the bitmap is undersized for the file's key count (resize with
-    :func:`m_bits_for` and rebuild)."""
-    if meta.get("bits_storage") == "table":
-        raise ValueError(
-            "table-backed index: use bloom_fill_ratios_table(spark, path)"
-        )
-    m = meta["m_bits"]
-    return {f: len(b) / m for f, b in _decode_bits(meta).items()}
 
 
 def _hash_expr(col, salt: str):
@@ -321,14 +286,29 @@ def _write_sidecar(path: str, meta: dict) -> None:
     _sidecar.write(path, _SIDECAR, meta)
 
 
-def read_index_meta(path: str) -> dict:
-    """The index contract of a :func:`bloom_index_write` directory."""
-    with open(os.path.join(path, _SIDECAR), encoding="utf-8") as f:
-        return json.load(f)
-
-
 def _read_sidecar_raw(path: str) -> str:
     return _sidecar.read_raw(path, _SIDECAR)
+
+
+def _load_meta(path: str) -> tuple[str, dict]:
+    """The sidecar's raw text (the CAS token of the maintenance
+    commits) and its parsed contract. Every entry point reads the
+    sidecar here, so this is the one place a sidecar without the
+    bits-table marker — an old index with its bitmaps inlined in the
+    sidecar — is refused."""
+    raw = _read_sidecar_raw(path)
+    meta = json.loads(raw)
+    if meta.get("bits_storage") != "table":
+        raise ValueError(
+            f"bloom index {path!r} has no bits table (its sidecar lacks "
+            f'"bits_storage": "table"); rebuild it with bloom_index_write'
+        )
+    return raw, meta
+
+
+def read_index_meta(path: str) -> dict:
+    """The index contract of a :func:`bloom_index_write` directory."""
+    return _load_meta(path)[1]
 
 
 def _guarded_sidecar_write(path: str, meta: dict, expected_raw: str) -> str:
@@ -349,8 +329,6 @@ def bloom_index_write(
     n_files: int,
     m_bits: int = M_BITS,
     k: int = K_HASHES,
-    mode: str = "error",
-    bits_storage: str = "table",
 ) -> dict:
     """Write ``df`` as ``n_files`` range-bucketed parquet files on
     ``layout_col`` (partition column ``fid``), plus a per-file Bloom
@@ -363,16 +341,13 @@ def bloom_index_write(
     with a NULL ``layout_col`` go to file 0 (they must live
     somewhere deterministic; their keys are still indexed).
 
-    ``bits_storage="table"`` (default, the 100 TB form) stores the
-    bitmaps as a parquet ``(fid, w, word)`` table under
-    ``_bloomindex_bits`` — built, merged, and probed Spark-side; the
-    JSON sidecar carries only the grid contract and the table
-    pointer. ``bits_storage="json"`` inlines the bitmaps in the
-    sidecar as base64-encoded PACKED bitmaps (``enc: "b64"``,
-    little-endian, m/8 bytes whatever the fill) for small indexes
-    probed entirely on the driver (gateway point-lookup caches);
-    legacy positions-list sidecars remain READ-compatible
-    (:func:`_decode_bits`), nothing writes them anymore.
+    The bitmaps are a parquet ``(fid, w, word)`` table under
+    ``_bloomindex_bits``, built Spark-side; the JSON sidecar carries
+    only the grid contract and the table pointer.
+
+    ``path`` must not exist: the data write is error-if-exists, so a
+    second write onto an index raises before anything lands (remove
+    the directory to rebuild; :func:`bloom_index_append` extends one).
 
     Returns the sidecar dict."""
     if not 1 <= n_files <= 4096:
@@ -386,10 +361,6 @@ def bloom_index_write(
         raise ValueError(
             "bloom_index_write: column 'fid' is reserved for the file-id "
             "partition column — rename it first"
-        )
-    if bits_storage not in ("table", "json"):
-        raise ValueError(
-            f"bits_storage must be 'table' or 'json', got {bits_storage!r}"
         )
     _check_key_type(df, key_col)
     # pin ONCE: the bounds aggregate, the parquet write, and the
@@ -426,18 +397,13 @@ def bloom_index_write(
     )
     tagged = df.withColumn("fid", fid)
     tagged_w = tagged.repartition(n_files, "fid")
-    (
-        tagged_w.write.mode(mode)
-        .partitionBy("fid")
-        .parquet(path)
-    )
+    tagged_w.write.partitionBy("fid").parquet(path)
     # bitmap build: (fid, bit) pairs → one map-side-combined aggregate
-    # (bit_or / collect_set dedup on their own — an explicit distinct
-    # would add a second full exchange for nothing); ≤ n_files ×
-    # m_bits rows ever shuffle. A NULL key hashes to an ARRAY OF
+    # (bit_or dedups on its own — an explicit distinct would add a
+    # second full exchange for nothing); ≤ n_files × m_bits rows ever
+    # shuffle. A NULL key hashes to an ARRAY OF
     # NULLS (not a null array), so explode emits null bits — filtered
-    # here so null keys are never indexed under either storage
-    # (collect_set happened to drop them; the word aggregation would
+    # here so null keys are never indexed (the word aggregation would
     # propagate them).
     #
     # Parallelism gate (r17, guide §2.5/§6.1): a single-file source
@@ -468,34 +434,20 @@ def bloom_index_write(
         # is not the files
         "schema": df.schema.json(),
     }
-    if bits_storage == "table":
-        # the bitmaps never leave the cluster: words written directly
-        # as the parquet index table, sized ~one file per 64 fids
-        (
-            _words_df(bits_pairs)
-            .repartition(max(1, n_files // 64), "fid")
-            .write.mode("overwrite" if mode == "overwrite" else "error")
-            .parquet(os.path.join(path, _BITS_TABLE))
-        )
-        meta["bits_storage"] = "table"
-        meta["bits_dir"] = _BITS_TABLE
-        meta["word_bits"] = WORD_BITS
-        _write_sidecar(path, meta)
-        spark = df.sparkSession
-        worst = max(bloom_fill_ratios_table(spark, path).values(), default=0.0)
-    else:
-        bits_rows = (
-            bits_pairs.groupBy("fid")
-            .agg(F.sort_array(F.collect_set("bit")).alias("bits"))
-            .collect()
-        )
-        meta["enc"] = "b64"
-        meta["bits"] = {
-            str(r["fid"]): _pack_bits([int(b) for b in r["bits"]])
-            for r in bits_rows
-        }
-        _write_sidecar(path, meta)
-        worst = max(bloom_fill_ratios(meta).values(), default=0.0)
+    # the bitmaps never leave the cluster: words written directly as
+    # the parquet index table, sized ~one file per 64 fids
+    (
+        _words_df(bits_pairs)
+        .repartition(max(1, n_files // 64), "fid")
+        .write.parquet(os.path.join(path, _BITS_TABLE))
+    )
+    meta["bits_storage"] = "table"
+    meta["bits_dir"] = _BITS_TABLE
+    meta["word_bits"] = WORD_BITS
+    _write_sidecar(path, meta)
+    worst = max(
+        bloom_fill_ratios_table(df.sparkSession, path).values(), default=0.0
+    )
     if worst > 0.5:
         import warnings
 
@@ -573,8 +525,7 @@ def bloom_index_append(
 
     Returns ``{"rows_appended", "files_touched", "new_bits"}``
     (``"skipped_replay": True`` when the marker short-circuits)."""
-    raw = _read_sidecar_raw(path)  # CAS token for the sidecar commits
-    meta = json.loads(raw)
+    raw, meta = _load_meta(path)  # raw: CAS token for the sidecar commits
     if batch_id is not None:
         last = meta.get("last_batch_id")
         if last is not None and batch_id <= last:
@@ -646,60 +597,42 @@ def bloom_index_append(
             _positions(F.col(meta["key_col"]), m_bits, k)
         ).alias("bit"),
     ).filter(F.col("bit").isNotNull())  # null keys are never indexed
-    if meta.get("bits_storage") == "table":
-        # Spark-side merge: old words ∪ delta words, bit_or per
-        # (fid, w) — index-sized, nothing bitmap-shaped on the driver.
-        # The merged table lands under a FRESH versioned dir; the
-        # sidecar replace below is the atomic commit point (stale
-        # versions are vacuumed by bloom_index_compact, not here — an
-        # in-flight probe may still hold the old pointer).
-        wb = meta.get("word_bits", WORD_BITS)
-        old_dir = meta["bits_dir"]
-        old_words = _read_bits(spark, path, old_dir)
-        merged = (
-            old_words.unionByName(_words_df(delta_pairs, wb))
-            .groupBy("fid", "w")
-            .agg(F.bit_or("word").alias("word"))
-        )
-        new_dir = f"{_BITS_TABLE}_{uuid.uuid4().hex[:8]}"
-        (
-            merged.repartition(max(1, n_files // 64), "fid")
-            .write.parquet(os.path.join(path, new_dir))
-        )
+    # Spark-side merge: old words ∪ delta words, bit_or per
+    # (fid, w) — index-sized, nothing bitmap-shaped on the driver.
+    # The merged table lands under a FRESH versioned dir; the
+    # sidecar replace below is the atomic commit point (stale
+    # versions are vacuumed by bloom_index_compact, not here — an
+    # in-flight probe may still hold the old pointer).
+    wb = meta.get("word_bits", WORD_BITS)
+    old_dir = meta["bits_dir"]
+    old_words = _read_bits(spark, path, old_dir)
+    merged = (
+        old_words.unionByName(_words_df(delta_pairs, wb))
+        .groupBy("fid", "w")
+        .agg(F.bit_or("word").alias("word"))
+    )
+    new_dir = f"{_BITS_TABLE}_{uuid.uuid4().hex[:8]}"
+    (
+        merged.repartition(max(1, n_files // 64), "fid")
+        .write.parquet(os.path.join(path, new_dir))
+    )
 
-        # new_bits = popcount(new) − popcount(old), fused into ONE
-        # signed-tag aggregate job (r17; was two separate read+agg
-        # jobs — same sums, same difference)
-        new_bits = (
-            _read_bits(spark, path, new_dir)
-            .select(F.lit(1).alias("_t"), "word")
-            .unionByName(
-                _read_bits(spark, path, old_dir).select(
-                    F.lit(-1).alias("_t"), "word"
-                )
+    # new_bits = popcount(new) − popcount(old), fused into ONE
+    # signed-tag aggregate job (r17; was two separate read+agg
+    # jobs — same sums, same difference)
+    new_bits = (
+        _read_bits(spark, path, new_dir)
+        .select(F.lit(1).alias("_t"), "word")
+        .unionByName(
+            _read_bits(spark, path, old_dir).select(
+                F.lit(-1).alias("_t"), "word"
             )
-            .agg(F.sum(F.bit_count("word") * F.col("_t")))
-            .first()[0]
-            or 0
         )
-        meta["bits_dir"] = new_dir
-    else:
-        bits_rows = (
-            delta_pairs.groupBy("fid")
-            .agg(F.sort_array(F.collect_set("bit")).alias("bits"))
-            .collect()
-        )
-        decoded = _decode_bits(meta)
-        new_bits = 0
-        for r in bits_rows:
-            f = int(r["fid"])
-            merged_set = decoded.get(f, set()) | {int(b) for b in r["bits"]}
-            new_bits += len(merged_set) - len(decoded.get(f, set()))
-            decoded[f] = merged_set
-        meta["enc"] = "b64"
-        meta["bits"] = {
-            str(f): _pack_bits(sorted(b)) for f, b in decoded.items()
-        }
+        .agg(F.sum(F.bit_count("word") * F.col("_t")))
+        .first()[0]
+        or 0
+    )
+    meta["bits_dir"] = new_dir
     # step 1: bits BEFORE data (superset bitmaps are safe, subset
     # bitmaps lose rows) — the marker is deliberately NOT in this
     # write; CAS-guarded so a racing appender's commit is detected
@@ -821,8 +754,8 @@ def bloom_index_compact(
     are localCheckpoint-pinned first, the lineage break Spark needs
     to overwrite a path it is reading (the zorder-append device).
 
-    Compaction is also the VACUUM point for table-backed bitmaps:
-    each append commits a fresh versioned bits table and leaves the
+    Compaction is also the VACUUM point for the bits table: each
+    append commits a fresh versioned bits table and leaves the
     prior version on disk (an in-flight probe may still hold the old
     pointer — the same reader-race posture as the merge archives), so
     stale versions accumulate until this maintenance pass removes
@@ -843,8 +776,8 @@ def bloom_index_compact(
     threshold), the bitmaps are REBUILT from the data at
     ``m_bits_for(max per-file distinct keys, fp_target)`` — bounds,
     layout, and rows untouched, only the bitmap geometry changes,
-    committed by the same atomic sidecar replace (versioned dir for
-    table storage), so in-flight probes keep a consistent
+    committed by the same atomic sidecar replace (the new bits land in
+    a versioned dir), so in-flight probes keep a consistent
     (m_bits, bits) pair whichever sidecar they read. Pass ``None`` to
     disable. Mirrors the z-order family's OPTIMIZE loop.
 
@@ -868,9 +801,8 @@ def bloom_index_compact(
     (``operators/_sidecar.py``)."""
     import shutil
 
-    raw = _read_sidecar_raw(path)  # CAS token: detect mid-compact appends
-    meta0 = json.loads(raw)
-    ref = meta0.get("bits_dir")
+    raw, meta0 = _load_meta(path)  # raw: CAS token, catches mid-compact appends
+    ref = meta0["bits_dir"]
     stale = [
         d
         for d in os.listdir(path)
@@ -886,22 +818,13 @@ def bloom_index_compact(
     for d in stale:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
         vacuumed += 1
-    frag = []
-    files_before = 0
-    for d in os.listdir(path):
-        if not d.startswith("fid=") or not os.path.isdir(os.path.join(path, d)):
-            continue
-        n = sum(
-            1
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        files_before += n
-        if n > 1:
-            frag.append(int(d.split("=", 1)[1]))
+    n_data = {f: _n_data_files(d) for f, d in _fid_dirs(path).items()}
+    files_before = sum(n_data.values())
+    frag = sorted(f for f, n in n_data.items() if n > 1)
     if frag:
         combined = (
-            spark.read.parquet(path)
+            spark.read.schema(_data_schema(meta0))
+            .parquet(path)
             .filter(F.col("fid").isin(frag))
             .repartition(len(frag), "fid")
             .localCheckpoint(eager=True)
@@ -912,13 +835,7 @@ def bloom_index_compact(
             .partitionBy("fid")
             .parquet(path)
         )
-        files_after = sum(
-            1
-            for d in os.listdir(path)
-            if d.startswith("fid=") and os.path.isdir(os.path.join(path, d))
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
+        files_after = sum(_n_data_files(d) for d in _fid_dirs(path).values())
         # touch-commit: raises if a maintenance writer committed while
         # the rewrite ran (its rows were just dropped from the
         # rewritten fids — surface the lost update instead of hiding
@@ -951,17 +868,10 @@ def _maybe_resize(
     ``m_bits_for(max per-file distinct keys, fp_target)``. Only the
     bitmap geometry changes — bounds, layout, rows, and the replay
     marker are carried over verbatim; the atomic sidecar replace is
-    the commit point (table storage lands in a fresh versioned dir
-    first, the append protocol's reader-race posture)."""
-    raw = _read_sidecar_raw(path)  # CAS token for the sidecar commit
-    meta = json.loads(raw)
-    table = meta.get("bits_storage") == "table"
-    fills = (
-        bloom_fill_ratios_table(spark, path)
-        if table
-        else bloom_fill_ratios(meta)
-    )
-    worst = max(fills.values(), default=0.0)
+    the commit point (the bits land in a fresh versioned dir first,
+    the append protocol's reader-race posture)."""
+    raw, meta = _load_meta(path)  # raw: CAS token for the sidecar commit
+    worst = max(bloom_fill_ratios_table(spark, path).values(), default=0.0)
     if fill_threshold is None:
         return worst, None
     # k-aware effective threshold: the DESIGN fill for fp_target at k
@@ -970,13 +880,7 @@ def _maybe_resize(
     # the resize check forever on k>=7 geometries that cannot be
     # improved at this fp_target
     eff = max(fill_threshold, fp_target ** (1.0 / meta["k"]))
-    if worst <= eff:
-        return worst, None
-    have_files = any(
-        d.startswith("fid=") and os.path.isdir(os.path.join(path, d))
-        for d in os.listdir(path)
-    )
-    if not have_files:
+    if worst <= eff or not _fid_dirs(path):
         return worst, None
     key_col, k = meta["key_col"], meta["k"]
     # no localCheckpoint pin here: the parquet files are immutable
@@ -984,7 +888,7 @@ def _maybe_resize(
     # already done), so the sizing aggregate and the pairs build may
     # scan twice — pinning would materialize the WHOLE table for a
     # bitmap rebuild, the wrong trade at 100 TB
-    data = spark.read.parquet(path)
+    data = spark.read.schema(_data_schema(meta)).parquet(path)
     max_keys = (
         data.filter(F.col(key_col).isNotNull())
         .groupBy("fid")
@@ -1002,87 +906,32 @@ def _maybe_resize(
         "fid", F.explode(_positions(F.col(key_col), m_new, k)).alias("bit")
     ).filter(F.col("bit").isNotNull())
     meta["m_bits"] = m_new
-    if table:
-        wb = meta.get("word_bits", WORD_BITS)
-        new_dir = f"{_BITS_TABLE}_{uuid.uuid4().hex[:8]}"
-        (
-            _words_df(pairs, wb)
-            .repartition(max(1, meta["n_files"] // 64), "fid")
-            .write.parquet(os.path.join(path, new_dir))
-        )
-        meta["bits_dir"] = new_dir
-    else:
-        bits_rows = (
-            pairs.groupBy("fid")
-            .agg(F.sort_array(F.collect_set("bit")).alias("bits"))
-            .collect()
-        )
-        meta["enc"] = "b64"
-        meta["bits"] = {
-            str(r["fid"]): _pack_bits([int(b) for b in r["bits"]])
-            for r in bits_rows
-        }
+    new_dir = f"{_BITS_TABLE}_{uuid.uuid4().hex[:8]}"
+    (
+        _words_df(pairs, meta.get("word_bits", WORD_BITS))
+        .repartition(max(1, meta["n_files"] // 64), "fid")
+        .write.parquet(os.path.join(path, new_dir))
+    )
+    meta["bits_dir"] = new_dir
     _guarded_sidecar_write(path, meta, raw)
     return worst, m_new
-
-
-def bloom_probe_files(meta: dict, keys: Sequence) -> list[int]:
-    """File ids that MIGHT contain any of ``keys`` (no false
-    negatives; false positives bounded by the bitmap geometry).
-
-    Cost discipline: ``n_files × len(keys) × k`` BIT TESTS against
-    the base64-decoded packed buffers — never a materialized
-    position-set per file (the first implementation unpacked every
-    set bit into Python sets, which is O(total set bits): ~2 s of
-    driver time on a 64-file × 330k-bit index before any data was
-    read, r13 measurement). Legacy positions-list sidecars still take
-    the set path."""
-    import base64
-
-    m_bits, k = meta["m_bits"], meta["k"]
-    hits: set[int] = set()
-    if meta.get("enc") == "b64":
-        bufs = {
-            int(f): base64.b64decode(b) for f, b in meta["bits"].items()
-        }
-
-        def admits(buf: bytes, pos: list[int]) -> bool:
-            for p in pos:
-                i = p >> 3
-                if i >= len(buf) or not buf[i] & (1 << (p & 7)):
-                    return False
-            return True
-
-        for key in keys:
-            if key is None:
-                continue  # NULL probes match nothing, like SQL equality
-            pos = _positions_py(key, m_bits, k)
-            for f, buf in bufs.items():
-                if f not in hits and admits(buf, pos):
-                    hits.add(f)
-        return sorted(hits)
-    bitsets = _decode_bits(meta)
-    for key in keys:
-        if key is None:
-            continue
-        pos = _positions_py(key, m_bits, k)
-        for f, bs in bitsets.items():
-            if f not in hits and all(p in bs for p in pos):
-                hits.add(f)
-    return sorted(hits)
 
 
 def bloom_probe_files_table(
     spark: SparkSession, path: str, keys: Sequence, meta: dict | None = None
 ) -> list[int]:
-    """Table-backed twin of :func:`bloom_probe_files`. The consult
-    needs only the probed words' rows of the bits table, ``n_files`` ×
-    distinct probed words × 16 B: under the session's
+    """File ids that MIGHT contain any of ``keys`` (no false
+    negatives; false positives bounded by the bitmap geometry); NULL
+    keys match nothing, like SQL equality. The consult needs only the
+    probed words' rows of the bits table, ``n_files`` × distinct
+    probed words × 16 B: under the session's
     ``spark.sql.autoBroadcastJoinThreshold`` the driver reads just
     those rows (:func:`_probe_hits_local`, no Spark job); above it the
     probe keys' ``(word, mask)`` pairs are BROADCAST against the bits
     table (:func:`_probe_hits_df`), which never moves and never
-    reaches the driver. The output is fid ids, file-count-bounded."""
+    reaches the driver. The output is fid ids, file-count-bounded.
+    ``meta`` is the index contract as :func:`read_index_meta` returns
+    it (read from ``path`` when omitted)."""
     if meta is None:
         meta = read_index_meta(path)
     rows = _probe_rows(meta, keys)
@@ -1192,11 +1041,10 @@ def bloom_skipping_read(
     spark: SparkSession, path: str, keys: Sequence
 ) -> tuple[DataFrame, dict]:
     """Point-lookup over a :func:`bloom_index_write` directory: consult
-    the bitmaps (:func:`bloom_probe_files_table` for table storage,
-    driver-side for JSON sidecars), read ONLY the files whose bitmap
-    admits some probe key (partition pruning on ``fid`` — skipped
-    files are never opened), then apply the exact ``key IN (...)``
-    filter over the survivors. Returns ``(rows_df, stats)`` with
+    the bitmaps (:func:`bloom_probe_files_table`), read ONLY the files
+    whose bitmap admits some probe key (partition pruning on ``fid`` —
+    skipped files are never opened), then apply the exact
+    ``key IN (...)`` filter over the survivors. Returns ``(rows_df, stats)`` with
     ``stats = {"files_total", "files_hit", "files_skipped"}``. The
     data read declares the sidecar schema, so a small-index probe runs
     one Spark job: the pruned read of the hit files.
@@ -1211,15 +1059,8 @@ def bloom_skipping_read(
     # reader would open; a free directory listing, not a Spark job
     # (and unlike the bits table it also counts files holding only
     # NULL keys, which carry no bitmap yet still exist on disk)
-    n_present = sum(
-        1
-        for d in os.listdir(path)
-        if d.startswith("fid=") and os.path.isdir(os.path.join(path, d))
-    )
-    if meta.get("bits_storage") == "table":
-        hit = bloom_probe_files_table(spark, path, keys, meta)
-    else:
-        hit = bloom_probe_files(meta, keys)
+    n_present = len(_fid_dirs(path))
+    hit = bloom_probe_files_table(spark, path, keys, meta)
     stats = {
         "files_total": n_present,
         "files_hit": len(hit),

@@ -294,6 +294,8 @@ def dq_bloom_fill_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from nineinfra_spark.operators.bloomindex import (
+        BITS_SCHEMA,
+        _data_schema,
         bloom_index_write,
         read_index_meta,
     )
@@ -308,12 +310,14 @@ def dq_bloom_fill_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     meta = read_index_meta(path)
     set_bits = (
-        spark.read.parquet(_os.path.join(path, meta["bits_dir"]))
+        spark.read.schema(BITS_SCHEMA)
+        .parquet(_os.path.join(path, meta["bits_dir"]))
         .groupBy("fid")
         .agg(F.sum(F.bit_count("word")).alias("set_bits"))
     )
     per = (
-        spark.read.parquet(path)
+        spark.read.schema(_data_schema(meta))
+        .parquet(path)
         .groupBy("fid")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -11,7 +11,6 @@ from nineinfra_spark.operators.bloomindex import (
     _positions,
     _positions_py,
     bloom_index_write,
-    bloom_probe_files,
     bloom_probe_files_table,
     bloom_skipping_read,
     read_index_meta,
@@ -310,24 +309,10 @@ def test_append_extends_index_and_keeps_exactness(spark, tmp_path):
         bloom_index_append(spark, path, delta.drop("payload"), batch_id=1)
 
 
-def test_packed_encoding_roundtrip_and_fill():
-    """base64-packed bitmaps (density-proof sidecar encoding) must
-    roundtrip exactly; fill ratios and the sizing helper follow the
-    fill^k false-positive model."""
-    from nineinfra_spark.operators.bloomindex import (
-        _pack_bits,
-        _unpack_bits,
-        bloom_fill_ratios,
-        m_bits_for,
-    )
+def test_m_bits_for_follows_fill_model():
+    """The sizing helper follows the fill^k false-positive model."""
+    from nineinfra_spark.operators.bloomindex import m_bits_for
 
-    for pos in ([], [0], [7], [8], [63, 64, 65], list(range(0, 500, 7))):
-        assert _unpack_bits(_pack_bits(sorted(pos))) == set(pos)
-    meta = {"m_bits": 64, "enc": "b64", "bits": {"0": _pack_bits([1, 2, 3, 40])}}
-    assert bloom_fill_ratios(meta) == {0: 4 / 64}
-    # legacy positions-list sidecars still decode
-    meta_legacy = {"m_bits": 64, "bits": {"0": [1, 2, 3, 40]}}
-    assert bloom_fill_ratios(meta_legacy) == {0: 4 / 64}
     # ~10.5 bits/key at 1% FP, k=4
     m = m_bits_for(1000, fp=0.01)
     assert 9_000 <= m <= 12_000 and m % 64 == 0
@@ -452,12 +437,6 @@ def test_key_type_guard(spark, tmp_path):
         bloom_probe_files_table(spark, path, [True])
     with pytest.raises(TypeError, match="str or int"):
         bloom_probe_files_table(spark, path, [1.5])
-    # the driver-side JSON probe applies the same rendering guard
-    mj = bloom_index_write(
-        dfi, str(tmp_path / "ij"), "day", "key", 8, bits_storage="json"
-    )
-    with pytest.raises(TypeError, match="str or int"):
-        bloom_probe_files(mj, [True])
 
 
 def test_nondeterministic_source_is_pinned(spark, tmp_path):
@@ -523,35 +502,6 @@ def test_crash_window_key_dedup_converges(spark, tmp_path):
     # and a marker-committed replay short-circuits as before
     st3 = bloom_index_append(spark, path, delta, batch_id=0, key_cols=["key"])
     assert st3.get("skipped_replay") is True
-
-
-def test_table_storage_matches_json_storage(spark, tmp_path):
-    """Default table-backed bitmaps and the JSON sidecar encode the
-    SAME bit sets and probe to the same fid set — sharding the
-    sidecar is a storage change, not a semantics change."""
-    import hashlib
-
-    from nineinfra_spark.operators.bloomindex import (
-        bloom_probe_files_table,
-        load_bits,
-    )
-
-    df = _frame(spark)
-    pt, pj = str(tmp_path / "t"), str(tmp_path / "j")
-    mt = bloom_index_write(df, pt, "day", "key", N_FILES)
-    mj = bloom_index_write(df, pj, "day", "key", N_FILES, bits_storage="json")
-    assert mt["bits_storage"] == "table" and "bits" not in mt
-    assert load_bits(spark, pt) == load_bits(spark, pj)
-    probe = [
-        hashlib.md5(str(i).encode()).hexdigest() for i in (1, 42, 999)
-    ] + ["absent-key"]
-    assert bloom_probe_files_table(spark, pt, probe) == bloom_probe_files(
-        mj, probe
-    )
-    ot, st_t = bloom_skipping_read(spark, pt, probe)
-    oj, st_j = bloom_skipping_read(spark, pj, probe)
-    assert st_t == st_j
-    assert sorted(map(tuple, ot.collect())) == sorted(map(tuple, oj.collect()))
 
 
 def test_table_append_merges_sparkside_and_compact_vacuums(spark, tmp_path):
@@ -767,14 +717,14 @@ def test_compact_resize_repairs_saturated_index(spark, tmp_path):
     assert cst2["worst_fill"] < 0.5
 
 
-def test_compact_resize_json_storage_and_noop_threshold(spark, tmp_path):
-    """Resize covers the JSON sidecar storage too, and an already
-    right-sized index is never rebuilt (m_bits_for would not grow
-    m); resize disabled via None leaves a saturated index alone."""
+def test_compact_resize_noop_threshold(spark, tmp_path):
+    """Resize disabled via None leaves a saturated index alone, and an
+    already right-sized index is never rebuilt (m_bits_for would not
+    grow m)."""
     import warnings
 
     from nineinfra_spark.operators.bloomindex import (
-        bloom_fill_ratios,
+        bloom_fill_ratios_table,
         bloom_index_compact,
     )
 
@@ -782,34 +732,21 @@ def test_compact_resize_json_storage_and_noop_threshold(spark, tmp_path):
         (F.col("id") % 32).alias("day"),
         F.md5(F.col("id").cast("string")).alias("key"),
     )
-    p_json = str(tmp_path / "js")
+    p_sat = str(tmp_path / "sat")
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        bloom_index_write(
-            df, p_json, "day", "key", 4, m_bits=256, bits_storage="json"
-        )
-    assert max(bloom_fill_ratios(read_index_meta(p_json)).values()) > 0.5
-    # disabled: nothing happens
-    cst0 = bloom_index_compact(spark, p_json, resize_if_fill_above=None)
-    assert cst0["resized_m_bits"] is None
-    assert read_index_meta(p_json)["m_bits"] == 256
-    # enabled: json bitmaps rebuild in place (sidecar replace)
-    cst = bloom_index_compact(spark, p_json)
-    assert cst["resized_m_bits"] is not None
-    meta = read_index_meta(p_json)
-    assert meta["m_bits"] == cst["resized_m_bits"]
-    assert max(bloom_fill_ratios(meta).values()) < 0.5
-    import hashlib
-
-    k = hashlib.md5(b"123").hexdigest()
-    out, st = bloom_skipping_read(spark, p_json, [k])
-    assert out.count() == 1
-    assert st["files_skipped"] > 0
+        meta0 = bloom_index_write(df, p_sat, "day", "key", 4, m_bits=256)
+    assert max(bloom_fill_ratios_table(spark, p_sat).values()) > 0.5
+    cst0 = bloom_index_compact(spark, p_sat, resize_if_fill_above=None)
+    assert cst0["resized_m_bits"] is None and cst0["worst_fill"] > 0.5
+    meta1 = read_index_meta(p_sat)
+    assert (meta1["m_bits"], meta1["bits_dir"]) == (256, meta0["bits_dir"])
     # right-sized from the start: compact never rebuilds
     p_ok = str(tmp_path / "ok")
-    bloom_index_write(df, p_ok, "day", "key", 4)
+    meta_ok = bloom_index_write(df, p_ok, "day", "key", 4)
     cst_ok = bloom_index_compact(spark, p_ok)
     assert cst_ok["resized_m_bits"] is None
+    assert read_index_meta(p_ok)["bits_dir"] == meta_ok["bits_dir"]
 
 
 def test_null_key_cols_replay_dedups_null_keys(spark, tmp_path):
@@ -1126,3 +1063,97 @@ def test_small_index_probe_runs_one_job(spark, indexed):
     assert jobs == 1
     assert [(r["key"], r["payload"]) for r in rows] == [(key, 126)]
 
+
+def test_second_write_onto_index_raises_and_leaves_it_unchanged(
+    spark, tmp_path
+):
+    """The build is error-if-exists: writing onto an existing index
+    raises before anything lands, so its rows, sidecar and bitmaps are
+    exactly as before (an append-mode write would add rows the bits
+    table never indexes — false negatives)."""
+    from pyspark.errors import AnalysisException
+
+    from nineinfra_spark.operators.bloomindex import (
+        _read_sidecar_raw,
+        load_bits,
+    )
+
+    path = str(tmp_path / "w")
+    df = _frame(spark)
+    bloom_index_write(df, path, "day", "key", 4)
+    rows0 = sorted(map(tuple, spark.read.parquet(path).collect()))
+    raw0, bits0 = _read_sidecar_raw(path), load_bits(spark, path)
+    delta = spark.range(N, N + 50).select(
+        (F.col("id") % 100).alias("day"),
+        F.md5(F.col("id").cast("string")).alias("key"),
+        (F.col("id") * 3).alias("payload"),
+    )
+    with pytest.raises(AnalysisException, match="already exists"):
+        bloom_index_write(delta, path, "day", "key", 4)
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows0
+    assert _read_sidecar_raw(path) == raw0
+    assert load_bits(spark, path) == bits0
+
+
+def test_sidecar_without_bits_table_is_refused(spark, tmp_path):
+    """A sidecar lacking the ``"bits_storage": "table"`` marker (an
+    index with its bitmaps inlined in the sidecar) is refused with the
+    rebuild message by the probe, append and compact entry points —
+    never a KeyError on the missing bits pointer."""
+    import json
+
+    from nineinfra_spark.operators.bloomindex import (
+        bloom_index_append,
+        bloom_index_compact,
+    )
+
+    path = tmp_path / "old"
+    path.mkdir()
+    (path / "_bloomindex.json").write_text(
+        json.dumps(
+            {
+                "layout_col": "day",
+                "key_col": "key",
+                "n_files": 4,
+                "m_bits": 64,
+                "k": 4,
+                "bounds": [0.0, 99.0],
+                "schema": _frame(spark).schema.json(),
+                "enc": "b64",
+                "bits": {"0": "AQ=="},
+            }
+        )
+    )
+    rebuild = "rebuild it with bloom_index_write"
+    with pytest.raises(ValueError, match=rebuild):
+        bloom_skipping_read(spark, str(path), ["k"])
+    with pytest.raises(ValueError, match=rebuild):
+        bloom_index_append(spark, str(path), _frame(spark), batch_id=0)
+    with pytest.raises(ValueError, match=rebuild):
+        bloom_index_compact(spark, str(path))
+
+
+def test_skipping_read_probes_through_module_attribute(
+    spark, indexed, monkeypatch
+):
+    """``bloom_skipping_read`` consults the bitmaps through the
+    module-level ``bloom_probe_files_table``, exactly once: the seam a
+    tracer wraps to time the consult. A refactor that calls a private
+    helper instead would silently empty that timing."""
+    import hashlib
+
+    from nineinfra_spark.operators import bloomindex
+
+    calls = []
+    real = bloomindex.bloom_probe_files_table
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bloomindex, "bloom_probe_files_table", counting)
+    path, _, _ = indexed
+    bloomindex.bloom_skipping_read(
+        spark, path, [hashlib.md5(b"42").hexdigest()]
+    )
+    assert len(calls) == 1

@@ -926,6 +926,27 @@ class TestBloomProbeEndpoint:
         assert e.value.code == 400
         assert "str or int" in json.loads(e.value.read())["error"]
 
+    def test_index_without_bits_table_400(self, rest, tmp_path):
+        """A sidecar lacking the bits-table marker (an index written
+        with its bitmaps inlined in the sidecar) is refused with the
+        rebuild message as a clean 400."""
+        path = tmp_path / "old"
+        path.mkdir()
+        (path / "_bloomindex.json").write_text(
+            json.dumps({"n_files": 1, "m_bits": 64, "k": 4, "bits": {}})
+        )
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{rest.port}/api/v1/ops/bloom-probe",
+            data=json.dumps({"path": str(path), "keys": ["a"]}).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(req)
+        assert e.value.code == 400
+        assert "rebuild it with bloom_index_write" in json.loads(
+            e.value.read()
+        )["error"]
+
     def test_bad_keys_type_400(self, rest):
         req = urllib.request.Request(
             f"http://127.0.0.1:{rest.port}/api/v1/ops/bloom-probe",
