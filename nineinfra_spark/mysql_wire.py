@@ -41,10 +41,14 @@ protocol — the subset every driver needs to connect and query):
 - ``COM_PING`` → OK, ``COM_QUIT`` → close, anything else → ERR.
 
 Result fetch is bounded exactly like the REST frontend
-(``limit(n+1)`` probe, cap :data:`nineinfra_spark.rest.MAX_FETCH_LIMIT`)
-— a wire gateway FETCHES a window; unbounded extraction is a WRITE
-through SQL. The server is a daemon thread per connection on the
-shared session, like the other frontends.
+(:func:`nineinfra_spark.shortcircuit.collect_bounded`, a window of
+:data:`nineinfra_spark.rest.DEFAULT_FETCH_LIMIT` rows) — a wire gateway
+FETCHES a window; unbounded extraction is a WRITE through SQL. A point
+statement over one unpinned, non-partitioned parquet table is read on
+the driver with pyarrow and runs no Spark job; any other plan, any
+error on that path and any truncated window run Spark. The server is a
+daemon thread per connection on the shared session, like the other
+frontends.
 """
 
 from __future__ import annotations
@@ -55,7 +59,8 @@ import threading
 
 from pyspark.sql import SparkSession
 
-from nineinfra_spark.rest import DEFAULT_FETCH_LIMIT, MAX_FETCH_LIMIT
+from nineinfra_spark.rest import DEFAULT_FETCH_LIMIT
+from nineinfra_spark.shortcircuit import collect_bounded
 
 SERVER_VERSION = "8.0.0-nineinfra-spark"
 
@@ -282,10 +287,7 @@ class _Conn:
     def _run_query(self, sql: str) -> None:
         try:
             df = self._spark.sql(sql)
-            limit = min(DEFAULT_FETCH_LIMIT, MAX_FETCH_LIMIT)
-            fetched = df.limit(limit + 1).collect()
-            rows = fetched[:limit]
-            truncated = len(fetched) > limit
+            rows, truncated = collect_bounded(df, DEFAULT_FETCH_LIMIT)
             cols = df.columns
         except Exception as exc:  # engine error → ERR packet, connection lives
             self._send_err(str(exc)[:900])

@@ -345,9 +345,9 @@ def bloom_index_write(
     ``_bloomindex_bits``, built Spark-side; the JSON sidecar carries
     only the grid contract and the table pointer.
 
-    ``path`` must not exist: the data write is error-if-exists, so a
-    second write onto an index raises before anything lands (remove
-    the directory to rebuild; :func:`bloom_index_append` extends one).
+    ``path`` must not exist: a second write onto an index raises
+    ``FileExistsError`` before any job runs (remove the directory to
+    rebuild; :func:`bloom_index_append` extends one).
 
     Returns the sidecar dict."""
     if not 1 <= n_files <= 4096:
@@ -363,6 +363,11 @@ def bloom_index_write(
             "partition column — rename it first"
         )
     _check_key_type(df, key_col)
+    if os.path.exists(path):
+        raise FileExistsError(
+            f"bloom_index_write: {path!r} already exists; extend an index "
+            "with bloom_index_append, or remove the directory to rebuild it"
+        )
     # pin ONCE: the bounds aggregate, the parquet write, and the
     # bitmap aggregation below are three separate actions — a
     # non-deterministic source (a sample, a changing view) recomputed

@@ -12,12 +12,17 @@ Design constraints, mirrored from the gateway tier's reality:
 - The server is a daemon thread in the driver process; Spark sessions
   are thread-safe for concurrent ``sql()`` calls (each request plans
   on the shared session, like Kyuubi's USER-share engine mode).
-- Result fetch is a bounded ``limit(n).collect()`` — a gateway FETCHES
-  a window of rows to the client by definition; the cap (default
-  1000, per-request override) keeps a careless ``SELECT * FROM fact``
-  from materializing 100 TB on the driver. Unbounded extraction is a
-  WRITE (``INSERT INTO``/``CREATE TABLE AS``) through the same SQL
-  surface, exactly as on the real platform.
+- Result fetch is bounded — a gateway FETCHES a window of rows to the
+  client by definition; the cap (default 1000, per-request override)
+  keeps a careless ``SELECT * FROM fact`` from materializing 100 TB on
+  the driver. Unbounded extraction is a WRITE (``INSERT INTO``/``CREATE
+  TABLE AS``) through the same SQL surface, exactly as on the real
+  platform. :func:`nineinfra_spark.shortcircuit.collect_bounded`
+  fetches the window: a point statement (a ``Project``/``Filter`` of
+  column-vs-literal comparisons over one unpinned, non-partitioned
+  parquet table) is read on the driver with pyarrow and runs no Spark
+  job; any other plan, any error on that path and any truncated
+  window are ``limit(n + 1).collect()``.
 
 Endpoints:
 
@@ -96,6 +101,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from nineinfra_spark.shortcircuit import collect_bounded
+
 DEFAULT_FETCH_LIMIT = 1000
 #: Server-side ceiling on the per-request ``limit`` override — the cap
 #: exists to stop careless driver materialization, so the client must
@@ -114,6 +121,26 @@ MAX_STATEMENTS = 32
 #: dropped — a returning client gets a fresh clone, the same contract
 #: as a gateway-side idle-session timeout).
 MAX_SESSIONS = 64
+
+
+def _fetch_limit(req: dict) -> int:
+    """The request's ``limit`` (default :data:`DEFAULT_FETCH_LIMIT`),
+    refused outside ``[0, MAX_FETCH_LIMIT]``."""
+    limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
+    if not 0 <= limit <= MAX_FETCH_LIMIT:
+        raise ValueError(f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}")
+    return limit
+
+
+def _resultset(df, limit: int) -> dict:
+    """The bounded resultset every fetch endpoint answers with."""
+    rows, truncated = collect_bounded(df, limit)
+    return {
+        "columns": df.columns,
+        "rows": [list(r) for r in rows],
+        "rowCount": len(rows),
+        "truncated": truncated,
+    }
 
 
 def _json_default(v):
@@ -436,11 +463,7 @@ class _Handler(BaseHTTPRequestHandler):
 
                 table = req["table"]
                 key_cols = list(req["keyCols"])
-                limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
-                if limit < 0 or limit > MAX_FETCH_LIMIT:
-                    raise ValueError(
-                        f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}"
-                    )
+                limit = _fetch_limit(req)
                 df = table_changes(
                     sess,
                     table,
@@ -450,18 +473,7 @@ class _Handler(BaseHTTPRequestHandler):
                         req.get("allowSchemaEvolution", False)
                     ),
                 )
-                rows = df.limit(limit + 1).collect()
-                truncated = len(rows) > limit
-                rows = rows[:limit]
-                self._reply(
-                    200,
-                    {
-                        "columns": df.columns,
-                        "rows": [list(r) for r in rows],
-                        "rowCount": len(rows),
-                        "truncated": truncated,
-                    },
-                )
+                self._reply(200, _resultset(df, limit))
             elif op == "bloom-probe":
                 from nineinfra_spark.operators.bloomindex import (
                     bloom_skipping_read,
@@ -470,22 +482,12 @@ class _Handler(BaseHTTPRequestHandler):
                 keys = req["keys"]
                 if not isinstance(keys, list):
                     raise TypeError("keys must be a JSON array")
-                limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
-                if limit < 0 or limit > MAX_FETCH_LIMIT:
-                    raise ValueError(
-                        f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}"
-                    )
+                limit = _fetch_limit(req)
                 out, bstats = bloom_skipping_read(sess, req["path"], keys)
-                rows = out.limit(limit + 1).collect()
-                truncated = len(rows) > limit
-                rows = rows[:limit]
                 self._reply(
                     200,
                     {
-                        "columns": out.columns,
-                        "rows": [list(r) for r in rows],
-                        "rowCount": len(rows),
-                        "truncated": truncated,
+                        **_resultset(out, limit),
                         "filesTotal": bstats["files_total"],
                         "filesHit": bstats["files_hit"],
                         "filesSkipped": bstats["files_skipped"],
@@ -543,9 +545,7 @@ class _Handler(BaseHTTPRequestHandler):
             if not isinstance(req, dict):
                 raise TypeError(f"body must be a JSON object, got {type(req).__name__}")
             sql = req["sql"]
-            limit = int(req.get("limit", DEFAULT_FETCH_LIMIT))
-            if limit < 0 or limit > MAX_FETCH_LIMIT:
-                raise ValueError(f"limit must be in [0, {MAX_FETCH_LIMIT}], got {limit}")
+            limit = _fetch_limit(req)
             explain = bool(req.get("explain", False))
             cursor = bool(req.get("cursor", False))
             if cursor and explain:
@@ -614,16 +614,7 @@ class _Handler(BaseHTTPRequestHandler):
                     200, {"statementId": stmt_id, "columns": df.columns}
                 )
                 return
-            # fetch limit+1 to report truncation without a count() pass
-            rows = df.limit(limit + 1).collect()
-            truncated = len(rows) > limit
-            rows = rows[:limit]
-            payload = {
-                "columns": df.columns,
-                "rows": [list(r) for r in rows],
-                "rowCount": len(rows),
-                "truncated": truncated,
-            }
+            payload = _resultset(df, limit)
             if effective is not None:
                 payload["effectiveUser"] = effective
             self._reply(200, payload)

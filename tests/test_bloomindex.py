@@ -1071,8 +1071,6 @@ def test_second_write_onto_index_raises_and_leaves_it_unchanged(
     raises before anything lands, so its rows, sidecar and bitmaps are
     exactly as before (an append-mode write would add rows the bits
     table never indexes — false negatives)."""
-    from pyspark.errors import AnalysisException
-
     from nineinfra_spark.operators.bloomindex import (
         _read_sidecar_raw,
         load_bits,
@@ -1088,11 +1086,30 @@ def test_second_write_onto_index_raises_and_leaves_it_unchanged(
         F.md5(F.col("id").cast("string")).alias("key"),
         (F.col("id") * 3).alias("payload"),
     )
-    with pytest.raises(AnalysisException, match="already exists"):
+    with pytest.raises(FileExistsError, match="already exists"):
         bloom_index_write(delta, path, "day", "key", 4)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows0
     assert _read_sidecar_raw(path) == raw0
     assert load_bits(spark, path) == bits0
+
+
+def test_refused_write_runs_no_job_and_names_the_way_out(spark, tmp_path):
+    """The existing-path check comes before the pin and the bounds
+    aggregate: the refused write runs no Spark job, and its message
+    points at ``bloom_index_append`` or removing the directory (not at
+    a save mode the function does not have)."""
+    path = str(tmp_path / "w")
+    bloom_index_write(_frame(spark), path, "day", "key", 4)
+
+    def refused():
+        with pytest.raises(FileExistsError) as ei:
+            bloom_index_write(_frame(spark), path, "day", "key", 4)
+        return str(ei.value)
+
+    msg, jobs = _jobs_run(spark, refused)
+    assert jobs == 0
+    assert "bloom_index_append" in msg and "remove the directory" in msg
+    assert "overwrite" not in msg
 
 
 def test_sidecar_without_bits_table_is_refused(spark, tmp_path):

@@ -512,3 +512,76 @@ def test_split_command_response_continues_sequence(gw):
             c.read_packet()
     finally:
         c.close()
+
+
+class TestShortCircuitParity:
+    """A point statement on an unpinned parquet table is answered by
+    the driver-side short circuit (``nineinfra_spark/shortcircuit.py``)
+    with no Spark job, and every packet of its resultset — rows, NULL
+    encoding, the closing EOF's warning count — equals what Spark's
+    answer produces."""
+
+    @pytest.fixture()
+    def point_table(self, spark, tmp_path):
+        import datetime as dt
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pq.write_table(
+            pa.table(
+                {
+                    "k": pa.array([1, 2, 3], pa.int64()),
+                    "s": pa.array(["é", None, ""]),
+                    "d": pa.array([dt.date(1500, 3, 1), None, dt.date(2024, 2, 29)]),
+                    "b": pa.array([b"\x00\xff", b"", None]),
+                }
+            ),
+            str(tmp_path / "t.parquet"),
+        )
+        spark.sql(f"CREATE TABLE mw_point USING parquet LOCATION '{tmp_path}'")
+        yield "mw_point"
+        spark.sql("DROP TABLE IF EXISTS mw_point")
+
+    @staticmethod
+    def _packets(port: int, sql: str) -> list[bytes]:
+        """Every packet of one COM_QUERY resultset, through the
+        closing EOF."""
+        c = Client(port)
+        try:
+            c.handshake()
+            c.seq = 0
+            c.send_packet(bytes([0x03]) + sql.encode())
+            out = [c.read_packet()]
+            eofs = 0
+            while eofs < 2:
+                out.append(c.read_packet())
+                eofs += out[-1][0] == 0xFE and len(out[-1]) < 9
+            return out
+        finally:
+            c.close()
+
+    def test_point_statement_matches_spark_and_runs_no_job(self, spark, gw, point_table):
+        from nineinfra_spark import shortcircuit
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        for sql in (
+            f"SELECT * FROM {point_table} WHERE k = 2",
+            f"SELECT s, b, d FROM {point_table} WHERE k IN (1, 3)",
+        ):
+            before = set(tracker.getJobIdsForGroup(None))
+            served = self._packets(gw.port, sql)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert set(tracker.getJobIdsForGroup(None)) == before  # no job
+            saved = shortcircuit._point_read
+            shortcircuit._point_read = lambda limited, limit: None
+            try:
+                forced = self._packets(gw.port, sql)
+            finally:
+                shortcircuit._point_read = saved
+            assert served == forced
+            assert struct.unpack("<H", served[-1][1:3])[0] == 0  # no warning
+        # k = 2 has NULL s and d: encoded as 0xFB on the wire
+        row = self._packets(gw.port, f"SELECT s, d FROM {point_table} WHERE k = 2")[-2]
+        assert row == b"\xfb\xfb"

@@ -1,0 +1,435 @@
+"""Short-circuit point statements (``nineinfra_spark/shortcircuit.py``).
+
+Differential: every generated statement is sent through the REST
+frontend twice, once as served and once with the eligibility function
+replaced so Spark answers, and the two response bodies must agree —
+byte for byte on a one-file table, as row multisets with equal
+``rowCount``/``truncated`` on a multi-file one. Refusal: each plan the
+short circuit must not answer runs Spark jobs and gives Spark's body
+and status; a qualifying point statement runs none.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import datetime as dt
+import json
+import os
+import random
+import urllib.error
+import urllib.request
+from decimal import Decimal
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from nineinfra_spark import shortcircuit
+from nineinfra_spark.rest import start_rest_gateway
+
+N_ROWS = 48
+
+#: column → (arrow type, generator of one non-null value)
+_UTC = dt.timezone.utc
+_COLUMNS = {
+    "i": (pa.int32(), lambda r: r.randint(-5, 5)),
+    "bi": (pa.int64(), lambda r: r.randint(-(2**40), 2**40)),
+    "si": (pa.int16(), lambda r: r.randint(-3, 3)),
+    "b": (pa.bool_(), lambda r: r.random() < 0.5),
+    "x": (pa.float64(), lambda r: r.choice(
+        [float("nan"), -0.0, 0.0, float("inf"), float("-inf"), 1.5, -2.25])),
+    "dec": (pa.decimal128(10, 3), lambda r: Decimal(r.randint(-9999, 9999)).scaleb(-3)),
+    "s": (pa.string(), lambda r: r.choice(["", "a", "é", "日本", "ß z", "A"])),
+    "d": (pa.date32(), lambda r: r.choice(
+        [dt.date(1500, 3, 1), dt.date(1970, 1, 1), dt.date(2024, 2, 29), dt.date(1, 1, 1)])),
+    "tsn": (pa.timestamp("us"), lambda r: r.choice(
+        [dt.datetime(2001, 2, 3, 4, 5, 6, 789000), dt.datetime(1969, 12, 31, 23, 59, 59),
+         dt.datetime(2030, 1, 1)])),
+    "tsz": (pa.timestamp("us", tz="UTC"), lambda r: r.choice(
+        [dt.datetime(2001, 2, 3, 4, 5, 6, 789000, tzinfo=_UTC),
+         dt.datetime(1999, 12, 31, 23, 0, tzinfo=_UTC), dt.datetime(2020, 6, 1, tzinfo=_UTC)])),
+    "bin": (pa.binary(), lambda r: r.choice([b"", b"\x00\xff", b"ab", b"\xe9"])),
+}
+
+
+def _write_table(path: str, seed: int, n_files: int) -> None:
+    """``N_ROWS`` seeded rows over every proven type, with nulls in
+    every column, split into ``n_files`` parquet files."""
+    rng = random.Random(seed)
+    cols = {
+        name: [None if rng.random() < 0.2 else gen(rng) for _ in range(N_ROWS)]
+        for name, (_, gen) in _COLUMNS.items()
+    }
+    cols["i"][0] = 3  # a key the refusal tests can rely on
+    table = pa.table({n: pa.array(v, _COLUMNS[n][0]) for n, v in cols.items()})
+    os.makedirs(path)
+    step = -(-N_ROWS // n_files)
+    for f in range(n_files):
+        pq.write_table(table.slice(f * step, step), os.path.join(path, f"part-{f}.parquet"))
+
+
+@pytest.fixture(scope="module")
+def rest(spark):
+    gw = start_rest_gateway(spark, port=0)
+    yield gw
+    gw.stop()
+
+
+@pytest.fixture(scope="module")
+def tables(spark, tmp_path_factory):
+    """``sc_one`` (one file) and ``sc_multi`` (three files), the same
+    generator with different seeds."""
+    root = tmp_path_factory.mktemp("shortcircuit")
+    out = {}
+    for name, seed, n_files in (("sc_one", 1, 1), ("sc_multi", 2, 3)):
+        path = str(root / name)
+        _write_table(path, seed, n_files)
+        spark.sql(f"CREATE TABLE {name} USING parquet LOCATION '{path}'")
+        out[name] = path
+    yield out
+    for name in out:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _post(gw, payload: dict, session: str | None = None) -> tuple[int, bytes]:
+    headers = {"Content-Type": "application/json"}
+    if session is not None:
+        headers["X-Session-Id"] = session
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{gw.port}/api/v1/sql",
+        data=json.dumps(payload).encode(),
+        headers=headers,
+    )
+    try:
+        with urllib.request.urlopen(req) as r:
+            return r.status, r.read()
+    except urllib.error.HTTPError as exc:
+        return exc.code, exc.read()
+
+
+@contextlib.contextmanager
+def _forced_spark():
+    """Every plan refused by the eligibility check: Spark answers."""
+    saved = shortcircuit._point_read
+    shortcircuit._point_read = lambda limited, limit: None
+    try:
+        yield
+    finally:
+        shortcircuit._point_read = saved
+
+
+@contextlib.contextmanager
+def _served_counter():
+    """Counts the statements the short circuit answered."""
+    saved = shortcircuit._PointRead.rows
+    box = {"served": 0}
+
+    def rows(self, limit):
+        out = saved(self, limit)
+        box["served"] += out is not None
+        return out
+
+    shortcircuit._PointRead.rows = rows
+    try:
+        yield box
+    finally:
+        shortcircuit._PointRead.rows = saved
+
+
+def _jobs(spark, fn):
+    """``(fn(), Spark jobs it ran)``. The gateway's handler threads run
+    jobs outside any job group, so new ids in the group-less set are
+    counted once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def _both(gw, payload: dict, session: str | None = None):
+    """(served response, forced-Spark response), each ``(status, body)``."""
+    served = _post(gw, payload, session)
+    with _forced_spark():
+        spark_side = _post(gw, payload, session)
+    return served, spark_side
+
+
+# -- generated statements ----------------------------------------------------
+
+
+def _sql_literal(col: str, v) -> str:
+    if v is None:
+        return "NULL"
+    if col in ("i", "bi"):
+        return str(v)
+    if col == "si":
+        return f"CAST({v} AS SMALLINT)"
+    if col == "b":
+        return "true" if v else "false"
+    if col == "x":
+        return f"double('{v}')"
+    if col == "dec":
+        return f"CAST('{v}' AS DECIMAL(10,3))"
+    if col == "s":
+        return "'" + v.replace("'", "''") + "'"
+    if col == "d":
+        return f"DATE '{v.isoformat()}'"
+    if col == "tsn":
+        return f"TIMESTAMP_NTZ '{v.isoformat(sep=' ')}'"
+    if col == "tsz":
+        return f"TIMESTAMP '{v.replace(tzinfo=None).isoformat(sep=' ')}'"
+    return "X'" + v.hex() + "'"
+
+
+#: per column, literals that occur in the tables plus ones that do not
+_LITERALS = {
+    "i": [-5, 0, 3, 99],
+    "bi": [0, 2**41, -(2**41)],
+    "si": [-3, 0, 2, 77],
+    "b": [True, False],
+    "x": [float("nan"), -0.0, 1.5, float("inf"), float("-inf")],
+    "dec": [Decimal("0.000"), Decimal("1.234"), Decimal("-9.999")],
+    "s": ["", "a", "é", "日本", "zzz"],
+    "d": [dt.date(1500, 3, 1), dt.date(1970, 1, 1), dt.date(1000, 1, 1)],
+    "tsn": [dt.datetime(2001, 2, 3, 4, 5, 6, 789000), dt.datetime(2000, 1, 1)],
+    "tsz": [dt.datetime(2001, 2, 3, 4, 5, 6, 789000), dt.datetime(2020, 6, 1)],
+    "bin": [b"", b"ab"],
+}
+
+
+@st.composite
+def _predicates(draw):
+    col = draw(st.sampled_from(sorted(_COLUMNS)))
+    kind = draw(st.sampled_from(["=", "<", "<=", ">", ">=", "in", "in_null", "null", "notnull"]))
+    if kind == "null":
+        return f"{col} IS NULL"
+    if kind == "notnull":
+        return f"{col} IS NOT NULL"
+    lits = _LITERALS[col]
+    if kind.startswith("in"):
+        items = draw(st.lists(st.sampled_from(lits), min_size=1, max_size=3))
+        if kind == "in_null":
+            items.append(None)
+        return f"{col} IN ({', '.join(_sql_literal(col, v) for v in items)})"
+    return f"{col} {kind} {_sql_literal(col, draw(st.sampled_from(lits)))}"
+
+
+@st.composite
+def _statements(draw):
+    preds = draw(st.lists(_predicates(), min_size=1, max_size=2))
+    cols = draw(st.one_of(
+        st.just(["*"]),
+        st.lists(st.sampled_from(sorted(_COLUMNS)), min_size=1, max_size=4, unique=True),
+    ))
+    limit = draw(st.sampled_from([1000, 1000, 5]))
+    return f"SELECT {', '.join(cols)} FROM {{t}} WHERE {' AND '.join(preds)}", limit
+
+
+def _multiset(body: bytes) -> dict:
+    out = json.loads(body)
+    if "rows" in out:
+        out["rows"] = sorted(json.dumps(r) for r in out["rows"])
+    return out
+
+
+def _differential(rest, stmt, limit: int, table: str) -> bool:
+    payload = {"sql": stmt.format(t=table), "limit": limit}
+    (s1, b1), (s2, b2) = _both(rest, payload)
+    assert s1 == s2, (payload, b1[:300], b2[:300])
+    if table == "sc_one":
+        assert b1 == b2, payload
+    else:
+        assert _multiset(b1) == _multiset(b2), payload
+    return s1 == 200
+
+
+_SETTINGS = dict(
+    deadline=None, derandomize=True, suppress_health_check=[HealthCheck.too_slow]
+)
+
+
+@pytest.mark.parametrize("table", ["sc_one", "sc_multi"])
+def test_differential_rest_bodies(rest, tables, table):
+    """Served and forced-Spark REST bodies agree for generated
+    statements over every proven type; the short circuit answered a
+    good share of them (the comparison is not vacuous)."""
+    with _served_counter() as box:
+        oks = []
+
+        @given(_statements())
+        @settings(max_examples=30, **_SETTINGS)
+        def check(case):
+            oks.append(_differential(rest, case[0], case[1], table))
+
+        check()
+    assert sum(oks) >= 20
+    assert box["served"] >= 8
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("table", ["sc_one", "sc_multi"])
+def test_differential_rest_bodies_long(rest, tables, table):
+    """The same property over more examples."""
+
+    @given(_statements())
+    @settings(max_examples=200, **_SETTINGS)
+    def check(case):
+        _differential(rest, case[0], case[1], table)
+
+    check()
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT * FROM sc_one WHERE i = 3",
+        "SELECT s, d, tsz, bin FROM sc_one WHERE s = 'é' AND d >= DATE '1500-03-01'",
+        "SELECT * FROM sc_one WHERE tsn IS NULL",
+        "SELECT i, b FROM sc_one WHERE 0 < i AND b",
+        "SELECT * FROM sc_multi WHERE i IN (3, -1, NULL)",
+        "SELECT * FROM sc_one WHERE i = 12345",
+    ],
+)
+def test_point_statement_runs_no_spark_job(spark, rest, tables, sql):
+    """A qualifying statement is answered with no Spark job, with the
+    body forced Spark gives."""
+    (status, body), jobs = _jobs(spark, lambda: _post(rest, {"sql": sql}))
+    assert status == 200
+    assert jobs == 0
+    with _forced_spark():
+        spark_side = _post(rest, {"sql": sql})
+    if "sc_multi" in sql:
+        assert _multiset(body) == _multiset(spark_side[1])
+    else:
+        assert (status, body) == spark_side
+
+
+# -- refusals ----------------------------------------------------------------
+
+
+def _assert_spark_answers(spark, rest, payload, session=None):
+    (served, jobs) = _jobs(spark, lambda: _post(rest, payload, session))
+    assert jobs > 0, payload
+    with _forced_spark():
+        spark_side = _post(rest, payload, session)
+    assert served == spark_side, payload
+    return served
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT a.i, b.s FROM sc_one a JOIN sc_one b ON a.i = b.i WHERE a.i = 3",
+        "SELECT count(*) AS n FROM sc_one WHERE i = 3",
+        "SELECT i, s FROM sc_one WHERE i IS NOT NULL ORDER BY i, s, bi",
+        "SELECT i FROM sc_one WHERE i = 3 LIMIT 1",
+        "SELECT i + 1 AS j FROM sc_one WHERE i = 3",
+        "SELECT * FROM sc_one WHERE x > 0",
+        "SELECT * FROM sc_one WHERE bin = X'6162'",
+    ],
+)
+def test_other_plans_run_spark(spark, rest, tables, sql):
+    _assert_spark_answers(spark, rest, {"sql": sql})
+
+
+def test_result_larger_than_limit_runs_spark(spark, rest, tables):
+    out = _assert_spark_answers(spark, rest, {"sql": "SELECT * FROM sc_one", "limit": 5})
+    assert json.loads(out[1])["truncated"] is True
+
+
+def test_pinned_table_runs_spark(spark, rest, tables):
+    spark.catalog.cacheTable("sc_one")
+    try:
+        spark.table("sc_one").count()
+        _assert_spark_answers(spark, rest, {"sql": "SELECT * FROM sc_one WHERE i = 3"})
+    finally:
+        spark.catalog.uncacheTable("sc_one")
+
+
+def test_csv_and_partitioned_tables_run_spark(spark, rest, tmp_path):
+    df = spark.createDataFrame([(1, "a", 10), (2, "b", 20), (3, None, 10)], "k INT, s STRING, p INT")
+    df.write.csv(str(tmp_path / "csv"))
+    df.write.partitionBy("p").parquet(str(tmp_path / "part"))
+    spark.sql(f"CREATE TABLE sc_csv (k INT, s STRING, p INT) USING csv LOCATION '{tmp_path}/csv'")
+    spark.sql(
+        f"CREATE TABLE sc_part (k INT, s STRING, p INT) USING parquet "
+        f"PARTITIONED BY (p) LOCATION '{tmp_path}/part'"
+    )
+    try:
+        spark.sql("MSCK REPAIR TABLE sc_part")
+        for t in ("sc_csv", "sc_part"):
+            _assert_spark_answers(spark, rest, {"sql": f"SELECT * FROM {t} WHERE k = 3"})
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sc_csv")
+        spark.sql("DROP TABLE IF EXISTS sc_part")
+
+
+def test_declared_schema_differing_from_files_runs_spark(spark, rest, tables):
+    """A declared schema that leaves out file columns (or adds one the
+    files lack) is refused: Spark's nulls and projections decide."""
+    path = tables["sc_one"]
+    for name, cols in (("sc_sub", "i INT, s STRING"), ("sc_extra", "i INT, s STRING, zz INT")):
+        if name == "sc_extra":
+            cols = ", ".join(f"{c} {t}" for c, t in (
+                ("i", "INT"), ("bi", "BIGINT"), ("si", "SMALLINT"), ("b", "BOOLEAN"),
+                ("x", "DOUBLE"), ("dec", "DECIMAL(10,3)"), ("s", "STRING"), ("d", "DATE"),
+                ("tsn", "TIMESTAMP_NTZ"), ("tsz", "TIMESTAMP"), ("bin", "BINARY"), ("zz", "INT")))
+        spark.sql(f"CREATE TABLE {name} ({cols}) USING parquet LOCATION '{path}'")
+        try:
+            _assert_spark_answers(spark, rest, {"sql": f"SELECT * FROM {name} WHERE i = 3"})
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+@pytest.mark.parametrize(
+    "conf", ["spark.sql.caseSensitive", "spark.sql.files.ignoreCorruptFiles"]
+)
+def test_non_default_session_conf_runs_spark(spark, rest, tables, conf):
+    sid = f"sc-{conf}"
+    status, _ = _post(rest, {"sql": f"SET {conf}=true"}, sid)
+    assert status == 200
+    _assert_spark_answers(spark, rest, {"sql": "SELECT * FROM sc_one WHERE i = 3"}, sid)
+
+
+def test_file_deleted_after_create_gives_spark_status(spark, rest, tmp_path):
+    path = str(tmp_path / "gone")
+    _write_table(path, 3, 1)
+    spark.sql(f"CREATE TABLE sc_gone USING parquet LOCATION '{path}'")
+    try:
+        payload = {"sql": "SELECT * FROM sc_gone WHERE i = 3"}
+        assert _post(rest, payload)[0] == 200
+        os.remove(os.path.join(path, "part-0.parquet"))
+        (s1, _), (s2, _) = _both(rest, payload)
+        assert s1 == s2
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sc_gone")
+
+
+def test_legacy_calendar_file_runs_spark_unless_its_dates_are_modern(spark, rest, tmp_path):
+    """A file that says a Spark 2 writer made it is rebased from the
+    hybrid calendar by Spark's reader; the driver cannot do that, so
+    an old date in it keeps Spark (which shifts it), and a file whose
+    dates are all past the calendar switch is still served."""
+    for name, day in (("sc_legacy_old", dt.date(1500, 3, 1)), ("sc_legacy_new", dt.date(1999, 1, 1))):
+        path = tmp_path / name
+        path.mkdir()
+        table = pa.table({"k": pa.array([1, 2], pa.int64()), "d": pa.array([day, None])})
+        table = table.replace_schema_metadata({"org.apache.spark.version": "2.4.0"})
+        pq.write_table(table, str(path / "part-0.parquet"))
+        spark.sql(f"CREATE TABLE {name} USING parquet LOCATION '{path}'")
+        try:
+            payload = {"sql": f"SELECT * FROM {name} WHERE k = 1"}
+            if name == "sc_legacy_old":
+                body = _assert_spark_answers(spark, rest, payload)[1]
+                assert json.loads(body)["rows"][0][1] != day.isoformat()  # rebased
+            else:
+                (status, body), jobs = _jobs(spark, lambda: _post(rest, payload))
+                assert (status, jobs) == (200, 0)
+                with _forced_spark():
+                    assert _post(rest, payload) == (status, body)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
