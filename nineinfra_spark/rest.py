@@ -31,6 +31,10 @@ Endpoints:
 - ``POST /api/v1/sql``     → body ``{"sql": "...", "limit": 100}``;
   responds ``{"columns": [...], "rows": [[...]], "rowCount": N,
   "truncated": bool}``. Errors → HTTP 400 with ``{"error": ...}``.
+  Cells are JSON scalars; a binary cell is its standard padded base64
+  text (``b"\\x00\\xff"`` → ``"AP8="``), and dates, timestamps and
+  decimals are their ``str()`` text, in one-shot bodies and cursor
+  pages alike.
   With ``{"explain": true, "explainMode": "formatted"}`` the query is
   only PLANNED — the response carries ``{"columns", "plan",
   "scaleRisks"}`` and no data moves (modes: simple/extended/codegen/
@@ -43,10 +47,14 @@ Endpoints:
   (Kyuubi's ExecuteStatement → FetchResults loop): the response is
   ``{"statementId", "columns"}`` and rows stream page-by-page from
 - ``POST /api/v1/statements/<id>/fetch`` → body ``{"max": 100}``;
-  responds ``{"rows", "rowCount", "hasMore"}``. The handle is backed
-  by ``toLocalIterator(prefetchPartitions=False)``, so the driver
-  holds ONE partition at a time no matter how large the result — the
-  unbounded-extraction path the capped one-shot fetch refuses. An
+  responds ``{"rows", "rowCount", "hasMore"}``. A statement the short
+  circuit answers with at most ``MAX_FETCH_LIMIT`` rows is read at
+  open and paged from the driver, with no Spark job (open cursors hold
+  at most ``MAX_STATEMENTS × MAX_FETCH_LIMIT`` such rows). Any other
+  handle is backed by ``toLocalIterator(prefetchPartitions=False)``,
+  so the driver holds ONE partition at a time no matter how large the
+  result — the unbounded-extraction path the capped one-shot fetch
+  refuses; its errors surface at the first fetch. An
   exhausted or DELETEd handle returns 404 (auto-closed); handles are
   per-gateway LRU-bounded (``MAX_STATEMENTS``) and owner-scoped when
   the frontend is authenticated.
@@ -101,7 +109,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from nineinfra_spark.shortcircuit import collect_bounded
+from nineinfra_spark.shortcircuit import collect_bounded, collect_served
 
 DEFAULT_FETCH_LIMIT = 1000
 #: Server-side ceiling on the per-request ``limit`` override — the cap
@@ -144,8 +152,11 @@ def _resultset(df, limit: int) -> dict:
 
 
 def _json_default(v):
-    # datetimes, Decimals, bytearrays → strings; keeps the wire format
-    # engine-agnostic (clients parse values, not pickles)
+    # binary → standard padded base64; datetimes, Decimals → str().
+    # Keeps the wire format engine-agnostic (clients parse values, not
+    # pickles or Python reprs)
+    if isinstance(v, (bytes, bytearray)):
+        return base64.b64encode(v).decode("ascii")
     return str(v)
 
 
@@ -156,10 +167,12 @@ class StatementClosedError(RuntimeError):
 
 
 class _Statement:
-    """One open cursor: a live ``toLocalIterator`` plus a one-row
-    lookahead buffer (so ``hasMore`` is answerable without consuming
-    the next page) and a lock (HTTP handler threads share the
-    registry; an iterator is not thread-safe)."""
+    """One open cursor: a row iterator plus a one-row lookahead buffer
+    (so ``hasMore`` is answerable without consuming the next page) and
+    a lock (HTTP handler threads share the registry; an iterator is not
+    thread-safe). The iterator walks either the list of rows the short
+    circuit read on the driver (at most ``MAX_FETCH_LIMIT``) or a live
+    ``toLocalIterator``."""
 
     def __init__(self, columns: list, it, owner: str):
         self.columns = columns
@@ -171,10 +184,10 @@ class _Statement:
         self.lock = threading.Lock()
 
     def close(self) -> None:
-        """Best-effort release of the underlying ``toLocalIterator``
-        generator: until closed it pins the driver-side fetch
-        thread/socket for the in-flight partition (r9 ADVICE finding
-        — LRU-evicted cursors otherwise leak it until GC). Taken
+        """Best-effort release of the underlying iterator. A
+        ``toLocalIterator`` generator, until closed, pins the
+        driver-side fetch thread/socket for the in-flight partition
+        (an LRU-evicted cursor would otherwise leak it until GC). Taken
         under ``self.lock``: closing a generator another thread is
         mid-``fetch`` on would make that fetch see StopIteration and
         reply a silently-truncated ``hasMore=False`` page — eviction
@@ -193,6 +206,9 @@ class _Statement:
                     close()
                 except Exception:
                     pass
+            # driver-side rows are freed now, not when the last handler
+            # holding this statement lets go of it
+            self._it, self._peeked = iter(()), None
 
     def fetch(self, max_rows: int) -> tuple[list, bool]:
         """Up to ``max_rows`` rows + whether more remain. Caller holds
@@ -592,15 +608,21 @@ class _Handler(BaseHTTPRequestHandler):
             if cursor:
                 # Kyuubi's ExecuteStatement→FetchResults loop: hand
                 # back a handle; rows stream page-by-page from the
-                # statements endpoint. prefetchPartitions=False keeps
-                # driver residency to ONE partition at a time — the
-                # sanctioned unbounded-extraction path.
+                # statements endpoint. A short-circuited result of at
+                # most MAX_FETCH_LIMIT rows is paged from the driver;
+                # anything else is toLocalIterator, whose
+                # prefetchPartitions=False keeps driver residency to
+                # ONE partition at a time — the sanctioned
+                # unbounded-extraction path.
                 import uuid as _uuid
 
                 stmt_id = _uuid.uuid4().hex
+                rows = collect_served(df, MAX_FETCH_LIMIT)
                 st = _Statement(
                     df.columns,
-                    df.toLocalIterator(prefetchPartitions=False),
+                    iter(rows)
+                    if rows is not None
+                    else df.toLocalIterator(prefetchPartitions=False),
                     owner=authed,
                 )
                 evicted = []

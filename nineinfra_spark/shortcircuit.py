@@ -16,7 +16,9 @@ statement (``sess.sql`` and the optimizer run as before); only the
 execution of the optimized plan is replaced, and only when its result
 is provably the same. The optimized plan of ``df.limit(limit + 1)``
 qualifies when every rule below holds; each rule names what it rules
-out:
+out. (A plan whose analyzed form has more than one leaf, a leaf that is
+not a ``LogicalRelation`` or an aggregate is refused before the
+optimizer runs, unless it has a CTE; that check only refuses.)
 
 - Shape: ``GlobalLimit``/``LocalLimit`` of ``limit + 1`` over at most
   one ``Project`` of plain columns over at most one ``Filter`` over one
@@ -73,6 +75,12 @@ window always comes from Spark, whose row choice under a limit is its
 own). Rows are built by the same ``StructType.fromInternal`` that
 ``collect()`` applies to Spark's internal values, so dates, timestamps
 (in the driver's local time zone) and decimals come out identical.
+
+A REST cursor wants every row, not a window: :func:`collect_served`
+runs the same check and read on ``df.limit(bound + 1)``, with the
+one-shot cap as ``bound``. When the plan qualifies and at most
+``bound`` rows match, the cursor pages over those rows; otherwise it
+streams from Spark's ``toLocalIterator`` as before.
 """
 
 from __future__ import annotations
@@ -86,6 +94,7 @@ from collections import OrderedDict
 from decimal import Decimal
 from urllib.parse import unquote, urlsplit
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
 
 _EXPR = "org.apache.spark.sql.catalyst.expressions."
@@ -93,6 +102,7 @@ _LOGICAL = "org.apache.spark.sql.catalyst.plans.logical."
 _RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
 _FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+_TREE_PATTERN = "org.apache.spark.sql.catalyst.trees.TreePattern"
 
 #: Session confs that must be at these values (their defaults).
 _DEFAULT_CONFS = {
@@ -148,19 +158,31 @@ def collect_bounded(df: DataFrame, limit: int) -> tuple[list, bool]:
     (module docstring); everything else, and every truncated window, is
     ``df.limit(limit + 1).collect()``."""
     limited = df.limit(limit + 1)
-    rows = None
+    rows = _served(limited, limit)
+    if rows is None:
+        rows = limited.collect()
+    return rows[:limit], len(rows) > limit
+
+
+def collect_served(df: DataFrame, bound: int) -> list | None:
+    """Every row of ``df`` when the short circuit answers it and at
+    most ``bound`` rows match; ``None`` otherwise, and the caller runs
+    Spark. No Spark job runs either way."""
+    return _served(df.limit(bound + 1), bound)
+
+
+def _served(limited: DataFrame, limit: int) -> list | None:
+    """The driver-side answer to ``limited`` (``df.limit(limit + 1)``):
+    at most ``limit`` rows, or ``None`` when the plan does not qualify,
+    more than ``limit`` rows match, or anything raises."""
     try:
         point = _point_read(limited, limit)
-        if point is not None:
-            rows = point.rows(limit)
+        return None if point is None else point.rows(limit)
     except Exception:
         # any failure on the driver-side path (py4j, pyarrow, a file
         # gone) is not reported from here: Spark answers, with its own
         # result or its own error
-        rows = None
-    if rows is None:
-        rows = limited.collect()
-    return rows[:limit], len(rows) > limit
+        return None
 
 
 def _tree(nodes: list, i: int = 0) -> tuple[tuple, int]:
@@ -191,15 +213,23 @@ def _point_read(limited: DataFrame, limit: int) -> "_PointRead | None":
 
 
 def _plan_point(limited: DataFrame, limit: int) -> "_PointRead":
-    jplan = limited._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
-    # cheap refusals first: joins, unions and pinned (InMemoryRelation)
-    # or local reads are decided before the plan is serialized
-    leaves = jplan.collectLeaves()
-    if leaves.size() != 1:
-        raise _Refused("more than one relation")
-    jleaf = leaves.head()
-    if jleaf.getClass().getName() != _RELATION:
-        raise _Refused("not a file relation")
+    qe = limited._jdf.queryExecution()  # noqa: SLF001
+    # refusals on the analyzed plan, which exists already, spare a
+    # refused statement the optimizer run: a join or union has several
+    # leaves, a range() or local relation is no file, and an aggregate
+    # never optimizes into the accepted shape. A CTE reference is a leaf
+    # until the optimizer inlines it, so a plan with a CTE skips them.
+    # Acceptance is decided on the optimized plan alone.
+    jplan = qe.analyzed()
+    patterns = JavaClass(_TREE_PATTERN, qe._gateway_client)  # noqa: SLF001
+    if not jplan.containsPattern(patterns.CTE()):
+        _single_relation(jplan)
+        if jplan.containsPattern(patterns.AGGREGATE()):
+            raise _Refused("an aggregate")
+    jplan = _optimized(qe)
+    # cheap refusals first: pinned (InMemoryRelation) or local reads are
+    # decided before the plan is serialized
+    jleaf = _single_relation(jplan)
     chain = json.loads(jplan.toJSON())
     head, rest = chain[:2], chain[2:]
     if [n["class"] for n in head] != [_LOGICAL + "GlobalLimit", _LOGICAL + "LocalLimit"]:
@@ -247,6 +277,23 @@ def _plan_point(limited: DataFrame, limit: int) -> "_PointRead":
 
         expr = _Translator(types, arrow_schema, cond, jcond).pred(_tree(cond)[0])
     return _PointRead(paths, arrow_schema, out, expr)
+
+
+def _optimized(qe):
+    """The optimized plan of a query execution: the one optimizer run
+    the short circuit pays for."""
+    return qe.optimizedPlan()
+
+
+def _single_relation(jplan):
+    """The plan's one leaf, refused unless it is a ``LogicalRelation``."""
+    leaves = jplan.collectLeaves()
+    if leaves.size() != 1:
+        raise _Refused("more than one relation")
+    jleaf = leaves.head()
+    if jleaf.getClass().getName() != _RELATION:
+        raise _Refused("not a file relation")
+    return jleaf
 
 
 def _proven(attr: dict) -> bool:

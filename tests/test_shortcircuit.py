@@ -6,7 +6,9 @@ replaced so Spark answers, and the two response bodies must agree —
 byte for byte on a one-file table, as row multisets with equal
 ``rowCount``/``truncated`` on a multi-file one. Refusal: each plan the
 short circuit must not answer runs Spark jobs and gives Spark's body
-and status; a qualifying point statement runs none.
+and status; a qualifying point statement runs none. Cursors: the same
+statements opened with ``cursor: true`` page identically when served
+from the driver and when streamed by Spark.
 """
 
 from __future__ import annotations
@@ -93,14 +95,18 @@ def tables(spark, tmp_path_factory):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def _post(gw, payload: dict, session: str | None = None) -> tuple[int, bytes]:
+def _post(
+    gw, payload: dict | None, session: str | None = None,
+    path: str = "/api/v1/sql", method: str = "POST",
+) -> tuple[int, bytes]:
     headers = {"Content-Type": "application/json"}
     if session is not None:
         headers["X-Session-Id"] = session
     req = urllib.request.Request(
-        f"http://127.0.0.1:{gw.port}/api/v1/sql",
-        data=json.dumps(payload).encode(),
+        f"http://127.0.0.1:{gw.port}{path}",
+        data=None if payload is None else json.dumps(payload).encode(),
         headers=headers,
+        method=method,
     )
     try:
         with urllib.request.urlopen(req) as r:
@@ -433,3 +439,277 @@ def test_legacy_calendar_file_runs_spark_unless_its_dates_are_modern(spark, rest
                     assert _post(rest, payload) == (status, body)
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+# -- cursors -----------------------------------------------------------------
+
+
+def _fetch(gw, sid: str, page: int, session: str | None = None) -> tuple[int, bytes]:
+    return _post(gw, {"max": page}, session, path=f"/api/v1/statements/{sid}/fetch")
+
+
+def _cursor(gw, sql: str, page: int, session: str | None = None) -> list:
+    """Open ``sql`` as a cursor and drain it in pages of ``page`` rows:
+    the open response (statement id left out) and every fetch
+    response, each ``(status, body)``, up to the first error or the
+    page with ``hasMore: false``."""
+    status, body = _post(gw, {"sql": sql, "cursor": True}, session)
+    if status != 200:
+        return [(status, body)]
+    opened = json.loads(body)
+    sid = opened.pop("statementId")
+    out = [(status, json.dumps(opened).encode())]
+    while True:
+        status, body = _fetch(gw, sid, page, session)
+        out.append((status, body))
+        if status != 200 or not json.loads(body)["hasMore"]:
+            return out
+
+
+def _drained(pages: list) -> tuple:
+    """A drained cursor up to page order: the open response, the fetch
+    statuses and errors, the rows as a multiset, the total
+    ``rowCount`` and the last ``hasMore``."""
+    bodies = [json.loads(b) for _, b in pages[1:]]
+    return (
+        pages[0],
+        [(s, b.get("error")) for (s, _), b in zip(pages[1:], bodies)],
+        sorted(json.dumps(r) for b in bodies for r in b.get("rows", [])),
+        sum(b.get("rowCount", 0) for b in bodies),
+        bodies[-1].get("hasMore") if bodies else None,
+    )
+
+
+def _cursor_differential(rest, stmt, page: int, table: str) -> bool:
+    sql = stmt.format(t=table)
+    served = _cursor(rest, sql, page)
+    with _forced_spark():
+        spark_side = _cursor(rest, sql, page)
+    if table == "sc_one":
+        assert served == spark_side, (sql, page)
+    else:
+        assert _drained(served) == _drained(spark_side), (sql, page)
+    ok = all(status == 200 for status, _ in served)
+    if ok:
+        assert _drained(served)[4] is False, (sql, page)
+    return ok
+
+
+_PAGES = st.sampled_from([1, 7, 500])
+
+
+@pytest.mark.parametrize("table", ["sc_one", "sc_multi"])
+def test_differential_cursor_pages(rest, tables, table):
+    """Generated statements opened as cursors and drained with a drawn
+    page size: every page is byte-equal to forced Spark's on one file,
+    and the drained rows agree as a multiset on three files; the short
+    circuit served a good share of them."""
+    with _served_counter() as box:
+        oks = []
+
+        @given(_statements(), _PAGES)
+        @settings(max_examples=30, **_SETTINGS)
+        def check(case, page):
+            oks.append(_cursor_differential(rest, case[0], page, table))
+
+        check()
+    assert sum(oks) >= 20
+    assert box["served"] >= 8
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("table", ["sc_one", "sc_multi"])
+def test_differential_cursor_pages_long(rest, tables, table):
+    """The same property over more examples."""
+
+    @given(_statements(), _PAGES)
+    @settings(max_examples=200, **_SETTINGS)
+    def check(case, page):
+        _cursor_differential(rest, case[0], page, table)
+
+    check()
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT * FROM sc_one",
+        "SELECT i, s, bin FROM sc_one WHERE i IS NOT NULL",
+        "SELECT * FROM sc_multi WHERE i IN (3, -1, NULL)",
+        "WITH x AS (SELECT * FROM sc_one WHERE i > 0) SELECT i, s FROM x WHERE i = 3",
+    ],
+)
+def test_qualifying_cursor_runs_no_spark_job(spark, rest, tables, sql):
+    """Opening and draining a qualifying cursor runs no Spark job and
+    pages as forced Spark does."""
+    served, jobs = _jobs(spark, lambda: _cursor(rest, sql, 7))
+    assert jobs == 0
+    assert all(status == 200 for status, _ in served)
+    with _forced_spark():
+        spark_side = _cursor(rest, sql, 7)
+    if "sc_multi" in sql:
+        assert _drained(served) == _drained(spark_side)
+    else:
+        assert served == spark_side
+
+
+def _assert_cursor_spark_answers(spark, rest, sql, page=7, session=None) -> list:
+    served, jobs = _jobs(spark, lambda: _cursor(rest, sql, page, session))
+    assert jobs > 0, sql
+    with _forced_spark():
+        assert _cursor(rest, sql, page, session) == served, sql
+    return served
+
+
+def test_join_cursor_runs_spark(spark, rest, tables):
+    _assert_cursor_spark_answers(
+        spark, rest, "SELECT a.i, b.s FROM sc_one a JOIN sc_one b ON a.i = b.i WHERE a.i = 3"
+    )
+
+
+def test_pinned_table_cursor_runs_spark(spark, rest, tables):
+    spark.catalog.cacheTable("sc_one")
+    try:
+        spark.table("sc_one").count()
+        _assert_cursor_spark_answers(spark, rest, "SELECT * FROM sc_one WHERE i IS NOT NULL")
+    finally:
+        spark.catalog.uncacheTable("sc_one")
+
+
+def test_case_sensitive_session_cursor_runs_spark(spark, rest, tables):
+    sid = "sc-cursor-case"
+    assert _post(rest, {"sql": "SET spark.sql.caseSensitive=true"}, sid)[0] == 200
+    _assert_cursor_spark_answers(spark, rest, "SELECT * FROM sc_one WHERE i = 3", session=sid)
+
+
+def test_cursor_over_the_cap_streams_every_row_from_spark(spark, rest, tmp_path):
+    """One file of ``MAX_FETCH_LIMIT + 1`` rows qualifies but holds more
+    rows than a driver-side cursor may: Spark streams all of them."""
+    from nineinfra_spark.rest import MAX_FETCH_LIMIT
+
+    n = MAX_FETCH_LIMIT + 1
+    path = tmp_path / "sc_big"
+    path.mkdir()
+    pq.write_table(pa.table({"k": pa.array(range(n), pa.int64())}), str(path / "part-0.parquet"))
+    spark.sql(f"CREATE TABLE sc_big USING parquet LOCATION '{path}'")
+    try:
+        with _served_counter() as box:
+            pages = _assert_cursor_spark_answers(
+                spark, rest, "SELECT * FROM sc_big", page=MAX_FETCH_LIMIT
+            )
+        assert box["served"] == 0
+        bodies = [json.loads(b) for _, b in pages[1:]]
+        assert [(b["rowCount"], b["hasMore"]) for b in bodies] == [
+            (MAX_FETCH_LIMIT, True), (1, False)
+        ]
+        assert [r[0] for b in bodies for r in b["rows"]] == list(range(n))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sc_big")
+
+
+def _open_served(spark, rest, sql: str) -> str:
+    (status, body), jobs = _jobs(spark, lambda: _post(rest, {"sql": sql, "cursor": True}))
+    assert (status, jobs) == (200, 0)
+    return json.loads(body)["statementId"]
+
+
+def test_served_cursor_stops_at_the_exact_boundary(spark, rest, tables):
+    """A short-circuited result that ends on a page boundary says
+    ``hasMore: false`` on that page, and the handle is then gone."""
+    sid = _open_served(spark, rest, "SELECT i FROM sc_one")
+    pages = [json.loads(_fetch(rest, sid, N_ROWS // 2)[1]) for _ in range(2)]
+    assert [(p["rowCount"], p["hasMore"]) for p in pages] == [
+        (N_ROWS // 2, True), (N_ROWS // 2, False)
+    ]
+    assert _fetch(rest, sid, 1)[0] == 404
+
+
+def test_served_cursor_delete_then_404(spark, rest, tables):
+    sid = _open_served(spark, rest, "SELECT * FROM sc_one")
+    status, body = _fetch(rest, sid, 5)
+    assert status == 200 and json.loads(body)["hasMore"]
+    status, body = _post(rest, None, path=f"/api/v1/statements/{sid}", method="DELETE")
+    assert (status, json.loads(body)) == (200, {"closed": sid})
+    assert _fetch(rest, sid, 5)[0] == 404
+
+
+def test_served_cursor_eviction_is_404_and_frees_its_rows(spark, rest, tables):
+    """LRU eviction of a paged short-circuited cursor answers 404, as
+    for a Spark-backed one, and drops the rows it held."""
+    import nineinfra_spark.rest as R
+
+    statements = rest._server.RequestHandlerClass.statements
+    old_cap = R.MAX_STATEMENTS
+    R.MAX_STATEMENTS = 3
+    try:
+        victim = _open_served(spark, rest, "SELECT * FROM sc_one")
+        held = statements[victim]
+        status, body = _fetch(rest, victim, 10)
+        assert status == 200 and json.loads(body)["hasMore"]
+        for _ in range(R.MAX_STATEMENTS + 1):
+            _open_served(spark, rest, "SELECT i FROM sc_one WHERE i = 3")
+        assert _fetch(rest, victim, 1)[0] == 404
+        assert next(held._it, None) is None
+    finally:
+        R.MAX_STATEMENTS = old_cap
+
+
+@contextlib.contextmanager
+def _optimizer_calls():
+    """Counts the optimizer runs the eligibility check asks for."""
+    saved = shortcircuit._optimized
+    box = {"calls": 0}
+
+    def spy(qe):
+        box["calls"] += 1
+        return saved(qe)
+
+    shortcircuit._optimized = spy
+    try:
+        yield box
+    finally:
+        shortcircuit._optimized = saved
+
+
+@pytest.mark.parametrize(
+    "sql,calls",
+    [
+        ("SELECT a.i, b.s FROM sc_one a JOIN sc_one b ON a.i = b.i", 0),
+        ("SELECT i, count(*) AS n FROM sc_one GROUP BY i", 0),
+        ("SELECT * FROM sc_one WHERE i = 3", 1),
+        ("WITH x AS (SELECT * FROM sc_one WHERE i > 0) SELECT i, s FROM x WHERE i = 3", 1),
+    ],
+)
+def test_refusal_before_the_optimizer(rest, tables, sql, calls):
+    """A join or aggregate cursor is refused on its analyzed plan, with
+    no optimizer run for the short circuit; a qualifying one pays
+    exactly one, also when a CTE (a second leaf until the optimizer
+    inlines it) names the table."""
+    with _optimizer_calls() as box:
+        pages = _cursor(rest, sql, 500)
+    assert all(status == 200 for status, _ in pages)
+    assert box["calls"] == calls
+
+
+def test_binary_cells_are_base64(spark, rest, tmp_path):
+    """A binary cell reads as standard padded base64 in one-shot bodies
+    and cursor pages, served and with Spark forced."""
+    path = tmp_path / "sc_bin"
+    path.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2], pa.int32()), "bin": pa.array([b"\x00\xff", None])}),
+        str(path / "part-0.parquet"),
+    )
+    spark.sql(f"CREATE TABLE sc_bin USING parquet LOCATION '{path}'")
+    sql = "SELECT bin FROM sc_bin WHERE k = 1"
+    try:
+        for forced in (False, True):
+            with _forced_spark() if forced else contextlib.nullcontext():
+                with _served_counter() as box:
+                    status, body = _post(rest, {"sql": sql})
+                    pages = _cursor(rest, sql, 500)
+            assert box["served"] == (0 if forced else 2)
+            assert (status, json.loads(body)["rows"]) == (200, [["AP8="]])
+            assert [json.loads(b)["rows"] for _, b in pages[1:]] == [[["AP8="]]]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS sc_bin")
