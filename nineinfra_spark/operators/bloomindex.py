@@ -65,7 +65,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nineinfra_spark.operators import _sidecar
+from nineinfra_spark.operators import _grid_upsert, _sidecar
 
 _SIDECAR = "_bloomindex.json"
 
@@ -140,20 +140,28 @@ def _data_schema(meta: dict):
     (an empty build writes none)."""
     from pyspark.sql import types as T
 
-    return T.StructType.fromJson(json.loads(meta["schema"])).add(
-        "fid", T.IntegerType()
+    return _grid_upsert.declared_schema(meta["schema"], "fid", T.IntegerType())
+
+
+def _fid_expr(layout_col: str, lo: float, hi: float, n_files: int):
+    """The file id of a row: ``floor((layout − lo) / span · n_files)``
+    over the frozen bounds, clamped to ``0..n_files-1``; a NULL layout
+    value goes to file 0."""
+    span = (hi - lo) or 1.0
+    return F.coalesce(
+        F.greatest(
+            F.lit(0),
+            F.least(
+                F.lit(n_files - 1),
+                F.floor(
+                    (F.col(layout_col).cast("double") - F.lit(lo))
+                    / F.lit(span)
+                    * n_files
+                ).cast("int"),
+            ),
+        ),
+        F.lit(0),
     )
-
-
-def _fid_dirs(path: str) -> dict[int, str]:
-    """fid → its ``fid=<n>`` partition directory: the one listing of
-    the data files' directories (a free driver-side walk, no Spark
-    job)."""
-    return {
-        int(d.split("=", 1)[1]): os.path.join(path, d)
-        for d in os.listdir(path)
-        if d.startswith("fid=") and os.path.isdir(os.path.join(path, d))
-    }
 
 
 def _n_data_files(fid_dir: str) -> int:
@@ -385,22 +393,7 @@ def bloom_index_write(
     lo, hi = stats["lo"], stats["hi"]
     if lo is None or hi is None:
         lo, hi = 0.0, 0.0  # empty / all-NULL layout: single-cell grid
-    span = (hi - lo) or 1.0
-    fid = F.coalesce(
-        F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(n_files - 1),
-                F.floor(
-                    (F.col(layout_col).cast("double") - F.lit(lo))
-                    / F.lit(span)
-                    * n_files
-                ).cast("int"),
-            ),
-        ),
-        F.lit(0),  # NULL layout values: deterministic home in file 0
-    )
-    tagged = df.withColumn("fid", fid)
+    tagged = df.withColumn("fid", _fid_expr(layout_col, lo, hi, n_files))
     tagged_w = tagged.repartition(n_files, "fid")
     tagged_w.write.partitionBy("fid").parquet(path)
     # bitmap build: (fid, bit) pairs → one map-side-combined aggregate
@@ -482,53 +475,30 @@ def bloom_index_append(
     frozen-bounds device), so out-of-range drift clamps into the edge
     files and existing files' bitmaps stay valid.
 
-    Ordering is the correctness core, in three steps:
+    With ``key_cols`` the data step is the frozen-grid upsert of
+    ``operators/_grid_upsert.py``, whose module docstring states the
+    protocol: pin, discovery, NULL-key collapse, replay convergence,
+    single writer and lineage break. What is Bloom's own is the
+    ordering, in three steps:
 
-    1. **bits sidecar first** (marker untouched). Bloom bits are
-       monotone (they only ever gain), so a crash after this step
+    1. **bits first** (marker untouched): the delta's words are OR-ed
+       into a fresh versioned bits table and the sidecar pointer
+       commits. Bloom bits only ever gain, so a crash after this step
        leaves a SUPERSET bitmap over the committed rows — pure false
-       positives, exactness intact; the reverse order would leave
-       appended keys missing from the bitmap: false NEGATIVES,
-       silently dropped rows on every later probe.
-    2. **data second** — a blind append, or with ``key_cols`` an
-       upsert: the touched fid partitions are rewritten via
-       dynamic-partition overwrite with existing rows whose key the
-       delta carries dropped first (delta wins). A re-delivered row
-       has the same fid as the copy it supersedes (frozen grid), so
-       the stale copy is always inside the rewritten set — the same
-       algebra as ``zorder_layout_append``.
-    3. **replay marker last**: ``last_batch_id`` commits only AFTER
-       the data, so a crash anywhere inside the append re-delivers
-       the batch on restart (foreachBatch semantics) and the re-run
-       CONVERGES — the bits re-merge is a monotone no-op and
-       ``key_cols`` dedups the rows. Without ``key_cols`` the marker
-       still dedups every non-crash replay, but a crash between data
-       and marker duplicates the batch's rows on replay (document
-       your key or accept at-least-once, exactly as with
-       ``zorder_layout_append``).
+       positives; the reverse order would leave appended keys missing
+       from the bitmap: false NEGATIVES, silently dropped rows.
+    2. **data second**: with ``key_cols``, the upsert rewrite of the
+       touched fid partitions; without, a blind append of new files.
+    3. **replay marker last**: ``last_batch_id`` commits only after
+       the data, so a crashed append re-runs on restart; the bits
+       re-merge is a monotone no-op. Without ``key_cols`` a crash
+       between data and marker duplicates the batch's rows on replay.
 
-    NULL keys: when the delta carries a NULL in a ``key_cols``
-    column, keys match NULL-SAFELY (``<=>``) so replayed NULL-key
-    rows converge — with the consequence that NULL collapses to a
-    SINGLE upsert key: one NULL-key delta row supersedes ALL existing
-    NULL-key rows in the rewritten fid partitions, unlike SQL/Delta
-    MERGE where NULL never matches. If NULL keys denote distinct
-    rows, make the key non-null or accept the collapse. Deltas with
-    zero NULL keys (detected inside the dirty-fid discovery job, no
-    extra action) take the plain equi-join path, where the question
-    never arises.
+    Every sidecar commit is CAS-guarded (:func:`_guarded_sidecar_write`),
+    so a racing appender raises instead of silently dropping the other
+    writer's bits (a false-negative class).
 
-    SINGLE WRITER, like every sidecar-coordinated maintenance job —
-    fan sources into one stream rather than racing appends. A
-    violated contract is fail-fast DETECTED: every sidecar commit is
-    CAS-guarded (:func:`_guarded_sidecar_write`), so a racing
-    appender raises instead of silently dropping the other writer's
-    bits (a false-negative class). The detection is unconditional —
-    commits bump ``_cas_rev`` (byte-identical payloads still change
-    the file) and same-host commits serialize under the
-    ``_sidecar.py`` flock.
-
-    Returns ``{"rows_appended", "files_touched", "new_bits"}``
+    Returns ``{"rows_appended", "files_touched"}``
     (``"skipped_replay": True`` when the marker short-circuits)."""
     raw, meta = _load_meta(path)  # raw: CAS token for the sidecar commits
     if batch_id is not None:
@@ -537,66 +507,18 @@ def bloom_index_append(
             return {
                 "rows_appended": 0,
                 "files_touched": 0,
-                "new_bits": 0,
                 "skipped_replay": True,
             }
-    data_cols = [
-        f["name"] for f in json.loads(meta["schema"])["fields"]
-    ]
-    if sorted(delta.columns) != sorted(data_cols):
-        raise ValueError(
-            f"bloom_index_append: delta columns {sorted(delta.columns)} "
-            f"!= index columns {sorted(data_cols)}"
-        )
-    _check_key_type(delta, meta["key_col"])
-    if key_cols:
-        bad = [c for c in key_cols if c not in data_cols]
-        if bad:
-            raise ValueError(
-                f"bloom_index_append: key columns {bad} not in index"
-            )
     n_files, m_bits, k = meta["n_files"], meta["m_bits"], meta["k"]
-    lo, hi = meta["bounds"]
-    span = (hi - lo) or 1.0
-    fid = F.coalesce(
-        F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(n_files - 1),
-                F.floor(
-                    (F.col(meta["layout_col"]).cast("double") - F.lit(lo))
-                    / F.lit(span)
-                    * n_files
-                ).cast("int"),
-            ),
-        ),
-        F.lit(0),
+    schema = _data_schema(meta)
+    fid = _fid_expr(meta["layout_col"], *meta["bounds"], n_files)
+    # dirty fids come from the ROWS, not the bits: NULL-key rows carry
+    # no bits but still land in (and, under key_cols, rewrite) files
+    staged = _grid_upsert.stage(
+        "bloom_index_append", delta, schema, "fid", fid, key_cols
     )
-    # pin the delta once: bit discovery and the row append are
-    # separate actions — a non-deterministic delta recomputed between
-    # them could append keys the bitmap step never saw (exactly the
-    # zorder_layout_append lesson). LAZY checkpoint (r17): the
-    # discovery job right below materializes it, so the pin costs no
-    # extra job; later consumers read the frozen blocks.
-    tagged = (
-        delta.select(*data_cols).withColumn("fid", fid)
-        .localCheckpoint(eager=False)
-    )
-    # dirty fids from the ROWS, not the bits — NULL-key rows carry no
-    # bits but still land in (and, under key_cols, must rewrite)
-    # files. NULL-key probe and the rows_appended count fused into
-    # the same job (zero extra actions): eqNullSafe is only needed
-    # when the delta actually carries NULL keys (see
-    # zorder.anti_upsert_keys); the count was a separate action until
-    # r17.
-    from nineinfra_spark.operators.zorder import (
-        dirty_partitions_and_null_flag,
-    )
-
-    dirty, delta_has_null_keys, rows = dirty_partitions_and_null_flag(
-        tagged, "fid", key_cols
-    )
-    delta_pairs = tagged.select(
+    _check_key_type(staged.delta, meta["key_col"])
+    delta_pairs = staged.delta.select(
         "fid",
         F.explode(
             _positions(F.col(meta["key_col"]), m_bits, k)
@@ -608,11 +530,9 @@ def bloom_index_append(
     # sidecar replace below is the atomic commit point (stale
     # versions are vacuumed by bloom_index_compact, not here — an
     # in-flight probe may still hold the old pointer).
-    wb = meta.get("word_bits", WORD_BITS)
-    old_dir = meta["bits_dir"]
-    old_words = _read_bits(spark, path, old_dir)
     merged = (
-        old_words.unionByName(_words_df(delta_pairs, wb))
+        _read_bits(spark, path, meta["bits_dir"])
+        .unionByName(_words_df(delta_pairs, meta.get("word_bits", WORD_BITS)))
         .groupBy("fid", "w")
         .agg(F.bit_or("word").alias("word"))
     )
@@ -621,67 +541,18 @@ def bloom_index_append(
         merged.repartition(max(1, n_files // 64), "fid")
         .write.parquet(os.path.join(path, new_dir))
     )
-
-    # new_bits = popcount(new) − popcount(old), fused into ONE
-    # signed-tag aggregate job (r17; was two separate read+agg
-    # jobs — same sums, same difference)
-    new_bits = (
-        _read_bits(spark, path, new_dir)
-        .select(F.lit(1).alias("_t"), "word")
-        .unionByName(
-            _read_bits(spark, path, old_dir).select(
-                F.lit(-1).alias("_t"), "word"
-            )
-        )
-        .agg(F.sum(F.bit_count("word") * F.col("_t")))
-        .first()[0]
-        or 0
-    )
     meta["bits_dir"] = new_dir
-    # step 1: bits BEFORE data (superset bitmaps are safe, subset
-    # bitmaps lose rows) — the marker is deliberately NOT in this
-    # write; CAS-guarded so a racing appender's commit is detected
-    # instead of silently dropped (see _guarded_sidecar_write)
+    # step 1: bits BEFORE data, the marker deliberately not in it
     raw = _guarded_sidecar_write(path, meta, raw)
-    if not dirty:
-        if batch_id is not None:
-            meta["last_batch_id"] = batch_id
-            raw = _guarded_sidecar_write(path, meta, raw)
-        return {"rows_appended": 0, "files_touched": 0, "new_bits": new_bits}
     # step 2: the data
-    if key_cols:
-        existing_dirty = (
-            spark.read.schema(_data_schema(meta))
-            .parquet(path)
-            .filter(F.col("fid").isin(dirty))
+    if staged.dirty and key_cols:
+        _grid_upsert.rewrite(
+            spark, path, schema, "fid", staged.dirty,
+            staged.delta, key_cols, staged.null_keys,
         )
-        # rows whose key the delta carries are superseded — the
-        # delta-keys side is delta-sized and broadcast; NULL-SAFE
-        # equality (eqNullSafe) only when the delta carries NULL keys,
-        # so a crash-window replay dedups NULL-key rows too (a plain
-        # anti-join never matches NULL)
-        from nineinfra_spark.operators.zorder import anti_upsert_keys
-
-        existing_dirty = anti_upsert_keys(
-            existing_dirty,
-            tagged.select(*key_cols).distinct(),
-            key_cols,
-            null_safe=delta_has_null_keys,
-        )
-        combined = (
-            existing_dirty.unionByName(tagged)
-            .repartition(len(dirty), "fid")
-            .localCheckpoint(eager=True)  # lineage break: overwriting a read path
-        )
+    elif staged.dirty:
         (
-            combined.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("fid")
-            .parquet(path)
-        )
-    else:
-        (
-            tagged.repartition(len(dirty), "fid")
+            staged.delta.repartition(len(staged.dirty), "fid")
             .write.mode("append")
             .partitionBy("fid")
             .parquet(path)
@@ -689,12 +560,8 @@ def bloom_index_append(
     # step 3: replay marker AFTER the data
     if batch_id is not None:
         meta["last_batch_id"] = batch_id
-        raw = _guarded_sidecar_write(path, meta, raw)
-    return {
-        "rows_appended": rows,
-        "files_touched": len(dirty),
-        "new_bits": new_bits,
-    }
+        _guarded_sidecar_write(path, meta, raw)
+    return {"rows_appended": staged.rows, "files_touched": len(staged.dirty)}
 
 
 def maintain_bloom_stream(
@@ -754,10 +621,9 @@ def bloom_index_compact(
     is identical, so the bitmaps need no change and probes stay exact
     throughout.
 
-    Cost tracks the fragmented fids only (untouched partitions are
-    never opened — dynamic-partition overwrite); the combined rows
-    are localCheckpoint-pinned first, the lineage break Spark needs
-    to overwrite a path it is reading (the zorder-append device).
+    The rewrite is the frozen-grid rewrite of
+    ``operators/_grid_upsert.py`` with no delta: cost tracks the
+    fragmented fids only, and untouched partitions are never opened.
 
     Compaction is also the VACUUM point for the bits table: each
     append commits a fresh versioned bits table and leaves the
@@ -823,24 +689,19 @@ def bloom_index_compact(
     for d in stale:
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
         vacuumed += 1
-    n_data = {f: _n_data_files(d) for f, d in _fid_dirs(path).items()}
+    n_data = {
+        f: _n_data_files(d)
+        for f, d in _grid_upsert.partition_dirs(path, "fid").items()
+    }
     files_before = sum(n_data.values())
     frag = sorted(f for f, n in n_data.items() if n > 1)
     if frag:
-        combined = (
-            spark.read.schema(_data_schema(meta0))
-            .parquet(path)
-            .filter(F.col("fid").isin(frag))
-            .repartition(len(frag), "fid")
-            .localCheckpoint(eager=True)
+        # the frozen-grid rewrite with no delta: one file per fid again
+        _grid_upsert.rewrite(spark, path, _data_schema(meta0), "fid", frag)
+        files_after = sum(
+            _n_data_files(d)
+            for d in _grid_upsert.partition_dirs(path, "fid").values()
         )
-        (
-            combined.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("fid")
-            .parquet(path)
-        )
-        files_after = sum(_n_data_files(d) for d in _fid_dirs(path).values())
         # touch-commit: raises if a maintenance writer committed while
         # the rewrite ran (its rows were just dropped from the
         # rewritten fids — surface the lost update instead of hiding
@@ -885,7 +746,7 @@ def _maybe_resize(
     # the resize check forever on k>=7 geometries that cannot be
     # improved at this fp_target
     eff = max(fill_threshold, fp_target ** (1.0 / meta["k"]))
-    if worst <= eff or not _fid_dirs(path):
+    if worst <= eff or not _grid_upsert.partition_dirs(path, "fid"):
         return worst, None
     key_col, k = meta["key_col"], meta["k"]
     # no localCheckpoint pin here: the parquet files are immutable
@@ -1064,7 +925,7 @@ def bloom_skipping_read(
     # reader would open; a free directory listing, not a Spark job
     # (and unlike the bits table it also counts files holding only
     # NULL keys, which carry no bitmap yet still exist on disk)
-    n_present = len(_fid_dirs(path))
+    n_present = len(_grid_upsert.partition_dirs(path, "fid"))
     hit = bloom_probe_files_table(spark, path, keys, meta)
     stats = {
         "files_total": n_present,

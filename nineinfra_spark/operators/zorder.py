@@ -27,6 +27,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from nineinfra_spark.operators import _grid_upsert, _sidecar
 
 #: default bits of z-resolution per column. The k-column z-value uses
 #: k*bits bits and must stay inside a signed 64-bit long (≤ 62), so
@@ -34,89 +37,6 @@ from pyspark.sql import functions as F
 #: 15 bits at 4 cols (r11 review finding: the old fixed default made
 #: the documented 4-column form unconditionally raise).
 ZBITS = 16
-
-
-def anti_upsert_keys(
-    existing: DataFrame,
-    delta_keys: DataFrame,
-    key_cols: Sequence[str],
-    null_safe: bool = True,
-) -> DataFrame:
-    """Drop ``existing`` rows whose key tuple ``delta_keys`` carries
-    (delta wins — the upsert half of the append maintainers' replay
-    convergence). NULL-SAFE on every key column (``eqNullSafe``) by
-    default: a plain equi anti-join never matches NULL keys
-    (NULL != NULL), so a crash-window replay would silently DUPLICATE
-    NULL-key rows despite ``key_cols`` — exactly the convergence
-    guarantee the maintainers document. EqualNullSafe still extracts
-    as a hash-join key, so the delta-sized ``delta_keys`` side (must
-    be distinct) stays a broadcast hash join, never a nested loop.
-
-    NULL-collapse consequence (by design, callers must document):
-    under ``null_safe=True`` every NULL in a key column matches every
-    other NULL — a delta carrying any NULL-key row supersedes ALL
-    existing NULL-key rows (in the partitions being rewritten), unlike
-    SQL/Delta MERGE where NULL never matches. Callers that know the
-    delta carries ZERO NULL keys may pass ``null_safe=False``: the two
-    forms are then semantically IDENTICAL — a non-null delta key
-    matches the same rows under ``=`` and ``<=>``, and a NULL-key
-    ``existing`` row is KEPT by both (never matched either way). Note
-    Spark does NOT null-prune the left/preserved side of a left_anti
-    join (pruning it would drop rows the join must keep); the plain
-    form buys semantic clarity plus build-side null filtering only —
-    measured ~flat at sf0.1."""
-    from functools import reduce
-
-    renamed = delta_keys.select(
-        *[F.col(c).alias(f"__dk_{c}") for c in key_cols]
-    )
-    if null_safe:
-        pairs = [
-            existing[c].eqNullSafe(renamed[f"__dk_{c}"]) for c in key_cols
-        ]
-    else:
-        pairs = [existing[c] == renamed[f"__dk_{c}"] for c in key_cols]
-    cond = reduce(lambda a, b: a & b, pairs)
-    return existing.join(F.broadcast(renamed), cond, "left_anti")
-
-
-def dirty_partitions_and_null_flag(
-    delta: DataFrame, part_col: str, key_cols: Sequence[str] | None
-) -> tuple[list, bool, int]:
-    """Distinct ``part_col`` ids of ``delta``, whether any
-    ``key_cols`` value is NULL, and the delta ROW COUNT — all fused
-    into the ONE job both append maintainers already run for
-    dirty-partition discovery, so the eqNullSafe gate (see
-    :func:`anti_upsert_keys`) and the ``rows_appended`` stat (r17:
-    formerly a separate ``delta.count()`` action per micro-batch)
-    cost no extra action. The count is the sum of the per-partition
-    group counts — exact by definition. Shared by
-    ``zorder_layout_append`` (part_col="zb") and
-    ``bloom_index_append`` (part_col="fid") — one implementation, one
-    gating rule."""
-    from functools import reduce
-
-    if key_cols:
-        null_any = reduce(
-            lambda a, b: a | b, [F.col(c).isNull() for c in key_cols]
-        )
-        agg = (
-            delta.groupBy(part_col)
-            .agg(
-                F.max(F.when(null_any, 1).otherwise(0)).alias("__nk"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .collect()
-        )
-        return (
-            [r[part_col] for r in agg],
-            any(r["__nk"] for r in agg),
-            sum(r["__n"] for r in agg),
-        )
-    agg = (
-        delta.groupBy(part_col).agg(F.count(F.lit(1)).alias("__n")).collect()
-    )
-    return [r[part_col] for r in agg], False, sum(r["__n"] for r in agg)
 
 
 def _resolve_bits(k: int, bits: int | None) -> int:
@@ -238,14 +158,10 @@ _LAYOUT_SIDECAR = "_zlayout.json"
 
 
 def _write_sidecar(path: str, meta: dict) -> None:
-    from nineinfra_spark.operators import _sidecar
-
     _sidecar.write(path, _LAYOUT_SIDECAR, meta)
 
 
 def _read_sidecar_raw(path: str) -> str:
-    from nineinfra_spark.operators import _sidecar
-
     return _sidecar.read_raw(path, _LAYOUT_SIDECAR)
 
 
@@ -255,22 +171,46 @@ def _guarded_sidecar_write(path: str, meta: dict, expected_raw: str) -> str:
     interleaving dynamic-partition overwrites is the single-writer
     contract's failure mode; the conflict raises at the marker commit
     instead of silently diverging."""
-    from nineinfra_spark.operators import _sidecar
-
     return _sidecar.guarded_write(
         path, _LAYOUT_SIDECAR, meta, expected_raw, "z-order layout"
     )
 
 
+def _load_meta(path: str) -> tuple[str, dict]:
+    """The sidecar's raw text (the CAS token of the marker commit) and
+    its parsed contract. Every reader of a layout's sidecar goes
+    through here, so this is the one place a sidecar without the
+    declared data ``schema`` (a layout written before the dirty-bucket
+    read declared its schema) is refused."""
+    import json
+
+    raw = _read_sidecar_raw(path)
+    meta = json.loads(raw)
+    if "schema" not in meta:
+        raise ValueError(
+            f"z-order layout {path!r} has no declared schema (its sidecar "
+            f'lacks "schema"); rebuild it with zorder_layout_write'
+        )
+    return raw, meta
+
+
 def read_layout_meta(path: str) -> dict:
     """The frozen layout contract of a :func:`zorder_layout_write`
-    directory: z columns, bit widths, and the normalization bounds
-    every later append must reuse."""
-    import json
-    import os
+    directory: z columns, bit widths, the normalization bounds every
+    later append must reuse, and the data schema."""
+    return _load_meta(path)[1]
 
-    with open(os.path.join(path, _LAYOUT_SIDECAR), encoding="utf-8") as f:
-        return json.load(f)
+
+def _zbucket_expr(
+    cols: Sequence[str],
+    bounds: dict[str, tuple[float | None, float | None]],
+    bits: int,
+    bucket_bits: int,
+) -> Column:
+    """The z-bucket of a row: the top ``bucket_bits`` bits of its
+    Morton code over the frozen ``bounds``."""
+    z = zvalue_expr(cols, bounds, bits=bits)
+    return F.shiftright(z, bits * len(cols) - bucket_bits)
 
 
 def zorder_layout_write(
@@ -285,9 +225,9 @@ def zorder_layout_write(
     over ``cols``, top ``bucket_bits`` bits → partition column ``zb``
     (≤ ``2**bucket_bits`` directories, each holding one z-contiguous
     file), plus a ``_zlayout.json`` sidecar freezing the layout
-    contract (columns, bits, normalization bounds). This is the
-    OPTIMIZE-style full layout job; :func:`zorder_layout_append` is
-    its incremental maintenance loop.
+    contract (columns, bits, normalization bounds, data schema). This
+    is the OPTIMIZE-style full layout job; :func:`zorder_layout_append`
+    is its incremental maintenance loop.
 
     The frozen bounds are what make increments possible: a later
     batch normalized against ITS OWN min/max would scatter into
@@ -311,14 +251,12 @@ def zorder_layout_write(
         raise ValueError(
             "zorder_layout_write: column 'zb' is reserved for the z-bucket "
             "partition column — rename it first (withColumn would silently "
-            "replace it and corrupt the layout's data_columns contract)"
+            "replace it and corrupt the layout's schema contract)"
         )
     bounds = column_bounds(df, cols)
-    z = zvalue_expr(cols, bounds, bits=rbits)
-    zb = F.shiftright(z, rbits * k - bucket_bits)
     n_buckets = 1 << bucket_bits
     (
-        df.withColumn("zb", zb)
+        df.withColumn("zb", _zbucket_expr(cols, bounds, rbits, bucket_bits))
         .repartition(n_buckets, "zb")
         .write.mode(mode)
         .partitionBy("zb")
@@ -329,7 +267,9 @@ def zorder_layout_write(
         "bits": rbits,
         "bucket_bits": bucket_bits,
         "bounds": {c: list(bounds[c]) for c in cols},
-        "data_columns": [c for c in df.columns],
+        # data schema (sans zb): the append reads the dirty buckets
+        # with it instead of inferring it from the files
+        "schema": df.schema.json(),
     }
     _write_sidecar(path, meta)
     return meta
@@ -349,69 +289,24 @@ def zorder_layout_append(
     ingesting 100 TB table needs (a full re-layout per batch would be
     a full table rewrite per batch).
 
-    Mechanics: the delta's ``zb`` is computed with the sidecar's
-    FROZEN bounds (same cells as the original job); its distinct
-    bucket ids (≤ ``2**bucket_bits`` — driver-bounded by construction)
-    select the dirty partitions; those partitions' current rows union
-    the delta and are rewritten via dynamic-partition overwrite, so
-    untouched buckets' files are never opened, and each dirty bucket
-    ends as ONE z-bucketed file again. The combined dirty rows are
-    localCheckpoint-ed first — the lineage break Spark requires to
-    overwrite a path it is reading — sized to the dirty buckets, not
-    the table. Readers racing the append see each bucket either whole
-    old or whole new (parquet dynamic-overwrite commits per
-    partition).
+    The delta's ``zb`` is computed with the sidecar's FROZEN bounds
+    (same cells as the original job), and the dirty buckets go through
+    the frozen-grid upsert of ``operators/_grid_upsert.py``, whose
+    module docstring states the protocol: pin, discovery, NULL-key
+    collapse, replay convergence, single writer and lineage break.
+    Each dirty bucket ends as ONE z-bucketed file again.
 
-    Streaming/replay semantics (the :func:`maintain_layout_stream`
-    sink contract): with ``batch_id`` set, a batch id ≤ the sidecar's
-    ``last_batch_id`` is SKIPPED — foreachBatch re-delivers the last
-    batch after a restart, and a blind re-append would duplicate it.
-    The sidecar marker is written after the partition-overwrite
-    commits, so one crash window remains (data committed, marker not);
-    ``key_cols`` closes it: existing rows whose key appears in the
-    delta are dropped before the union (delta wins), so REPLAYING a
-    batch converges — a re-delivered row has the same z-cell as the
-    copy it supersedes, so the stale copy is always inside the dirty
-    set. As a GENERAL upsert the same mechanism is exact only while
-    an update doesn't move the row's z-cell (z columns part of the
-    key, or unchanged by updates); an update that changes a z column
-    leaves the superseded copy in a non-dirty bucket this function
-    deliberately never opens — route such updates through a full
-    re-layout or the merge protocol. Without ``key_cols`` the marker
-    alone still dedups every non-crash replay.
-
-    NULL keys: when the delta carries a NULL in a key column, keys
-    match NULL-SAFELY (``<=>``) so replayed NULL-key rows converge —
-    with the consequence that NULL collapses to a SINGLE upsert key:
-    one NULL-key delta row supersedes ALL existing NULL-key rows in
-    the dirty buckets, unlike SQL/Delta MERGE where NULL never
-    matches. If NULL keys denote distinct rows in your data, make the
-    key non-null (coalesce a surrogate) or accept the collapse.
-    Deltas with zero NULL keys (detected per batch inside the
-    dirty-bucket discovery job, no extra action) take the plain
-    equi-join path, where the question never arises.
+    What is z-order's own: without ``key_cols`` the delta still
+    unions into the rewrite (the layout keeps one file per bucket), so
+    only the ``batch_id`` marker dedups a replay. With ``batch_id``
+    set, a batch id ≤ the sidecar's ``last_batch_id`` is SKIPPED; the
+    marker commits after the data, CAS-guarded, and raises if another
+    writer committed since this append read the sidecar.
 
     Returns ``{"rows_appended", "buckets_dirty", "buckets_total"}``
     (``"skipped_replay": True`` added when the marker short-circuits).
-
-    SINGLE WRITER: like every OPTIMIZE-style maintenance job on plain
-    parquet, concurrent appends to one layout are not coordinated —
-    two racing appends that share a dirty bucket each read the
-    pre-race rows and the last partition commit wins, dropping the
-    loser's rows. Schedule one maintenance job per layout (the
-    streaming sink enforces this shape naturally); tables needing
-    multi-writer semantics belong in the versioned-merge protocol. A
-    CRASHED append, by contrast, converges: dynamic overwrite commits
-    per partition, so re-running the same delta with ``key_cols``
-    anti-joins away whichever buckets already carry it and rewrites
-    the dirty set whole (the algebra `test_key_dedup_closes_the_crash_
-    window` pins).
     """
-    import json
-    import os
-
-    raw = _read_sidecar_raw(path)  # CAS token for the marker commit
-    meta = json.loads(raw)
+    raw, meta = _load_meta(path)  # raw: CAS token for the marker commit
     if batch_id is not None:
         last = meta.get("last_batch_id")
         if last is not None and batch_id <= last:
@@ -421,93 +316,24 @@ def zorder_layout_append(
                 "buckets_total": -1,
                 "skipped_replay": True,
             }
-    cols, bits, bucket_bits = meta["cols"], meta["bits"], meta["bucket_bits"]
-    data_columns = meta["data_columns"]
-    if sorted(delta.columns) != sorted(data_columns):
-        raise ValueError(
-            f"zorder_layout_append: delta columns {sorted(delta.columns)} "
-            f"!= layout columns {sorted(data_columns)}"
-        )
+    schema = _grid_upsert.declared_schema(meta["schema"], "zb", T.LongType())
     bounds = {c: tuple(v) for c, v in meta["bounds"].items()}
-    z = zvalue_expr(cols, bounds, bits=bits)
-    zb = F.shiftright(z, bits * len(cols) - bucket_bits)
-    # pin the delta ONCE: the dirty-bucket discovery and the rewrite
-    # below are separate actions — a non-deterministic delta (a
-    # sample, a changing view) recomputed between them could surface
-    # NEW buckets at write time whose old rows were never read into
-    # `existing_dirty`, silently dropping them in the overwrite. The
-    # checkpoint is LAZY (r17): the discovery job right below is the
-    # materializing action, so the pin costs zero extra jobs — every
-    # later consumer reads the frozen blocks (localCheckpoint
-    # materializes exactly once; eager vs lazy changes only WHEN).
-    delta_b = (
-        delta.select(*data_columns).withColumn("zb", zb)
-        .localCheckpoint(eager=False)
+    zb = _zbucket_expr(meta["cols"], bounds, meta["bits"], meta["bucket_bits"])
+    staged = _grid_upsert.stage(
+        "zorder_layout_append", delta, schema, "zb", zb, key_cols
     )
-    if key_cols:
-        bad = [c for c in key_cols if c not in data_columns]
-        if bad:
-            raise ValueError(
-                f"zorder_layout_append: key columns {bad} not in layout"
-            )
-    # NULL-key probe AND the rows_appended count fused into the
-    # dirty-bucket discovery job (zero extra actions): eqNullSafe is
-    # only NEEDED when the delta actually carries NULL keys (see
-    # anti_upsert_keys); the count was a separate per-batch action
-    # until r17.
-    dirty, delta_has_null_keys, rows_appended = (
-        dirty_partitions_and_null_flag(delta_b, "zb", key_cols)
-    )
-    n_total = sum(
-        1
-        for d in os.listdir(path)
-        if d.startswith("zb=") and os.path.isdir(os.path.join(path, d))
-    )
-    if not dirty:
-        return {
-            "rows_appended": 0,
-            "buckets_dirty": 0,
-            "buckets_total": n_total,
-        }
-    existing_dirty = (
-        spark.read.parquet(path)
-        .filter(F.col("zb").isin(dirty))
-        .select(*data_columns, "zb")
-    )
-    if key_cols:
-        # upsert: rows whose key the delta carries are superseded —
-        # the delta-keys side is delta-sized and broadcast; null-safe
-        # equality (only when the delta carries NULL keys) so NULL-key
-        # rows dedup on replay too
-        existing_dirty = anti_upsert_keys(
-            existing_dirty,
-            delta_b.select(*key_cols).distinct(),
-            key_cols,
-            null_safe=delta_has_null_keys,
+    if staged.dirty:
+        _grid_upsert.rewrite(
+            spark, path, schema, "zb", staged.dirty,
+            staged.delta, key_cols, staged.null_keys,
         )
-    combined = (
-        existing_dirty.unionByName(delta_b)
-        .repartition(max(len(dirty), 1), "zb")
-        .localCheckpoint(eager=True)
-    )
-    (
-        combined.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("zb")
-        .parquet(path)
-    )
-    if batch_id is not None:
-        meta["last_batch_id"] = batch_id
-        _guarded_sidecar_write(path, meta, raw)
-    new_ids = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("zb=") and os.path.isdir(os.path.join(path, d))
-    }
+        if batch_id is not None:
+            meta["last_batch_id"] = batch_id
+            _guarded_sidecar_write(path, meta, raw)
     return {
-        "rows_appended": rows_appended,
-        "buckets_dirty": len(dirty),
-        "buckets_total": len(new_ids),
+        "rows_appended": staged.rows,
+        "buckets_dirty": len(staged.dirty),
+        "buckets_total": len(_grid_upsert.partition_dirs(path, "zb")),
     }
 
 

@@ -984,8 +984,9 @@ def stream_zorder_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds); the remaining events arrive as a file-source stream and
     ``maintain_layout_stream`` merges every micro-batch through
     ``zorder_layout_append`` — per batch, ONLY the dirty z-buckets are
-    rewritten (dynamic-partition overwrite), so maintenance cost
-    tracks the batch, not the table. This registers the last shipped
+    rewritten (the frozen-grid upsert of ``operators/_grid_upsert.py``:
+    dynamic-partition overwrite), so maintenance cost tracks the
+    batch, not the table. This registers the last shipped
     maintainer that had no correctness-gate query (r12: operator +
     pytest only); the dedup-index and rollup maintainers are its
     siblings over managed tables.

@@ -27,6 +27,28 @@ def spark(engine):
     return engine.spark
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs it ran)``,
+    counted under a job group once the listener bus has delivered every
+    job event."""
+    import uuid
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with the testdata tables registered as views,
     matching the driver's oracle setup."""

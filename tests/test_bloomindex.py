@@ -283,7 +283,6 @@ def test_append_extends_index_and_keeps_exactness(spark, tmp_path):
     )
     stats = bloom_index_append(spark, path, delta, batch_id=0)
     assert stats["rows_appended"] == 300
-    assert stats["new_bits"] > 0
     import hashlib
 
     # a NEW key probes to its rows; an OLD key still does
@@ -524,7 +523,7 @@ def test_table_append_merges_sparkside_and_compact_vacuums(spark, tmp_path):
         (F.col("id") * 3).alias("payload"),
     )
     st = bloom_index_append(spark, path, delta, batch_id=0)
-    assert st["rows_appended"] == 200 and st["new_bits"] > 0
+    assert st["rows_appended"] == 200
     meta = read_index_meta(path)
     assert meta["bits_storage"] == "table"
     assert meta["bits_dir"] != "_bloomindex_bits"
@@ -945,23 +944,6 @@ def test_grace_window_keeps_inflight_probe_readable(spark, tmp_path):
     )
 
 
-def _jobs_run(spark, fn):
-    """``(fn(), number of Spark jobs it ran)``, counted under a job
-    group once the listener bus has delivered every job event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _mixed_probe_groups(present):
     """About 200 probe keys (present and absent str keys, int keys,
     NULLs), shuffled into groups of 40: a handful of present keys
@@ -1023,7 +1005,7 @@ def test_driver_consult_matches_broadcast_join(spark, indexed, tmp_path):
         assert n_hit > 0
 
 
-def test_probe_path_follows_broadcast_threshold(spark, indexed):
+def test_probe_path_follows_broadcast_threshold(spark, indexed, count_jobs):
     """The public table probe consults on the driver (no Spark job)
     while the probe slice fits under autoBroadcastJoinThreshold, takes
     the broadcast-join plan above it, and both return the same fids."""
@@ -1032,16 +1014,16 @@ def test_probe_path_follows_broadcast_threshold(spark, indexed):
     path, _, _ = indexed
     keys = [hashlib.md5(str(i).encode()).hexdigest() for i in (3, 500, 1777)]
     keys += ["absent", None, 12]
-    local, local_jobs = _jobs_run(
-        spark, lambda: bloom_probe_files_table(spark, path, keys)
+    local, local_jobs = count_jobs(
+        lambda: bloom_probe_files_table(spark, path, keys)
     )
     assert local_jobs == 0
     conf = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "1")
     try:
-        joined, joined_jobs = _jobs_run(
-            spark, lambda: bloom_probe_files_table(spark, path, keys)
+        joined, joined_jobs = count_jobs(
+            lambda: bloom_probe_files_table(spark, path, keys)
         )
     finally:
         spark.conf.set(conf, old)
@@ -1049,7 +1031,7 @@ def test_probe_path_follows_broadcast_threshold(spark, indexed):
     assert joined == local and 0 < len(local) < N_FILES
 
 
-def test_small_index_probe_runs_one_job(spark, indexed):
+def test_small_index_probe_runs_one_job(spark, indexed, count_jobs):
     """A small-index point lookup is one Spark job: the consult runs on
     the driver and the data read declares the sidecar schema, so only
     the pruned read of the hit files is left."""
@@ -1057,8 +1039,8 @@ def test_small_index_probe_runs_one_job(spark, indexed):
 
     path, _, df = indexed
     key = hashlib.md5(b"42").hexdigest()
-    rows, jobs = _jobs_run(
-        spark, lambda: bloom_skipping_read(spark, path, [key])[0].collect()
+    rows, jobs = count_jobs(
+        lambda: bloom_skipping_read(spark, path, [key])[0].collect()
     )
     assert jobs == 1
     assert [(r["key"], r["payload"]) for r in rows] == [(key, 126)]
@@ -1093,7 +1075,9 @@ def test_second_write_onto_index_raises_and_leaves_it_unchanged(
     assert load_bits(spark, path) == bits0
 
 
-def test_refused_write_runs_no_job_and_names_the_way_out(spark, tmp_path):
+def test_refused_write_runs_no_job_and_names_the_way_out(
+    spark, tmp_path, count_jobs
+):
     """The existing-path check comes before the pin and the bounds
     aggregate: the refused write runs no Spark job, and its message
     points at ``bloom_index_append`` or removing the directory (not at
@@ -1106,7 +1090,7 @@ def test_refused_write_runs_no_job_and_names_the_way_out(spark, tmp_path):
             bloom_index_write(_frame(spark), path, "day", "key", 4)
         return str(ei.value)
 
-    msg, jobs = _jobs_run(spark, refused)
+    msg, jobs = count_jobs(refused)
     assert jobs == 0
     assert "bloom_index_append" in msg and "remove the directory" in msg
     assert "overwrite" not in msg
@@ -1174,3 +1158,24 @@ def test_skipping_read_probes_through_module_attribute(
         spark, path, [hashlib.md5(b"42").hexdigest()]
     )
     assert len(calls) == 1
+
+
+def test_keyed_append_job_count(spark, tmp_path, count_jobs):
+    """A keyed append of a small delta runs 11 Spark jobs: discovery,
+    the bits merge and write, then the upsert rewrite, with their AQE
+    stages. No aggregate re-reads the two bits tables for a stat."""
+    from nineinfra_spark.operators.bloomindex import bloom_index_append
+
+    path = str(tmp_path / "jobs")
+    bloom_index_write(_frame(spark), path, "day", "key", 8)
+    delta = spark.range(N - 100, N + 100).select(
+        (F.col("id") % 100).alias("day"),
+        F.md5(F.col("id").cast("string")).alias("key"),
+        (F.col("id") * 5).alias("payload"),
+    )
+    stats, jobs = count_jobs(
+        lambda: bloom_index_append(spark, path, delta, key_cols=["key"])
+    )
+    assert stats == {"rows_appended": 200, "files_touched": 8}
+    assert jobs == 11
+    assert spark.read.parquet(path).count() == N + 100

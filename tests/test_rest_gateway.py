@@ -849,6 +849,36 @@ class TestOpsEndpoints:
         assert 1 <= out["buckets_dirty"] <= out["buckets_total"]
         assert spark.read.parquet(path).count() == 450
 
+    def test_zorder_append_without_schema_is_400(self, spark, rest, tmp_path):
+        """A layout sidecar with no declared data schema is refused
+        with the rebuild message, answered as the ops 400."""
+        import os
+
+        from nineinfra_spark.operators.zorder import zorder_layout_write
+
+        path = str(tmp_path / "layout")
+        zorder_layout_write(
+            spark.range(0, 100).selectExpr("id AS x", "id AS y"),
+            path, ["x", "y"], bits=8, bucket_bits=4,
+        )
+        sidecar = os.path.join(path, "_zlayout.json")
+        with open(sidecar) as f:
+            meta = json.load(f)
+        meta["data_columns"] = ["x", "y"]
+        del meta["schema"]
+        with open(sidecar, "w") as f:
+            json.dump(meta, f)
+        with pytest.raises(urllib.error.HTTPError) as e:
+            self._post_op(
+                rest,
+                "zorder-append",
+                {"path": path, "deltaSql": "SELECT 1L AS x, 2L AS y"},
+            )
+        assert e.value.code == 400
+        assert "rebuild it with zorder_layout_write" in json.loads(
+            e.value.read()
+        )["error"]
+
     def test_unknown_op_404(self, rest):
         req = urllib.request.Request(
             f"http://127.0.0.1:{rest.port}/api/v1/ops/nope",

@@ -501,7 +501,7 @@ class TestStreamingMaintain:
         plain equality both extract as hash-join keys — the delta side
         stays a broadcast hash join, never a nested loop (the claim
         both append docstrings rest on)."""
-        from nineinfra_spark.operators.zorder import anti_upsert_keys
+        from nineinfra_spark.operators._grid_upsert import anti_upsert_keys
 
         ex = spark.range(100).select(
             F.col("id").alias("k"), F.lit("v").alias("v")
@@ -732,3 +732,65 @@ def test_zorder_concurrent_writer_detection_cas(spark, tmp_path):
     with _pytest.raises(RuntimeError, match="concurrent maintenance writer"):
         _guarded_sidecar_write(out, meta_a, raw_a)
     assert read_layout_meta(out)["last_batch_id"] == 0  # B's marker intact
+
+
+def test_sidecar_without_schema_is_refused(spark, tmp_path):
+    """A layout sidecar with no declared data ``schema`` (the old
+    ``data_columns`` form) is refused with a rebuild message before any
+    job, and the layout is left as it was."""
+    import json
+
+    from nineinfra_spark.operators.zorder import (
+        read_layout_meta,
+        zorder_layout_append,
+        zorder_layout_write,
+    )
+
+    out = str(tmp_path / "old")
+    base = spark.range(0, 100).select(
+        F.col("id").alias("x"), (F.col("id") * 2).alias("y")
+    )
+    zorder_layout_write(base, out, ["x", "y"], bits=8, bucket_bits=4)
+    sidecar = os.path.join(out, "_zlayout.json")
+    with open(sidecar) as f:
+        meta = json.load(f)
+    meta["data_columns"] = ["x", "y"]
+    del meta["schema"]
+    with open(sidecar, "w") as f:
+        json.dump(meta, f)
+    rebuild = "rebuild it with zorder_layout_write"
+    delta = spark.createDataFrame([(1, 2)], "x long, y long")
+    with pytest.raises(ValueError, match=rebuild):
+        zorder_layout_append(spark, out, delta, key_cols=["x"])
+    with pytest.raises(ValueError, match=rebuild):
+        read_layout_meta(out)
+    assert spark.read.parquet(out).count() == 100
+
+
+def test_keyed_append_job_count(spark, tmp_path, count_jobs):
+    """A keyed append of a small delta runs 7 Spark jobs: discovery,
+    the delta-key broadcast, the eager pin of the combined rows and the
+    overwrite, with their AQE stages. The dirty-bucket read declares
+    the sidecar's schema, so no job infers it from the files."""
+    from nineinfra_spark.operators.zorder import (
+        zorder_layout_append,
+        zorder_layout_write,
+    )
+
+    out = str(tmp_path / "jobs")
+    base = spark.range(0, 500).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 37).alias("user_id"),
+        (F.col("id") % 11).cast("double").alias("value"),
+    )
+    zorder_layout_write(base, out, ["user_id", "value"], bits=8, bucket_bits=4)
+    delta = spark.createDataFrame(
+        [(3, 3, 3.0), (9001, 5, 2.0), (9002, 30, 9.0)],
+        "event_id long, user_id long, value double",
+    )
+    stats, jobs = count_jobs(
+        lambda: zorder_layout_append(spark, out, delta, key_cols=["event_id"])
+    )
+    assert stats["rows_appended"] == 3
+    assert jobs == 7
+    assert spark.read.parquet(out).count() == 502
