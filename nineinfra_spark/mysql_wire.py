@@ -45,10 +45,13 @@ Result fetch is bounded exactly like the REST frontend
 :data:`nineinfra_spark.rest.DEFAULT_FETCH_LIMIT` rows) — a wire gateway
 FETCHES a window; unbounded extraction is a WRITE through SQL. A point
 statement over one unpinned, non-partitioned parquet table is read on
-the driver with pyarrow and runs no Spark job; any other plan, any
-error on that path and any truncated window run Spark. The server is a
-daemon thread per connection on the shared session, like the other
-frontends.
+the driver with pyarrow and runs no Spark job; a repeated statement
+over unchanged inputs is answered from the result cache the REST
+frontend shares (same plan, same session conf, same input files or
+pins; the rule is in ``nineinfra_spark/shortcircuit.py``), also with
+no Spark job; any other plan, any error on those paths and any
+truncated window run Spark. The server is a daemon thread per
+connection on the shared session, like the other frontends.
 """
 
 from __future__ import annotations

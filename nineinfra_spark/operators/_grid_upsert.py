@@ -10,8 +10,8 @@ original build. Incremental maintenance rewrites only the cells a
 delta touches, in two steps:
 
 - :func:`stage` checks the delta against the declared data schema,
-  tags each row with its cell, pins the tagged delta and runs the one
-  discovery job;
+  casts its columns to the declared types, tags each row with its
+  cell, pins the tagged delta and runs the one discovery job;
 - :func:`rewrite` reads the dirty cells' current rows with the
   declared schema, drops the rows the delta supersedes, unions the
   delta in and overwrites exactly those cells.
@@ -22,6 +22,12 @@ commits between the two steps.
 
 The protocol:
 
+- **Declared types.** Each delta column is cast to the declared type
+  with Spark's store-assignment rules (``DataFrame.to``: ANSI casts in
+  the session time zone; an overflow or a cast those rules refuse,
+  such as string to long, raises). Without it the union with the
+  existing rows would widen a column, and the rewritten cells would be
+  written with another physical type than the untouched ones.
 - **Pin.** The delta is ``localCheckpoint``-ed lazily before
   discovery. Discovery and the rewrite are separate actions; a
   non-deterministic delta (a sample, a changing view) recomputed
@@ -165,8 +171,9 @@ def stage(
     key_cols: Sequence[str] | None,
 ) -> Staged:
     """Check ``delta``'s columns and ``key_cols`` against ``schema``
-    (the declared data schema plus ``part_col``), tag each row with
-    ``grid`` as ``part_col``, pin lazily and run discovery."""
+    (the declared data schema plus ``part_col``), cast them to its
+    types, tag each row with ``grid`` as ``part_col``, pin lazily and
+    run discovery."""
     data_cols = [f.name for f in schema.fields if f.name != part_col]
     if sorted(delta.columns) != sorted(data_cols):
         raise ValueError(
@@ -176,14 +183,32 @@ def stage(
     bad = [c for c in key_cols or () if c not in data_cols]
     if bad:
         raise ValueError(f"{op}: key columns {bad} not in table")
+    data = T.StructType([_nullable(f) for f in schema.fields if f.name != part_col])
     tagged = (
-        delta.select(*data_cols)
+        delta.to(data)
         .withColumn(part_col, grid)
         .localCheckpoint(eager=False)
     )
     return Staged(tagged, *dirty_partitions_and_null_flag(
         tagged, part_col, key_cols
     ))
+
+
+def _nullable(field: T.StructField) -> T.StructField:
+    """``field`` with NULL allowed at every level: ``DataFrame.to``
+    refuses a nullable column for a non-nullable field, and a declared
+    schema keeps the nullability of the frame it was taken from."""
+
+    def relax(t: T.DataType) -> T.DataType:
+        if isinstance(t, T.StructType):
+            return T.StructType([_nullable(f) for f in t.fields])
+        if isinstance(t, T.ArrayType):
+            return T.ArrayType(relax(t.elementType), True)
+        if isinstance(t, T.MapType):
+            return T.MapType(relax(t.keyType), relax(t.valueType), True)
+        return t
+
+    return T.StructField(field.name, relax(field.dataType), True, field.metadata)
 
 
 def rewrite(

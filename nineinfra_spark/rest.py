@@ -22,12 +22,25 @@ Design constraints, mirrored from the gateway tier's reality:
   column-vs-literal comparisons over one unpinned, non-partitioned
   parquet table) is read on the driver with pyarrow and runs no Spark
   job; any other plan, any error on that path and any truncated
-  window are ``limit(n + 1).collect()``.
+  window are ``limit(n + 1).collect()``. A repeated one-shot statement
+  whose plan is deterministic and reads only local files, pinned tables
+  or inline rows is answered from a process-wide result cache while its
+  session conf, plan and input files (path, size, mtime) or pins are
+  unchanged, with no Spark job; the rule is stated in
+  ``nineinfra_spark/shortcircuit.py``. Cursors and explain never use
+  the cache.
 
 Endpoints:
 
 - ``GET  /api/v1/ping``    → ``{"status": "ok"}`` liveness (always
   open — a load balancer probes it without credentials)
+- ``GET  /api/v1/metrics`` → the fetch-path counters of
+  :func:`nineinfra_spark.shortcircuit.fetch_metrics` as one JSON
+  object: statements served by the short circuit (``served``),
+  result-cache ``hits``/``misses``/``refused``/``stored``/``evicted``,
+  Spark runs (``spark``) and the cache's ``cacheEntries`` and
+  ``cacheRows``. Counters are process-wide, shared by every frontend.
+  Authenticated exactly like ``/sql``.
 - ``POST /api/v1/sql``     → body ``{"sql": "...", "limit": 100}``;
   responds ``{"columns": [...], "rows": [[...]], "rowCount": N,
   "truncated": bool}``. Errors → HTTP 400 with ``{"error": ...}``.
@@ -91,7 +104,8 @@ the single metastore and is serialized there.
 Authentication: pass ``auth`` (any ``(username, password) -> bool``,
 typically :class:`nineinfra_spark.auth.UserStore` — the reference's
 salted-MD5 users-table scheme, ``internal/controller/kyuubi.go:55-64``)
-to require HTTP Basic credentials on ``/api/v1/sql``; missing or
+to require HTTP Basic credentials on ``/api/v1/sql`` (and every
+endpoint but ``/ping``); missing or
 invalid credentials → 401 with ``WWW-Authenticate``. With ``auth=None``
 the frontend is open, matching the reference's non-JDBC auth mode
 (``kyuubi.go:66-69`` omits ``kyuubi.authentication`` entirely).
@@ -109,7 +123,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from nineinfra_spark.shortcircuit import collect_bounded, collect_served
+from nineinfra_spark.shortcircuit import collect_bounded, collect_served, fetch_metrics
 
 DEFAULT_FETCH_LIMIT = 1000
 #: Server-side ceiling on the per-request ``limit`` override — the cap
@@ -330,6 +344,11 @@ class _Handler(BaseHTTPRequestHandler):
     def do_GET(self) -> None:  # noqa: N802 — http.server API
         if self.path == "/api/v1/ping":
             self._reply(200, {"status": "ok"})
+        elif self.path == "/api/v1/metrics":
+            if self._authenticate() is None:
+                self._reply_unauthorized()
+            else:
+                self._reply(200, fetch_metrics())
         else:
             self._reply(404, {"error": f"unknown path {self.path}"})
 
@@ -683,7 +702,9 @@ def start_rest_gateway(
         (_Handler,),
         {
             "spark": spark,
-            "auth": auth,
+            # staticmethod: a plain function stored on the class would
+            # otherwise be called as a method, with the handler first
+            "auth": None if auth is None else staticmethod(auth),
             "proxy_acl": proxy_acl,
             "sessions": OrderedDict(),
             "sessions_lock": threading.Lock(),

@@ -1,5 +1,6 @@
 """Bounded result fetch for the SQL frontends, with a short circuit for
-single-table parquet point statements.
+single-table parquet point statements and a result cache for repeated
+statements.
 
 The REST and MySQL frontends FETCH a window of at most ``limit`` rows
 (:func:`collect_bounded`). Spark answers it as ``df.limit(limit + 1)
@@ -81,6 +82,55 @@ runs the same check and read on ``df.limit(bound + 1)``, with the
 one-shot cap as ``bound``. When the plan qualifies and at most
 ``bound`` rows match, the cursor pages over those rows; otherwise it
 streams from Spark's ``toLocalIterator`` as before.
+
+Result cache. A dashboard sends the same statement again and again;
+Doris answers a repeat from its SQL cache until the data's version
+changes. When the short circuit declines a window,
+:func:`collect_bounded` looks it up in one process-wide cache before
+``limited.collect()``: a hit returns a copy of the stored window and
+runs no Spark job; a miss runs Spark exactly as before and stores its
+answer. Short-circuited statements are neither looked up nor stored,
+and cursors never use the cache. An answer is reusable when every rule
+below holds:
+
+- Plan: the lookup reads ``withCachedData`` (the analyzed plan after
+  Spark's own cache substitution) of the QueryExecution ``collect()``
+  runs. It must be ``deterministic`` and contain no ``CURRENT_LIKE``
+  (``current_timestamp()``, ``current_user()``), ``PLAN_EXPRESSION``
+  (subqueries), ``EXPRESSION_WITH_RANDOM_SEED``, ``COMMAND`` or Python
+  or Scala UDF pattern. Every leaf is a ``LogicalRelation`` over a
+  ``HadoopFsRelation`` of at most ``_RESULT_FILES_MAX`` local files,
+  an ``InMemoryRelation`` whose column buffers are loaded, a
+  ``LocalRelation``, ``OneRowRelation`` or ``Range``; any other leaf
+  (a ``LogicalRDD``, a catalog or JDBC relation, a CTE reference)
+  keeps Spark.
+- Key: the plan's ``semanticHash`` and the text of the session's SQL
+  conf, so sessions whose confs differ (time zone, ANSI mode, a doAs
+  session's ``spark.nineinfra.effective.user``) never share an entry.
+  A hit also needs ``sameResult`` against the stored plan: a hash
+  collision is a miss. Canonical plans drop column names, so a hit's
+  rows take the asking statement's names.
+- Input versions: a file relation's version is ``(path, size,
+  mtime_ns)`` of every file its listing holds, from ``os.stat`` (the
+  footer cache's identity rule), so a Spark write, a ``REFRESH`` and
+  an external rewrite all change it. A pinned relation's version is the
+  application id and the id of its column-buffer RDD: a re-pin builds
+  a new RDD, and a new SparkContext, which restarts RDD ids, has a new
+  application id. A hit needs the stored versions to equal the current
+  ones.
+- Store: the versions are read before the Spark run and again after
+  it; the answer is stored only when both readings agree and it is a
+  complete window (at most ``limit`` rows). A truncated window and an
+  error are never stored, and anything that raises on the cache path
+  is a miss, so errors stay Spark's.
+- Bounds: the cache is LRU over at most ``_RESULTS_MAX`` entries
+  holding at most ``_RESULT_ROWS_MAX`` rows in all.
+
+:func:`fetch_metrics` counts the statements each path answered:
+``served`` (short circuit), ``hits`` and ``spark`` sum to the
+statements fetched; ``misses`` and ``refused`` split the one-shot
+windows Spark answered by whether the plan was reusable; ``stored`` and
+``evicted`` follow the cache.
 """
 
 from __future__ import annotations
@@ -89,19 +139,23 @@ import datetime as _dt
 import json
 import operator
 import os
+import pickle
 import threading
 from collections import OrderedDict
 from decimal import Decimal
+from functools import partial
+from typing import NamedTuple
 from urllib.parse import unquote, urlsplit
 
 from py4j.java_gateway import JavaClass
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 _EXPR = "org.apache.spark.sql.catalyst.expressions."
 _LOGICAL = "org.apache.spark.sql.catalyst.plans.logical."
 _RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
 _FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+_PINNED = "org.apache.spark.sql.execution.columnar.InMemoryRelation"
 _TREE_PATTERN = "org.apache.spark.sql.catalyst.trees.TreePattern"
 
 #: Session confs that must be at these values (their defaults).
@@ -140,12 +194,105 @@ _FLIP = {
     operator.ge: operator.le,
 }
 
+#: Plans whose answer the result cache never stores (module docstring).
+_UNCACHEABLE = (
+    "CURRENT_LIKE", "PLAN_EXPRESSION", "EXPRESSION_WITH_RANDOM_SEED", "COMMAND",
+    "PYTHON_UDF", "SCALA_UDF", "EVAL_PYTHON_UDF", "EVAL_PYTHON_UDTF",
+)
+#: Leaves whose rows the plan itself holds: no input version.
+_PLAN_LEAVES = {_LOGICAL + n for n in ("LocalRelation", "OneRowRelation", "Range")}
+
+#: Result cache bounds: entries, and rows summed over the entries.
+_RESULTS_MAX = 256
+_RESULT_ROWS_MAX = 50_000
+#: A file relation with more files than this is not cached: every
+#: lookup stats every file.
+_RESULT_FILES_MAX = 256
+
+_FOOTERS_MAX = 512
+
+
+class _Lru:
+    """A thread-safe map that drops its least recently used entries
+    once it holds more than ``max_entries`` or their ``weight`` sums
+    past ``max_weight``."""
+
+    def __init__(self, max_entries: int, max_weight: float = float("inf"), weight=None):
+        self.max_entries = max_entries
+        self.max_weight = max_weight
+        self._weigh = weight or (lambda value: 0)
+        self._items: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self.weight = 0
+
+    def __len__(self) -> int:
+        return len(self._items)
+
+    def get(self, key):
+        with self._lock:
+            value = self._items.get(key)
+            if value is not None:
+                self._items.move_to_end(key)
+            return value
+
+    def put(self, key, value) -> int:
+        """Store ``value`` as the most recent entry; returns how many
+        entries were evicted to make room."""
+        with self._lock:
+            old = self._items.pop(key, None)
+            if old is not None:
+                self.weight -= self._weigh(old)
+            self._items[key] = value
+            self.weight += self._weigh(value)
+            evicted = 0
+            while len(self._items) > self.max_entries or self.weight > self.max_weight:
+                self.weight -= self._weigh(self._items.popitem(last=False)[1])
+                evicted += 1
+            return evicted
+
+    def clear(self) -> None:
+        with self._lock:
+            self._items.clear()
+            self.weight = 0
+
+
 #: Footer cache shared by every session and frontend in the process: a
 #: key is a file's identity (path, size, mtime), so a rewritten file is
 #: a miss, never a stale schema.
-_FOOTERS_MAX = 512
-_footers: OrderedDict = OrderedDict()
-_footers_lock = threading.Lock()
+_footers = _Lru(_FOOTERS_MAX)
+
+
+class _Entry(NamedTuple):
+    """A stored window: the plan it answers, the input versions it was
+    read at, and its rows' values, pickled so every hit gets a copy."""
+
+    plan: object
+    versions: tuple
+    values: bytes
+    rows: int
+
+
+#: Result cache shared by every session and frontend in the process.
+_results = _Lru(_RESULTS_MAX, _RESULT_ROWS_MAX, weight=lambda e: e.rows)
+
+_COUNTERS = ("served", "hits", "misses", "refused", "stored", "evicted", "spark")
+_counts = dict.fromkeys(_COUNTERS, 0)
+_counts_lock = threading.Lock()
+
+
+def _count(name: str, n: int = 1) -> None:
+    with _counts_lock:
+        _counts[name] += n
+
+
+def fetch_metrics() -> dict:
+    """A snapshot of the fetch-path counters (module docstring) and of
+    the result cache's size."""
+    with _counts_lock:
+        out = dict(_counts)
+    out["cacheEntries"] = len(_results)
+    out["cacheRows"] = _results.weight
+    return out
 
 
 class _Refused(Exception):
@@ -154,13 +301,14 @@ class _Refused(Exception):
 
 def collect_bounded(df: DataFrame, limit: int) -> tuple[list, bool]:
     """At most ``limit`` rows of ``df`` and whether more exist. A
-    qualifying point statement is read on the driver with no Spark job
-    (module docstring); everything else, and every truncated window, is
-    ``df.limit(limit + 1).collect()``."""
+    qualifying point statement is read on the driver with no Spark job,
+    and a repeated statement over unchanged inputs comes from the
+    result cache (module docstring); everything else, and every
+    truncated window, is ``df.limit(limit + 1).collect()``."""
     limited = df.limit(limit + 1)
     rows = _served(limited, limit)
     if rows is None:
-        rows = limited.collect()
+        rows = _cached_collect(limited, limit)
     return rows[:limit], len(rows) > limit
 
 
@@ -168,7 +316,10 @@ def collect_served(df: DataFrame, bound: int) -> list | None:
     """Every row of ``df`` when the short circuit answers it and at
     most ``bound`` rows match; ``None`` otherwise, and the caller runs
     Spark. No Spark job runs either way."""
-    return _served(df.limit(bound + 1), bound)
+    rows = _served(df.limit(bound + 1), bound)
+    if rows is None:
+        _count("spark")
+    return rows
 
 
 def _served(limited: DataFrame, limit: int) -> list | None:
@@ -177,12 +328,131 @@ def _served(limited: DataFrame, limit: int) -> list | None:
     more than ``limit`` rows match, or anything raises."""
     try:
         point = _point_read(limited, limit)
-        return None if point is None else point.rows(limit)
+        rows = None if point is None else point.rows(limit)
     except Exception:
         # any failure on the driver-side path (py4j, pyarrow, a file
         # gone) is not reported from here: Spark answers, with its own
         # result or its own error
         return None
+    if rows is not None:
+        _count("served")
+    return rows
+
+
+def _cached_collect(limited: DataFrame, limit: int) -> list:
+    """``limited.collect()``, or a copy of the stored answer when the
+    result cache holds it (module docstring). Tests replace this
+    function to force Spark."""
+    try:
+        probe = _Probe(limited)
+        before = probe.versions()
+        entry = _results.get(probe.key)
+        if (entry is not None and entry.versions == before
+                and entry.plan.sameResult(probe.plan)):
+            make = Row(*limited.columns)
+            values = pickle.loads(entry.values)
+            _count("hits")
+            return [make(*v) for v in values]
+    except _Refused:
+        _count("refused")
+        return _spark_collect(limited)
+    except Exception:
+        probe = None
+    _count("misses")
+    rows = _spark_collect(limited)
+    if probe is not None and len(rows) <= limit:
+        try:
+            if probe.versions() == before:
+                values = pickle.dumps([tuple(r) for r in rows], pickle.HIGHEST_PROTOCOL)
+                evicted = _results.put(probe.key, _Entry(probe.plan, before, values, len(rows)))
+                _count("stored")
+                _count("evicted", evicted)
+        except Exception:
+            pass  # an input gone or unreadable: the answer is not stored
+    return rows
+
+
+def _spark_collect(limited: DataFrame) -> list:
+    _count("spark")
+    return limited.collect()
+
+
+class _Probe:
+    """A reusable plan (module docstring): its cache key, the plan, and
+    one version reader per input. Raises :class:`_Refused` for a plan
+    whose answer is never stored."""
+
+    def __init__(self, limited: DataFrame):
+        qe = limited._jdf.queryExecution()  # noqa: SLF001
+        jplan = qe.withCachedData()
+        if not jplan.deterministic():
+            raise _Refused("nondeterministic")
+        if jplan.containsAnyPattern(_uncacheable(qe._gateway_client)):  # noqa: SLF001
+            raise _Refused("an expression whose answer is not reusable")
+        jsession = limited.sparkSession._jsparkSession  # noqa: SLF001
+        leaves = jplan.collectLeaves()
+        self.inputs = []
+        for i in range(leaves.size()):
+            jleaf = leaves.apply(i)
+            cls = jleaf.getClass().getName()
+            if cls == _RELATION:
+                jrel = jleaf.relation()
+                if jrel.getClass().getName() != _FS_RELATION:
+                    raise _Refused("not a file relation")
+                self.inputs.append(partial(_file_version, jrel.location()))
+            elif cls == _PINNED:
+                app = jsession.sparkContext().applicationId()
+                self.inputs.append(partial(_pin_version, app, jleaf.cacheBuilder()))
+            elif cls not in _PLAN_LEAVES:
+                raise _Refused(f"a {cls} leaf")
+        conf = jsession.sessionState().conf().getAllConfs().toString()
+        self.key = (jplan.semanticHash(), conf)
+        self.plan = jplan
+
+    def versions(self) -> tuple:
+        return tuple(read() for read in self.inputs)
+
+
+def _file_version(jindex) -> tuple:
+    """``(path, size, mtime_ns)`` of every file a relation's listing
+    holds."""
+    jfiles = jindex.inputFiles()
+    if len(jfiles) > _RESULT_FILES_MAX:
+        raise _Refused("too many files")
+    out = []
+    for path in _local_paths(jfiles):
+        st = os.stat(path)
+        out.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _pin_version(app: str, jbuilder) -> tuple:
+    """The application id and column-buffer RDD id of a pinned
+    relation, refused while its buffers are not loaded."""
+    # checked first: asking an unloaded builder for its buffers would
+    # build (and persist) a new RDD
+    if not jbuilder.isCachedColumnBuffersLoaded():
+        raise _Refused("pinned relation not loaded")
+    return (app, jbuilder.cachedColumnBuffers().id())
+
+
+_uncacheable_seq: tuple = (None, None)
+
+
+def _uncacheable(client):
+    """The ``_UNCACHEABLE`` tree patterns as the Scala sequence
+    ``containsAnyPattern`` takes, built once per JVM gateway."""
+    global _uncacheable_seq
+    owner, seq = _uncacheable_seq
+    if owner is not client:
+        patterns = JavaClass(_TREE_PATTERN, client)
+        jlist = JavaClass("java.util.ArrayList", client)()
+        for name in _UNCACHEABLE:
+            jlist.add(getattr(patterns, name)())
+        converters = JavaClass("scala.jdk.javaapi.CollectionConverters", client)
+        seq = converters.asScala(jlist).toList()
+        _uncacheable_seq = (client, seq)
+    return seq
 
 
 def _tree(nodes: list, i: int = 0) -> tuple[tuple, int]:
@@ -420,16 +690,10 @@ def _all_modern(md, i: int, spark_type: str, t) -> bool:
 def _footer(path: str) -> _Footer:
     st = os.stat(path)
     key = (path, st.st_size, st.st_mtime_ns)
-    with _footers_lock:
-        hit = _footers.get(key)
-        if hit is not None:
-            _footers.move_to_end(key)
-            return hit
-    footer = _Footer(path)
-    with _footers_lock:
-        _footers[key] = footer
-        while len(_footers) > _FOOTERS_MAX:
-            _footers.popitem(last=False)
+    footer = _footers.get(key)
+    if footer is None:
+        footer = _Footer(path)
+        _footers.put(key, footer)
     return footer
 
 

@@ -27,6 +27,15 @@ def spark(engine):
     return engine.spark
 
 
+@pytest.fixture(autouse=True)
+def _empty_result_cache():
+    """Every test starts with an empty fetch result cache, so no job
+    count reads an answer an earlier test stored."""
+    from nineinfra_spark import shortcircuit
+
+    shortcircuit._results.clear()
+
+
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` → ``(fn(), number of Spark jobs it ran)``,

@@ -117,13 +117,15 @@ def _post(
 
 @contextlib.contextmanager
 def _forced_spark():
-    """Every plan refused by the eligibility check: Spark answers."""
-    saved = shortcircuit._point_read
+    """Every plan refused by the eligibility check and the result cache
+    bypassed: Spark answers."""
+    saved = shortcircuit._point_read, shortcircuit._cached_collect
     shortcircuit._point_read = lambda limited, limit: None
+    shortcircuit._cached_collect = lambda limited, limit: limited.collect()
     try:
         yield
     finally:
-        shortcircuit._point_read = saved
+        shortcircuit._point_read, shortcircuit._cached_collect = saved
 
 
 @contextlib.contextmanager

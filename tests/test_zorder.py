@@ -794,3 +794,58 @@ def test_keyed_append_job_count(spark, tmp_path, count_jobs):
     assert stats["rows_appended"] == 3
     assert jobs == 7
     assert spark.read.parquet(out).count() == 502
+
+
+def test_keyed_append_keeps_the_declared_column_types(spark, tmp_path):
+    """A layout built from a pyarrow ``timestamp("us")`` column reads
+    ``ts`` as ``timestamp_ntz``. A keyed append of a ``ts timestamp``
+    delta casts it to the declared type first, so every bucket keeps
+    one parquet type for ``ts`` and the inferred read schema stays
+    ``timestamp_ntz``, with the delta's wall-clock values."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from nineinfra_spark.operators.zorder import (
+        zorder_layout_append,
+        zorder_layout_write,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    n = 200
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "user_id": pa.array([i % 23 for i in range(n)], pa.int64()),
+            "ts": pa.array(
+                [dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i) for i in range(n)],
+                pa.timestamp("us"),
+            ),
+        }),
+        str(src / "part-0.parquet"),
+    )
+    out = str(tmp_path / "layout")
+    zorder_layout_write(
+        spark.read.parquet(str(src)), out, ["user_id", "event_id"], bits=8, bucket_bits=3
+    )
+    delta = spark.createDataFrame(
+        [(5, 5, dt.datetime(2030, 6, 1, 12, 30)), (9001, 7, dt.datetime(2031, 1, 2))],
+        "event_id long, user_id long, ts timestamp",
+    )
+    stats = zorder_layout_append(spark, out, delta, key_cols=["event_id"])
+    assert 0 < stats["buckets_dirty"] < stats["buckets_total"]
+
+    ts_types = set()
+    for root, _, files in os.walk(out):
+        for f in files:
+            if f.endswith(".parquet"):
+                schema = pq.ParquetFile(os.path.join(root, f)).schema
+                ts_types.add(str(schema.column(schema.names.index("ts"))))
+    assert len(ts_types) == 1, ts_types
+    back = spark.read.parquet(out)
+    assert back.schema["ts"].dataType == T.TimestampNTZType()
+    assert back.count() == n + 1
+    got = {r["event_id"]: r["ts"] for r in back.filter("event_id IN (5, 9001)").collect()}
+    assert got == {5: dt.datetime(2030, 6, 1, 12, 30), 9001: dt.datetime(2031, 1, 2)}
