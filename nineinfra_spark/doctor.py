@@ -303,16 +303,22 @@ def untruncated_plan_confs(spark):
     """Raise the plan-rendering truncation confs for the duration of
     one render, restoring them after — under the module lock, so
     concurrent renders on a shared session serialize instead of
-    tearing each other's conf values."""
+    tearing each other's conf values. A conf the session had not set is
+    unset again, so a render leaves the session's conf text (the fetch
+    caches' key) as it found it."""
     with _PLAN_RENDER_LOCK:
-        old = {k: spark.conf.get(k) for k in _RENDER_CONFS}
+        jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        old = {k: spark.conf.get(k) if jconf.contains(k) else None for k in _RENDER_CONFS}
         for k, v in _RENDER_CONFS.items():
             spark.conf.set(k, v)
         try:
             yield
         finally:
             for k, v in old.items():
-                spark.conf.set(k, v)
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def full_plan(df) -> str:

@@ -45,13 +45,18 @@ Result fetch is bounded exactly like the REST frontend
 :data:`nineinfra_spark.rest.DEFAULT_FETCH_LIMIT` rows) — a wire gateway
 FETCHES a window; unbounded extraction is a WRITE through SQL. A point
 statement over one unpinned, non-partitioned parquet table is read on
-the driver with pyarrow and runs no Spark job; a repeated statement
-over unchanged inputs is answered from the result cache the REST
-frontend shares (same plan, same session conf, same input files or
-pins; the rule is in ``nineinfra_spark/shortcircuit.py``), also with
-no Spark job; any other plan, any error on those paths and any
-truncated window run Spark. The server is a daemon thread per
-connection on the shared session, like the other frontends.
+the driver with pyarrow and runs no Spark job, and leaves a template:
+the next statement of the same text up to its literals is looked up
+(:func:`nineinfra_spark.shortcircuit.template_answer`) before
+``spark.sql`` and answered on the driver with no parser or optimizer
+run while the connection's session conf and current database, the
+table's catalog entry, temp views, cache state and files are unchanged.
+A repeated statement over unchanged inputs is answered from the result
+cache the REST frontend shares (same plan, same session conf, same
+input files or pins), also with no Spark job. The rules are in
+``nineinfra_spark/shortcircuit.py``. Any other plan, any error on those
+paths and any truncated window run Spark. The server is a daemon thread
+per connection on the shared session, like the other frontends.
 """
 
 from __future__ import annotations
@@ -63,7 +68,7 @@ import threading
 from pyspark.sql import SparkSession
 
 from nineinfra_spark.rest import DEFAULT_FETCH_LIMIT
-from nineinfra_spark.shortcircuit import collect_bounded
+from nineinfra_spark.shortcircuit import collect_bounded, template_answer
 
 SERVER_VERSION = "8.0.0-nineinfra-spark"
 
@@ -289,9 +294,13 @@ class _Conn:
 
     def _run_query(self, sql: str) -> None:
         try:
-            df = self._spark.sql(sql)
-            rows, truncated = collect_bounded(df, DEFAULT_FETCH_LIMIT)
-            cols = df.columns
+            hit = template_answer(self._spark, sql, DEFAULT_FETCH_LIMIT)
+            if hit is not None:
+                (cols, rows), truncated = hit, False
+            else:
+                df = self._spark.sql(sql)
+                rows, truncated = collect_bounded(df, DEFAULT_FETCH_LIMIT, sql)
+                cols = df.columns
         except Exception as exc:  # engine error → ERR packet, connection lives
             self._send_err(str(exc)[:900])
             return

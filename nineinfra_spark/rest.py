@@ -26,9 +26,17 @@ Design constraints, mirrored from the gateway tier's reality:
   whose plan is deterministic and reads only local files, pinned tables
   or inline rows is answered from a process-wide result cache while its
   session conf, plan and input files (path, size, mtime) or pins are
-  unchanged, with no Spark job; the rule is stated in
-  ``nineinfra_spark/shortcircuit.py``. Cursors and explain never use
-  the cache.
+  unchanged, with no Spark job. Cursors and explain never use the
+  cache.
+- A point statement the short circuit served leaves a template: the
+  next one-shot or cursor statement of the same text, up to its
+  literals, is looked up with
+  :func:`nineinfra_spark.shortcircuit.template_answer` before
+  ``sess.sql`` and, while its session conf, current database, catalog
+  entry, temp views, cache state and files are unchanged, is answered
+  on the driver with no parser, optimizer or Spark job. Explain never
+  uses templates. The rules are stated in
+  ``nineinfra_spark/shortcircuit.py``.
 
 Endpoints:
 
@@ -36,10 +44,13 @@ Endpoints:
   open — a load balancer probes it without credentials)
 - ``GET  /api/v1/metrics`` → the fetch-path counters of
   :func:`nineinfra_spark.shortcircuit.fetch_metrics` as one JSON
-  object: statements served by the short circuit (``served``),
-  result-cache ``hits``/``misses``/``refused``/``stored``/``evicted``,
-  Spark runs (``spark``) and the cache's ``cacheEntries`` and
-  ``cacheRows``. Counters are process-wide, shared by every frontend.
+  object: statements served by the short circuit (``served``) and
+  from a template (``templated``), result-cache
+  ``hits``/``misses``/``refused``/``stored``/``evicted``, Spark runs
+  (``spark``), the cache's ``cacheEntries`` and ``cacheRows``, and the
+  decoded-column cache's ``decodedHits``, ``decodedMisses`` and
+  ``decodedBytes``. Counters are process-wide, shared by every
+  frontend.
   Authenticated exactly like ``/sql``.
 - ``POST /api/v1/sql``     → body ``{"sql": "...", "limit": 100}``;
   responds ``{"columns": [...], "rows": [[...]], "rowCount": N,
@@ -123,7 +134,12 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from nineinfra_spark.shortcircuit import collect_bounded, collect_served, fetch_metrics
+from nineinfra_spark.shortcircuit import (
+    collect_bounded,
+    collect_served,
+    fetch_metrics,
+    template_answer,
+)
 
 DEFAULT_FETCH_LIMIT = 1000
 #: Server-side ceiling on the per-request ``limit`` override — the cap
@@ -154,11 +170,16 @@ def _fetch_limit(req: dict) -> int:
     return limit
 
 
-def _resultset(df, limit: int) -> dict:
-    """The bounded resultset every fetch endpoint answers with."""
-    rows, truncated = collect_bounded(df, limit)
+def _resultset(df, limit: int, text: str | None = None) -> dict:
+    """The bounded resultset every fetch endpoint answers with; ``text``
+    is the SQL of a ``/sql`` statement, which may leave a template."""
+    rows, truncated = collect_bounded(df, limit, text)
+    return _body(df.columns, rows, truncated)
+
+
+def _body(columns: list, rows: list, truncated: bool) -> dict:
     return {
-        "columns": df.columns,
+        "columns": columns,
         "rows": [list(r) for r in rows],
         "rowCount": len(rows),
         "truncated": truncated,
@@ -594,7 +615,21 @@ class _Handler(BaseHTTPRequestHandler):
             self._reply(400, {"error": f"bad request: {exc}"})
             return
         try:
-            df = self._session(effective, authed).sql(sql)
+            sess = self._session(effective, authed)
+            hit = None if explain else template_answer(
+                sess, sql, MAX_FETCH_LIMIT if cursor else limit, cursor
+            )
+            if hit is not None:
+                columns, rows = hit
+                if cursor:
+                    self._open_cursor(columns, iter(rows), authed)
+                    return
+                payload = _body(columns, rows, False)
+                if effective is not None:
+                    payload["effectiveUser"] = effective
+                self._reply(200, payload)
+                return
+            df = sess.sql(sql)
             if explain:
                 # plan-only mode: nothing executes, nothing fetches —
                 # the gateway answers "what would this cost" questions
@@ -633,34 +668,36 @@ class _Handler(BaseHTTPRequestHandler):
                 # prefetchPartitions=False keeps driver residency to
                 # ONE partition at a time — the sanctioned
                 # unbounded-extraction path.
-                import uuid as _uuid
-
-                stmt_id = _uuid.uuid4().hex
-                rows = collect_served(df, MAX_FETCH_LIMIT)
-                st = _Statement(
+                rows = collect_served(df, MAX_FETCH_LIMIT, sql)
+                self._open_cursor(
                     df.columns,
                     iter(rows)
                     if rows is not None
                     else df.toLocalIterator(prefetchPartitions=False),
-                    owner=authed,
-                )
-                evicted = []
-                with self.statements_lock:
-                    self.statements[stmt_id] = st
-                    while len(self.statements) > MAX_STATEMENTS:
-                        evicted.append(self.statements.popitem(last=False)[1])
-                for ev in evicted:  # release iterators outside the lock
-                    ev.close()
-                self._reply(
-                    200, {"statementId": stmt_id, "columns": df.columns}
+                    authed,
                 )
                 return
-            payload = _resultset(df, limit)
+            payload = _resultset(df, limit, sql)
             if effective is not None:
                 payload["effectiveUser"] = effective
             self._reply(200, payload)
         except Exception as exc:  # engine errors → structured 400, not a 500 stack
             self._reply(400, {"error": str(exc)[:4000]})
+
+    def _open_cursor(self, columns: list, it, owner: str) -> None:
+        """Register a cursor over ``it`` and reply its handle."""
+        import uuid as _uuid
+
+        stmt_id = _uuid.uuid4().hex
+        st = _Statement(columns, it, owner=owner)
+        evicted = []
+        with self.statements_lock:
+            self.statements[stmt_id] = st
+            while len(self.statements) > MAX_STATEMENTS:
+                evicted.append(self.statements.popitem(last=False)[1])
+        for ev in evicted:  # release iterators outside the lock
+            ev.close()
+        self._reply(200, {"statementId": stmt_id, "columns": columns})
 
 
 class RestGateway:

@@ -125,12 +125,85 @@ below holds:
   is a miss, so errors stay Spark's.
 - Bounds: the cache is LRU over at most ``_RESULTS_MAX`` entries
   holding at most ``_RESULT_ROWS_MAX`` rows in all.
+- Cost: a lookup reads every input's listing once, through the handles
+  its leaves give; the reading after a Spark run stats the same files
+  and asks the same pinned relations again, with no new walk of the
+  plan.
+
+Statement templates. A point statement has new literals every time, so
+the result cache never answers it, yet everything Spark does for it
+before the read (``sess.sql``, the optimizer, the plan inspection) is
+the same for every literal. Doris answers such statements from a
+prepared-statement plan cache; here a statement the short circuit served
+leaves a template, and the frontends look the text up with
+:func:`template_answer` before ``sess.sql``. A hit is answered on the
+driver with no parser, no optimizer and no Spark job. The rules:
+
+- Text: comments become one space and each literal in a slot becomes a
+  marker of its lexical class; everything else stays verbatim,
+  whitespace and case included. A literal is in a slot when it is
+  compared with a bare column (``col <op> lit`` or ``lit <op> col``
+  directly after ``WHERE``, ``AND`` or ``(`` and directly before
+  ``AND``, ``)`` or the end) or is an item of such a column's ``IN``
+  list. The classes are an integer in int range, an integer beyond it
+  (Spark types it as a bigint literal), a plain single-quoted string
+  (no backslash, no doubled quote), and the string of a typed ``DATE``,
+  ``TIMESTAMP``, ``TIMESTAMP_LTZ`` or ``TIMESTAMP_NTZ`` literal. Any
+  other literal form stays verbatim; a hint (``/*+``), a NUL character
+  or an unclosed quote or comment leaves the text without a template.
+- Key: the normalized text, the fetch mode (one-shot or cursor) and
+  window, the session's SQL conf text, and its current catalog and
+  database.
+- Record: the served statement's parsed plan is one
+  ``UnresolvedRelation`` with no options, its analyzed plan only
+  ``Project``, ``Filter``, ``SubqueryAlias`` and one ``LogicalRelation``
+  of a catalog table (so no view, temp view or path) with no
+  ``current_*`` expression and no session variable, its filters hold
+  one literal per slot besides ``NULL`` and booleans (so no literal is
+  written verbatim where the optimizer could fold it against a slot's
+  value, as in ``k = 3 AND k + 1 = 4``), the catalog's entry
+  equals the one the relation was read under, and the table's location
+  is the one file Spark reads or a directory that lists exactly the
+  files Spark reads plus hidden ones. Each slot's
+  value must equal exactly one literal of the optimized filter, of a
+  type its class allows, and every literal but ``NULL`` and booleans
+  must belong to exactly one slot; otherwise nothing is recorded. A
+  bare ``TIMESTAMP`` slot needs ``spark.sql.timestampType`` at
+  ``TIMESTAMP_LTZ``.
+- Hit: each new value must fit its literal's type (an int slot over a
+  smallint column takes smallint values only); typed temporal strings
+  are converted by Spark's own ``DateTimeUtils`` (two py4j calls per
+  string, memoized per string and time zone), and cast to the other
+  timestamp type as Spark's ``Cast`` does when the column has it (only
+  in a session time zone with a fixed offset). Then, on every
+  statement: a directory location lists the same names and every file
+  has its recorded ``(path, size, mtime_ns)``; no temp view has the name the
+  text uses; the catalog entry equals the recorded one (location,
+  schema, provider and the rest); and Spark's cache manager holds no
+  cached plan for the relation. The filter is rebuilt from the
+  recorded optimized filter with the new values, and the read is the
+  short circuit's. Anything unmatched, any failed check and anything
+  that raises falls through to ``sess.sql`` and the paths above, so
+  errors stay Spark's, and a truncated window still comes from Spark.
+- Bounds: at most ``_TEMPLATES_MAX`` texts, each with at most
+  ``_TEMPLATE_VARIANTS`` keys.
+
+Decoded columns. The read filters decoded Arrow columns kept in one
+process-wide cache bounded by ``_DECODED_MAX`` bytes and keyed like the
+footer cache by ``(path, size, mtime_ns)`` plus the column name. A miss
+decodes only the columns the statement needs and are not held, from a
+file whose open handle still has the expected size and mtime. A file
+whose uncompressed size is over the bound is read with
+``pyarrow.dataset`` as before. File order and row order within a file
+are kept.
 
 :func:`fetch_metrics` counts the statements each path answered:
-``served`` (short circuit), ``hits`` and ``spark`` sum to the
-statements fetched; ``misses`` and ``refused`` split the one-shot
-windows Spark answered by whether the plan was reusable; ``stored`` and
-``evicted`` follow the cache.
+``served`` (short circuit), ``templated`` (template), ``hits`` and
+``spark`` sum to the statements fetched; ``misses`` and ``refused``
+split the one-shot windows Spark answered by whether the plan was
+reusable; ``stored`` and ``evicted`` follow the cache.
+``decodedHits``/``decodedMisses`` count column lookups in the decoded
+cache and ``decodedBytes`` is its size.
 """
 
 from __future__ import annotations
@@ -141,14 +214,14 @@ import operator
 import os
 import pickle
 import threading
+import weakref
 from collections import OrderedDict
 from decimal import Decimal
-from functools import partial
 from typing import NamedTuple
 from urllib.parse import unquote, urlsplit
 
 from py4j.java_gateway import JavaClass
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Row, SparkSession
 
 _EXPR = "org.apache.spark.sql.catalyst.expressions."
 _LOGICAL = "org.apache.spark.sql.catalyst.plans.logical."
@@ -157,6 +230,9 @@ _FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
 _PINNED = "org.apache.spark.sql.execution.columnar.InMemoryRelation"
 _TREE_PATTERN = "org.apache.spark.sql.catalyst.trees.TreePattern"
+_UNRESOLVED = "org.apache.spark.sql.catalyst.analysis.UnresolvedRelation"
+_DATETIME = "org.apache.spark.sql.catalyst.util.DateTimeUtils"
+_UTF8 = "org.apache.spark.unsafe.types.UTF8String"
 
 #: Session confs that must be at these values (their defaults).
 _DEFAULT_CONFS = {
@@ -170,6 +246,8 @@ _DEFAULT_CONFS = {
 _INT_TYPES = ("byte", "short", "integer", "long")
 _TEMPORAL = ("date", "timestamp", "timestamp_ntz")
 _PROVEN = _INT_TYPES + _TEMPORAL + ("boolean", "double", "string", "binary")
+#: value range of each integer type
+_INT_RANGE = {t: (-(2 ** (b - 1)), 2 ** (b - 1) - 1) for t, b in zip(_INT_TYPES, (8, 16, 32, 64))}
 
 #: Earliest values that no calendar rebase touches (Spark's reader
 #: rebases a legacy file's dates before the Gregorian switch and its
@@ -211,13 +289,26 @@ _RESULT_FILES_MAX = 256
 
 _FOOTERS_MAX = 512
 
+#: Template store bounds: texts, and keys (mode, window, conf, catalog,
+#: database) per text.
+_TEMPLATES_MAX = 1024
+_TEMPLATE_VARIANTS = 16
+#: Analyzed-plan nodes a templated statement may have (module docstring).
+_TEMPLATE_NODES = {_LOGICAL + n for n in ("Project", "Filter", "SubqueryAlias")} | {_RELATION}
+#: Expressions whose value is not in the text: never templated.
+_UNTEMPLATED = ("CURRENT_LIKE", "VARIABLE_REFERENCE", "PARAMETER")
+_CONVERTED_MAX = 4096
+
+#: Decoded-column cache bound, in bytes of Arrow buffers.
+_DECODED_MAX = 64 << 20
+
 
 class _Lru:
     """A thread-safe map that drops its least recently used entries
     once it holds more than ``max_entries`` or their ``weight`` sums
     past ``max_weight``."""
 
-    def __init__(self, max_entries: int, max_weight: float = float("inf"), weight=None):
+    def __init__(self, max_entries: float, max_weight: float = float("inf"), weight=None):
         self.max_entries = max_entries
         self.max_weight = max_weight
         self._weigh = weight or (lambda value: 0)
@@ -261,6 +352,9 @@ class _Lru:
 #: a miss, never a stale schema.
 _footers = _Lru(_FOOTERS_MAX)
 
+#: Decoded columns, keyed by ``((path, size, mtime_ns), column)``.
+_decoded = _Lru(float("inf"), _DECODED_MAX, weight=lambda col: col.nbytes)
+
 
 class _Entry(NamedTuple):
     """A stored window: the plan it answers, the input versions it was
@@ -275,8 +369,14 @@ class _Entry(NamedTuple):
 #: Result cache shared by every session and frontend in the process.
 _results = _Lru(_RESULTS_MAX, _RESULT_ROWS_MAX, weight=lambda e: e.rows)
 
-_COUNTERS = ("served", "hits", "misses", "refused", "stored", "evicted", "spark")
-_counts = dict.fromkeys(_COUNTERS, 0)
+#: Template store: normalized text → {(mode, window, conf, catalog,
+#: database): _Template}.
+_templates = _Lru(_TEMPLATES_MAX)
+#: Typed literal values, keyed by (class, text, time zone, target type).
+_converted = _Lru(_CONVERTED_MAX)
+
+_COUNTERS = ("served", "templated", "hits", "misses", "refused", "stored", "evicted", "spark")
+_counts = dict.fromkeys(_COUNTERS + ("decodedHits", "decodedMisses"), 0)
 _counts_lock = threading.Lock()
 
 
@@ -287,11 +387,12 @@ def _count(name: str, n: int = 1) -> None:
 
 def fetch_metrics() -> dict:
     """A snapshot of the fetch-path counters (module docstring) and of
-    the result cache's size."""
+    the result and decoded caches' sizes."""
     with _counts_lock:
         out = dict(_counts)
     out["cacheEntries"] = len(_results)
     out["cacheRows"] = _results.weight
+    out["decodedBytes"] = _decoded.weight
     return out
 
 
@@ -299,30 +400,121 @@ class _Refused(Exception):
     """The plan does not qualify; Spark answers."""
 
 
-def collect_bounded(df: DataFrame, limit: int) -> tuple[list, bool]:
+# -- JVM handles ---------------------------------------------------------------
+
+
+class _Handles(NamedTuple):
+    """The JVM objects of one session the fetch path asks, looked up
+    once per session."""
+
+    session: object  # the JVM SparkSession
+    conf: object  # its SQLConf
+    catalog: object  # its Catalog (current catalog and database)
+    tables: object  # its SessionCatalog
+    cache: object  # the CacheManager
+    app: str  # the application id
+    client: object  # the py4j gateway client
+
+
+_handles_by_session: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_handles_lock = threading.Lock()
+
+
+def _handles(sess: SparkSession) -> _Handles:
+    with _handles_lock:
+        h = _handles_by_session.get(sess)
+    if h is None:
+        jsession = sess._jsparkSession  # noqa: SLF001
+        state = jsession.sessionState()
+        h = _Handles(
+            jsession, state.conf(), jsession.catalog(), state.catalog(),
+            jsession.sharedState().cacheManager(), jsession.sparkContext().applicationId(),
+            jsession._gateway_client,  # noqa: SLF001
+        )
+        with _handles_lock:
+            _handles_by_session[sess] = h
+    return h
+
+
+_statics: dict = {}
+
+
+def _static(client, fqn: str, name: str):
+    """A static JVM method or value, looked up once per gateway."""
+    key = (client, fqn, name)
+    member = _statics.get(key)
+    if member is None:
+        member = _statics[key] = getattr(JavaClass(fqn, client), name)
+    return member
+
+
+def _pattern(client, name: str):
+    """A tree pattern, looked up once per gateway."""
+    key = (client, _TREE_PATTERN, name, "value")
+    value = _statics.get(key)
+    if value is None:
+        value = _statics[key] = _static(client, _TREE_PATTERN, name)()
+    return value
+
+
+def _patterns(client, names: tuple):
+    """Tree patterns as the Scala sequence ``containsAnyPattern`` takes,
+    built once per gateway."""
+    key = (client, names)
+    seq = _statics.get(key)
+    if seq is None:
+        jlist = JavaClass("java.util.ArrayList", client)()
+        for name in names:
+            jlist.add(_pattern(client, name))
+        converters = JavaClass("scala.jdk.javaapi.CollectionConverters", client)
+        seq = _statics[key] = converters.asScala(jlist).toList()
+    return seq
+
+
+# -- fetch -------------------------------------------------------------------
+
+
+def collect_bounded(df: DataFrame, limit: int, text: str | None = None) -> tuple[list, bool]:
     """At most ``limit`` rows of ``df`` and whether more exist. A
-    qualifying point statement is read on the driver with no Spark job,
-    and a repeated statement over unchanged inputs comes from the
-    result cache (module docstring); everything else, and every
-    truncated window, is ``df.limit(limit + 1).collect()``."""
+    qualifying point statement is read on the driver with no Spark job
+    (and, when its SQL ``text`` is given, leaves a template), and a
+    repeated statement over unchanged inputs comes from the result
+    cache (module docstring); everything else, and every truncated
+    window, is ``df.limit(limit + 1).collect()``."""
     limited = df.limit(limit + 1)
-    rows = _served(limited, limit)
+    rows = _served(limited, limit, _Recording(df, text, "bounded") if text else None)
     if rows is None:
         rows = _cached_collect(limited, limit)
     return rows[:limit], len(rows) > limit
 
 
-def collect_served(df: DataFrame, bound: int) -> list | None:
+def collect_served(df: DataFrame, bound: int, text: str | None = None) -> list | None:
     """Every row of ``df`` when the short circuit answers it and at
     most ``bound`` rows match; ``None`` otherwise, and the caller runs
-    Spark. No Spark job runs either way."""
-    rows = _served(df.limit(bound + 1), bound)
+    Spark. No Spark job runs either way. With its SQL ``text``, a served
+    statement leaves a template for cursors."""
+    rows = _served(df.limit(bound + 1), bound, _Recording(df, text, "cursor") if text else None)
     if rows is None:
         _count("spark")
     return rows
 
 
-def _served(limited: DataFrame, limit: int) -> list | None:
+def template_answer(sess: SparkSession, text: str, window: int, cursor: bool = False):
+    """``(columns, rows)`` for SQL ``text`` answered from a template
+    (module docstring), with at most ``window`` rows and none left out;
+    ``None`` when the caller must run the statement, as before."""
+    return _template_answer(sess, text, "cursor" if cursor else "bounded", window)
+
+
+class _Recording(NamedTuple):
+    """What a served statement needs to leave a template."""
+
+    df: DataFrame
+    text: str
+    mode: str
+
+
+def _served(limited: DataFrame, limit: int, recording: _Recording | None = None) -> list | None:
     """The driver-side answer to ``limited`` (``df.limit(limit + 1)``):
     at most ``limit`` rows, or ``None`` when the plan does not qualify,
     more than ``limit`` rows match, or anything raises."""
@@ -336,6 +528,11 @@ def _served(limited: DataFrame, limit: int) -> list | None:
         return None
     if rows is not None:
         _count("served")
+        if recording is not None:
+            try:
+                _record(recording, limit, point)
+            except Exception:
+                pass  # no template; the answer stands
     return rows
 
 
@@ -378,20 +575,21 @@ def _spark_collect(limited: DataFrame) -> list:
 
 
 class _Probe:
-    """A reusable plan (module docstring): its cache key, the plan, and
-    one version reader per input. Raises :class:`_Refused` for a plan
-    whose answer is never stored."""
+    """A reusable plan (module docstring): its cache key, the plan, the
+    local files of each file relation (read once) and the builder of
+    each pinned relation. Raises :class:`_Refused` for a plan whose
+    answer is never stored."""
 
     def __init__(self, limited: DataFrame):
-        qe = limited._jdf.queryExecution()  # noqa: SLF001
-        jplan = qe.withCachedData()
+        h = _handles(limited.sparkSession)
+        jplan = limited._jdf.queryExecution().withCachedData()  # noqa: SLF001
         if not jplan.deterministic():
             raise _Refused("nondeterministic")
-        if jplan.containsAnyPattern(_uncacheable(qe._gateway_client)):  # noqa: SLF001
+        if jplan.containsAnyPattern(_patterns(h.client, _UNCACHEABLE)):
             raise _Refused("an expression whose answer is not reusable")
-        jsession = limited.sparkSession._jsparkSession  # noqa: SLF001
         leaves = jplan.collectLeaves()
-        self.inputs = []
+        self.files: list[list[str]] = []
+        self.pins: list = []
         for i in range(leaves.size()):
             jleaf = leaves.apply(i)
             cls = jleaf.getClass().getName()
@@ -399,31 +597,29 @@ class _Probe:
                 jrel = jleaf.relation()
                 if jrel.getClass().getName() != _FS_RELATION:
                     raise _Refused("not a file relation")
-                self.inputs.append(partial(_file_version, jrel.location()))
+                paths = _local_paths(jrel.location().inputFiles())
+                if len(paths) > _RESULT_FILES_MAX:
+                    raise _Refused("too many files")
+                self.files.append(paths)
             elif cls == _PINNED:
-                app = jsession.sparkContext().applicationId()
-                self.inputs.append(partial(_pin_version, app, jleaf.cacheBuilder()))
+                self.pins.append(jleaf.cacheBuilder())
             elif cls not in _PLAN_LEAVES:
                 raise _Refused(f"a {cls} leaf")
-        conf = jsession.sessionState().conf().getAllConfs().toString()
-        self.key = (jplan.semanticHash(), conf)
+        self.app = h.app
+        self.key = (jplan.semanticHash(), h.conf.getAllConfs().toString())
         self.plan = jplan
 
     def versions(self) -> tuple:
-        return tuple(read() for read in self.inputs)
+        """``(path, size, mtime_ns)`` of every listed file, and the
+        application and column-buffer RDD ids of every pinned relation,
+        read through the handles taken at construction."""
+        files = tuple(tuple((p, *_stat(p)) for p in paths) for paths in self.files)
+        return files + tuple(_pin_version(self.app, jbuilder) for jbuilder in self.pins)
 
 
-def _file_version(jindex) -> tuple:
-    """``(path, size, mtime_ns)`` of every file a relation's listing
-    holds."""
-    jfiles = jindex.inputFiles()
-    if len(jfiles) > _RESULT_FILES_MAX:
-        raise _Refused("too many files")
-    out = []
-    for path in _local_paths(jfiles):
-        st = os.stat(path)
-        out.append((path, st.st_size, st.st_mtime_ns))
-    return tuple(out)
+def _stat(path: str) -> tuple[int, int]:
+    st = os.stat(path)
+    return st.st_size, st.st_mtime_ns
 
 
 def _pin_version(app: str, jbuilder) -> tuple:
@@ -436,23 +632,7 @@ def _pin_version(app: str, jbuilder) -> tuple:
     return (app, jbuilder.cachedColumnBuffers().id())
 
 
-_uncacheable_seq: tuple = (None, None)
-
-
-def _uncacheable(client):
-    """The ``_UNCACHEABLE`` tree patterns as the Scala sequence
-    ``containsAnyPattern`` takes, built once per JVM gateway."""
-    global _uncacheable_seq
-    owner, seq = _uncacheable_seq
-    if owner is not client:
-        patterns = JavaClass(_TREE_PATTERN, client)
-        jlist = JavaClass("java.util.ArrayList", client)()
-        for name in _UNCACHEABLE:
-            jlist.add(getattr(patterns, name)())
-        converters = JavaClass("scala.jdk.javaapi.CollectionConverters", client)
-        seq = converters.asScala(jlist).toList()
-        _uncacheable_seq = (client, seq)
-    return seq
+# -- the short circuit ---------------------------------------------------------
 
 
 def _tree(nodes: list, i: int = 0) -> tuple[tuple, int]:
@@ -491,10 +671,10 @@ def _plan_point(limited: DataFrame, limit: int) -> "_PointRead":
     # until the optimizer inlines it, so a plan with a CTE skips them.
     # Acceptance is decided on the optimized plan alone.
     jplan = qe.analyzed()
-    patterns = JavaClass(_TREE_PATTERN, qe._gateway_client)  # noqa: SLF001
-    if not jplan.containsPattern(patterns.CTE()):
+    client = qe._gateway_client  # noqa: SLF001
+    if not jplan.containsPattern(_pattern(client, "CTE")):
         _single_relation(jplan)
-        if jplan.containsPattern(patterns.AGGREGATE()):
+        if jplan.containsPattern(_pattern(client, "AGGREGATE")):
             raise _Refused("an aggregate")
     jplan = _optimized(qe)
     # cheap refusals first: pinned (InMemoryRelation) or local reads are
@@ -526,17 +706,16 @@ def _plan_point(limited: DataFrame, limit: int) -> "_PointRead":
     for key, want in _DEFAULT_CONFS.items():
         if jconf.get(key).lower() != want.lower():
             raise _Refused(f"{key} is not at its default")
-    paths = _local_paths(jrel.location().inputFiles())
-    footers = [_footer(p) for p in paths]
-    if not footers:
+    files = [_footer(p) for p in _local_paths(jrel.location().inputFiles())]
+    if not files:
         raise _Refused("no files")
-    arrow_schema = footers[0].arrow_schema
-    for f in footers:
+    arrow_schema = files[0][1].arrow_schema
+    for _, f in files:
         if f.spark_types != types or not f.calendar_safe:
             raise _Refused("file schema differs from the table schema")
         if not f.arrow_schema.equals(arrow_schema):
             raise _Refused("files disagree on their schema")
-    expr = None
+    translator = None
     if cond is not None:
         # the Filter sits just above the relation in the unary chain
         def jcond():
@@ -545,8 +724,8 @@ def _plan_point(limited: DataFrame, limit: int) -> "_PointRead":
                 node = node.child()
             return node.condition()
 
-        expr = _Translator(types, arrow_schema, cond, jcond).pred(_tree(cond)[0])
-    return _PointRead(paths, arrow_schema, out, expr)
+        translator = _Translator(types, arrow_schema, cond, jcond)
+    return _PointRead(files, arrow_schema, out, translator, jleaf)
 
 
 def _optimized(qe):
@@ -590,9 +769,9 @@ def _check_relation(jrel) -> None:
         raise _Refused("reader options")
 
 
-def _local_paths(jfiles) -> list[str]:
+def _local_paths(uris) -> list[str]:
     paths = []
-    for uri in jfiles:
+    for uri in uris:
         parts = urlsplit(uri)
         if parts.scheme != "file" or parts.netloc not in ("", "localhost"):
             raise _Refused("not a local file")
@@ -603,7 +782,7 @@ def _local_paths(jfiles) -> list[str]:
 class _Footer:
     """What the short circuit needs from one file's footer."""
 
-    __slots__ = ("arrow_schema", "spark_types", "calendar_safe")
+    __slots__ = ("arrow_schema", "spark_types", "calendar_safe", "decoded_size")
 
     def __init__(self, path: str):
         import pyarrow.parquet as pq
@@ -611,6 +790,7 @@ class _Footer:
         pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
         md, pschema = pf.metadata, pf.schema
         self.arrow_schema = pf.schema_arrow
+        self.decoded_size = sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
         kv = md.metadata or {}
         version = kv.get(b"org.apache.spark.version")
         # Spark's own rule for which files its reader rebases
@@ -687,30 +867,38 @@ def _all_modern(md, i: int, spark_type: str, t) -> bool:
     return True
 
 
-def _footer(path: str) -> _Footer:
-    st = os.stat(path)
-    key = (path, st.st_size, st.st_mtime_ns)
-    footer = _footers.get(key)
+def _footer(path: str) -> tuple[tuple, _Footer]:
+    """A file's version ``(path, size, mtime_ns)`` and its footer."""
+    version = (path, *_stat(path))
+    footer = _footers.get(version)
     if footer is None:
         footer = _Footer(path)
-        _footers.put(key, footer)
-    return footer
+        _footers.put(version, footer)
+    return version, footer
 
 
 class _Translator:
     """Optimized-plan filter → ``pyarrow.dataset`` expression with
     Spark's semantics on the result (a NULL predicate drops the row on
-    both sides)."""
+    both sides). ``values`` replaces the value of literals by their
+    preorder leaf index (a template's new literals); ``literals`` then
+    holds the type and value every literal was read with, and
+    ``fields`` the columns the filter reads."""
 
-    def __init__(self, types: dict, arrow_schema, nodes: list, jcond):
+    def __init__(self, types: dict, arrow_schema, nodes: list, jcond=None, values=None):
         self.types = types
         self.arrow_schema = arrow_schema
+        self.nodes = nodes
         self.jcond = jcond  # () -> the JVM condition, for temporal literals
         # preorder position of each leaf, to fetch a temporal literal's
         # value from the JVM condition's collectLeaves()
         leaf_ids = [id(n) for n in nodes if n["num-children"] == 0]
         self.leaf_index = {k: j for j, k in enumerate(leaf_ids)}
         self._leaves = None
+        self.values = values or {}
+        self.literals: dict[int, tuple] = {}
+        self.fields: set[str] = set()
+        self.expr = self.pred(_tree(nodes)[0])
 
     def pred(self, expr: tuple):
         import pyarrow.compute as pc
@@ -724,10 +912,10 @@ class _Translator:
             attr = _attr(kids[0])
             if attr is None:
                 raise _Refused("IS NULL over an expression")
-            f = pc.field(attr["name"])
+            f = self.field(attr)
             return f.is_null() if kind == "IsNull" else f.is_valid()
         if kind == "AttributeReference" and node["dataType"] == "boolean":
-            return pc.field(node["name"]) == True  # noqa: E712 — an expression
+            return self.field(node) == True  # noqa: E712 — an expression
         if cls in _COMPARE:
             op = _COMPARE[cls]
             left, right = kids
@@ -742,6 +930,12 @@ class _Translator:
             return out
         raise _Refused(f"predicate {cls}")
 
+    def field(self, attr: dict):
+        import pyarrow.compute as pc
+
+        self.fields.add(attr["name"])
+        return pc.field(attr["name"])
+
     def compare(self, left: tuple, op, right: tuple):
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -752,69 +946,131 @@ class _Translator:
         spark_type = self.types[attr["name"]]
         if lit["dataType"] != spark_type or spark_type == "binary":
             raise _Refused("literal not in the column's type")
-        if lit["value"] is None:
+        if spark_type == "double":
+            # Spark prunes row groups and pages by parquet min/max,
+            # which leave NaN out and order -0.0 below 0.0, so its
+            # answer depends on the statistics
+            raise _Refused("double comparison")
+        idx = self.leaf_index[id(lit)]
+        value = self.values[idx] if idx in self.values else self.value(lit, spark_type)
+        self.literals[idx] = (spark_type, value)
+        f = self.field(attr)
+        if value is None:
             return pc.scalar(False)  # NULL comparison: no row passes
-        f = pc.field(attr["name"])
         t = self.arrow_schema.field(attr["name"]).type
-        raw = lit["value"]
-        if spark_type in _INT_TYPES:
-            v = pa.scalar(int(raw), t)
-        elif spark_type == "boolean":
-            v = pa.scalar(raw == "true", t)
-        elif spark_type == "string":
-            v = pa.scalar(raw, t)
-        elif spark_type.startswith("decimal("):
-            v = pa.scalar(Decimal(raw), t)
-        elif spark_type == "date":
-            v = pa.scalar(self.jvm_value(lit), pa.int32()).cast(pa.date32())
+        if spark_type == "date":
+            v = pa.scalar(value, pa.int32()).cast(pa.date32())
         elif spark_type in ("timestamp", "timestamp_ntz"):
             us = pa.timestamp("us", tz=t.tz)
             if t != us:
                 f = f.cast(us)
-            v = pa.scalar(self.jvm_value(lit), pa.int64()).cast(us)
+            v = pa.scalar(value, pa.int64()).cast(us)
         else:
-            # doubles: Spark prunes row groups and pages by parquet
-            # min/max, which leave NaN out and order -0.0 below 0.0, so
-            # its answer depends on the statistics
-            raise _Refused("double comparison")
+            v = pa.scalar(value, t)
         return op(f, v)
 
-    def jvm_value(self, lit: dict) -> int:
+    def value(self, lit: dict, spark_type: str):
+        """A literal's value: Python int, bool, str or Decimal, and for
+        dates and timestamps Spark's internal day or microsecond count."""
+        raw = lit["value"]
+        if raw is None:
+            return None
+        if spark_type in _INT_TYPES:
+            return int(raw)
+        if spark_type == "boolean":
+            return raw == "true"
+        if spark_type == "string":
+            return raw
+        if spark_type.startswith("decimal("):
+            return Decimal(raw)
         if self._leaves is None:
             self._leaves = self.jcond().collectLeaves()
         return int(self._leaves.apply(self.leaf_index[id(lit)]).value())
 
 
 class _PointRead:
-    """The driver-side read of a qualifying plan."""
+    """The driver-side read of a qualifying plan: its files (each
+    ``(version, footer)``), schema, output columns, filter and the JVM
+    relation it reads (for templates)."""
 
-    def __init__(self, paths: list, arrow_schema, out: list, expr):
-        self.paths = paths
+    def __init__(self, files: list, arrow_schema, out: list, translator, jleaf=None):
+        self.files = files
         self.arrow_schema = arrow_schema
         self.out = out
-        self.expr = expr
+        self.translator = translator
+        self.jleaf = jleaf
 
     def rows(self, limit: int) -> list | None:
         """The matching rows as ``collect()`` would build them, or
         ``None`` when more than ``limit`` match."""
-        import pyarrow.dataset as ds
         from pyspark.sql.types import StructField, StructType, _parse_datatype_json_value
 
         schema = StructType(
             [StructField(a["name"], _parse_datatype_json_value(a["dataType"]), a["nullable"])
              for a in self.out]
         )
-
-        fmt = ds.ParquetFileFormat(
-            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
-        )
-        dataset = ds.dataset(self.paths, schema=self.arrow_schema, format=fmt)
-        names = list(dict.fromkeys(a["name"] for a in self.out))
-        table = dataset.scanner(columns=names, filter=self.expr).head(limit + 1)
-        if table.num_rows > limit:
+        table = self.table(limit)
+        if table is None:
             return None
         cols = {a["name"]: _internal(table.column(a["name"]), a["dataType"]) for a in self.out}
         return [schema.fromInternal(t) for t in zip(*(cols[a["name"]] for a in self.out))]
+
+    def table(self, limit: int):
+        """At most ``limit`` matching rows in file order, or ``None``
+        when more match."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        expr = None if self.translator is None else self.translator.expr
+        names = list(dict.fromkeys(a["name"] for a in self.out))
+        if any(f.decoded_size > _DECODED_MAX for _, f in self.files):
+            fmt = ds.ParquetFileFormat(
+                read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+            )
+            paths = [version[0] for version, _ in self.files]
+            dataset = ds.dataset(paths, schema=self.arrow_schema, format=fmt)
+            table = dataset.scanner(columns=names, filter=expr).head(limit + 1)
+            return None if table.num_rows > limit else table
+        if self.translator is not None:
+            names += sorted(self.translator.fields - set(names))
+        parts, n = [], 0
+        for version, _ in self.files:
+            part = pa.table(_decoded_columns(version, names))
+            if expr is not None:
+                part = part.filter(expr)
+            n += part.num_rows
+            if n > limit:
+                return None
+            parts.append(part)
+        return pa.concat_tables(parts)
+
+
+def _decoded_columns(version: tuple, names: list) -> dict:
+    """The named columns of one file version, from the decoded cache;
+    the ones it lacks are decoded together and stored."""
+    import pyarrow.parquet as pq
+
+    out, missing = {}, []
+    for name in names:
+        col = _decoded.get((version, name))
+        if col is None:
+            missing.append(name)
+        else:
+            out[name] = col
+    _count("decodedHits", len(out))
+    if missing:
+        _count("decodedMisses", len(missing))
+        path, size, mtime = version
+        with open(path, "rb") as fh:
+            st = os.fstat(fh.fileno())
+            # key what was decoded by the file actually opened
+            if (st.st_size, st.st_mtime_ns) != (size, mtime):
+                raise _Refused("file changed since it was planned")
+            table = pq.ParquetFile(fh, coerce_int96_timestamp_unit="us").read(columns=missing)
+        for name in missing:
+            out[name] = col = table.column(name)
+            _decoded.put((version, name), col)
+    return out
 
 
 def _internal(col, spark_type: str) -> list:
@@ -828,3 +1084,393 @@ def _internal(col, spark_type: str) -> list:
         scale = 1000 if col.type.unit == "ms" else 1
         return [None if v is None else v * scale for v in col.cast(pa.int64()).to_pylist()]
     return col.to_pylist()
+
+
+# -- statement templates ---------------------------------------------------------
+
+#: comparison operators a slot may sit behind
+_CMP = frozenset(("=", "==", "<", "<=", ">", ">=", "<>", "!="))
+#: multi-character operators, longest first, so ``<=>`` or ``!<`` never
+#: read as ``<`` or ``<=``
+_OPS = ("<=>", "<=", ">=", "<>", "!=", "==", "=>", "->", "::", "||", "|>", "!<", "!>")
+_WS = frozenset(" \t\n\r\f\v")
+_WORD = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_")
+#: typed-literal keywords → slot class
+_TYPED = {
+    "DATE": "date", "TIMESTAMP": "timestamp", "TIMESTAMP_LTZ": "timestamp_ltz",
+    "TIMESTAMP_NTZ": "timestamp_ntz",
+}
+#: slot class → the literal types it may stand for, its own first (a
+#: timestamp compared with the other timestamp type is cast to it)
+_SLOT_TYPES = {
+    "int": _INT_TYPES, "bigint": ("long",), "string": ("string",), "date": ("date",),
+    "timestamp": ("timestamp", "timestamp_ntz"), "timestamp_ltz": ("timestamp", "timestamp_ntz"),
+    "timestamp_ntz": ("timestamp_ntz", "timestamp"),
+}
+_LEAD = frozenset(("WHERE", "AND", "("))
+_TAIL = frozenset(("AND", ")", ""))
+
+
+def _lex(text: str) -> list[tuple[str, int, int]] | None:
+    """``(kind, start, end)`` tokens: ``ws``, ``comment``, ``str``
+    (single-quoted), ``dstr``, ``bq``, ``word`` or ``op``; ``None`` for a
+    hint, a NUL or an unclosed quote or comment. Comments nest and a
+    line comment continues past a backslash-newline, as in Spark's
+    lexer."""
+    if "\x00" in text:
+        return None
+    out, i, n = [], 0, len(text)
+    while i < n:
+        c = text[i]
+        j = i + 1
+        if c in _WS:
+            while j < n and text[j] in _WS:
+                j += 1
+            kind = "ws"
+        elif text.startswith("--", i):
+            j = i + 2
+            while j < n and text[j] not in "\r\n":
+                j += 2 if text.startswith("\\\n", j) else 1
+            kind = "comment"
+        elif text.startswith("/*", i):
+            if text.startswith("/*+", i):
+                return None
+            depth, j = 1, i + 2
+            while depth:
+                if j >= n:
+                    return None
+                if text.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif text.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+            kind = "comment"
+        elif c in "'\"`":
+            while True:
+                if j >= n:
+                    return None
+                if text[j] == "\\" and c != "`":
+                    j += 2
+                elif text[j] == c:
+                    if text.startswith(c + c, j):
+                        j += 2  # a doubled quote
+                    else:
+                        j += 1
+                        break
+                else:
+                    j += 1
+            kind = {"'": "str", '"': "dstr", "`": "bq"}[c]
+        elif c in _WORD:
+            while j < n and text[j] in _WORD:
+                j += 1
+            kind = "word"
+        else:
+            j = i + len(next((op for op in _OPS if text.startswith(op, i)), c))
+            kind = "op"
+        out.append((kind, i, j))
+        i = j
+    return out
+
+
+class _Shape(NamedTuple):
+    """A statement's normalized text and its slots' ``(class, value)``."""
+
+    key: str
+    values: tuple
+
+
+def _shape(text: str) -> _Shape | None:
+    """The normalized text of a statement (module docstring)."""
+    toks = _lex(text)
+    if toks is None:
+        return None
+    sig = [k for k, (kind, _, _) in enumerate(toks) if kind not in ("ws", "comment")]
+    words = [text[toks[k][1]:toks[k][2]] for k in sig]
+    upper = [w.upper() for w in words]
+    kinds = [toks[k][0] for k in sig]
+
+    def at(p: int) -> str:
+        return upper[p] if 0 <= p < len(sig) else ""
+
+    # literal units (first, last significant position, slot position,
+    # class, value)
+    units = []
+    for p, kind in enumerate(kinds):
+        if kind == "word" and words[p].isdigit():
+            v, a = int(words[p]), p
+            if at(p - 1) == "-" and (at(p - 2) in _CMP or at(p - 2) in ("(", ",")):
+                v, a = -v, p - 1
+            if -(2**31) <= v < 2**31:
+                units.append((a, p, a, "int", v))
+            elif -(2**63) <= v < 2**63:
+                units.append((a, p, a, "bigint", v))
+        elif kind == "str":
+            body = words[p][1:-1]
+            if "\\" in body or "'" in body:
+                continue
+            if kinds[p - 1:p] == ["word"] and at(p - 1) in _TYPED and at(p - 2) != ".":
+                units.append((p - 1, p, p, _TYPED[at(p - 1)], body))
+            else:
+                units.append((p, p, p, "string", body))
+    starts = {u[0]: u for u in units}
+    ends = {u[1]: u for u in units}
+
+    def name(q: int) -> bool:
+        return 0 <= q < len(sig) and (
+            kinds[q] == "bq" or kinds[q] == "word" and not words[q].isdigit())
+
+    def chain_start(q: int) -> int | None:
+        """Start of a column reference (``a``, ``t.a``, ```a```)
+        ending at ``q``."""
+        if not name(q):
+            return None
+        while at(q - 1) == "." and name(q - 2):
+            q -= 2
+        return q
+
+    def chain_end(q: int) -> int | None:
+        if not name(q):
+            return None
+        while at(q + 1) == "." and name(q + 2):
+            q += 2
+        return q
+
+    def compared(a: int, b: int) -> bool:
+        # col <op> lit, or lit <op> col
+        if at(a - 1) in _CMP and at(b + 1) in _TAIL:
+            s = chain_start(a - 2)
+            return s is not None and at(s - 1) in _LEAD
+        if at(b + 1) in _CMP and at(a - 1) in _LEAD:
+            e = chain_end(b + 2)
+            return e is not None and at(e + 1) in _TAIL
+        return False
+
+    def listed(a: int, b: int) -> bool:
+        # col IN (lit, ..., lit)
+        if at(a - 1) not in ("(", ",") or at(b + 1) not in (",", ")"):
+            return False
+        lo = a - 1
+        while at(lo) == ",":
+            lo = ends[lo - 1][0] - 1 if lo - 1 in ends else lo - 2 if at(lo - 1) == "NULL" else -1
+        hi = b + 1
+        while at(hi) == ",":
+            hi = starts[hi + 1][1] + 1 if hi + 1 in starts else hi + 2 if at(hi + 1) == "NULL" else -1
+        if at(lo) != "(" or at(hi) != ")" or at(lo - 1) != "IN" or at(hi + 1) not in _TAIL:
+            return False
+        s = chain_start(lo - 2)
+        return s is not None and at(s - 1) in _LEAD
+
+    slots = {}  # raw token range → (class, value)
+    for a, b, p, cls, v in units:
+        if compared(a, b) or listed(a, b):
+            slots[sig[p]] = (sig[b], cls, v)
+    parts, values, k = [], [], 0
+    while k < len(toks):
+        kind, s, e = toks[k]
+        if k in slots:
+            last, cls, v = slots[k]
+            parts.append(f"\x00{cls}\x00")
+            values.append((cls, v))
+            k = last + 1
+            continue
+        parts.append(" " if kind == "comment" else text[s:e])
+        k += 1
+    return _Shape("".join(parts), tuple(values))
+
+
+class _Template(NamedTuple):
+    """What a served statement left (module docstring)."""
+
+    columns: list
+    point: _PointRead  # files, schema and output columns
+    slots: tuple  # per slot: (class, literal leaf index, literal type)
+    zone: str | None  # the session time zone, for typed literal slots
+    name: object  # the JVM table name as the text spells it
+    ident: object  # the JVM TableIdentifier it resolved to
+    entry: object  # the JVM CatalogTable the relation was read under
+    root: str  # the table's location: a directory or one file
+    listing: tuple | None  # sorted names in the directory
+
+
+def _template_key(h: _Handles, mode: str, window: int) -> tuple:
+    return (mode, window, h.conf.getAllConfs().toString(), h.catalog.currentCatalog(),
+            h.catalog.currentDatabase())
+
+
+def _template_answer(sess: SparkSession, text: str, mode: str, window: int):
+    """``(columns, rows)`` from a template, or ``None``. Tests replace
+    this function to force Spark."""
+    try:
+        shape = _shape(text)
+        variants = None if shape is None else _templates.get(shape.key)
+        if not variants:
+            return None
+        h = _handles(sess)
+        t = variants.get(_template_key(h, mode, window))
+        rows = None if t is None else _template_rows(t, h, shape.values, window)
+    except Exception:
+        return None  # Spark answers, with its own result or error
+    if rows is None:
+        return None
+    _count("templated")
+    return t.columns, rows
+
+
+def _template_rows(t: _Template, h: _Handles, values: tuple, window: int) -> list | None:
+    new = {}
+    for (cls, idx, spark_type), (_, raw) in zip(t.slots, values):
+        if cls in ("int", "bigint"):
+            lo, hi = _INT_RANGE[spark_type]
+            if not lo <= raw <= hi:
+                return None
+            new[idx] = raw
+        elif cls == "string":
+            new[idx] = raw
+        else:
+            new[idx] = _temporal(h.client, cls, raw, t.zone, spark_type)
+    if t.listing is not None and tuple(sorted(os.listdir(t.root))) != t.listing:
+        return None
+    for version, _ in t.point.files:
+        if (version[0], *_stat(version[0])) != version:
+            return None
+    if h.tables.isTempView(t.name) or not h.tables.getTableMetadata(t.ident).equals(t.entry):
+        return None
+    p = t.point
+    if h.cache.lookupCachedData(h.session, p.jleaf).isDefined():
+        return None  # pinned since: Spark reads the cache
+    tr = p.translator and _Translator(
+        p.translator.types, p.arrow_schema, p.translator.nodes, values=new)
+    return _PointRead(p.files, p.arrow_schema, p.out, tr).rows(window)
+
+
+def _temporal(client, cls: str, text: str, zone: str, target: str) -> int:
+    """A typed literal's value as Spark's parser computes it (days for
+    ``DATE``, microseconds for the timestamps), cast to ``target`` as
+    Spark's ``Cast`` does between the two timestamp types. Raises for a
+    string Spark would not read (the special values ``now``, ``today``
+    and the like included: Spark reads them before these functions)."""
+    key = (cls, text, zone, target)
+    value = _converted.get(key)
+    if value is None:
+        utf8 = _static(client, _UTF8, "fromString")(text)
+        native = _SLOT_TYPES[cls][0]
+        if cls == "date":
+            value = _static(client, _DATETIME, "stringToDateAnsi")(utf8, None)
+        elif cls == "timestamp_ntz":
+            value = _static(client, _DATETIME, "stringToTimestampWithoutTimeZoneAnsi")(utf8, None)
+        else:
+            value = _static(client, _DATETIME, "stringToTimestampAnsi")(
+                utf8, _zone_id(client, zone), None)
+        if target != native:
+            utc = _static(client, "java.time.ZoneOffset", "UTC")
+            here = _zone_id(client, zone)
+            # Cast.castToTimestampNTZ / castToTimestamp between the two
+            value = _static(client, _DATETIME, "convertTz")(
+                value, *((utc, here) if target == "timestamp_ntz" else (here, utc)))
+        _converted.put(key, value)
+    return value
+
+
+def _zone_id(client, zone: str):
+    key = (client, "zone", zone)
+    zone_id = _statics.get(key)
+    if zone_id is None:
+        zone_id = _statics[key] = _static(client, _DATETIME, "getZoneId")(zone)
+    return zone_id
+
+
+def _hidden(name: str) -> bool:
+    """A name Spark's file listing leaves out
+    (``InMemoryFileIndex.shouldFilterOutPathName``)."""
+    exclude = (name.startswith("_") and "=" not in name) or name.startswith(".") or (
+        name.endswith("._COPYING_"))
+    return exclude and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _record(recording: _Recording, window: int, point: _PointRead) -> None:
+    """Leave a template for a statement the short circuit served, when
+    every rule of the module docstring holds."""
+    shape = _shape(recording.text)
+    if shape is None:
+        return
+    h = _handles(recording.df.sparkSession)
+    # the slots and the filter's literals must pair up one to one
+    literals = {} if point.translator is None else point.translator.literals
+    types, zone = _SLOT_TYPES, None
+    if any(cls in _TYPED.values() for cls, _ in shape.values):
+        zone = h.conf.sessionLocalTimeZone()
+        # a timestamp cast to the other timestamp type is a fixed shift
+        # only in a zone without transitions
+        if not _zone_id(h.client, zone).getRules().isFixedOffset():
+            types = {c: ts[:1] if c in _TYPED.values() else ts for c, ts in types.items()}
+    slots, claimed = [], set()
+    for cls, raw in shape.values:
+        match = [idx for idx, (t, v) in literals.items() if t in types[cls] and v == (
+            raw if cls in ("int", "bigint", "string") else _temporal(h.client, cls, raw, zone, t))]
+        if len(match) != 1 or match[0] in claimed:
+            return
+        claimed.add(match[0])
+        slots.append((cls, match[0], literals[match[0]][0]))
+    if any(idx not in claimed and v is not None and t != "boolean"
+           for idx, (t, v) in literals.items()):
+        return
+    if any(cls == "timestamp" for cls, _ in shape.values) and (
+            h.conf.timestampType().typeName() != "timestamp"):
+        return
+    qe = recording.df._jdf.queryExecution()  # noqa: SLF001
+    parsed = qe.logical().collectLeaves()
+    if parsed.size() != 1:
+        return
+    unresolved = parsed.head()
+    if (unresolved.getClass().getName() != _UNRESOLVED or unresolved.isStreaming()
+            or not unresolved.options().isEmpty()):
+        return
+    analyzed = qe.analyzed()
+    nodes = json.loads(analyzed.toJSON())
+    classes = [n["class"] for n in nodes]
+    if not set(classes) <= _TEMPLATE_NODES or classes.count(_RELATION) != 1:
+        return
+    # every literal the text's filter holds is a slot: a literal written
+    # verbatim could meet a slot's value in the optimizer (``k = 3 AND
+    # k + 1 = 4`` folds to ``k = 3``) and leave no trace to match
+    written = [e for n in nodes if n["class"] == _LOGICAL + "Filter" for e in n["condition"]
+               if e["class"] == _EXPR + "Literal" and e["value"] is not None
+               and e["dataType"] != "boolean"]
+    if len(written) != len(shape.values):
+        return
+    if analyzed.containsAnyPattern(_patterns(h.client, _UNTEMPLATED)):
+        return
+    entry = point.jleaf.catalogTable()
+    if not entry.isDefined():
+        return
+    entry = entry.get()
+    ident = entry.identifier()
+    if not h.tables.getTableMetadata(ident).equals(entry):
+        return
+    roots = point.jleaf.relation().location().rootPaths()
+    if roots.size() != 1:
+        return
+    (root,) = _local_paths([roots.head().toUri().toString()])
+    root = root.rstrip("/")
+    paths = [version[0] for version, _ in point.files]
+    listing = None
+    if os.path.isdir(root):
+        listing = tuple(sorted(os.listdir(root)))
+        data = {n for n in listing if not _hidden(n)}
+        if {os.path.dirname(p) for p in paths} != {root} or data != {
+                os.path.basename(p) for p in paths}:
+            return
+        if not all(os.path.isfile(os.path.join(root, n)) for n in data):
+            return
+    elif paths != [root]:
+        return
+    t = _Template(
+        list(recording.df.columns), point, tuple(slots), zone, unresolved.multipartIdentifier(),
+        ident, entry, root, listing,
+    )
+    variants = _templates.get(shape.key)
+    if variants is None or len(variants) >= _TEMPLATE_VARIANTS:
+        variants = {}
+        _templates.put(shape.key, variants)
+    variants[_template_key(h, recording.mode, window)] = t

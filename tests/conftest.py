@@ -29,11 +29,14 @@ def spark(engine):
 
 @pytest.fixture(autouse=True)
 def _empty_result_cache():
-    """Every test starts with an empty fetch result cache, so no job
-    count reads an answer an earlier test stored."""
+    """Every test starts with an empty fetch result cache, template
+    store and decoded-column cache, so no job count or counter reads
+    what an earlier test left."""
     from nineinfra_spark import shortcircuit
 
     shortcircuit._results.clear()
+    shortcircuit._templates.clear()
+    shortcircuit._decoded.clear()
 
 
 @pytest.fixture

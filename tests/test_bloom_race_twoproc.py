@@ -22,6 +22,7 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,6 +33,9 @@ from nineinfra_spark.operators.bloomindex import (
     read_index_meta,
 )
 
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
+
 # multi-process race: append vs compact across processes — excluded
 # from the default lane (see pytest.ini), run via -m slow
 pytestmark = pytest.mark.slow
@@ -40,7 +44,7 @@ N = 2000
 
 _APPENDER = """
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv.pop(1))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from nineinfra_spark.operators.bloomindex import bloom_index_append
@@ -94,11 +98,11 @@ def test_append_races_compact_across_processes(spark, tmp_path, monkeypatch):
     start_flag = str(tmp_path / "start")
     done_flag = str(tmp_path / "done")
     proc = subprocess.Popen(
-        [sys.executable, "-c", _APPENDER, path, start_flag, done_flag],
+        [sys.executable, "-c", _APPENDER, ROOT, path, start_flag, done_flag],
         stdout=subprocess.PIPE,
         stderr=subprocess.PIPE,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     try:
         real_read = bloomindex._read_sidecar_raw

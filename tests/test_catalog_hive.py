@@ -19,11 +19,16 @@ its own subprocess with a fresh JVM sharing the same derby metastore.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import os
 import subprocess
 import sys
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 SF = "/root/testdata/sf0.001"
 
@@ -116,7 +121,7 @@ def _run(script: str, root: str) -> str:
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
     return proc.stdout

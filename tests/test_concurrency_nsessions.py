@@ -32,6 +32,8 @@ appended keys.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import json
@@ -43,6 +45,9 @@ import urllib.error
 import urllib.request
 
 from test_merge_race_twoproc import _client_merge, _free_port
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 # multi-process hammer: N concurrent engine sessions — excluded from
 # the default lane (see pytest.ini), run via -m slow
@@ -372,7 +377,7 @@ def test_n_sessions_interleaved_merge_probe_rollup(tmp_path):
         stdout=subprocess.PIPE,
         stderr=err_f,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     # a pump thread owns stdout for the whole host lifetime, so the
     # readiness deadline stays effective even if the host wedges

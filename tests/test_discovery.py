@@ -13,6 +13,7 @@ import signal
 import subprocess
 import sys
 import time
+from pathlib import Path
 
 import pytest
 
@@ -20,6 +21,9 @@ from nineinfra_spark.discovery import (
     NoLiveEngine,
     ServiceRegistry,
 )
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def test_register_list_pick_deregister(tmp_path):
@@ -85,7 +89,7 @@ def test_invalid_engine_id_rejected(tmp_path):
 
 _CHILD = r"""
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv.pop(1))
 from nineinfra_spark.discovery import ServiceRegistry
 
 root, engine_id = sys.argv[1], sys.argv[2]
@@ -108,7 +112,7 @@ def test_sigkill_expires_and_pick_fails_over(tmp_path):
     survivor.heartbeat(load=9)  # loaded, so the child wins pick()
 
     child = subprocess.Popen(
-        [sys.executable, "-c", _CHILD, str(tmp_path), "engine-a"],
+        [sys.executable, "-c", _CHILD, ROOT, str(tmp_path), "engine-a"],
         stdout=subprocess.PIPE,
         text=True,
     )
@@ -152,7 +156,7 @@ def test_atomic_rewrite_never_torn(tmp_path):
 
 _ENGINE_CHILD = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv.pop(1))
 from nineinfra_spark.engine import Engine, EngineConfig
 
 root = sys.argv[1]
@@ -176,7 +180,7 @@ def test_engine_open_registers_close_deregisters(tmp_path):
     path — crash expiry is covered above). Subprocess-isolated so the
     engine owns its own JVM/session."""
     child = subprocess.Popen(
-        [sys.executable, "-c", _ENGINE_CHILD, str(tmp_path)],
+        [sys.executable, "-c", _ENGINE_CHILD, ROOT, str(tmp_path)],
         stdout=subprocess.PIPE,
         stdin=subprocess.PIPE,
         stderr=subprocess.DEVNULL,

@@ -217,6 +217,20 @@ def test_untruncated_plan_confs_serialize_and_restore(spark):
     assert spark.conf.get(key) == original
 
 
+def test_untruncated_plan_confs_leave_the_conf_text_unchanged(spark):
+    """A render on a session that never set the truncation confs
+    unsets them again: the session's SQL conf text, which keys the
+    fetch result cache and the statement templates, is what it was."""
+    from nineinfra_spark.doctor import untruncated_plan_confs
+
+    sess = spark.newSession()
+    jconf = sess._jsparkSession.sessionState().conf()
+    before = jconf.getAllConfs().toString()
+    with untruncated_plan_confs(sess):
+        assert sess.conf.get("spark.sql.maxMetadataStringLength") == "100000"
+    assert jconf.getAllConfs().toString() == before
+
+
 def test_microbatch_capture_renders_untruncated(spark):
     """Review finding (r11): the streaming plan capture rendered under
     the DEFAULT truncation confs, silently no-opping the unpruned-scan

@@ -9,10 +9,15 @@ shared pytest session."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 import socket
 import subprocess
 import sys
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 SF = "/root/testdata/sf0.001"
 
@@ -58,7 +63,7 @@ def test_thrift_gateway_second_client():
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, (
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
@@ -111,7 +116,7 @@ def test_all_platform_roles_compose():
             capture_output=True,
             text=True,
             timeout=420,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         assert proc.returncode == 0, (
             f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
@@ -217,7 +222,7 @@ def test_multi_tenant_interleaved_frontends():
             capture_output=True,
             text=True,
             timeout=420,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
     assert proc.returncode == 0, (
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
@@ -255,7 +260,7 @@ def test_thrift_http_transport_second_client():
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, (
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
@@ -308,7 +313,7 @@ def test_thrift_custom_auth_enforced_on_wire():
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, (
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
@@ -469,7 +474,7 @@ def test_concurrent_ddl_two_rest_sessions_plus_thrift_reader():
             capture_output=True,
             text=True,
             timeout=420,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
     assert proc.returncode == 0, (
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"

@@ -21,6 +21,8 @@ afterwards is a no-op ("clean").
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import json
@@ -31,6 +33,9 @@ import sys
 import time
 import urllib.error
 import urllib.request
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 # multi-process race: two-writer versioned merge — excluded from the default lane (see pytest.ini), run via -m slow
 pytestmark = pytest.mark.slow
@@ -274,7 +279,7 @@ def test_two_process_merge_race(tmp_path):
         stdout=subprocess.PIPE,
         stderr=err_f,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     try:
         # wait for the host's table + REST frontend

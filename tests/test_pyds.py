@@ -5,12 +5,17 @@ agreement, partition ranges, and the offset-recovery path
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 import os
 import shutil
 import time
 
 from nineinfra_spark.sources import pyds
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 OUT = "/tmp/nineinfra_pyds_test"
 
@@ -166,7 +171,7 @@ def test_stream_midbatch_kill_replays_exactly_once(spark, tmp_path):
         stdout=subprocess.PIPE,
         stderr=err_f,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     try:
         # wait until some batch N has its offset logged but no commit —

@@ -7,10 +7,15 @@ one persistent derby metastore.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 import subprocess
 import sys
+
+#: the checkout these tests run from: subprocesses import its package
+ROOT = str(Path(__file__).resolve().parents[1])
 
 # multi-process: crash-recovery across engine restarts — excluded from
 # the default lane (see pytest.ini), run via -m slow
@@ -77,7 +82,7 @@ def test_open_time_recovery_rolls_crashed_merge_forward(tmp_path):
             capture_output=True,
             text=True,
             timeout=420,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         assert proc.returncode == 0, (
             f"{marker} phase failed:\n{proc.stdout}\n{proc.stderr[-3000:]}"

@@ -373,6 +373,41 @@ def test_bounds_evict_least_recently_used(spark, rest, tables, monkeypatch, boun
         assert got == _spark_body(rest, payload)
 
 
+# -- cost --------------------------------------------------------------------
+
+
+def test_miss_reads_versions_through_held_handles(spark, tables):
+    """A miss's probe and its two version readings make at most 32 py4j
+    round trips for a join of a two-file table and a pinned one. The
+    listing is read once: the reading after the Spark run stats the
+    files and asks only the pinned relation (three round trips)."""
+    limited = spark.sql(
+        "SELECT f.k, sum(f.v) AS m FROM rc_fact f JOIN rc_dim p ON f.k = p.k GROUP BY f.k"
+    ).limit(1001)
+    shortcircuit._Probe(limited)  # session handles and pattern sequence, once per process
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    counts = {}
+    client.send_command = counted
+    try:
+        probe = shortcircuit._Probe(limited)
+        counts["probe"] = len(calls)
+        for reading in ("before", "after"):
+            del calls[:]
+            probe.versions()
+            counts[reading] = len(calls)
+    finally:
+        client.send_command = send
+    assert counts["after"] == 3, counts
+    assert sum(counts.values()) <= 32, counts
+
+
 # -- counters ----------------------------------------------------------------
 
 
@@ -392,14 +427,21 @@ def test_metrics_endpoint_counts_and_authenticates(spark, authed, tables):
         assert status == 200
 
     before = metrics()
-    assert set(before) == set(shortcircuit._COUNTERS) | {"cacheEntries", "cacheRows"}
-    sql("SELECT * FROM rc_fact WHERE k = 3")  # short circuit
+    decoded = ("decodedHits", "decodedMisses")
+    assert set(before) == set(shortcircuit._COUNTERS + decoded) | {
+        "cacheEntries", "cacheRows", "decodedBytes"}
+    sql("SELECT * FROM rc_fact WHERE k = 3")  # short circuit, leaves a template
+    sql("SELECT * FROM rc_fact WHERE k = 4")  # template
     sql(_AGG.format(t="rc_fact"))  # miss, stored
     sql(_AGG.format(t="rc_fact"))  # hit
     sql("SELECT k, rand() AS r FROM rc_fact WHERE v > 990")  # refused
     after = metrics()
-    assert {k: after[k] - before[k] for k in shortcircuit._COUNTERS} == {
-        "served": 1, "hits": 1, "misses": 1, "refused": 1, "stored": 1, "evicted": 0,
-        "spark": 2,
+    assert {k: after[k] - before[k] for k in shortcircuit._COUNTERS + decoded} == {
+        "served": 1, "templated": 1, "hits": 1, "misses": 1, "refused": 1, "stored": 1,
+        "evicted": 0, "spark": 2,
+        # four columns in each of two files: decoded by the first read,
+        # found by the second
+        "decodedMisses": 8, "decodedHits": 8,
     }
     assert (after["cacheEntries"], after["cacheRows"]) == (1, 10)
+    assert after["decodedBytes"] == shortcircuit._decoded.weight > 0

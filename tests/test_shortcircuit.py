@@ -1,9 +1,11 @@
 """Short-circuit point statements (``nineinfra_spark/shortcircuit.py``).
 
-Differential: every generated statement is sent through the REST
-frontend twice, once as served and once with the eligibility function
-replaced so Spark answers, and the two response bodies must agree —
-byte for byte on a one-file table, as row multisets with equal
+Differential: every generated statement shape is written twice with
+separately drawn literals, and both statements are sent through the
+REST frontend as served (the second may be answered from the first's
+template) and with the eligibility function, templates and result
+cache replaced so Spark answers; each pair of response bodies must
+agree — byte for byte on a one-file table, as row multisets with equal
 ``rowCount``/``truncated`` on a multi-file one. Refusal: each plan the
 short circuit must not answer runs Spark jobs and gives Spark's body
 and status; a qualifying point statement runs none. Cursors: the same
@@ -117,15 +119,17 @@ def _post(
 
 @contextlib.contextmanager
 def _forced_spark():
-    """Every plan refused by the eligibility check and the result cache
-    bypassed: Spark answers."""
-    saved = shortcircuit._point_read, shortcircuit._cached_collect
+    """Every plan refused by the eligibility check, and the template
+    store and result cache bypassed: Spark answers."""
+    saved = shortcircuit._point_read, shortcircuit._cached_collect, shortcircuit._template_answer
     shortcircuit._point_read = lambda limited, limit: None
     shortcircuit._cached_collect = lambda limited, limit: limited.collect()
+    shortcircuit._template_answer = lambda sess, text, mode, window: None
     try:
         yield
     finally:
-        shortcircuit._point_read, shortcircuit._cached_collect = saved
+        (shortcircuit._point_read, shortcircuit._cached_collect,
+         shortcircuit._template_answer) = saved
 
 
 @contextlib.contextmanager
@@ -211,30 +215,43 @@ _LITERALS = {
 
 @st.composite
 def _predicates(draw):
+    """One predicate shape, written twice with separately drawn
+    literals."""
     col = draw(st.sampled_from(sorted(_COLUMNS)))
     kind = draw(st.sampled_from(["=", "<", "<=", ">", ">=", "in", "in_null", "null", "notnull"]))
     if kind == "null":
-        return f"{col} IS NULL"
+        return (f"{col} IS NULL",) * 2
     if kind == "notnull":
-        return f"{col} IS NOT NULL"
+        return (f"{col} IS NOT NULL",) * 2
     lits = _LITERALS[col]
     if kind.startswith("in"):
-        items = draw(st.lists(st.sampled_from(lits), min_size=1, max_size=3))
-        if kind == "in_null":
-            items.append(None)
-        return f"{col} IN ({', '.join(_sql_literal(col, v) for v in items)})"
-    return f"{col} {kind} {_sql_literal(col, draw(st.sampled_from(lits)))}"
+        n = draw(st.integers(1, 3))
+        out = []
+        for _ in range(2):
+            items = [draw(st.sampled_from(lits)) for _ in range(n)]
+            if kind == "in_null":
+                items.append(None)
+            out.append(f"{col} IN ({', '.join(_sql_literal(col, v) for v in items)})")
+        return tuple(out)
+    return tuple(f"{col} {kind} {_sql_literal(col, draw(st.sampled_from(lits)))}" for _ in range(2))
 
 
 @st.composite
 def _statements(draw):
+    """``((first, second), limit)``: one statement shape with two draws
+    of its literals, so the second may be answered from the first's
+    template."""
     preds = draw(st.lists(_predicates(), min_size=1, max_size=2))
     cols = draw(st.one_of(
         st.just(["*"]),
         st.lists(st.sampled_from(sorted(_COLUMNS)), min_size=1, max_size=4, unique=True),
     ))
     limit = draw(st.sampled_from([1000, 1000, 5]))
-    return f"SELECT {', '.join(cols)} FROM {{t}} WHERE {' AND '.join(preds)}", limit
+    stmts = tuple(
+        f"SELECT {', '.join(cols)} FROM {{t}} WHERE {' AND '.join(p[i] for p in preds)}"
+        for i in (0, 1)
+    )
+    return stmts, limit
 
 
 def _multiset(body: bytes) -> dict:
@@ -244,15 +261,31 @@ def _multiset(body: bytes) -> dict:
     return out
 
 
-def _differential(rest, stmt, limit: int, table: str) -> bool:
-    payload = {"sql": stmt.format(t=table), "limit": limit}
-    (s1, b1), (s2, b2) = _both(rest, payload)
-    assert s1 == s2, (payload, b1[:300], b2[:300])
-    if table == "sc_one":
-        assert b1 == b2, payload
-    else:
-        assert _multiset(b1) == _multiset(b2), payload
-    return s1 == 200
+def _differential(rest, stmts, limit: int, table: str) -> list:
+    """Both statements answered as served (the second possibly from the
+    first's template) and with Spark forced; the bodies agree. Returns
+    whether each was answered with 200."""
+    payloads = [{"sql": stmt.format(t=table), "limit": limit} for stmt in stmts]
+    served = [_post(rest, payload) for payload in payloads]
+    with _forced_spark():
+        forced = [_post(rest, payload) for payload in payloads]
+    for payload, (s1, b1), (s2, b2) in zip(payloads, served, forced):
+        assert s1 == s2, (payload, b1[:300], b2[:300])
+        if table == "sc_one":
+            assert b1 == b2, payload
+        else:
+            assert _multiset(b1) == _multiset(b2), payload
+    return [status == 200 for status, _ in served]
+
+
+@contextlib.contextmanager
+def _templated():
+    """Counts the statements answered from a template."""
+    box = {"before": shortcircuit.fetch_metrics()["templated"]}
+    try:
+        yield box
+    finally:
+        box["templated"] = shortcircuit.fetch_metrics()["templated"] - box["before"]
 
 
 _SETTINGS = dict(
@@ -263,19 +296,21 @@ _SETTINGS = dict(
 @pytest.mark.parametrize("table", ["sc_one", "sc_multi"])
 def test_differential_rest_bodies(rest, tables, table):
     """Served and forced-Spark REST bodies agree for generated
-    statements over every proven type; the short circuit answered a
-    good share of them (the comparison is not vacuous)."""
-    with _served_counter() as box:
+    statements over every proven type, each shape run twice with new
+    literals; the short circuit and the templates answered a good share
+    of them (the comparison is not vacuous)."""
+    with _served_counter() as box, _templated() as templated:
         oks = []
 
         @given(_statements())
         @settings(max_examples=30, **_SETTINGS)
         def check(case):
-            oks.append(_differential(rest, case[0], case[1], table))
+            oks.extend(_differential(rest, case[0], case[1], table))
 
         check()
-    assert sum(oks) >= 20
-    assert box["served"] >= 8
+    assert sum(oks) >= 40
+    assert box["served"] >= 16
+    assert templated["templated"] >= 4
 
 
 @pytest.mark.slow
@@ -283,12 +318,15 @@ def test_differential_rest_bodies(rest, tables, table):
 def test_differential_rest_bodies_long(rest, tables, table):
     """The same property over more examples."""
 
-    @given(_statements())
-    @settings(max_examples=200, **_SETTINGS)
-    def check(case):
-        _differential(rest, case[0], case[1], table)
+    with _templated() as templated:
 
-    check()
+        @given(_statements())
+        @settings(max_examples=200, **_SETTINGS)
+        def check(case):
+            _differential(rest, case[0], case[1], table)
+
+        check()
+    assert templated["templated"] >= 20
 
 
 @pytest.mark.parametrize(
@@ -482,19 +520,25 @@ def _drained(pages: list) -> tuple:
     )
 
 
-def _cursor_differential(rest, stmt, page: int, table: str) -> bool:
-    sql = stmt.format(t=table)
-    served = _cursor(rest, sql, page)
+def _cursor_differential(rest, stmts, page: int, table: str) -> list:
+    """Both statements opened as cursors and drained as served (the
+    second possibly from the first's template) and with Spark forced;
+    the pages agree. Returns whether each drained with 200s."""
+    sqls = [stmt.format(t=table) for stmt in stmts]
+    served = [_cursor(rest, sql, page) for sql in sqls]
     with _forced_spark():
-        spark_side = _cursor(rest, sql, page)
-    if table == "sc_one":
-        assert served == spark_side, (sql, page)
-    else:
-        assert _drained(served) == _drained(spark_side), (sql, page)
-    ok = all(status == 200 for status, _ in served)
-    if ok:
-        assert _drained(served)[4] is False, (sql, page)
-    return ok
+        forced = [_cursor(rest, sql, page) for sql in sqls]
+    oks = []
+    for sql, got, want in zip(sqls, served, forced):
+        if table == "sc_one":
+            assert got == want, (sql, page)
+        else:
+            assert _drained(got) == _drained(want), (sql, page)
+        ok = all(status == 200 for status, _ in got)
+        if ok:
+            assert _drained(got)[4] is False, (sql, page)
+        oks.append(ok)
+    return oks
 
 
 _PAGES = st.sampled_from([1, 7, 500])
@@ -505,18 +549,20 @@ def test_differential_cursor_pages(rest, tables, table):
     """Generated statements opened as cursors and drained with a drawn
     page size: every page is byte-equal to forced Spark's on one file,
     and the drained rows agree as a multiset on three files; the short
-    circuit served a good share of them."""
-    with _served_counter() as box:
+    circuit and the templates served a good share of them, each shape
+    run twice with new literals."""
+    with _served_counter() as box, _templated() as templated:
         oks = []
 
         @given(_statements(), _PAGES)
         @settings(max_examples=30, **_SETTINGS)
         def check(case, page):
-            oks.append(_cursor_differential(rest, case[0], page, table))
+            oks.extend(_cursor_differential(rest, case[0], page, table))
 
         check()
-    assert sum(oks) >= 20
-    assert box["served"] >= 8
+    assert sum(oks) >= 40
+    assert box["served"] >= 16
+    assert templated["templated"] >= 4
 
 
 @pytest.mark.slow
@@ -524,12 +570,15 @@ def test_differential_cursor_pages(rest, tables, table):
 def test_differential_cursor_pages_long(rest, tables, table):
     """The same property over more examples."""
 
-    @given(_statements(), _PAGES)
-    @settings(max_examples=200, **_SETTINGS)
-    def check(case, page):
-        _cursor_differential(rest, case[0], page, table)
+    with _templated() as templated:
 
-    check()
+        @given(_statements(), _PAGES)
+        @settings(max_examples=200, **_SETTINGS)
+        def check(case, page):
+            _cursor_differential(rest, case[0], page, table)
+
+        check()
+    assert templated["templated"] >= 20
 
 
 @pytest.mark.parametrize(
