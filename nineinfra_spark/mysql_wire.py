@@ -41,16 +41,16 @@ protocol — the subset every driver needs to connect and query):
 - ``COM_PING`` → OK, ``COM_QUIT`` → close, anything else → ERR.
 
 Result fetch is bounded exactly like the REST frontend
-(:func:`nineinfra_spark.shortcircuit.collect_bounded`, a window of
+(:func:`nineinfra_spark.shortcircuit.fetch`, a window of
 :data:`nineinfra_spark.rest.DEFAULT_FETCH_LIMIT` rows) — a wire gateway
 FETCHES a window; unbounded extraction is a WRITE through SQL. A point
 statement over one unpinned, non-partitioned parquet table is read on
 the driver with pyarrow and runs no Spark job, and leaves a template:
 the next statement of the same text up to its literals is looked up
-(:func:`nineinfra_spark.shortcircuit.template_answer`) before
-``spark.sql`` and answered on the driver with no parser or optimizer
-run while the connection's session conf and current database, the
-table's catalog entry, temp views, cache state and files are unchanged.
+before ``spark.sql`` and answered on the driver with no parser or
+optimizer run while the connection's session conf and current
+database, the table's catalog entry, temp views, cache state and files
+are unchanged.
 A repeated statement over unchanged inputs is answered from the result
 cache the REST frontend shares (same plan, same session conf, same
 input files or pins), also with no Spark job. The rules are in
@@ -68,7 +68,7 @@ import threading
 from pyspark.sql import SparkSession
 
 from nineinfra_spark.rest import DEFAULT_FETCH_LIMIT
-from nineinfra_spark.shortcircuit import collect_bounded, template_answer
+from nineinfra_spark.shortcircuit import fetch
 
 SERVER_VERSION = "8.0.0-nineinfra-spark"
 
@@ -294,13 +294,7 @@ class _Conn:
 
     def _run_query(self, sql: str) -> None:
         try:
-            hit = template_answer(self._spark, sql, DEFAULT_FETCH_LIMIT)
-            if hit is not None:
-                (cols, rows), truncated = hit, False
-            else:
-                df = self._spark.sql(sql)
-                rows, truncated = collect_bounded(df, DEFAULT_FETCH_LIMIT, sql)
-                cols = df.columns
+            cols, rows, truncated = fetch(self._spark, sql, DEFAULT_FETCH_LIMIT)
         except Exception as exc:  # engine error → ERR packet, connection lives
             self._send_err(str(exc)[:900])
             return

@@ -17,11 +17,13 @@ Design constraints, mirrored from the gateway tier's reality:
   keeps a careless ``SELECT * FROM fact`` from materializing 100 TB on
   the driver. Unbounded extraction is a WRITE (``INSERT INTO``/``CREATE
   TABLE AS``) through the same SQL surface, exactly as on the real
-  platform. :func:`nineinfra_spark.shortcircuit.collect_bounded`
-  fetches the window: a point statement (a ``Project``/``Filter`` of
-  column-vs-literal comparisons over one unpinned, non-partitioned
-  parquet table) is read on the driver with pyarrow and runs no Spark
-  job; any other plan, any error on that path and any truncated
+  platform. :func:`nineinfra_spark.shortcircuit.fetch` fetches a
+  ``/sql`` statement's window (and
+  :func:`nineinfra_spark.shortcircuit.collect_bounded` the window of an
+  endpoint that builds its own DataFrame): a point statement (a
+  ``Project``/``Filter`` of column-vs-literal comparisons over one
+  unpinned, non-partitioned parquet table) is read on the driver with
+  pyarrow and runs no Spark job; any other plan, any error on that path and any truncated
   window are ``limit(n + 1).collect()``. A repeated one-shot statement
   whose plan is deterministic and reads only local files, pinned tables
   or inline rows is answered from a process-wide result cache while its
@@ -30,12 +32,10 @@ Design constraints, mirrored from the gateway tier's reality:
   cache.
 - A point statement the short circuit served leaves a template: the
   next one-shot or cursor statement of the same text, up to its
-  literals, is looked up with
-  :func:`nineinfra_spark.shortcircuit.template_answer` before
-  ``sess.sql`` and, while its session conf, current database, catalog
-  entry, temp views, cache state and files are unchanged, is answered
-  on the driver with no parser, optimizer or Spark job. Explain never
-  uses templates. The rules are stated in
+  literals, is looked up by ``fetch`` before ``sess.sql`` and, while
+  its session conf, current database, catalog entry, temp views, cache
+  state and files are unchanged, is answered on the driver with no
+  parser, optimizer or Spark job. Explain never uses templates. The rules are stated in
   ``nineinfra_spark/shortcircuit.py``.
 
 Endpoints:
@@ -134,12 +134,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from nineinfra_spark.shortcircuit import (
-    collect_bounded,
-    collect_served,
-    fetch_metrics,
-    template_answer,
-)
+from nineinfra_spark.shortcircuit import collect_bounded, fetch, fetch_metrics
 
 DEFAULT_FETCH_LIMIT = 1000
 #: Server-side ceiling on the per-request ``limit`` override — the cap
@@ -170,10 +165,10 @@ def _fetch_limit(req: dict) -> int:
     return limit
 
 
-def _resultset(df, limit: int, text: str | None = None) -> dict:
-    """The bounded resultset every fetch endpoint answers with; ``text``
-    is the SQL of a ``/sql`` statement, which may leave a template."""
-    rows, truncated = collect_bounded(df, limit, text)
+def _resultset(df, limit: int) -> dict:
+    """The bounded resultset of an endpoint that builds its own
+    DataFrame."""
+    rows, truncated = collect_bounded(df, limit)
     return _body(df.columns, rows, truncated)
 
 
@@ -616,21 +611,8 @@ class _Handler(BaseHTTPRequestHandler):
             return
         try:
             sess = self._session(effective, authed)
-            hit = None if explain else template_answer(
-                sess, sql, MAX_FETCH_LIMIT if cursor else limit, cursor
-            )
-            if hit is not None:
-                columns, rows = hit
-                if cursor:
-                    self._open_cursor(columns, iter(rows), authed)
-                    return
-                payload = _body(columns, rows, False)
-                if effective is not None:
-                    payload["effectiveUser"] = effective
-                self._reply(200, payload)
-                return
-            df = sess.sql(sql)
             if explain:
+                df = sess.sql(sql)
                 # plan-only mode: nothing executes, nothing fetches —
                 # the gateway answers "what would this cost" questions
                 # without touching the data (Kyuubi operation
@@ -662,22 +644,16 @@ class _Handler(BaseHTTPRequestHandler):
             if cursor:
                 # Kyuubi's ExecuteStatement→FetchResults loop: hand
                 # back a handle; rows stream page-by-page from the
-                # statements endpoint. A short-circuited result of at
-                # most MAX_FETCH_LIMIT rows is paged from the driver;
+                # statements endpoint. A result the driver reads with
+                # at most MAX_FETCH_LIMIT rows is paged from there;
                 # anything else is toLocalIterator, whose
                 # prefetchPartitions=False keeps driver residency to
                 # ONE partition at a time — the sanctioned
                 # unbounded-extraction path.
-                rows = collect_served(df, MAX_FETCH_LIMIT, sql)
-                self._open_cursor(
-                    df.columns,
-                    iter(rows)
-                    if rows is not None
-                    else df.toLocalIterator(prefetchPartitions=False),
-                    authed,
-                )
+                columns, rows, _ = fetch(sess, sql, MAX_FETCH_LIMIT, cursor=True)
+                self._open_cursor(columns, rows, authed)
                 return
-            payload = _resultset(df, limit, sql)
+            payload = _body(*fetch(sess, sql, limit))
             if effective is not None:
                 payload["effectiveUser"] = effective
             self._reply(200, payload)

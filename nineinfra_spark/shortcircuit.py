@@ -3,10 +3,11 @@ single-table parquet point statements and a result cache for repeated
 statements.
 
 The REST and MySQL frontends FETCH a window of at most ``limit`` rows
-(:func:`collect_bounded`). Spark answers it as ``df.limit(limit + 1)
-.collect()``; one row past the window reports truncation without a
-count pass. A point statement (``SELECT * FROM orders WHERE
-o_orderkey = 42``) pays a whole Spark job for that: scheduling, a task
+of a SQL statement through :func:`fetch` (and a REST endpoint that
+builds its own DataFrame through :func:`collect_bounded`). Spark
+answers it as ``df.limit(limit + 1).collect()``; one row past the
+window reports truncation without a count pass. A point statement
+(``SELECT * FROM orders WHERE o_orderkey = 42``) pays a whole Spark job for that: scheduling, a task
 per file split, and a scan of every row group. Doris 2.0 answers such
 statements through a short-circuit plan; here the driver answers them
 with ``pyarrow.dataset`` over the files Spark itself would read, and no
@@ -55,6 +56,12 @@ optimizer runs, unless it has a CTE; that check only refuses.)
   A table declared over other files, or a file rewritten since, keeps
   Spark's answer or Spark's error. Footers are cached by
   (path, size, mtime) in a bounded LRU.
+- Order: Spark's scan reads its file splits longest first (a stable
+  sort of the listing) and ``collect()`` returns rows in that order;
+  the read takes the files in the same order. A table of several files
+  one of which is longer than ``spark.sql.files.openCostInBytes`` or
+  ``maxPartitionBytes`` is refused: Spark may split that file and put
+  other files' rows between its pieces.
 - Calendar: Spark's reader rebases old dates and timestamps from the
   hybrid Julian calendar in files written by Spark 2 or marked
   ``legacyDateTime``/``legacyINT96``; the driver cannot. In such a file
@@ -77,7 +84,7 @@ own). Rows are built by the same ``StructType.fromInternal`` that
 ``collect()`` applies to Spark's internal values, so dates, timestamps
 (in the driver's local time zone) and decimals come out identical.
 
-A REST cursor wants every row, not a window: :func:`collect_served`
+A REST cursor wants every row, not a window: ``fetch(..., cursor=True)``
 runs the same check and read on ``df.limit(bound + 1)``, with the
 one-shot cap as ``bound``. When the plan qualifies and at most
 ``bound`` rows match, the cursor pages over those rows; otherwise it
@@ -85,13 +92,12 @@ streams from Spark's ``toLocalIterator`` as before.
 
 Result cache. A dashboard sends the same statement again and again;
 Doris answers a repeat from its SQL cache until the data's version
-changes. When the short circuit declines a window,
-:func:`collect_bounded` looks it up in one process-wide cache before
-``limited.collect()``: a hit returns a copy of the stored window and
-runs no Spark job; a miss runs Spark exactly as before and stores its
-answer. Short-circuited statements are neither looked up nor stored,
-and cursors never use the cache. An answer is reusable when every rule
-below holds:
+changes. When the short circuit declines a one-shot window, it is
+looked up in one process-wide cache before ``limited.collect()``: a
+hit returns a copy of the stored window and runs no Spark job; a miss
+runs Spark exactly as before and stores its answer. Short-circuited
+statements are neither looked up nor stored, and cursors never use the
+cache. An answer is reusable when every rule below holds:
 
 - Plan: the lookup reads ``withCachedData`` (the analyzed plan after
   Spark's own cache substitution) of the QueryExecution ``collect()``
@@ -135,9 +141,9 @@ the result cache never answers it, yet everything Spark does for it
 before the read (``sess.sql``, the optimizer, the plan inspection) is
 the same for every literal. Doris answers such statements from a
 prepared-statement plan cache; here a statement the short circuit served
-leaves a template, and the frontends look the text up with
-:func:`template_answer` before ``sess.sql``. A hit is answered on the
-driver with no parser, no optimizer and no Spark job. The rules:
+leaves a template, and :func:`fetch` looks the text up before
+``sess.sql``. A hit is answered on the driver with no parser, no
+optimizer and no Spark job. The rules:
 
 - Text: comments become one space and each literal in a slot becomes a
   marker of its lexical class; everything else stays verbatim,
@@ -149,8 +155,10 @@ driver with no parser, no optimizer and no Spark job. The rules:
   (Spark types it as a bigint literal), a plain single-quoted string
   (no backslash, no doubled quote), and the string of a typed ``DATE``,
   ``TIMESTAMP``, ``TIMESTAMP_LTZ`` or ``TIMESTAMP_NTZ`` literal. Any
-  other literal form stays verbatim; a hint (``/*+``), a NUL character
-  or an unclosed quote or comment leaves the text without a template.
+  other literal form stays verbatim; a hint (``/*+``), a NUL character,
+  an unclosed quote or comment, or a ``${`` (Spark substitutes
+  ``${conf}``, ``${env:X}`` and ``${system:X}`` in the text before it
+  parses, also inside a string) leaves the text without a template.
 - Key: the normalized text, the fetch mode (one-shot or cursor) and
   window, the session's SQL conf text, and its current catalog and
   database.
@@ -186,16 +194,21 @@ driver with no parser, no optimizer and no Spark job. The rules:
   that raises falls through to ``sess.sql`` and the paths above, so
   errors stay Spark's, and a truncated window still comes from Spark.
 - Bounds: at most ``_TEMPLATES_MAX`` texts, each with at most
-  ``_TEMPLATE_VARIANTS`` keys.
+  ``_TEMPLATE_VARIANTS`` keys. A template holds JVM objects of the
+  session that recorded it (its relation keeps that session), so the
+  templates of a session are dropped once the session is gone (a REST
+  ``X-Session-Id`` clone past ``MAX_SESSIONS``, a closed MySQL
+  connection's clone).
 
 Decoded columns. The read filters decoded Arrow columns kept in one
 process-wide cache bounded by ``_DECODED_MAX`` bytes and keyed like the
 footer cache by ``(path, size, mtime_ns)`` plus the column name. A miss
 decodes only the columns the statement needs and are not held, from a
-file whose open handle still has the expected size and mtime. A file
-whose uncompressed size is over the bound is read with
-``pyarrow.dataset`` as before. File order and row order within a file
-are kept.
+file whose open handle still has the expected size and mtime. A table
+whose files' uncompressed sizes sum past the bound is read with
+``pyarrow.dataset`` as before, which prunes row groups by their
+statistics, so the cache never churns through one table's columns. Both
+keep the scan's file order and the row order within a file.
 
 :func:`fetch_metrics` counts the statements each path answered:
 ``served`` (short circuit), ``templated`` (template), ``hits`` and
@@ -209,6 +222,7 @@ cache and ``decodedBytes`` is its size.
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
 import json
 import operator
 import os
@@ -341,6 +355,10 @@ class _Lru:
                 evicted += 1
             return evicted
 
+    def values(self) -> list:
+        with self._lock:
+            return list(self._items.values())
+
     def clear(self) -> None:
         with self._lock:
             self._items.clear()
@@ -414,10 +432,16 @@ class _Handles(NamedTuple):
     cache: object  # the CacheManager
     app: str  # the application id
     client: object  # the py4j gateway client
+    owner: int  # this session's number, kept by the templates it records
 
 
 _handles_by_session: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _handles_lock = threading.Lock()
+_owners = itertools.count()
+#: numbers of sessions gone since the last purge of their templates; a
+#: finalizer only appends (it may run while any lock is held)
+_gone: list[int] = []
+_forget_lock = threading.Lock()
 
 
 def _handles(sess: SparkSession) -> _Handles:
@@ -429,8 +453,11 @@ def _handles(sess: SparkSession) -> _Handles:
         h = _Handles(
             jsession, state.conf(), jsession.catalog(), state.catalog(),
             jsession.sharedState().cacheManager(), jsession.sparkContext().applicationId(),
-            jsession._gateway_client,  # noqa: SLF001
+            jsession._gateway_client, next(_owners),  # noqa: SLF001
         )
+        # a template holds JVM objects that hold the session it was
+        # recorded in: it goes when that session goes
+        weakref.finalize(sess, _gone.append, h.owner).atexit = False
         with _handles_lock:
             _handles_by_session[sess] = h
     return h
@@ -474,50 +501,54 @@ def _patterns(client, names: tuple):
 # -- fetch -------------------------------------------------------------------
 
 
-def collect_bounded(df: DataFrame, limit: int, text: str | None = None) -> tuple[list, bool]:
-    """At most ``limit`` rows of ``df`` and whether more exist. A
-    qualifying point statement is read on the driver with no Spark job
-    (and, when its SQL ``text`` is given, leaves a template), and a
-    repeated statement over unchanged inputs comes from the result
-    cache (module docstring); everything else, and every truncated
-    window, is ``df.limit(limit + 1).collect()``."""
+def fetch(sess: SparkSession, text: str, limit: int, cursor: bool = False) -> tuple:
+    """``(columns, rows, truncated)`` of SQL ``text``: the fetch of the
+    SQL frontends. One-shot: at most ``limit`` rows, from a template,
+    the short circuit (which leaves a template), the result cache or
+    ``df.limit(limit + 1).collect()`` (module docstring). Cursor: an
+    iterator over every row, read on the driver when a template or the
+    short circuit answers with at most ``limit`` rows, and from
+    ``toLocalIterator`` otherwise; ``truncated`` is then ``False``.
+    Errors are Spark's."""
+    mode = "cursor" if cursor else "bounded"
+    hit = _template_answer(sess, text, mode, limit)
+    if hit is not None:
+        columns, rows = hit
+        return columns, iter(rows) if cursor else rows, False
+    df = sess.sql(text)
     limited = df.limit(limit + 1)
-    rows = _served(limited, limit, _Recording(df, text, "bounded") if text else None)
+    rows, point = _served(limited, limit)
+    if rows is not None:
+        try:
+            _record(df, text, mode, limit, point)
+        except Exception:
+            pass  # no template; the answer stands
+    if cursor:
+        if rows is not None:
+            return df.columns, iter(rows), False
+        _count("spark")
+        return df.columns, df.toLocalIterator(prefetchPartitions=False), False
+    if rows is None:
+        rows = _cached_collect(limited, limit)
+    return df.columns, rows[:limit], len(rows) > limit
+
+
+def collect_bounded(df: DataFrame, limit: int) -> tuple[list, bool]:
+    """At most ``limit`` rows of ``df`` and whether more exist, from the
+    short circuit, the result cache or ``df.limit(limit + 1).collect()``
+    (module docstring), for a frontend that built ``df`` itself."""
+    limited = df.limit(limit + 1)
+    rows = _served(limited, limit)[0]
     if rows is None:
         rows = _cached_collect(limited, limit)
     return rows[:limit], len(rows) > limit
 
 
-def collect_served(df: DataFrame, bound: int, text: str | None = None) -> list | None:
-    """Every row of ``df`` when the short circuit answers it and at
-    most ``bound`` rows match; ``None`` otherwise, and the caller runs
-    Spark. No Spark job runs either way. With its SQL ``text``, a served
-    statement leaves a template for cursors."""
-    rows = _served(df.limit(bound + 1), bound, _Recording(df, text, "cursor") if text else None)
-    if rows is None:
-        _count("spark")
-    return rows
-
-
-def template_answer(sess: SparkSession, text: str, window: int, cursor: bool = False):
-    """``(columns, rows)`` for SQL ``text`` answered from a template
-    (module docstring), with at most ``window`` rows and none left out;
-    ``None`` when the caller must run the statement, as before."""
-    return _template_answer(sess, text, "cursor" if cursor else "bounded", window)
-
-
-class _Recording(NamedTuple):
-    """What a served statement needs to leave a template."""
-
-    df: DataFrame
-    text: str
-    mode: str
-
-
-def _served(limited: DataFrame, limit: int, recording: _Recording | None = None) -> list | None:
-    """The driver-side answer to ``limited`` (``df.limit(limit + 1)``):
-    at most ``limit`` rows, or ``None`` when the plan does not qualify,
-    more than ``limit`` rows match, or anything raises."""
+def _served(limited: DataFrame, limit: int) -> tuple[list | None, "_PointRead | None"]:
+    """The driver-side answer to ``limited`` (``df.limit(limit + 1)``)
+    and the read that gave it: at most ``limit`` rows, or ``(None,
+    None)`` when the plan does not qualify, more than ``limit`` rows
+    match, or anything raises."""
     try:
         point = _point_read(limited, limit)
         rows = None if point is None else point.rows(limit)
@@ -525,15 +556,11 @@ def _served(limited: DataFrame, limit: int, recording: _Recording | None = None)
         # any failure on the driver-side path (py4j, pyarrow, a file
         # gone) is not reported from here: Spark answers, with its own
         # result or its own error
-        return None
-    if rows is not None:
-        _count("served")
-        if recording is not None:
-            try:
-                _record(recording, limit, point)
-            except Exception:
-                pass  # no template; the answer stands
-    return rows
+        return None, None
+    if rows is None:
+        return None, None
+    _count("served")
+    return rows, point
 
 
 def _cached_collect(limited: DataFrame, limit: int) -> list:
@@ -709,6 +736,12 @@ def _plan_point(limited: DataFrame, limit: int) -> "_PointRead":
     files = [_footer(p) for p in _local_paths(jrel.location().inputFiles())]
     if not files:
         raise _Refused("no files")
+    if len(files) > 1:
+        sqlconf = _handles(limited.sparkSession).conf
+        unsplit = min(sqlconf.filesOpenCostInBytes(), sqlconf.filesMaxPartitionBytes())
+        if any(version[1] > unsplit for version, _ in files):
+            raise _Refused("a file Spark may split")
+        files.sort(key=lambda vf: -vf[0][1])  # the scan's order (module docstring)
     arrow_schema = files[0][1].arrow_schema
     for _, f in files:
         if f.spark_types != types or not f.calendar_safe:
@@ -1023,7 +1056,7 @@ class _PointRead:
 
         expr = None if self.translator is None else self.translator.expr
         names = list(dict.fromkeys(a["name"] for a in self.out))
-        if any(f.decoded_size > _DECODED_MAX for _, f in self.files):
+        if sum(f.decoded_size for _, f in self.files) > _DECODED_MAX:
             fmt = ds.ParquetFileFormat(
                 read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
             )
@@ -1182,6 +1215,8 @@ class _Shape(NamedTuple):
 
 def _shape(text: str) -> _Shape | None:
     """The normalized text of a statement (module docstring)."""
+    if "${" in text:
+        return None  # Spark substitutes ${...} variables before parsing
     toks = _lex(text)
     if toks is None:
         return None
@@ -1291,6 +1326,7 @@ class _Template(NamedTuple):
     entry: object  # the JVM CatalogTable the relation was read under
     root: str  # the table's location: a directory or one file
     listing: tuple | None  # sorted names in the directory
+    owner: int  # the recording session's number (``_handles``)
 
 
 def _template_key(h: _Handles, mode: str, window: int) -> tuple:
@@ -1302,6 +1338,8 @@ def _template_answer(sess: SparkSession, text: str, mode: str, window: int):
     """``(columns, rows)`` from a template, or ``None``. Tests replace
     this function to force Spark."""
     try:
+        if _gone:
+            _forget_gone()
         shape = _shape(text)
         variants = None if shape is None else _templates.get(shape.key)
         if not variants:
@@ -1315,6 +1353,18 @@ def _template_answer(sess: SparkSession, text: str, mode: str, window: int):
         return None
     _count("templated")
     return t.columns, rows
+
+
+def _forget_gone() -> None:
+    """Drop the templates recorded by sessions that are gone."""
+    with _forget_lock:
+        n = len(_gone)
+        gone = set(_gone[:n])
+        del _gone[:n]
+        for variants in _templates.values():
+            for key, t in variants.copy().items():
+                if t.owner in gone:
+                    variants.pop(key, None)
 
 
 def _template_rows(t: _Template, h: _Handles, values: tuple, window: int) -> list | None:
@@ -1388,13 +1438,14 @@ def _hidden(name: str) -> bool:
     return exclude and not name.startswith(("_common_metadata", "_metadata"))
 
 
-def _record(recording: _Recording, window: int, point: _PointRead) -> None:
-    """Leave a template for a statement the short circuit served, when
-    every rule of the module docstring holds."""
-    shape = _shape(recording.text)
+def _record(df: DataFrame, text: str, mode: str, window: int, point: _PointRead) -> None:
+    """Leave a template for ``df``, the statement of SQL ``text`` the
+    short circuit served, when every rule of the module docstring
+    holds."""
+    shape = _shape(text)
     if shape is None:
         return
-    h = _handles(recording.df.sparkSession)
+    h = _handles(df.sparkSession)
     # the slots and the filter's literals must pair up one to one
     literals = {} if point.translator is None else point.translator.literals
     types, zone = _SLOT_TYPES, None
@@ -1418,7 +1469,7 @@ def _record(recording: _Recording, window: int, point: _PointRead) -> None:
     if any(cls == "timestamp" for cls, _ in shape.values) and (
             h.conf.timestampType().typeName() != "timestamp"):
         return
-    qe = recording.df._jdf.queryExecution()  # noqa: SLF001
+    qe = df._jdf.queryExecution()  # noqa: SLF001
     parsed = qe.logical().collectLeaves()
     if parsed.size() != 1:
         return
@@ -1466,11 +1517,11 @@ def _record(recording: _Recording, window: int, point: _PointRead) -> None:
     elif paths != [root]:
         return
     t = _Template(
-        list(recording.df.columns), point, tuple(slots), zone, unresolved.multipartIdentifier(),
-        ident, entry, root, listing,
+        list(df.columns), point, tuple(slots), zone, unresolved.multipartIdentifier(),
+        ident, entry, root, listing, h.owner,
     )
     variants = _templates.get(shape.key)
     if variants is None or len(variants) >= _TEMPLATE_VARIANTS:
         variants = {}
         _templates.put(shape.key, variants)
-    variants[_template_key(h, recording.mode, window)] = t
+    variants[_template_key(h, mode, window)] = t

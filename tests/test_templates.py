@@ -317,3 +317,89 @@ def test_derived_literals_leave_no_template(spark, rest, table, first, second):
     assert _sql(rest, first)[0] == 200
     _not_templated(rest, second)
     assert len(shortcircuit._templates) == 0
+
+
+def test_variable_in_a_string_is_not_templated(spark, rest, tmp_path):
+    """Spark substitutes ``${...}`` in the text before it parses, also
+    inside a string, so such a text never matches a template."""
+    app = spark.conf.get("spark.app.name")
+    os.makedirs(tmp_path / "v")
+    pq.write_table(pa.table({"k": pa.array([1, 2, 3], pa.int64()),
+                             "s": ["${spark.app.name}", app, "x"]}),
+                   str(tmp_path / "v" / "part-0.parquet"))
+    spark.sql(f"CREATE TABLE tt_var USING parquet LOCATION '{tmp_path / 'v'}'")
+    try:
+        sql = "SELECT * FROM tt_var WHERE s = '{}'"
+        _recorded(spark, rest, sql.format("x"), sql.format(app))
+        body = _not_templated(rest, sql.format("${spark.app.name}"))
+        assert json.loads(body)["rows"] == [[2, app]]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS tt_var")
+
+
+def _owned(owner: int) -> int:
+    return sum(t.owner == owner for v in shortcircuit._templates.values() for t in v.values())
+
+
+def test_templates_go_with_their_session(spark, table):
+    """A template holds JVM objects that keep the session it was
+    recorded in alive; once that session is gone, its templates are
+    dropped."""
+    import gc
+
+    clone = spark.newSession()
+    owner = shortcircuit._handles(clone).owner
+    before = _templated()
+    rows = [shortcircuit.fetch(clone, _POINT.format(t="tt", k=k), 1000)[1] for k in (1, 2)]
+    assert ([r[0][:2] for r in rows], _templated() - before, _owned(owner)) == (
+        [(1, "a1"), (2, "a2")], 1, 1)
+    del clone, rows
+    # pyspark's RDD.toDF closes over the newest session; another one
+    # takes its place
+    spark.newSession()
+    gc.collect()
+    shortcircuit.fetch(spark, _POINT.format(t="tt", k=3), 1000)
+    assert _owned(owner) == 0
+
+
+# -- decoded columns ------------------------------------------------------------
+
+
+@pytest.mark.parametrize("fits", [True, False])
+def test_decoded_bound_is_per_table(spark, rest, tmp_path, monkeypatch, fits):
+    """Columns are decoded and cached only while all of a table's files
+    fit the bound together; past it, each file under the bound alone,
+    the read goes through ``pyarrow.dataset``. Both give forced Spark's
+    body, rows in the order of Spark's scan (its longest file first)."""
+    _write(str(tmp_path / "m"), n=40, tag="m", files=4)
+    files = sorted((tmp_path / "m").iterdir())
+    sizes = [pq.ParquetFile(str(f)).metadata for f in files]
+    sizes = [sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups)) for md in sizes]
+    monkeypatch.setattr(shortcircuit, "_DECODED_MAX", sum(sizes) - (0 if fits else 1))
+    assert max(sizes) < shortcircuit._DECODED_MAX
+    spark.sql(f"CREATE TABLE tt_m USING parquet LOCATION '{tmp_path / 'm'}'")
+    try:
+        sql = "SELECT k, s FROM tt_m WHERE k >= {} AND k < 35"
+        misses = shortcircuit.fetch_metrics()["decodedMisses"]
+        _recorded(spark, rest, sql.format(5), sql.format(6))
+        got = json.loads(_sql(rest, sql.format(6))[1])["rows"]
+        assert sorted(r[0] for r in got) == list(range(6, 35))
+        assert (shortcircuit.fetch_metrics()["decodedMisses"] > misses) is fits
+    finally:
+        spark.sql("DROP TABLE IF EXISTS tt_m")
+
+
+def test_files_spark_may_split_keep_spark(spark, rest, tmp_path):
+    """Spark may split a file longer than ``openCostInBytes`` and read
+    other files between its pieces: a table of several files with such a
+    file is not served."""
+    _write(str(tmp_path / "sp"), n=40, tag="sp", files=4)
+    spark.sql(f"CREATE TABLE tt_sp USING parquet LOCATION '{tmp_path / 'sp'}'")
+    spark.conf.set("spark.sql.files.openCostInBytes", "100")
+    try:
+        served = shortcircuit.fetch_metrics()["served"]
+        _not_templated(rest, "SELECT k, s FROM tt_sp WHERE k >= 6")
+        assert shortcircuit.fetch_metrics()["served"] == served
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+        spark.sql("DROP TABLE IF EXISTS tt_sp")
