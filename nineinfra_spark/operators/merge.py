@@ -12,7 +12,11 @@ that as
   side-effect-free, what the registered query verifies), and
 - :func:`merge_into_table` — the catalog operation (stage + swap, so
   readers never observe a half-written table and the source table is
-  never overwritten while being read).
+  never overwritten while being read), and
+- :func:`delete_where` / :func:`update_where` — row-level DELETE and
+  UPDATE; the table's declared partitioning picks the rewrite scope
+  (whole snapshot through the same swap, or only the partitions
+  holding matched rows). No write here changes a table's partitioning.
 
 Scale design: the merge itself is one equi-join on the key columns —
 hash-partitionable, AQE decides broadcast vs shuffle (updates batches
@@ -26,6 +30,8 @@ merges (updates touching few partitions) compose by pre-filtering
 
 from __future__ import annotations
 
+import functools
+import operator
 import random
 import re
 import time
@@ -275,8 +281,9 @@ def _versioned_merge_loop(
         version = floor + 1
         try:
             base = spark.table(table)
+            part_cols = _partition_cols(spark, table)
             merged = merge_upsert(base, updates, keys, when_matched=when_matched)
-            merged.write.mode("overwrite").saveAsTable(stage)
+            merged.write.partitionBy(*part_cols).mode("overwrite").saveAsTable(stage)
             # the exact file listing the merge was computed FROM (the
             # staged scan shares base's resolved relation, hence its
             # file index) — the provenance token the post-CAS check
@@ -356,19 +363,21 @@ def _versioned_merge_loop(
         # so its listing is trustworthy: if its file set differs from
         # what the merge actually scanned, the read was torn/stale.
         # Roll the archive back and retry with a fresh read. Part-file
-        # names are write-UUID-unique, so basename sets compare
-        # exactly across the location move.
-        base_names = {f.rsplit("/", 1)[-1] for f in base_files}
+        # names are write-UUID-unique within a partition directory (one
+        # task writes the same name into each partition it touches), so
+        # paths below the table root compare exactly across the
+        # location move.
+        depth = len(part_cols) + 1
+        base_names = {"/".join(f.split("/")[-depth:]) for f in base_files}
         try:
+            _repair_partitions(spark, f"{table}__v{version}", part_cols)
             arch_names = {
-                f.rsplit("/", 1)[-1]
+                "/".join(f.split("/")[-depth:])
                 for f in spark.table(f"{table}__v{version}").inputFiles()
             }
         except BaseException as verify_exc:
             try:
-                spark.sql(
-                    f"ALTER TABLE {table}__v{version} RENAME TO {table}"
-                )
+                _rename(spark, f"{table}__v{version}", table, part_cols)
                 state["past_cas"] = False
             except BaseException:
                 raise RuntimeError(
@@ -380,9 +389,7 @@ def _versioned_merge_loop(
             raise
         if arch_names != base_names:
             try:
-                spark.sql(
-                    f"ALTER TABLE {table}__v{version} RENAME TO {table}"
-                )
+                _rename(spark, f"{table}__v{version}", table, part_cols)
                 state["past_cas"] = False
             except BaseException as rollback_exc:
                 raise RuntimeError(
@@ -405,9 +412,11 @@ def _versioned_merge_loop(
             _backoff(_attempt)
             continue
         try:
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+            _rename(spark, stage, table, part_cols)
         except BaseException as publish_exc:
-            _finish_after_cas(spark, table, stage, version, state, publish_exc)
+            _finish_after_cas(
+                spark, table, stage, version, part_cols, state, publish_exc
+            )
         _record_hwm(spark, table, version)
         return version
     raise MergeConflictError(
@@ -421,6 +430,7 @@ def _finish_after_cas(
     table: str,
     stage: str,
     version: int,
+    part_cols: Sequence[str],
     state: dict,
     publish_exc: BaseException,
 ) -> None:
@@ -434,12 +444,12 @@ def _finish_after_cas(
     the rollback fails the stage is left in place as the one complete
     merged copy for :func:`recover_versioned_table` to promote."""
     try:
-        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+        _rename(spark, stage, table, part_cols)
         return  # roll-forward retry succeeded — merge committed
     except BaseException:
         pass
     try:
-        spark.sql(f"ALTER TABLE {table}__v{version} RENAME TO {table}")
+        _rename(spark, f"{table}__v{version}", table, part_cols)
     except BaseException:
         raise RuntimeError(
             f"merge into {table}: publish failed after the archive CAS and "
@@ -450,23 +460,25 @@ def _finish_after_cas(
     raise publish_exc
 
 
-def delete_where(spark: SparkSession, table: str, predicate: str) -> None:
+def delete_where(spark: SparkSession, table: str, predicate: str) -> int | None:
     """Row-level ``DELETE FROM table WHERE predicate`` on a plain
-    parquet-backed table — the snapshot-rewrite form (OSS Spark SQL
-    has no DELETE on parquet; Delta/Iceberg's copy-on-write DELETE is
-    exactly this plan plus a manifest). The kept rows are computed
-    declaratively and swapped in via :func:`publish_snapshot`.
-
-    At 100 TB compose with partition pruning: pre-restrict the
-    rewrite to affected partitions (filter + dynamic-partition
-    overwrite) when the predicate implies them — same file-pruning
-    contract as Delta."""
+    parquet-backed table (OSS Spark SQL has no DELETE on parquet;
+    Delta/Iceberg's copy-on-write DELETE is this plan plus a
+    manifest). The table's partitioning picks the rewrite scope
+    (:func:`_rewrite_where`); a partition the delete empties is
+    DROPPED. Returns the number of rewritten partitions, or None for
+    an unpartitioned table."""
+    part_cols = _partition_cols(spark, table)
+    base = spark.table(table)
     # SQL DELETE removes rows where the predicate is TRUE — a NULL
     # predicate KEEPS the row. A bare NOT(pred) filter would evaluate
     # NULL → filtered out, silently deleting rows on any nullable
     # column; coalesce pins the three-valued logic to SQL's.
-    kept = spark.table(table).filter(f"NOT coalesce(({predicate}), false)")
-    publish_snapshot(spark, table, kept)
+    kept = f"NOT coalesce(({predicate}), false)"
+    return _rewrite_where(
+        spark, table, base, predicate, part_cols, lambda df: df.filter(kept),
+        drops_emptied=True,
+    )
 
 
 def update_where(
@@ -474,30 +486,51 @@ def update_where(
     table: str,
     predicate: str,
     assignments: Mapping[str, str],
-) -> None:
-    """Row-level ``UPDATE table SET col = expr, ... WHERE predicate``
-    via snapshot rewrite: matched rows get the assignment expressions
-    (SQL strings, evaluated against the row), unmatched rows pass
-    through unchanged; the result swaps in atomically for readers.
-    Unknown assignment columns are an error, not a silent add."""
+) -> int | None:
+    """Row-level ``UPDATE table SET col = expr, ... WHERE predicate``:
+    matched rows get the assignment expressions (SQL strings,
+    evaluated against the row), unmatched rows pass through unchanged.
+    Rewrite scope and return value are :func:`delete_where`'s.
+    Unknown assignment columns are an error, not a silent add; so are
+    PARTITION columns — under dynamic overwrite a moved row would
+    replace its DESTINATION partition with only the moved rows (data
+    loss); a cross-partition move is a DELETE + INSERT."""
+    part_cols = _partition_cols(spark, table)
+    bad = set(assignments) & set(part_cols)
+    if bad:
+        raise ValueError(
+            f"update_where: assignments touch partition columns "
+            f"{sorted(bad)} — cross-partition moves are not an in-place "
+            f"update"
+        )
     base = spark.table(table)
     missing = set(assignments) - set(base.columns)
     if missing:
         raise ValueError(f"update targets {sorted(missing)} not in {table} columns")
     cond = F.expr(predicate)
-    updated = base.select(
-        *[
-            F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in base.columns
-        ]
+
+    def assign(df: DataFrame) -> DataFrame:
+        return df.select(
+            *[
+                F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
+                if c in assignments
+                else F.col(c)
+                for c in df.columns
+            ]
+        )
+
+    return _rewrite_where(
+        spark, table, base, predicate, part_cols, assign, drops_emptied=False
     )
-    publish_snapshot(spark, table, updated)
 
 
-def _declared_partition_cols(spark: SparkSession, table: str) -> list[str]:
-    return [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+def _partition_cols(spark: SparkSession, table: str) -> list[str]:
+    """``table``'s declared partition columns: one catalog lookup
+    (``Catalog.listColumns`` runs Spark jobs and costs ~100× more)."""
+    state = spark._jsparkSession.sessionState()  # noqa: SLF001
+    ident = state.sqlParser().parseTableIdentifier(table)
+    cols = state.catalog().getTableMetadata(ident).partitionColumnNames()
+    return [cols.apply(i) for i in range(cols.length())]
 
 
 #: Above this many affected partitions the membership filter switches
@@ -507,22 +540,84 @@ def _declared_partition_cols(spark: SparkSession, table: str) -> list[str]:
 #: collect itself is unbounded; advice r8).
 _MEMBERSHIP_LITERAL_CAP = 256
 
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _rewrite_where(spark, table, df, predicate, part_cols, rewrite, drops_emptied):
+    """Replace rows of ``table`` (read as ``df``, partitioned by
+    ``part_cols``) with ``rewrite`` of them. Unpartitioned: the whole
+    table is swapped in via :func:`publish_snapshot`; returns None.
+    Partitioned: only partitions holding rows that match ``predicate``
+    are rewritten, the others keep their files (Delta/Iceberg's
+    copy-on-write file pruning, at partition grain). One filtered scan
+    finds the DISTINCT affected partition tuples (metadata-sized);
+    their new rows go back by dynamic-partition ``INSERT OVERWRITE``
+    (each partition swaps whole at job commit). With ``drops_emptied``
+    an affected partition absent from the new rows is DROPPED, since
+    dynamic overwrite never touches it. Returns the number of affected
+    partitions (0 = no-op)."""
+    if not part_cols:
+        _publish(spark, table, rewrite(df), part_cols)
+        return None
+    pred = f"coalesce(({predicate}), false)"
+    affected_df = df.filter(pred).select(*part_cols).distinct().persist()
+    try:
+        head = affected_df.limit(_MEMBERSHIP_LITERAL_CAP + 1).collect()
+        if not head:
+            return 0
+        affected_rows = head if len(head) <= _MEMBERSHIP_LITERAL_CAP else None
+        n_affected = (
+            len(affected_rows) if affected_rows is not None else affected_df.count()
+        )
+        new_rows = rewrite(_scope_to_affected(df, affected_df, affected_rows, part_cols))
+        emptied = []
+        if drops_emptied:
+            surviving = new_rows.select(*part_cols).distinct()
+            emptied = _emptied_partitions(affected_df, affected_rows, surviving, part_cols)
+        # A mode the session had not set is unset again, so its conf
+        # text (the fetch caches' key) is left as found. (insertInto
+        # ignores the writer option of this name and replaces EVERY
+        # partition.)
+        jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        saved = spark.conf.get(_OVERWRITE_MODE) if jconf.contains(_OVERWRITE_MODE) else None
+        spark.conf.set(_OVERWRITE_MODE, "dynamic")
+        try:
+            new_rows.write.mode("overwrite").insertInto(table)
+        finally:
+            if saved is None:
+                spark.conf.unset(_OVERWRITE_MODE)
+            else:
+                spark.conf.set(_OVERWRITE_MODE, saved)
+        _drop_partitions(spark, table, emptied, part_cols)
+        return n_affected
+    finally:
+        affected_df.unpersist()
+
 
 def _partition_membership(rows, part_cols: Sequence[str]):
     """Predicate: row's partition tuple ∈ the given partition rows
     (an IN-list over partition values — metadata-sized, so the filter
     prunes the scan to exactly the affected partition directories).
     Only used below :data:`_MEMBERSHIP_LITERAL_CAP` tuples."""
-    import functools
+    return functools.reduce(
+        operator.or_,
+        [
+            functools.reduce(
+                operator.and_, [F.col(c).eqNullSafe(F.lit(r[c])) for c in part_cols]
+            )
+            for r in rows
+        ],
+    )
 
-    conds = [
-        functools.reduce(
-            lambda a, b: a & b,
-            [F.col(c).eqNullSafe(F.lit(r[c])) for c in part_cols],
-        )
-        for r in rows
-    ]
-    return functools.reduce(lambda a, b: a | b, conds)
+
+def _probe(affected_df, other, part_cols: Sequence[str]):
+    """``affected_df``'s partition columns renamed ``__p_<col>``, and
+    the null-safe equality joining them to ``other``'s."""
+    probe = affected_df.select(*[F.col(c).alias(f"__p_{c}") for c in part_cols])
+    cond = functools.reduce(
+        operator.and_, [other[c].eqNullSafe(probe[f"__p_{c}"]) for c in part_cols]
+    )
+    return probe, cond
 
 
 def _scope_to_affected(df, affected_df, affected_rows, part_cols: Sequence[str]):
@@ -534,17 +629,9 @@ def _scope_to_affected(df, affected_df, affected_rows, part_cols: Sequence[str])
     SEMI join on null-safe partition equality — membership at scan
     speed with no driver literal tree; partition-directory skipping
     then rides on dynamic partition pruning."""
-    import functools
-
     if affected_rows is not None:
         return df.filter(_partition_membership(affected_rows, part_cols))
-    probe = affected_df.select(
-        *[F.col(c).alias(f"__p_{c}") for c in part_cols]
-    )
-    cond = functools.reduce(
-        lambda a, b: a & b,
-        [df[c].eqNullSafe(probe[f"__p_{c}"]) for c in part_cols],
-    )
+    probe, cond = _probe(affected_df, df, part_cols)
     return df.join(F.broadcast(probe), cond, "left_semi")
 
 
@@ -555,8 +642,6 @@ def _emptied_partitions(affected_df, affected_rows, surviving_df, part_cols):
     collected in the join path (each needs a driver-side ALTER
     statement anyway, so the collect is proportional to mandatory
     driver work, not to the table)."""
-    import functools
-
     if affected_rows is not None:
         surviving = {
             tuple(r[c] for c in part_cols) for r in surviving_df.collect()
@@ -566,17 +651,18 @@ def _emptied_partitions(affected_df, affected_rows, surviving_df, part_cols):
             for r in affected_rows
             if tuple(r[c] for c in part_cols) not in surviving
         ]
-    probe = affected_df.select(
-        *[F.col(c).alias(f"__p_{c}") for c in part_cols]
-    )
-    cond = functools.reduce(
-        lambda a, b: a & b,
-        [probe[f"__p_{c}"].eqNullSafe(surviving_df[c]) for c in part_cols],
-    )
+    probe, cond = _probe(affected_df, surviving_df, part_cols)
     return [
         {c: r[f"__p_{c}"] for c in part_cols}
         for r in probe.join(surviving_df, cond, "left_anti").collect()
     ]
+
+
+def _sql_string(s) -> str:
+    """``s`` as a quoted SQL string literal: a backslash or quote in it
+    must not break (or inject into) the statement — an unescaped
+    ``\\b`` would parse as a backspace."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _partition_literal(v) -> str:
@@ -601,7 +687,7 @@ def _partition_literal(v) -> str:
         return f"'{s}'"
     if isinstance(v, datetime.date):
         return f"'{v.isoformat()}'"
-    return "'" + str(v).replace("'", "\\'") + "'"
+    return _sql_string(v)
 
 
 def _partition_spec(row, part_cols: Sequence[str]) -> str:
@@ -618,125 +704,6 @@ def _drop_partitions(spark: SparkSession, table: str, emptied, part_cols) -> Non
             for r in emptied[i : i + 100]
         )
         spark.sql(f"ALTER TABLE {table} DROP IF EXISTS {specs}")
-
-
-def delete_where_partitioned(spark: SparkSession, table: str, predicate: str) -> int:
-    """Partition-scoped ``DELETE FROM table WHERE predicate`` — the
-    100 TB form of :func:`delete_where`: instead of rewriting the full
-    snapshot, only the partitions that actually CONTAIN matching rows
-    are rewritten, via dynamic-partition ``INSERT OVERWRITE``; every
-    other partition's files are left untouched (same file-pruning
-    contract as Delta/Iceberg's copy-on-write DELETE, with the
-    partition grain standing in for the file grain).
-
-    Mechanics: (1) one predicate-filtered scan projects the DISTINCT
-    affected partition tuples (partition-pruned automatically when the
-    predicate constrains partition columns; the result is
-    metadata-sized). (2) The kept rows of ONLY those partitions are
-    rewritten back with ``partitionOverwriteMode=dynamic`` — readers
-    see each partition swap whole at job commit. (3) Partitions whose
-    every row matched are DROPPED explicitly (dynamic overwrite never
-    touches a partition absent from the output, so an emptied
-    partition would otherwise survive intact — the silent-resurrection
-    bug this function refuses to have).
-
-    Returns the number of affected partitions (0 = no-op)."""
-    part_cols = _declared_partition_cols(spark, table)
-    if not part_cols:
-        raise ValueError(
-            f"{table} is not partitioned — use delete_where (full "
-            f"snapshot rewrite) instead"
-        )
-    df = spark.table(table)
-    pred = f"coalesce(({predicate}), false)"
-    affected_df = df.filter(pred).select(*part_cols).distinct().persist()
-    try:
-        head = affected_df.limit(_MEMBERSHIP_LITERAL_CAP + 1).collect()
-        if not head:
-            return 0
-        affected_rows = head if len(head) <= _MEMBERSHIP_LITERAL_CAP else None
-        n_affected = (
-            len(affected_rows) if affected_rows is not None else affected_df.count()
-        )
-        kept = _scope_to_affected(df, affected_df, affected_rows, part_cols).filter(
-            f"NOT {pred}"
-        )
-        emptied = _emptied_partitions(
-            affected_df, affected_rows, kept.select(*part_cols).distinct(), part_cols
-        )
-        saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            kept.write.mode("overwrite").insertInto(table)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
-        _drop_partitions(spark, table, emptied, part_cols)
-        return n_affected
-    finally:
-        affected_df.unpersist()
-
-
-def update_where_partitioned(
-    spark: SparkSession,
-    table: str,
-    predicate: str,
-    assignments: Mapping[str, str],
-) -> int:
-    """Partition-scoped ``UPDATE`` — :func:`update_where` restricted
-    to the partitions containing matched rows (see
-    :func:`delete_where_partitioned` for the mechanics). Assignments
-    to PARTITION columns are rejected: moving a row between partitions
-    under dynamic overwrite would replace the DESTINATION partition
-    with only the moved rows (data loss) — a cross-partition move is a
-    DELETE + INSERT, not an in-place update. Returns the number of
-    rewritten partitions."""
-    part_cols = _declared_partition_cols(spark, table)
-    if not part_cols:
-        raise ValueError(
-            f"{table} is not partitioned — use update_where (full "
-            f"snapshot rewrite) instead"
-        )
-    bad = set(assignments) & set(part_cols)
-    if bad:
-        raise ValueError(
-            f"update_where_partitioned: assignments touch partition "
-            f"columns {sorted(bad)} — cross-partition moves are not an "
-            f"in-place update"
-        )
-    base = spark.table(table)
-    missing = set(assignments) - set(base.columns)
-    if missing:
-        raise ValueError(f"update targets {sorted(missing)} not in {table} columns")
-    pred = f"coalesce(({predicate}), false)"
-    affected_df = base.filter(pred).select(*part_cols).distinct().persist()
-    try:
-        head = affected_df.limit(_MEMBERSHIP_LITERAL_CAP + 1).collect()
-        if not head:
-            return 0
-        affected_rows = head if len(head) <= _MEMBERSHIP_LITERAL_CAP else None
-        n_affected = (
-            len(affected_rows) if affected_rows is not None else affected_df.count()
-        )
-        cond = F.expr(predicate)
-        updated = _scope_to_affected(
-            base, affected_df, affected_rows, part_cols
-        ).select(
-            *[
-                F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in base.columns
-            ]
-        )
-        saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            updated.write.mode("overwrite").insertInto(table)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
-        return n_affected
-    finally:
-        affected_df.unpersist()
 
 
 def publish_snapshot(
@@ -798,25 +765,56 @@ def publish_snapshot(
     sidecar-after-write pattern in ``operators/zorder.py``, which
     needs a key-dedup to close that window).
 
+    The stage is written with the live table's declared partition
+    columns, so a publish keeps the table's partitioning.
+
     This is the publish primitive the streaming snapshot/index
     maintainers share with :func:`merge_into_table`."""
+    _publish(spark, table, snapshot, _partition_cols(spark, table), properties)
+
+
+def _publish(
+    spark: SparkSession,
+    table: str,
+    snapshot: DataFrame,
+    part_cols: Sequence[str],
+    properties: dict[str, str] | None = None,
+) -> None:
+    """:func:`publish_snapshot` given the table's partition columns."""
     stage = f"{table}__merge_stage"
     spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    snapshot.write.saveAsTable(stage)
+    snapshot.write.partitionBy(*part_cols).saveAsTable(stage)
     if properties:
-
-        def esc(s) -> str:
-            # public API parameter: a quote/backslash in a key or value
-            # must not break (or inject into) the ALTER TABLE statement
-            return str(s).replace("\\", "\\\\").replace("'", "\\'")
-
-        kv = ", ".join(f"'{esc(k)}'='{esc(v)}'" for k, v in properties.items())
+        kv = ", ".join(
+            f"{_sql_string(k)}={_sql_string(v)}" for k, v in properties.items()
+        )
         spark.sql(f"ALTER TABLE {stage} SET TBLPROPERTIES ({kv})")
     old = f"{table}__merge_old"
     spark.sql(f"DROP TABLE IF EXISTS {old}")
-    spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-    spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+    _rename(spark, table, old, part_cols)
+    _rename(spark, stage, table, part_cols)
     spark.sql(f"DROP TABLE {old}")
+
+
+def _rename(spark: SparkSession, src: str, dst: str, part_cols: Sequence[str]) -> None:
+    """Rename a table partitioned by ``part_cols``; see :func:`_repair_partitions`."""
+    spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
+    _repair_partitions(spark, dst, part_cols)
+
+
+def _repair_partitions(spark: SparkSession, table: str, part_cols: Sequence[str]) -> None:
+    """After a rename, point a partitioned table's partitions at its
+    moved directory: the in-memory catalog (not the Hive metastore)
+    keeps their old locations, so the table would scan as empty and
+    dropping it would delete directories a later table took over. A
+    table renamed away meanwhile is left to that rename's repair."""
+    if not part_cols or spark.conf.get("spark.sql.catalogImplementation") != "in-memory":
+        return
+    try:
+        spark.sql(f"MSCK REPAIR TABLE {table} SYNC PARTITIONS")
+    except AnalysisException as exc:
+        if not _is_retryable_race(exc):
+            raise
 
 
 def read_table_property(
@@ -857,11 +855,11 @@ def recover_published_table(spark: SparkSession, table: str) -> str:
         spark.sql(f"DROP TABLE IF EXISTS {old}")
         return "clean"
     if spark.catalog.tableExists(old):
-        spark.sql(f"ALTER TABLE {old} RENAME TO {table}")
+        _rename(spark, old, table, _partition_cols(spark, old))
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
         return "rolled-back"
     if spark.catalog.tableExists(stage):
-        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
+        _rename(spark, stage, table, _partition_cols(spark, stage))
         return "rolled-forward"
     raise RuntimeError(
         f"recover {table}: no live, __merge_old, or __merge_stage table exists"
@@ -916,11 +914,12 @@ def recover_versioned_table(spark: SparkSession, table: str) -> str:
             spark.sql(f"DROP TABLE IF EXISTS {s}")
         return "clean"
     if len(stages) == 1:
-        spark.sql(f"ALTER TABLE {stages[0]} RENAME TO {table}")
+        _rename(spark, stages[0], table, _partition_cols(spark, stages[0]))
         return "rolled-forward"
     versions = list_versions(spark, table)
     if versions:
-        spark.sql(f"ALTER TABLE {table}__v{versions[-1]} RENAME TO {table}")
+        newest = f"{table}__v{versions[-1]}"
+        _rename(spark, newest, table, _partition_cols(spark, newest))
         for s in stages:
             spark.sql(f"DROP TABLE IF EXISTS {s}")
         return "rolled-back"

@@ -1245,15 +1245,16 @@ def catalog_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     on parquet; Delta/Iceberg's copy-on-write forms are exactly these
     plans plus a manifest). ``operators/merge.delete_where`` removes
     the '5-LOW' slice, ``update_where`` doubles '1-URGENT' prices;
-    both swap in via the rename-first publish, and the oracle derives
-    the same final state relationally — so predicate scoping (UPDATE
-    must not touch unmatched rows) and the swap's atomicity are both
-    hash-verified.
+    the table is unpartitioned, so both swap in the whole snapshot via
+    the rename-first publish, and the oracle derives the same final
+    state relationally — so predicate scoping (UPDATE must not touch
+    unmatched rows) and the swap's atomicity are both hash-verified.
+    `catalog_delete_partition_scoped` runs the same two calls on a
+    partitioned table.
 
     Scale posture: each mutation is one declarative scan→project→
-    write with the input's parallelism; the WHERE pre-restricts the
-    rewrite to affected partitions when the predicate implies them.
-    Doubling is exact IEEE; sums go through round→decimal."""
+    write with the input's parallelism. Doubling is exact IEEE; sums
+    go through round→decimal."""
     from nineinfra_spark.operators.merge import delete_where, update_where
 
     sfx = os.path.basename(sf_dir).replace(".", "_")
@@ -1326,13 +1327,14 @@ def catalog_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("catalog", "delete", "update", "partitioned", "row-level"),
 )
 def catalog_delete_partition_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-SCOPED row-level DELETE + UPDATE (`operators/merge.
-    delete_where_partitioned` / `update_where_partitioned`) — the
-    100 TB form of `catalog_delete_update`: instead of rewriting the
-    full snapshot per mutation, only the partitions containing matched
-    rows are rewritten via dynamic-partition INSERT OVERWRITE, and a
-    fully-emptied partition is DROPPED rather than silently
-    resurrected. Three mutations exercise the three shapes: a partial
+    """Partition-SCOPED row-level DELETE + UPDATE — the same
+    `operators/merge.delete_where` / `update_where` calls as
+    `catalog_delete_update`, on a table partitioned by
+    `o_orderpriority`, which makes them take the 100 TB form: instead
+    of rewriting the full snapshot per mutation, only the partitions
+    containing matched rows are rewritten via dynamic-partition INSERT
+    OVERWRITE, and a fully-emptied partition is DROPPED rather than
+    silently resurrected. Three mutations exercise the three shapes: a partial
     delete inside one partition (only `5-LOW` rewrites), a whole-
     partition delete (`2-HIGH` is dropped), and a scoped update
     (only `1-URGENT` rewrites). The oracle derives the same final
@@ -1347,10 +1349,7 @@ def catalog_delete_partition_scoped(spark: SparkSession, sf_dir: str) -> DataFra
     tables the reference registers in its metastore
     (``internal/controller/metastore.go:105-114``) are exactly such
     partitioned parquet tables."""
-    from nineinfra_spark.operators.merge import (
-        delete_where_partitioned,
-        update_where_partitioned,
-    )
+    from nineinfra_spark.operators.merge import delete_where, update_where
 
     sfx = os.path.basename(sf_dir).replace(".", "_")
     db = f"nine_wh_{sfx}"
@@ -1378,14 +1377,12 @@ def catalog_delete_partition_scoped(spark: SparkSession, sf_dir: str) -> DataFra
         partition_by=["o_orderpriority"],
     )
 
-    delete_where_partitioned(
+    delete_where(
         spark, f"{db}.orders_pp",
         "o_orderpriority = '5-LOW' AND o_orderkey % 3 = 0",
     )
-    delete_where_partitioned(
-        spark, f"{db}.orders_pp", "o_orderpriority = '2-HIGH'"
-    )
-    update_where_partitioned(
+    delete_where(spark, f"{db}.orders_pp", "o_orderpriority = '2-HIGH'")
+    update_where(
         spark, f"{db}.orders_pp",
         "o_orderpriority = '1-URGENT'",
         {"price": "price * 2"},

@@ -115,6 +115,51 @@ eng.close()
 """
 
 
+_PARTITIONED = """
+import os, sys
+from nineinfra_spark.engine import Engine, EngineConfig
+from nineinfra_spark.operators.merge import (
+    delete_where, merge_into_table, merge_into_table_versioned,
+    publish_snapshot, update_where,
+)
+
+root = sys.argv[1]
+eng = Engine(EngineConfig(
+    app_name="hive_partitioned",
+    master="local[2]",
+    warehouse_dir=os.path.join(root, "warehouse"),
+    hive_metastore=True,
+    metastore_dir=os.path.join(root, "metastore_db"),
+)).open()
+spark = eng.spark
+schema = "id long, v double, p string"
+spark.createDataFrame(
+    [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "a\\\\b")], schema
+).write.partitionBy("p").saveAsTable("kp_t")
+
+def check(table, want):
+    cols = [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+    assert cols == ["p"], (table, cols)
+    got = {{r.id: (r.v, r.p) for r in spark.table(table).collect()}}
+    assert got == want, (table, got)
+
+upd = spark.createDataFrame([(2, 20.0, "b"), (4, 4.0, "c")], schema)
+merge_into_table(spark, "kp_t", upd, ["id"])
+check("kp_t", {{1: (1.0, "a"), 2: (20.0, "b"), 3: (3.0, "a\\\\b"), 4: (4.0, "c")}})
+upd = spark.createDataFrame([(1, 10.0, "a")], schema)
+v = merge_into_table_versioned(spark, "kp_t", upd, ["id"])
+check(f"kp_t__v{{v}}", {{1: (1.0, "a"), 2: (20.0, "b"), 3: (3.0, "a\\\\b"), 4: (4.0, "c")}})
+publish_snapshot(spark, "kp_t", spark.table("kp_t").filter("id != 4"))
+check("kp_t", {{1: (10.0, "a"), 2: (20.0, "b"), 3: (3.0, "a\\\\b")}})
+assert delete_where(spark, "kp_t", "id = 3") == 1
+assert update_where(spark, "kp_t", "id = 2", {{"v": "v * 10"}}) == 1
+check("kp_t", {{1: (10.0, "a"), 2: (200.0, "b")}})
+parts = sorted(r[0] for r in spark.sql("SHOW PARTITIONS kp_t").collect())
+assert parts == ["p=a", "p=b"], parts
+print("PARTITIONED_OK")
+eng.close()
+"""
+
 def _run(script: str, root: str) -> str:
     proc = subprocess.run(
         [sys.executable, "-c", script.format(sf=SF), root],
@@ -134,3 +179,13 @@ def test_persistent_catalog_across_sessions(tmp_path):
     assert "PHASE1_OK 25" in out1
     out2 = _run(_PHASE2, root)
     assert "PHASE2_OK 25" in out2
+
+
+def test_merges_and_row_mutations_keep_partitioning_on_hive(tmp_path):
+    """merge_into_table, merge_into_table_versioned, publish_snapshot,
+    delete_where and update_where on a partitioned table in the
+    Derby-backed Hive metastore keep its partition columns and rows,
+    and a delete drops the partition it empties."""
+    root = str(tmp_path / "hive_part")
+    os.makedirs(root)
+    assert "PARTITIONED_OK" in _run(_PARTITIONED, root)

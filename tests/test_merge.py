@@ -555,7 +555,7 @@ class TestRecoverVersionedTable:
 
 
 class TestPartitionScopedMutation:
-    """delete_where_partitioned / update_where_partitioned: only the
+    """delete_where / update_where on a partitioned table: only the
     partitions containing matched rows are rewritten — the 100 TB
     delete/update form (VERDICT r7 item #6)."""
 
@@ -589,11 +589,11 @@ class TestPartitionScopedMutation:
         df.write.partitionBy("p").saveAsTable(name)
 
     def test_delete_rewrites_only_affected_partition(self, spark):
-        from nineinfra_spark.operators.merge import delete_where_partitioned
+        from nineinfra_spark.operators.merge import delete_where
 
         self._fresh(spark, "pp_d")
         before = self._table_files(spark, "pp_d")
-        n = delete_where_partitioned(spark, "pp_d", "p = 'a' AND id >= 2")
+        n = delete_where(spark, "pp_d", "p = 'a' AND id >= 2")
         assert n == 1  # only partition 'a' contained matches
         after = self._table_files(spark, "pp_d")
         # rows: the two matched are gone, everything else intact
@@ -605,10 +605,10 @@ class TestPartitionScopedMutation:
         _cleanup_prefix(spark, "pp_d")
 
     def test_delete_drops_fully_emptied_partition(self, spark):
-        from nineinfra_spark.operators.merge import delete_where_partitioned
+        from nineinfra_spark.operators.merge import delete_where
 
         self._fresh(spark, "pp_e")
-        n = delete_where_partitioned(spark, "pp_e", "p = 'b'")
+        n = delete_where(spark, "pp_e", "p = 'b'")
         assert n == 1
         assert sorted(r["id"] for r in spark.table("pp_e").collect()) == [1, 2, 3, 6]
         # the emptied partition is dropped from the catalog, not resurrected
@@ -617,7 +617,7 @@ class TestPartitionScopedMutation:
         _cleanup_prefix(spark, "pp_e")
 
     def test_delete_null_predicate_keeps_row(self, spark):
-        from nineinfra_spark.operators.merge import delete_where_partitioned
+        from nineinfra_spark.operators.merge import delete_where
 
         _cleanup_prefix(spark, "pp_n")
         spark.createDataFrame(
@@ -625,16 +625,16 @@ class TestPartitionScopedMutation:
             "id long, v double, p string",
         ).write.partitionBy("p").saveAsTable("pp_n")
         # v > 4 is NULL for id=2 — SQL DELETE keeps NULL-predicate rows
-        delete_where_partitioned(spark, "pp_n", "v > 4.0")
+        delete_where(spark, "pp_n", "v > 4.0")
         assert sorted(r["id"] for r in spark.table("pp_n").collect()) == [2]
         _cleanup_prefix(spark, "pp_n")
 
     def test_no_match_is_noop(self, spark):
-        from nineinfra_spark.operators.merge import delete_where_partitioned
+        from nineinfra_spark.operators.merge import delete_where
 
         self._fresh(spark, "pp_z")
         before = self._table_files(spark, "pp_z")
-        assert delete_where_partitioned(spark, "pp_z", "id > 999") == 0
+        assert delete_where(spark, "pp_z", "id > 999") == 0
         assert self._table_files(spark, "pp_z") == before
         _cleanup_prefix(spark, "pp_z")
 
@@ -643,14 +643,14 @@ class TestPartitionScopedMutation:
         disk; the DROP spec must use that name — str(None) renders
         'None', never matches, and the emptied partition silently
         resurrects (advice r8)."""
-        from nineinfra_spark.operators.merge import delete_where_partitioned
+        from nineinfra_spark.operators.merge import delete_where
 
         _cleanup_prefix(spark, "pp_nullp")
         spark.createDataFrame(
             [(1, 1.0, "a"), (2, 2.0, None), (3, 3.0, None)],
             "id long, v double, p string",
         ).write.partitionBy("p").saveAsTable("pp_nullp")
-        n = delete_where_partitioned(spark, "pp_nullp", "p IS NULL")
+        n = delete_where(spark, "pp_nullp", "p IS NULL")
         assert n == 1
         assert sorted(r["id"] for r in spark.table("pp_nullp").collect()) == [1]
         parts = [r[0] for r in spark.sql("SHOW PARTITIONS pp_nullp").collect()]
@@ -662,7 +662,7 @@ class TestPartitionScopedMutation:
         form (ISO), not whatever str() yields."""
         import datetime
 
-        from nineinfra_spark.operators.merge import delete_where_partitioned
+        from nineinfra_spark.operators.merge import delete_where
 
         _cleanup_prefix(spark, "pp_datep")
         spark.createDataFrame(
@@ -673,7 +673,7 @@ class TestPartitionScopedMutation:
             ],
             "id long, d date",
         ).write.partitionBy("d").saveAsTable("pp_datep")
-        n = delete_where_partitioned(spark, "pp_datep", "d = DATE'2024-01-01'")
+        n = delete_where(spark, "pp_datep", "d = DATE'2024-01-01'")
         assert n == 1
         assert sorted(r["id"] for r in spark.table("pp_datep").collect()) == [3]
         parts = [r[0] for r in spark.sql("SHOW PARTITIONS pp_datep").collect()]
@@ -695,7 +695,7 @@ class TestPartitionScopedMutation:
         ).write.partitionBy("p").saveAsTable("pp_many")
         monkeypatch.setattr(M, "_MEMBERSHIP_LITERAL_CAP", 2)
         # matches rows in all 4 partitions; empties g0 (ids 4,8,12,16)
-        n = M.delete_where_partitioned(
+        n = M.delete_where(
             spark, "pp_many", "p = 'g0' OR id >= 13"
         )
         assert n == 4
@@ -704,7 +704,7 @@ class TestPartitionScopedMutation:
         parts = [r[0] for r in spark.sql("SHOW PARTITIONS pp_many").collect()]
         assert "p=g0" not in parts
         # update path through the join membership too
-        n2 = M.update_where_partitioned(
+        n2 = M.update_where(
             spark, "pp_many", "id <= 3", {"v": "v + 100"}
         )
         assert n2 == 3  # g1, g2, g3 contain ids 1..3
@@ -714,11 +714,11 @@ class TestPartitionScopedMutation:
         _cleanup_prefix(spark, "pp_many")
 
     def test_update_rewrites_only_affected_partition(self, spark):
-        from nineinfra_spark.operators.merge import update_where_partitioned
+        from nineinfra_spark.operators.merge import update_where
 
         self._fresh(spark, "pp_u")
         before = self._table_files(spark, "pp_u")
-        n = update_where_partitioned(
+        n = update_where(
             spark, "pp_u", "p = 'b' AND id = 4", {"v": "v * 10"}
         )
         assert n == 1
@@ -731,31 +731,58 @@ class TestPartitionScopedMutation:
         _cleanup_prefix(spark, "pp_u")
 
     def test_update_rejects_partition_column_assignment(self, spark):
-        from nineinfra_spark.operators.merge import update_where_partitioned
+        from nineinfra_spark.operators.merge import update_where
 
         self._fresh(spark, "pp_x")
         with pytest.raises(ValueError, match="partition columns"):
-            update_where_partitioned(spark, "pp_x", "id = 1", {"p": "'z'"})
+            update_where(spark, "pp_x", "id = 1", {"p": "'z'"})
         _cleanup_prefix(spark, "pp_x")
 
-    def test_unpartitioned_table_rejected(self, spark):
-        from nineinfra_spark.operators.merge import (
-            delete_where_partitioned, update_where_partitioned,
-        )
+    def test_emptied_backslash_and_quote_partitions_are_dropped(self, spark):
+        """An emptied partition's DROP spec escapes backslashes as well
+        as quotes: unescaped, 'a\\b' parses as 'a' plus a backspace,
+        matches no partition, and the partition and its deleted row
+        both survive."""
+        from nineinfra_spark.operators.merge import delete_where
 
-        _cleanup_prefix(spark, "pp_flat")
-        spark.createDataFrame([(1, 1.0)], "id long, v double").write.saveAsTable(
-            "pp_flat"
-        )
-        with pytest.raises(ValueError, match="not partitioned"):
-            delete_where_partitioned(spark, "pp_flat", "id = 1")
-        with pytest.raises(ValueError, match="not partitioned"):
-            update_where_partitioned(spark, "pp_flat", "id = 1", {"v": "2.0"})
-        _cleanup_prefix(spark, "pp_flat")
+        _cleanup_prefix(spark, "pp_esc")
+        spark.createDataFrame(
+            [(1, "a\\b"), (2, "c"), (3, "it's")], "id long, p string"
+        ).write.partitionBy("p").saveAsTable("pp_esc")
+        assert delete_where(spark, "pp_esc", "id = 1") == 1
+        assert delete_where(spark, "pp_esc", "id = 3") == 1
+        assert [r["id"] for r in spark.table("pp_esc").collect()] == [2]
+        parts = [r[0] for r in spark.sql("SHOW PARTITIONS pp_esc").collect()]
+        assert parts == ["p=c"], parts
+        _cleanup_prefix(spark, "pp_esc")
+
+    def test_scoped_rewrite_leaves_conf_text_unchanged(self, spark):
+        """The dynamic overwrite mode is set for the rewrite only: a
+        session that had not set it has it unset again, so its SQL conf
+        text (the key of the result cache and the statement templates)
+        is unchanged; a session that had set it keeps its value."""
+        from nineinfra_spark.operators.merge import delete_where, update_where
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        self._fresh(spark, "pp_conf")
+        try:
+            spark.conf.unset(key)
+            before = jconf.getAllConfs().toString()
+            assert delete_where(spark, "pp_conf", "id = 1") == 1
+            assert update_where(spark, "pp_conf", "id = 4", {"v": "0.0"}) == 1
+            assert jconf.getAllConfs().toString() == before
+            spark.conf.set(key, "STATIC")
+            assert delete_where(spark, "pp_conf", "id = 2") == 1
+            assert spark.conf.get(key) == "STATIC"
+            assert sorted(r["id"] for r in spark.table("pp_conf").collect()) == [3, 4, 5, 6]
+        finally:
+            spark.conf.unset(key)
+            _cleanup_prefix(spark, "pp_conf")
 
 
 def test_partition_scoped_rewrite_scan_prunes_to_affected(spark):
-    """The 100 TB claim, plan-level: delete_where_partitioned's rewrite
+    """The 100 TB claim, plan-level: a partitioned delete_where's rewrite
     scan must PRUNE to the affected partition directories — the
     membership IN-list resolves statically, so the FileScan's file
     index holds only the affected partition's path and the partition
@@ -785,6 +812,56 @@ def test_partition_scoped_rewrite_scan_prunes_to_affected(spark):
         assert "DataFilters: [NOT coalesce((id" in scan, scan[:300]
     finally:
         _cleanup_prefix(spark, "pp_plan")
+
+
+def test_merges_and_publish_keep_the_table_partitioning(spark):
+    """merge_into_table, merge_into_table_versioned and publish_snapshot
+    write their stage with the live table's declared partition columns,
+    so the table they swap in (and the versioned archive) stays
+    partitioned, with the merged rows."""
+    from nineinfra_spark.operators.merge import (
+        merge_into_table_versioned,
+        publish_snapshot,
+        vacuum_versions,
+    )
+
+    def part_cols(t):
+        return [c.name for c in spark.catalog.listColumns(t) if c.isPartition]
+
+    def rows(t):
+        return {r["id"]: (r["v"], r["p"]) for r in spark.table(t).collect()}
+
+    schema = "id long, v double, p string"
+    _cleanup_prefix(spark, "kp_t")
+    spark.createDataFrame(
+        [(1, 1.0, "a"), (2, 2.0, "b")], schema
+    ).write.partitionBy("p").saveAsTable("kp_t")
+    try:
+        upd = spark.createDataFrame([(2, 20.0, "b"), (3, 3.0, "c")], schema)
+        merge_into_table(spark, "kp_t", upd, ["id"])
+        assert part_cols("kp_t") == ["p"]
+        assert rows("kp_t") == {1: (1.0, "a"), 2: (20.0, "b"), 3: (3.0, "c")}
+
+        upd = spark.createDataFrame([(1, 10.0, "a"), (4, 4.0, "d")], schema)
+        v = merge_into_table_versioned(spark, "kp_t", upd, ["id"])
+        assert part_cols("kp_t") == ["p"]
+        assert part_cols(f"kp_t__v{v}") == ["p"]
+        assert rows(f"kp_t__v{v}") == {1: (1.0, "a"), 2: (20.0, "b"), 3: (3.0, "c")}
+        assert rows("kp_t") == {
+            1: (10.0, "a"), 2: (20.0, "b"), 3: (3.0, "c"), 4: (4.0, "d"),
+        }
+
+        publish_snapshot(spark, "kp_t", spark.table("kp_t").filter("id != 3"))
+        assert part_cols("kp_t") == ["p"]
+        assert rows("kp_t") == {1: (10.0, "a"), 2: (20.0, "b"), 4: (4.0, "d")}
+        parts = sorted(r[0] for r in spark.sql("SHOW PARTITIONS kp_t").collect())
+        assert parts == ["p=a", "p=b", "p=d"], parts
+        # dropping the archive deletes its own files, not the live ones
+        assert vacuum_versions(spark, "kp_t", keep=0) == [v]
+        spark.sql("REFRESH TABLE kp_t")
+        assert rows("kp_t") == {1: (10.0, "a"), 2: (20.0, "b"), 4: (4.0, "d")}
+    finally:
+        _cleanup_prefix(spark, "kp_t")
 
 
 class TestVersionHighWaterMark:

@@ -407,7 +407,7 @@ PART_ROWS = st.lists(
     st.tuples(
         st.integers(0, 20),                      # id
         st.one_of(st.none(), st.integers(-5, 5)),  # v (nullable!)
-        st.sampled_from(["a", "b", "c"]),        # partition
+        st.sampled_from(["a", "b", "c", "a\\b", "it's"]),  # partition
     ),
     min_size=1, max_size=12,
 )
@@ -424,15 +424,13 @@ PRED = st.sampled_from([
 @SETTINGS
 @given(rows=PART_ROWS, pred=PRED)
 @pytest.mark.slow
-def test_delete_where_partitioned_equiv_full_rewrite(spark, rows, pred):
-    """delete_where_partitioned must leave EXACTLY the rows the
-    full-snapshot delete_where leaves — partition scoping is a cost
+def test_delete_where_on_partitioned_table_equiv_full_rewrite(spark, rows, pred):
+    """delete_where on a partitioned table (partition-scoped rewrite)
+    must leave EXACTLY the rows it leaves on an unpartitioned copy
+    (full-snapshot rewrite) — partition scoping is a cost
     optimization, never a semantics change (including SQL NULL
     handling: a NULL predicate keeps the row)."""
-    from nineinfra_spark.operators.merge import (
-        delete_where,
-        delete_where_partitioned,
-    )
+    from nineinfra_spark.operators.merge import delete_where
 
     for t in ("prop_dp", "prop_df"):
         _drop_with_location(spark, t)
@@ -440,7 +438,7 @@ def test_delete_where_partitioned_equiv_full_rewrite(spark, rows, pred):
     df.write.partitionBy("p").saveAsTable("prop_dp")
     df.write.saveAsTable("prop_df")
 
-    delete_where_partitioned(spark, "prop_dp", pred)
+    delete_where(spark, "prop_dp", pred)
     delete_where(spark, "prop_df", pred)
 
     got = _none_safe_bag(spark.table("prop_dp"), ["id", "v", "p"])
@@ -453,11 +451,8 @@ def test_delete_where_partitioned_equiv_full_rewrite(spark, rows, pred):
 @SETTINGS
 @given(rows=PART_ROWS, pred=PRED)
 @pytest.mark.slow
-def test_update_where_partitioned_equiv_full_rewrite(spark, rows, pred):
-    from nineinfra_spark.operators.merge import (
-        update_where,
-        update_where_partitioned,
-    )
+def test_update_where_on_partitioned_table_equiv_full_rewrite(spark, rows, pred):
+    from nineinfra_spark.operators.merge import update_where
 
     for t in ("prop_up", "prop_uf"):
         _drop_with_location(spark, t)
@@ -466,7 +461,7 @@ def test_update_where_partitioned_equiv_full_rewrite(spark, rows, pred):
     df.write.saveAsTable("prop_uf")
 
     assignments = {"v": "coalesce(v, 0) * 10 + 1"}
-    update_where_partitioned(spark, "prop_up", pred, assignments)
+    update_where(spark, "prop_up", pred, assignments)
     update_where(spark, "prop_uf", pred, assignments)
 
     got = _none_safe_bag(spark.table("prop_up"), ["id", "v", "p"])
