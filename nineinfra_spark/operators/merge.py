@@ -42,6 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from nineinfra_spark.sources.writers import (
+    dynamic_partition_overwrite,
+    partition_columns,
+)
+
 
 _WHEN_MATCHED = ("update", "ignore", "delete")
 
@@ -281,7 +286,7 @@ def _versioned_merge_loop(
         version = floor + 1
         try:
             base = spark.table(table)
-            part_cols = _partition_cols(spark, table)
+            part_cols = partition_columns(spark, table)
             merged = merge_upsert(base, updates, keys, when_matched=when_matched)
             merged.write.partitionBy(*part_cols).mode("overwrite").saveAsTable(stage)
             # the exact file listing the merge was computed FROM (the
@@ -468,7 +473,7 @@ def delete_where(spark: SparkSession, table: str, predicate: str) -> int | None:
     (:func:`_rewrite_where`); a partition the delete empties is
     DROPPED. Returns the number of rewritten partitions, or None for
     an unpartitioned table."""
-    part_cols = _partition_cols(spark, table)
+    part_cols = partition_columns(spark, table)
     base = spark.table(table)
     # SQL DELETE removes rows where the predicate is TRUE — a NULL
     # predicate KEEPS the row. A bare NOT(pred) filter would evaluate
@@ -495,7 +500,7 @@ def update_where(
     PARTITION columns — under dynamic overwrite a moved row would
     replace its DESTINATION partition with only the moved rows (data
     loss); a cross-partition move is a DELETE + INSERT."""
-    part_cols = _partition_cols(spark, table)
+    part_cols = partition_columns(spark, table)
     bad = set(assignments) & set(part_cols)
     if bad:
         raise ValueError(
@@ -524,23 +529,12 @@ def update_where(
     )
 
 
-def _partition_cols(spark: SparkSession, table: str) -> list[str]:
-    """``table``'s declared partition columns: one catalog lookup
-    (``Catalog.listColumns`` runs Spark jobs and costs ~100× more)."""
-    state = spark._jsparkSession.sessionState()  # noqa: SLF001
-    ident = state.sqlParser().parseTableIdentifier(table)
-    cols = state.catalog().getTableMetadata(ident).partitionColumnNames()
-    return [cols.apply(i) for i in range(cols.length())]
-
-
 #: Above this many affected partitions the membership filter switches
 #: from a collected literal IN-list (statically prunes the file index)
 #: to a broadcast LEFT SEMI join (no driver-side literal tree — the
 #: analyzer/codegen would choke on an unbounded OR-of-ANDs, and the
 #: collect itself is unbounded; advice r8).
 _MEMBERSHIP_LITERAL_CAP = 256
-
-_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _rewrite_where(spark, table, df, predicate, part_cols, rewrite, drops_emptied):
@@ -574,20 +568,8 @@ def _rewrite_where(spark, table, df, predicate, part_cols, rewrite, drops_emptie
         if drops_emptied:
             surviving = new_rows.select(*part_cols).distinct()
             emptied = _emptied_partitions(affected_df, affected_rows, surviving, part_cols)
-        # A mode the session had not set is unset again, so its conf
-        # text (the fetch caches' key) is left as found. (insertInto
-        # ignores the writer option of this name and replaces EVERY
-        # partition.)
-        jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
-        saved = spark.conf.get(_OVERWRITE_MODE) if jconf.contains(_OVERWRITE_MODE) else None
-        spark.conf.set(_OVERWRITE_MODE, "dynamic")
-        try:
+        with dynamic_partition_overwrite(spark):
             new_rows.write.mode("overwrite").insertInto(table)
-        finally:
-            if saved is None:
-                spark.conf.unset(_OVERWRITE_MODE)
-            else:
-                spark.conf.set(_OVERWRITE_MODE, saved)
         _drop_partitions(spark, table, emptied, part_cols)
         return n_affected
     finally:
@@ -770,7 +752,7 @@ def publish_snapshot(
 
     This is the publish primitive the streaming snapshot/index
     maintainers share with :func:`merge_into_table`."""
-    _publish(spark, table, snapshot, _partition_cols(spark, table), properties)
+    _publish(spark, table, snapshot, partition_columns(spark, table), properties)
 
 
 def _publish(
@@ -855,11 +837,11 @@ def recover_published_table(spark: SparkSession, table: str) -> str:
         spark.sql(f"DROP TABLE IF EXISTS {old}")
         return "clean"
     if spark.catalog.tableExists(old):
-        _rename(spark, old, table, _partition_cols(spark, old))
+        _rename(spark, old, table, partition_columns(spark, old))
         spark.sql(f"DROP TABLE IF EXISTS {stage}")
         return "rolled-back"
     if spark.catalog.tableExists(stage):
-        _rename(spark, stage, table, _partition_cols(spark, stage))
+        _rename(spark, stage, table, partition_columns(spark, stage))
         return "rolled-forward"
     raise RuntimeError(
         f"recover {table}: no live, __merge_old, or __merge_stage table exists"
@@ -914,12 +896,12 @@ def recover_versioned_table(spark: SparkSession, table: str) -> str:
             spark.sql(f"DROP TABLE IF EXISTS {s}")
         return "clean"
     if len(stages) == 1:
-        _rename(spark, stages[0], table, _partition_cols(spark, stages[0]))
+        _rename(spark, stages[0], table, partition_columns(spark, stages[0]))
         return "rolled-forward"
     versions = list_versions(spark, table)
     if versions:
         newest = f"{table}__v{versions[-1]}"
-        _rename(spark, newest, table, _partition_cols(spark, newest))
+        _rename(spark, newest, table, partition_columns(spark, newest))
         for s in stages:
             spark.sql(f"DROP TABLE IF EXISTS {s}")
         return "rolled-back"

@@ -2,16 +2,62 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nineinfra_spark.sources.readers import read_table
+
+#: root of the warehouse databases the catalog and streaming queries
+#: build (≙ the reference's ``/nineinfra/datahouse`` folder)
+WAREHOUSE = "/tmp/nineinfra_spark_warehouse"
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table (column pruning / predicate pushdown
     apply; nanos-timestamp handling lives in sources.readers)."""
     return read_table(spark, sf_dir, name)
+
+
+def fresh_tables(spark: SparkSession, sf_dir: str, *names: str) -> str:
+    """Create (if missing) ``sf_dir``'s warehouse database
+    ``nine_wh_<sf>`` at ``{WAREHOUSE}/<db>`` and clear it for the
+    tables ``names``: each name and every ``<name>__*`` table the
+    operators derive from it (merge and publish stages, displaced and
+    archived snapshots) is dropped and its directory removed.
+    Other tables are untouched. Returns the database name. Costs one
+    ``SHOW TABLES`` and one listing of the database directory.
+
+    Orphaned locations: the in-memory session catalog (a vanilla
+    session's) forgets its tables when the process ends, but their
+    managed directories stay on disk, and the next CREATE there fails
+    with LOCATION_ALREADY_EXISTS. So on that catalog every matching
+    directory is removed. A Hive catalog that owned a table already
+    removed its directory on DROP (asserted in
+    tests/test_catalog_hive.py); there only directories that no
+    catalog entry owned are removed."""
+    db = "nine_wh_" + os.path.basename(sf_dir).replace(".", "_")
+    root = f"{WAREHOUSE}/{db}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{root}'")
+
+    def ours(name: str) -> bool:
+        return any(name == n or name.startswith(f"{n}__") for n in names)
+
+    owned = {
+        r["tableName"]
+        for r in spark.sql(f"SHOW TABLES IN {db}").collect()
+        if not r["isTemporary"] and ours(r["tableName"])
+    }
+    for name in owned:
+        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
+    is_hive = spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
+    if os.path.isdir(root):
+        for entry in os.listdir(root):
+            if ours(entry) and (not is_hive or entry not in owned):
+                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+    return db
 
 
 def dec(col: str | Column, precision: int = 18, scale: int = 2) -> Column:

@@ -21,12 +21,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nineinfra_spark.plans._util import t
+from nineinfra_spark.plans._util import WAREHOUSE  # noqa: F401  (re-exported)
+from nineinfra_spark.plans._util import fresh_tables, t
 from nineinfra_spark.plans.registry import query
 from nineinfra_spark.sources import readers, writers
 
 IO_ROOT = "/tmp/nineinfra_spark_io"
-WAREHOUSE = "/tmp/nineinfra_spark_warehouse"
 
 
 def _out(*parts: str) -> str:
@@ -243,40 +243,18 @@ def catalog_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``/nineinfra/datahouse`` root), saveAsTable, CTAS from SQL over
     the registered table, ALTER TABLE ADD COLUMNS (schema evolution on
     a live table), INSERT OVERWRITE (full recompute into the evolved
-    schema), read back via the catalog, DROP handled by overwrite
-    semantics on re-run. The reference's metastore role implies the
-    full DDL verb set (``internal/controller/metastore.go:181-219``);
-    the two-session persistence of ALTER/OVERWRITE is asserted in
+    schema), read back via the catalog. The reference's metastore role
+    implies the full DDL verb set
+    (``internal/controller/metastore.go:181-219``); the two-session
+    persistence of ALTER/OVERWRITE is asserted in
     tests/test_catalog_hive.py.
 
-    Runs on any session: with the Engine's hive/derby profile
+    Runs on any session, including the Engine's hive/derby profile
     (``EngineConfig.hive_metastore`` ≙ the platform's persistent Hive
-    Metastore, ``metastore.go:105-114``) DROP TABLE alone removes the
-    managed location — real lifecycle semantics, verified with a
-    second-session read-back in tests/test_catalog_hive.py. On a
-    vanilla in-memory-catalog session (the driver's), the catalog
-    forgets tables whose managed dirs persist on disk, so orphaned
-    locations are cleared explicitly.
+    Metastore, ``metastore.go:105-114``), where DROP TABLE removes the
+    managed location (see :func:`fresh_tables`).
     """
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("customer_t", "segment_summary"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            # Orphaned location: either the in-memory catalog (which
-            # never removes managed dirs) or a DIFFERENT catalog
-            # instance owned this dir. A hive catalog that owned the
-            # table has already removed it via DROP — that semantic is
-            # asserted in tests/test_catalog_hive.py.
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "customer_t", "segment_summary")
     customer = t(spark, sf_dir, "customer")
     writers.save_as_table(customer, f"{db}.customer_t", mode="overwrite")
     # CTAS with the count only; the balance column arrives via ALTER.
@@ -340,20 +318,8 @@ def catalog_insert_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     the other partitions and fail the differential, so the dynamic
     semantic itself is what's verified. At 100 TB the overwrite
     rewrites one partition's files; the others are never read."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
+    db = fresh_tables(spark, sf_dir, "orders_dynpart")
     tbl = f"{db}.orders_dynpart"
-    owned = spark.catalog.tableExists(tbl)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = f"{WAREHOUSE}/{db}/orders_dynpart"
-    if os.path.exists(loc) and (not is_hive or not owned):
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)  # orphaned location
     t(spark, sf_dir, "orders").createOrReplaceTempView("orders_src_dyn")
     spark.sql(
         f"""
@@ -367,9 +333,7 @@ def catalog_insert_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
         SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders_src_dyn
         """
     )
-    saved_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with writers.dynamic_partition_overwrite(spark):
         spark.sql(
             f"""
             INSERT OVERWRITE TABLE {tbl}
@@ -377,8 +341,6 @@ def catalog_insert_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
             WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 200000
             """
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved_mode)
     return (
         spark.table(tbl)
         .groupBy("o_orderpriority")
@@ -411,20 +373,8 @@ def catalog_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-overwrite: untouched partitions stay untouched, content is
     byte-identical — which is what the oracle checks (file-count
     reduction is asserted in tests/test_sources.py)."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
+    db = fresh_tables(spark, sf_dir, "orders_smallfiles")
     tbl = f"{db}.orders_smallfiles"
-    owned = spark.catalog.tableExists(tbl)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = f"{WAREHOUSE}/{db}/orders_smallfiles"
-    if os.path.exists(loc) and (not is_hive or not owned):
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)  # orphaned location
     spark.sql(
         f"""
         CREATE TABLE {tbl} (o_orderkey BIGINT, o_totalprice DOUBLE)
@@ -466,20 +416,7 @@ def catalog_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom that removes the dominant shuffle from repeated fact⋈fact
     joins at 100 TB — the bucketing survives in the metastore, so
     every later session gets the exchange-free plan for free."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl, src in (("orders_bkt", "orders"), ("customer_bkt", "customer")):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)  # orphaned location
+    db = fresh_tables(spark, sf_dir, "orders_bkt", "customer_bkt")
     writers.save_as_bucketed_table(
         t(spark, sf_dir, "orders"), f"{db}.orders_bkt", ["o_custkey"], 8,
         mode="overwrite",
@@ -515,20 +452,8 @@ def catalog_partsupp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — reads it exchange-free."""
     from nineinfra_spark.plans.tpch import _partsupp
 
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
+    db = fresh_tables(spark, sf_dir, "partsupp_bkt")
     tbl = f"{db}.partsupp_bkt"
-    owned = spark.catalog.tableExists(tbl)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = f"{WAREHOUSE}/{db}/partsupp_bkt"
-    if os.path.exists(loc) and (not is_hive or not owned):
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)  # orphaned location
     writers.save_as_bucketed_table(
         _partsupp(spark, sf_dir), tbl, ["ps_partkey"], 8, mode="overwrite"
     )
@@ -606,20 +531,7 @@ def catalog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the swap is a metastore rename — no reader ever sees a
     partial table, and nothing touches the driver. o_totalprice * 2
     is exact IEEE doubling — bit-stable on both engines."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("orders_m", "orders_m__merge_stage"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "orders_m")
     orders = t(spark, sf_dir, "orders")
     hx = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     base = orders.filter(hx.isin(*"01234567"))
@@ -673,20 +585,7 @@ def catalog_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     full recompute. At 100 TB this is the only affordable shape: cost
     scales with the arrived partitions, not table history; the
     refresh agg map-side-combines within each pruned partition."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("sales_fact", "sales_rollup"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "sales_fact", "sales_rollup")
 
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -719,15 +618,11 @@ def catalog_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).insertInto(f"{db}.sales_fact")
     affected = [r["m"] for r in arrivals.select("m").distinct().collect()]
 
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with writers.dynamic_partition_overwrite(spark):
         pruned = spark.table(f"{db}.sales_fact").filter(F.col("m").isin(affected))
         rollup_of(pruned).write.mode("overwrite").insertInto(
             f"{db}.sales_rollup", overwrite=True
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
 
     return spark.table(f"{db}.sales_rollup").select(
         "m", "o_orderstatus", "n_orders", "total_price"
@@ -781,20 +676,8 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch per column; DESCRIBE is a metastore lookup. The stats
     power the CBO at 100 TB — this query makes the repo's claim to
     that machinery testable."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
+    db = fresh_tables(spark, sf_dir, "customer_stats")
     tbl = f"{db}.customer_stats"
-    owned = spark.catalog.tableExists(tbl)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = f"{WAREHOUSE}/{db}/customer_stats"
-    if os.path.exists(loc) and (not is_hive or not owned):
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
     customer = t(spark, sf_dir, "customer")
     writers.save_as_table(customer, tbl)
     spark.sql(
@@ -887,30 +770,7 @@ def catalog_merge_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-keyed join, metastore rename swap); archiving is a RENAME —
     zero data movement — and old-version reads are plain scans, no
     delta-chain replay. Retention cost is a table drop."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in (
-        "orders_tt",
-        "orders_tt__v0",
-        "orders_tt__v1",
-        "orders_tt__merge_stage",
-    ):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
-    # sweep any uniquely-named stage tables a crashed versioned merge
-    # left behind (catalog-sized listing; normally empty)
-    for r in spark.sql(f"SHOW TABLES IN {db}").collect():
-        if r["tableName"].startswith(("orders_tt__stage_", "orders_tt__merge_old")):
-            spark.sql(f"DROP TABLE IF EXISTS {db}.{r['tableName']}")
+    db = fresh_tables(spark, sf_dir, "orders_tt")
     orders = t(spark, sf_dir, "orders")
     hx = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     base = orders.filter(hx.isin(*"01234567")).select(
@@ -975,21 +835,8 @@ def catalog_view_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to the scan.
 
     Scale: a metadata feature — plans exactly as the inlined query."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
+    db = fresh_tables(spark, sf_dir, "orders_for_view")
     spark.sql(f"DROP VIEW IF EXISTS {db}.big_orders_v")
-    for tbl in ("orders_for_view",):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
     orders = t(spark, sf_dir, "orders")
     writers.save_as_table(orders, f"{db}.orders_for_view", mode="overwrite")
     # first definition, then replaced — the REPLACE must win
@@ -1046,20 +893,7 @@ def catalog_rollup_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the routed read touches |months×statuses| rows —
     the fact table's size is irrelevant to the query, which is the
     entire point of a serving rollup."""
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("sales_rollup_rt",):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "sales_rollup_rt")
 
     orders = t(spark, sf_dir, "orders")
     rollup = (
@@ -1257,20 +1091,7 @@ def catalog_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     go through round→decimal."""
     from nineinfra_spark.operators.merge import delete_where, update_where
 
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("orders_du", "orders_du__merge_stage", "orders_du__merge_old"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "orders_du")
     orders = t(spark, sf_dir, "orders")
     hx = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     base = orders.filter(hx.isin(*"01234567")).select(
@@ -1351,20 +1172,7 @@ def catalog_delete_partition_scoped(spark: SparkSession, sf_dir: str) -> DataFra
     partitioned parquet tables."""
     from nineinfra_spark.operators.merge import delete_where, update_where
 
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("orders_pp",):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "orders_pp")
     orders = t(spark, sf_dir, "orders")
     hx = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     base = orders.filter(hx.isin(*"01234567")).select(
@@ -2211,20 +2019,7 @@ def catalog_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/diff.py)."""
     from nineinfra_spark.operators.diff import snapshot_diff_versions
 
-    sfx = os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("customer_sd", "customer_sd__v0"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+    db = fresh_tables(spark, sf_dir, "customer_sd")
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )

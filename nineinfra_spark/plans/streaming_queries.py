@@ -20,7 +20,7 @@ from nineinfra_spark.operators.merge import (
     publish_snapshot,
     read_table_property,
 )
-from nineinfra_spark.plans._util import t
+from nineinfra_spark.plans._util import fresh_tables, t
 from nineinfra_spark.plans.ext_text import TOKS_DUCK, TOKS_SPARK
 from nineinfra_spark.plans.registry import query
 from nineinfra_spark.streaming.ops import (
@@ -329,25 +329,8 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     a half-applied batch; nothing touches the driver. This is the
     reference's intended stream→warehouse wiring
     (``api/v1alpha1/ninecluster_types.go:40-45``) realized natively."""
-    import os as _os
-
-    from nineinfra_spark.plans.sources_sinks import WAREHOUSE
-
-    sfx = _os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
+    db = fresh_tables(spark, sf_dir, "events_snapshot")
     snap = f"{db}.events_snapshot"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("events_snapshot", "events_snapshot__merge_stage"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if _os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
 
     cols = ["user_id", "ts", "event_id", "event_type", "value"]
     empty = spark.createDataFrame(
@@ -535,26 +518,10 @@ def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart-replay safety comes from the ``nine.last_batch_id``
     marker each publish commits atomically with the data (see
     :func:`apply_dedup_index_batch`; replay test in the same suite)."""
-    import os as _os
-
-    from nineinfra_spark.plans.sources_sinks import WAREHOUSE
     from nineinfra_spark.streaming.ops import read_table_stream
 
-    sfx = _os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
+    db = fresh_tables(spark, sf_dir, "dedup_index")
     idx = f"{db}.dedup_index"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("dedup_index", "dedup_index__merge_stage"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if _os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
 
     empty = spark.createDataFrame(
         [], "content_hash string, canonical_doc_id long, n_copies long"
@@ -607,26 +574,10 @@ def stream_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker each publish commits atomically with the data (see
     :func:`apply_rollup_batch`; replay test in
     tests/test_stream_rollup.py)."""
-    import os as _os
-
-    from nineinfra_spark.plans.sources_sinks import WAREHOUSE
     from nineinfra_spark.streaming.ops import read_table_stream
 
-    sfx = _os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
+    db = fresh_tables(spark, sf_dir, "stream_rollup")
     tbl = f"{db}.stream_rollup"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for name in ("stream_rollup", "stream_rollup__merge_stage"):
-        owned = spark.catalog.tableExists(f"{db}.{name}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        loc = f"{WAREHOUSE}/{db}/{name}"
-        if _os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
 
     empty = spark.createDataFrame(
         [], "m string, o_orderstatus string, n_orders long, total_price decimal(18,2)"
@@ -845,26 +796,10 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: per batch, one map-side bit_or over the DELTA
     (≤ ⌈|ids|/63⌉ words out), one word-keyed OR-join into the index;
     the final readout is dimension-sized."""
-    import os as _os
-
-    from nineinfra_spark.plans.sources_sinks import WAREHOUSE
     from nineinfra_spark.streaming.ops import read_table_stream
 
-    sfx = _os.path.basename(sf_dir).replace(".", "_")
-    db = f"nine_wh_{sfx}"
+    db = fresh_tables(spark, sf_dir, "user_bitmaps")
     idx = f"{db}.user_bitmaps"
-    is_hive = (
-        spark.conf.get("spark.sql.catalogImplementation", "in-memory") == "hive"
-    )
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{WAREHOUSE}/{db}'")
-    for tbl in ("user_bitmaps", "user_bitmaps__merge_stage"):
-        owned = spark.catalog.tableExists(f"{db}.{tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{tbl}")
-        loc = f"{WAREHOUSE}/{db}/{tbl}"
-        if _os.path.exists(loc) and (not is_hive or not owned):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
 
     empty = spark.createDataFrame([], "week long, w_idx long, bits long")
     empty.write.saveAsTable(idx)

@@ -20,9 +20,12 @@ Scale notes baked into the defaults:
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _writer(df: DataFrame, mode: str, partition_by: Sequence[str] | None):
@@ -103,6 +106,35 @@ def save_as_table(
     _writer(df, mode, partition_by).saveAsTable(name)
 
 
+def partition_columns(spark: SparkSession, table: str) -> list[str]:
+    """``table``'s declared partition columns: one catalog lookup
+    (``Catalog.listColumns`` runs Spark jobs and costs ~100× more)."""
+    state = spark._jsparkSession.sessionState()  # noqa: SLF001
+    ident = state.sqlParser().parseTableIdentifier(table)
+    cols = state.catalog().getTableMetadata(ident).partitionColumnNames()
+    return [cols.apply(i) for i in range(cols.length())]
+
+
+@contextlib.contextmanager
+def dynamic_partition_overwrite(spark: SparkSession):
+    """Run the block with ``partitionOverwriteMode=dynamic``, so an
+    overwriting ``insertInto`` replaces only the partitions present in
+    its data (``insertInto`` ignores the writer option of this name and
+    would replace EVERY partition). On exit a mode the session had not
+    set is unset again, so its SQL conf text (the fetch caches' key) is
+    left as found."""
+    jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    saved = spark.conf.get(_OVERWRITE_MODE) if jconf.contains(_OVERWRITE_MODE) else None
+    spark.conf.set(_OVERWRITE_MODE, "dynamic")
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(_OVERWRITE_MODE)
+        else:
+            spark.conf.set(_OVERWRITE_MODE, saved)
+
+
 def compact_partitioned_table(
     spark,
     table: str,
@@ -148,7 +180,7 @@ def compact_partitioned_table(
 
     from pyspark.sql import functions as F
 
-    declared = [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+    declared = partition_columns(spark, table)
     if sorted(declared) != sorted(partition_cols):
         raise ValueError(
             f"compact_partitioned_table({table!r}): partition_cols "
@@ -157,9 +189,7 @@ def compact_partitioned_table(
             f"overwrite on exactly the declared partitioning"
         )
     df = spark.table(table)
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with dynamic_partition_overwrite(spark):
         if target_file_bytes is None:
             n = max(df.select(*partition_cols).distinct().count(), 1)
             out = df.repartition(n, *[df[c] for c in partition_cols])
@@ -263,8 +293,6 @@ def compact_partitioned_table(
                 .select(*df.columns)  # insertInto matches by position
             )
         out.write.mode("overwrite").insertInto(table, overwrite=True)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
 
 
 def save_as_bucketed_table(

@@ -9,7 +9,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession

@@ -4,7 +4,8 @@ run oracle_sql() in DuckDB with pre-registered views, compare
 row-count + schema + order-insensitive value hash."""
 import hashlib, os, sys, time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession

@@ -223,6 +223,59 @@ def test_compact_multi_partition_table(spark, tmp_path):
     spark.sql(f"DROP DATABASE {db}")
 
 
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _compact_fresh_table(spark, tmp_path):
+    from nineinfra_spark.sources.writers import compact_partitioned_table
+
+    db = "compact_conf_db"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{tmp_path}/{db}'")
+    tbl = f"{db}.t"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.range(20).selectExpr(
+        "id AS k", "CASE WHEN id % 2 = 0 THEN 'A' ELSE 'B' END AS pr"
+    ).repartition(4).write.partitionBy("pr").saveAsTable(tbl)
+    compact_partitioned_table(spark, tbl, ["pr"])
+    assert spark.table(tbl).count() == 20
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+def _insert_overwrite_dynamic(spark, tmp_path):
+    from nineinfra_spark.plans.sources_sinks import catalog_insert_overwrite_dynamic
+
+    catalog_insert_overwrite_dynamic(spark, SF)
+
+
+def _rollup_incremental(spark, tmp_path):
+    from nineinfra_spark.plans.sources_sinks import catalog_rollup_incremental
+
+    catalog_rollup_incremental(spark, SF)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_compact_fresh_table, _insert_overwrite_dynamic, _rollup_incremental],
+    ids=["compaction", "insert_overwrite_dynamic", "rollup_incremental"],
+)
+def test_dynamic_overwrite_leaves_conf_text_unchanged(spark, tmp_path, run):
+    """The dynamic partition overwrite mode is set only around the
+    write: a session that had not set it ends with it unset, so its SQL
+    conf text (the key of the result cache and the statement templates)
+    is unchanged, and a value the session had set survives."""
+    jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+    try:
+        spark.conf.unset(_OVERWRITE_MODE)
+        before = jconf.getAllConfs().toString()
+        run(spark, tmp_path)
+        assert jconf.getAllConfs().toString() == before
+        spark.conf.set(_OVERWRITE_MODE, "STATIC")
+        run(spark, tmp_path)
+        assert spark.conf.get(_OVERWRITE_MODE) == "STATIC"
+    finally:
+        spark.conf.unset(_OVERWRITE_MODE)
+
+
 class TestKafkaPlumbing:
     """Kafka source option plumbing (no broker/connector in env — the
     same signature-level treatment as the JDBC reader; the reference's
