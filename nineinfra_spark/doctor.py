@@ -31,10 +31,20 @@ them against 100 TB:
   — at 100 TB the scan reads every partition even though the query
   only wants a few; the filter was blocked from reaching the scan
   (a limit between them, a Python-UDF predicate, a non-deterministic
-  expression). Partition columns are derived from the scan line
-  itself (in the output list, absent from ``ReadSchema``).
+  expression).
 
-Detection is plan-text based and versioned against Spark 4's
+Detection reads the executed plan's text, rendered once by
+:func:`render` with ``treeString``'s field limit passed as an argument
+(:data:`MAX_FIELDS`), so no output list is cut short. The cartesian,
+nested-loop, row-python and global-window rules read only that text;
+no rule reads ``ReadSchema`` or ``PushedFilters``, which Spark still
+cuts at its default metadata length. The unpruned-scan rule also
+asks the plan itself which filtered attributes of a full scan are
+partition columns (:func:`partition_attrs`). Nothing sets a conf or takes a lock:
+the caller's session, whose conf text keys the fetch caches, is left
+as it was.
+
+The window rule is versioned against Spark 4's
 ``treeString`` format: a ``Window`` line prints
 ``Window [exprs], [partitionSpec], [orderSpec]`` and OMITS empty
 specs, so 2 top-level bracket groups whose last group carries a sort
@@ -45,9 +55,8 @@ excluded (their 2-group form is the partitioned one).
 
 from __future__ import annotations
 
+import json
 import re
-import threading
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 _WINDOW_NODE = re.compile(r"(?:^|[\s:+-])Window \[")
@@ -114,55 +123,23 @@ def feeding_chain(lines: list[str], idx: int) -> str:
     return "\n".join(out)
 
 
-def _struct_field_names(schema: str) -> set[str] | None:
-    """Top-level field names of a ``struct<name:type,...>`` rendering
-    (nested structs stay inside their ``<>`` depth). Returns ``None``
-    when the struct never CLOSES — plan metadata strings are truncated
-    at ``spark.sql.maxMetadataStringLength`` (default 100) chars, and a
-    cut-off schema would make every later column look like a partition
-    column (the false positive this guard killed on q1's 7-column
-    lineitem scan)."""
-    inner = schema.partition("<")[2]
-    names, depth, start, expect_name = set(), 0, 0, True
-    for i, ch in enumerate(inner):
-        if ch in "<(":
-            # '(' counts like '<': decimal(p,s) carries a comma at
-            # struct depth, and ignoring parens made a TRAILING
-            # decimal field add a phantom name "s)" (caught by
-            # tests/test_doctor_parsers_property.py — mid-struct
-            # decimals happened to self-heal at the next real comma)
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == ">":
-            if depth == 0:
-                if expect_name and inner[start:i].strip():
-                    names.add(inner[start:i].split(":")[0].strip())
-                return names
-            depth -= 1
-        elif ch == "," and depth == 0:
-            start, expect_name = i + 1, True
-        elif ch == ":" and depth == 0 and expect_name:
-            names.add(inner[start:i].strip())
-            expect_name = False
-    return None  # truncated: never saw the closing '>'
+def _mentions(text: str, attr: str) -> bool:
+    """Whether ``text`` holds the attribute token ``attr`` (``name#id``
+    with any type suffix) exactly: not a longer id, not another name."""
+    return bool(
+        re.search(r"(?<![#\w])" + re.escape(attr) + r"(?![0-9A-Za-z])", text)
+    )
 
 
-def unpruned_partition_scans(plan: str) -> list[tuple[int, list[str]]]:
-    """``(line_idx, partition_attr_tokens)`` for every ``FileScan`` of
-    a PARTITIONED table that reads every partition
-    (``PartitionFilters: []``) while some ``Filter`` node elsewhere in
-    the plan references one of that scan's partition-column attributes
-    — the filter exists but never reached the scan (pushdown blocked
-    by a limit, a Python UDF, a non-deterministic expression, ...),
-    the one §4 scale-killer class pruning regressions produce.
-
-    Partition columns are recovered from the scan line itself: they
-    appear in the scan's OUTPUT attribute list but not in
-    ``ReadSchema`` (their values come from directory names, not file
-    bytes). Attribute tokens (``name#id`` with any type suffix) are
-    matched exactly, so a filter on a same-named column of a
-    DIFFERENT scan cannot false-positive."""
+def filtered_full_scans(plan: str) -> list[tuple[int, list[str]]]:
+    """``(line_idx, attr_tokens)`` for every ``FileScan`` that reads
+    every partition (``PartitionFilters: []``): the tokens of its
+    output list that some ``Filter`` line of the plan references. When
+    one of them is a partition column, the filter exists but never
+    reached the scan (pushdown blocked by a limit, a Python UDF, a
+    non-deterministic expression, ...) — the unpruned-scan finding.
+    Tokens are matched exactly, so a filter on a same-named column of
+    a DIFFERENT scan cannot false-positive."""
     out = []
     lines = plan.splitlines()
     filter_lines = [
@@ -171,31 +148,11 @@ def unpruned_partition_scans(plan: str) -> list[tuple[int, list[str]]]:
     for idx, line in enumerate(lines):
         if "FileScan" not in line or "PartitionFilters: []" not in line:
             continue
-        groups = top_level_groups(line)
-        if not groups or "ReadSchema: struct" not in line:
-            continue
-        if "more fields" in groups[0]:
-            continue  # output list truncated (>maxToStringFields cols)
-        attrs = [a.strip() for a in groups[0][1:-1].split(",") if a.strip()]
-        read_names = _struct_field_names(
-            line.partition("ReadSchema: ")[2]
-        )
-        if read_names is None:
-            continue  # schema truncated — can't tell data from partition
-        part_attrs = [
-            a
-            for a in attrs
-            if a.split("#")[0] not in read_names and "#" in a
+        output = [
+            t.strip() for g in top_level_groups(line)[:1] for t in g[1:-1].split(",")
         ]
         filtered = [
-            a
-            for a in part_attrs
-            if any(
-                re.search(
-                    r"(?<![#\w])" + re.escape(a) + r"(?![0-9A-Za-z])", ln
-                )
-                for ln in filter_lines
-            )
+            a for a in output if any(_mentions(ln, a) for ln in filter_lines)
         ]
         if filtered:
             out.append((idx, filtered))
@@ -217,9 +174,11 @@ def unpartitioned_window_lines(plan: str) -> list[int]:
     return out
 
 
-def scale_risks_in_plan(plan: str) -> list[Finding]:
-    """The rule engine over an already-rendered physical-plan string
-    (``df._jdf.queryExecution().executedPlan().toString()``)."""
+def scale_risks_in_plan(
+    plan: str, partition_attrs: frozenset[str]
+) -> list[Finding]:
+    """The rule engine over one :func:`render` result: the physical
+    plan's text and the plan's partition-column attributes."""
     findings: list[Finding] = []
     lines = plan.splitlines()
     for idx, line in enumerate(lines):
@@ -265,7 +224,10 @@ def scale_risks_in_plan(plan: str) -> list[Finding]:
                 "after a top-k limit",
             )
         )
-    for idx, part_attrs in unpruned_partition_scans(plan):
+    for idx, attrs in filtered_full_scans(plan):
+        part_attrs = [a for a in attrs if a in partition_attrs]
+        if not part_attrs:
+            continue
         findings.append(
             Finding(
                 "unpruned-scan",
@@ -283,55 +245,46 @@ def scale_risks_in_plan(plan: str) -> list[Finding]:
     return list(dict.fromkeys(findings))
 
 
-#: Serializes every set-render-restore of the truncation confs below:
-#: they are SESSION-scoped, so two concurrent renders on the same
-#: session (e.g. parallel REST ``explain:true`` requests on the shared
-#: gateway session) would otherwise interleave — one request rendering
-#: with the defaults back in place (truncated ReadSchema → the
-#: unpruned-scan rule silently skips) and the other "restoring" the
-#: inflated values permanently.
-_PLAN_RENDER_LOCK = threading.Lock()
-
-_RENDER_CONFS = {
-    "spark.sql.maxMetadataStringLength": "100000",
-    "spark.sql.debug.maxToStringFields": "10000",
-}
+#: ``treeString``'s field limit: operator output lists print up to this
+#: many attributes, so a wide scan's partition columns are never cut to
+#: "... N more fields". Passed per render, so no session conf is set.
+MAX_FIELDS = 10_000
 
 
-@contextmanager
-def untruncated_plan_confs(spark):
-    """Raise the plan-rendering truncation confs for the duration of
-    one render, restoring them after — under the module lock, so
-    concurrent renders on a shared session serialize instead of
-    tearing each other's conf values. A conf the session had not set is
-    unset again, so a render leaves the session's conf text (the fetch
-    caches' key) as it found it."""
-    with _PLAN_RENDER_LOCK:
-        jconf = spark._jsparkSession.sessionState().conf()  # noqa: SLF001
-        old = {k: spark.conf.get(k) if jconf.contains(k) else None for k in _RENDER_CONFS}
-        for k, v in _RENDER_CONFS.items():
-            spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+def partition_attrs(qe, among: set[str]) -> frozenset[str]:
+    """The members of ``among`` (attribute tokens of ``FileScan``
+    lines) that are partition columns: read from the
+    ``partitionSchema`` of the file relation that outputs them, a
+    ``LogicalRelation`` in ``qe``'s optimized plan or one of its
+    subqueries. Only a relation whose printed output holds a member is
+    asked, which keeps the py4j round trips few: each one waits for the
+    GIL behind every busy thread of a serving process."""
+    plan = qe.optimizedPlan()
+    subqueries = plan.subqueriesAll()
+    out = set()
+    for p in [plan, *(subqueries.apply(i) for i in range(subqueries.length()))]:
+        leaves = p.collectLeaves()
+        for i, desc in enumerate(leaves.mkString("\0").split("\0")):
+            if not desc.startswith("Relation "):
+                continue
+            if "more fields" in desc:  # cut at the session's field limit
+                desc = leaves.apply(i).simpleString(MAX_FIELDS)
+            held = [a for a in among if _mentions(desc, a)]
+            if held:
+                schema = leaves.apply(i).relation().partitionSchema().json()
+                names = {f["name"] for f in json.loads(schema)["fields"]}
+                out.update(a for a in held if a.rpartition("#")[0] in names)
+    return frozenset(out)
 
 
-def full_plan(df) -> str:
-    """``df``'s executed physical plan rendered with metadata strings
-    and field lists long enough to PARSE: the defaults
-    (``spark.sql.maxMetadataStringLength`` = 100,
-    ``spark.sql.debug.maxToStringFields`` = 25) truncate
-    ``ReadSchema``/output lists mid-token on any real fact-table scan,
-    which would blind the unpruned-scan rule (it conservatively skips
-    truncated lines). Both confs are restored after rendering; nothing
-    executes."""
-    with untruncated_plan_confs(df.sparkSession):
-        return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001, E501
+def render(qe) -> tuple[str, frozenset[str]]:
+    """One render of a ``QueryExecution`` for :func:`scale_risks_in_plan`:
+    the executed plan's text (its AQE final plan once the query ran)
+    and the partition attributes among the filtered attributes of its
+    full scans. Nothing executes and no session state is touched."""
+    text = qe.executedPlan().treeString(False, False, MAX_FIELDS, False, False)
+    among = {a for _, attrs in filtered_full_scans(text) for a in attrs}
+    return text, partition_attrs(qe, among) if among else frozenset()
 
 
 def scale_risks(df) -> list[Finding]:
@@ -340,4 +293,4 @@ def scale_risks(df) -> list[Finding]:
     plan does not execute the query (AQE plans render their initial
     plan; both Final and Initial sections are scanned, so a risk in
     either is reported)."""
-    return scale_risks_in_plan(full_plan(df))
+    return scale_risks_in_plan(*render(df._jdf.queryExecution()))  # noqa: SLF001

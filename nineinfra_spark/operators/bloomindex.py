@@ -919,6 +919,7 @@ def bloom_skipping_read(
     returns exactly the rows a full-table filter would — pinned by
     tests/test_bloomindex.py against the unpruned scan."""
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     meta = read_index_meta(path)
     # files_total is the PHYSICAL file count — the denominator a naive
@@ -937,9 +938,11 @@ def bloom_skipping_read(
     if not hit or not probe:
         # schema from the sidecar, never the files: an empty table
         # wrote no parquet at all, and a skipped read must not even
-        # list the directory
+        # list the directory. An empty Arrow table runs no Spark job
+        # (an empty row list runs one).
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        return spark.createDataFrame([], schema), stats
+        empty = to_arrow_schema(schema).empty_table()
+        return spark.createDataFrame(empty, schema), stats
     df = spark.read.schema(_data_schema(meta)).parquet(path)
     out = (
         df.filter(F.col("fid").isin(hit))

@@ -39,40 +39,33 @@ STREAM_SRC_ROOT = "/tmp/nineinfra_stream_src"
 
 #: Micro-batch PHYSICAL plans captured by the replay harness, keyed by
 #: sink/query name plus the ``__last__`` alias for the most recent
-#: capture — the streaming half of the plan lint reads these
+#: capture; each is a ``doctor.render`` result (plan text, partition
+#: attributes) for ``doctor.scale_risks_in_plan(*entry)``. The
+#: streaming half of the plan lint reads these
 #: (tests/test_plan_lint.py): batch queries are linted from their
 #: DataFrame plan, streaming queries from the plan the micro-batch
 #: engine ACTUALLY executed (incremental planner output with the
 #: state-store operators and their Exchanges — the partitioning that
 #: decides whether stateful operators scale).
-MICROBATCH_PLANS: dict[str, str] = {}
+MICROBATCH_PLANS: dict[str, tuple[str, frozenset[str]]] = {}
 
 
 def capture_microbatch_plan(query, name: str) -> None:
-    """Record the last executed micro-batch's physical plan of a
-    (possibly terminated) StreamingQuery. Capture is best-effort: a
-    query whose replay saw zero batches has no lastExecution and is
-    simply not recorded (the lint then fails on the MISSING key —
-    loudly, not with a stale plan). The render runs under
-    ``doctor.untruncated_plan_confs`` — the default
-    ``maxMetadataStringLength=100`` truncates ReadSchema mid-field on
-    any real fact scan, which would silently no-op the unpruned-scan
-    rule on the entire streaming half of the lint."""
-    from nineinfra_spark.doctor import untruncated_plan_confs
+    """Record the last executed micro-batch of a (possibly terminated)
+    StreamingQuery, rendered from its ``lastExecution``. Capture is
+    best-effort: a query whose replay saw zero batches has no
+    lastExecution and is simply not recorded (the lint then fails on
+    the MISSING key — loudly, not with a stale plan)."""
+    from nineinfra_spark.doctor import render
 
     try:
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            with untruncated_plan_confs(spark):
-                plan = query._jsq.explainInternal(False)  # noqa: SLF001
-        else:
-            plan = query._jsq.explainInternal(False)  # noqa: SLF001
+        qe = query._jsq.streamingQuery().lastExecution()  # noqa: SLF001
+        if qe is None:
+            return
+        rendered = render(qe)
     except Exception:
         return
-    if "No physical plan" in plan:
-        return
-    MICROBATCH_PLANS[name] = plan
-    MICROBATCH_PLANS["__last__"] = plan
+    MICROBATCH_PLANS[name] = MICROBATCH_PLANS["__last__"] = rendered
 
 
 def _staged_table_dir(sf_dir: str, table: str) -> str:

@@ -6,9 +6,12 @@ bench methodology (warm-up + N noop-sink runs, median) under the same
 Engine/conf as bench.py. Jobs are labelled via setJobDescription.
 
 Usage:
-  python scripts/profile_query.py [--time N] [--tag r16] [--suffix before] \
+  python scripts/profile_query.py --tag TAG [--time N] [--suffix before] \
       [--sf DIR] name [name ...]
   (no names -> the bench HEADLINE list)
+
+``--tag`` is required: ``plans/<tag>/`` holds committed captures, so
+the script never picks a directory to overwrite on its own.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ def main() -> int:
     args = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_time = 0
-    tag, suffix = "r16", "before"
+    tag, suffix = None, "before"
     names: list[str] = []
     i = 0
     while i < len(args):
@@ -41,6 +44,14 @@ def main() -> int:
             sf_dir = args[i + 1]; i += 2
         else:
             names.append(args[i]); i += 1
+    if tag is None:
+        print(
+            "usage: python scripts/profile_query.py --tag TAG [--time N] "
+            "[--suffix SUFFIX] [--sf DIR] [name ...]\n"
+            "error: --tag is required (plans/<tag>/ holds committed captures)",
+            file=sys.stderr,
+        )
+        return 2
 
     from nineinfra_spark.engine import Engine
 

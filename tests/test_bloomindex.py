@@ -1046,6 +1046,32 @@ def test_small_index_probe_runs_one_job(spark, indexed, count_jobs):
     assert [(r["key"], r["payload"]) for r in rows] == [(key, 126)]
 
 
+def test_empty_probe_runs_no_job(spark, indexed, count_jobs):
+    """A probe that admits no file, and an all-NULL probe, answer from
+    an empty frame built on the driver: no Spark job, and the sidecar's
+    schema (names, types, nullability)."""
+    import json
+
+    from pyspark.sql import types as T
+
+    path, meta, _ = indexed
+    miss = next(
+        k
+        for k in (f"absent-{i}" for i in range(1000))
+        if not bloom_probe_files_table(spark, path, [k])
+    )
+    schema = T.StructType.fromJson(json.loads(meta["schema"]))
+
+    def probe(keys):
+        out, stats = bloom_skipping_read(spark, path, keys)
+        return out, stats, out.collect()
+
+    for keys in ([miss], [None, None]):
+        (out, stats, rows), jobs = count_jobs(lambda: probe(keys))
+        assert (jobs, rows, stats["files_hit"]) == (0, [], 0), keys
+        assert out.schema == schema
+
+
 def test_second_write_onto_index_raises_and_leaves_it_unchanged(
     spark, tmp_path
 ):

@@ -8,6 +8,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 import pandas as pd
+import pytest
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -172,89 +173,133 @@ def test_limit_on_join_build_side_does_not_suppress_global_window(spark):
     assert "global-window" in _kinds(ranked)
 
 
-def test_untruncated_plan_confs_serialize_and_restore(spark):
-    """Review finding (r11): full_plan's conf set-render-restore is
-    session-scoped state — two concurrent renders on a shared session
-    (parallel REST explain:true requests) could interleave so one
-    rendered truncated and the other "restored" the inflated values
-    permanently. The context manager must hold a lock for the whole
-    set→render→restore span and always restore the ORIGINAL value."""
-    import threading
-
-    from nineinfra_spark.doctor import untruncated_plan_confs
-
-    key = "spark.sql.maxMetadataStringLength"
-    original = spark.conf.get(key)
-    inside_a = threading.Event()
-    b_entered = threading.Event()
-    seen = {}
-
-    def hold_a():
-        with untruncated_plan_confs(spark):
-            seen["a"] = spark.conf.get(key)
-            inside_a.set()
-            # B must NOT get in while A holds the lock
-            assert not b_entered.wait(timeout=0.4)
-
-    def try_b():
-        inside_a.wait(timeout=5)
-        with untruncated_plan_confs(spark):
-            b_entered.set()
-            seen["b"] = spark.conf.get(key)
-
-    ta = threading.Thread(target=hold_a)
-    tb = threading.Thread(target=try_b)
-    ta.start()
-    tb.start()
-    ta.join()
-    tb.join()
-    # both renders saw the raised value; neither saw the other's
-    # temporary as its baseline
-    assert seen["a"] == "100000"
-    assert seen["b"] == "100000"
-    assert b_entered.is_set()
-    # and the session ends where it started, not inflated
-    assert spark.conf.get(key) == original
+def _write_partitioned(spark, path: str, n_cols: int = 0) -> str:
+    """A parquet table partitioned on ``dt`` ('a'/'b'), with ``id``
+    plus ``n_cols`` long-named data columns."""
+    extra = [
+        (F.col("id") + i).alias(f"a_rather_long_data_column_name_{i:02d}")
+        for i in range(n_cols)
+    ]
+    (
+        spark.range(200)
+        .select(
+            "id",
+            *extra,
+            F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("dt"),
+        )
+        .write.partitionBy("dt")
+        .parquet(path)
+    )
+    return path
 
 
-def test_untruncated_plan_confs_leave_the_conf_text_unchanged(spark):
-    """A render on a session that never set the truncation confs
-    unsets them again: the session's SQL conf text, which keys the
-    fetch result cache and the statement templates, is what it was."""
-    from nineinfra_spark.doctor import untruncated_plan_confs
+_RENDER_CONFS = (
+    "spark.sql.maxMetadataStringLength",
+    "spark.sql.debug.maxToStringFields",
+)
 
+
+@pytest.mark.parametrize("confs", ["unset", "set"])
+def test_doctor_writes_no_session_state(spark, tmp_path, monkeypatch, confs):
+    """The doctor reads the plan and nothing else: no conf is set or
+    unset on the caller's session, whether the session left the
+    plan-rendering confs at their defaults or set them itself, and the
+    session's SQL conf text (the fetch caches' key) is unchanged."""
     sess = spark.newSession()
+    if confs == "set":
+        sess.conf.set(_RENDER_CONFS[0], "100")
+        sess.conf.set(_RENDER_CONFS[1], "25")
+    p = _write_partitioned(sess, str(tmp_path / "part_tbl"))
+    blocked = sess.read.parquet(p).limit(50).filter(F.col("dt") == "a")
     jconf = sess._jsparkSession.sessionState().conf()
     before = jconf.getAllConfs().toString()
-    with untruncated_plan_confs(sess):
-        assert sess.conf.get("spark.sql.maxMetadataStringLength") == "100000"
+    calls = []
+    conf_cls = type(sess.conf)
+    for name in ("set", "unset"):
+        real = getattr(conf_cls, name)
+
+        def spy(self, *args, _name=name, _real=real):
+            calls.append((_name, args))
+            return _real(self, *args)
+
+        monkeypatch.setattr(conf_cls, name, spy)
+    assert "unpruned-scan" in _kinds(blocked)
+    assert calls == []
     assert jconf.getAllConfs().toString() == before
 
 
-def test_microbatch_capture_renders_untruncated(spark):
-    """Review finding (r11): the streaming plan capture rendered under
-    the DEFAULT truncation confs, silently no-opping the unpruned-scan
-    lint rule on the streaming half. The capture must raise the
-    rendering confs for the explainInternal call."""
+def test_unpruned_scan_flagged_on_wide_table(spark, tmp_path):
+    """A scan with 40 long-named data columns: its output list runs
+    past the default field limit and its ReadSchema past the default
+    metadata length, and the blocked partition filter is still seen."""
+    p = _write_partitioned(spark, str(tmp_path / "wide_tbl"), n_cols=40)
+    blocked = spark.read.parquet(p).limit(50).filter(F.col("dt") == "a")
+    assert "unpruned-scan" in _kinds(blocked)
+
+
+def test_unpruned_scan_flagged_inside_scalar_subquery(spark, tmp_path):
+    """The partition attributes of a relation inside a scalar subquery
+    are found too: the same blocked filter one level down."""
+    p = _write_partitioned(spark, str(tmp_path / "part_tbl"))
+    df = spark.sql(
+        "SELECT id, (SELECT count(*) FROM "
+        f"(SELECT * FROM parquet.`{p}` LIMIT 50) WHERE dt = 'a') AS n "
+        "FROM range(3)"
+    )
+    assert "unpruned-scan" in _kinds(df)
+
+
+def test_nested_loop_flagged_inside_scalar_subquery(spark):
+    df = spark.sql(
+        "SELECT id, (SELECT count(*) FROM range(100) a CROSS JOIN "
+        "(SELECT count(*) AS c FROM range(1)) b) AS n FROM range(3)"
+    )
+    assert "nested-loop" in _kinds(df)
+
+
+def test_global_window_same_findings_after_execution(spark):
+    """Once the query ran, the executed plan is AQE's final plan; the
+    findings are those of the unexecuted plan."""
+    df = spark.range(100).withColumn(
+        "r", F.row_number().over(Window.orderBy("id"))
+    )
+    before = _kinds(df)
+    df.collect()
+    assert "isFinalPlan=true" in doctor.render(df._jdf.queryExecution())[0]
+    assert _kinds(df) == before == ["global-window"]
+
+
+def test_microbatch_capture_flags_unpruned_scan(spark, tmp_path):
+    """A captured micro-batch over a partitioned file-source stream
+    carries the batch relation's partition attributes: a filter on the
+    partition column that a Python UDF keeps from the scan is
+    flagged."""
     from nineinfra_spark.streaming import ops
 
-    key = "spark.sql.maxMetadataStringLength"
-
-    class FakeJsq:
-        def explainInternal(self, _extended):
-            return f"conf={spark.conf.get(key)}"
-
-    class FakeQuery:
-        _jsq = FakeJsq()
-
-    original = spark.conf.get(key)
+    src = _write_partitioned(spark, str(tmp_path / "stream_src"))
+    is_a = F.udf(lambda d: d == "a", "boolean")
+    stream = (
+        spark.readStream.schema("id long, dt string")
+        .parquet(src)
+        .filter((F.col("dt") == "a") | is_a(F.col("dt")))
+    )
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("doctor_partitioned_stream")
+        .trigger(availableNow=True)
+        .start()
+    )
     prev_last = ops.MICROBATCH_PLANS.get("__last__")
-    ops.capture_microbatch_plan(FakeQuery(), "capture_conf_probe")
     try:
-        assert ops.MICROBATCH_PLANS["capture_conf_probe"] == "conf=100000"
-        assert spark.conf.get(key) == original
+        q.awaitTermination()
+        ops.capture_microbatch_plan(q, "doctor_partitioned_stream")
+        plan, part_attrs = ops.MICROBATCH_PLANS["doctor_partitioned_stream"]
+        kinds = {f.kind for f in doctor.scale_risks_in_plan(plan, part_attrs)}
+        assert kinds == {"row-python", "unpruned-scan"}, plan
     finally:
-        ops.MICROBATCH_PLANS.pop("capture_conf_probe", None)
+        q.stop()
+        spark.catalog.dropTempView("doctor_partitioned_stream")
+        ops.MICROBATCH_PLANS.pop("doctor_partitioned_stream", None)
         if prev_last is None:
             ops.MICROBATCH_PLANS.pop("__last__", None)
         else:

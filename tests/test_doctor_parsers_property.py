@@ -1,6 +1,6 @@
-"""Property tests for the plan-doctor's plan-TEXT parsers — the three
+"""Property tests for the plan-doctor's plan-TEXT parsers — the two
 pure functions every lint verdict rests on (`top_level_groups`,
-`_struct_field_names`, `node_col`). The behavioral suites
+`node_col`). The behavioral suites
 (test_doctor.py, test_plan_lint.py) pin verdicts on real plans; these
 pin the parsers on GENERATED inputs, because a parser that mis-splits
 one exotic-but-legal rendering silently flips a lint from "swept" to
@@ -11,11 +11,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from nineinfra_spark.doctor import (
-    _struct_field_names,
-    node_col,
-    top_level_groups,
-)
+from nineinfra_spark.doctor import node_col, top_level_groups
 
 # -- top_level_groups --------------------------------------------------------
 
@@ -39,41 +35,6 @@ def test_groups_nesting_stays_inside(depth, payload):
     line = "Node " + "[" * depth + payload + "]" * depth + " tail"
     groups = top_level_groups(line)
     assert groups == ["[" * depth + payload + "]" * depth]
-
-
-# -- _struct_field_names -----------------------------------------------------
-
-_name = st.text(alphabet="abcdefgh_", min_size=1, max_size=8)
-_scalar = st.sampled_from(
-    ["int", "bigint", "string", "double", "decimal(12,2)",
-     "decimal(38,18)", "array<int>", "map<string,int>",
-     "struct<x:int,y:decimal(10,2)>"]
-)
-
-
-@given(st.dictionaries(_name, _scalar, min_size=1, max_size=8))
-def test_struct_names_recovered_exactly(fields):
-    """Rendered struct<k:v,...> gives back exactly the top-level keys
-    — paren commas (decimal), nested structs, maps never add or drop
-    a name."""
-    rendered = "struct<" + ",".join(
-        f"{k}:{v}" for k, v in fields.items()
-    ) + ">"
-    assert _struct_field_names(rendered) == set(fields)
-
-
-@given(st.dictionaries(_name, _scalar, min_size=1, max_size=8),
-       st.integers(min_value=1, max_value=20))
-def test_truncated_struct_returns_none(fields, cut):
-    """A schema cut anywhere before its closing '>' must parse as None
-    (unknown), never as a smaller valid name set — the conservative
-    direction that keeps the unpruned-scan rule from false-positives
-    on maxMetadataStringLength-truncated lines."""
-    rendered = "struct<" + ",".join(
-        f"{k}:{v}" for k, v in fields.items()
-    ) + ">"
-    truncated = rendered[: max(len("struct<"), len(rendered) - cut)]
-    assert _struct_field_names(truncated) is None
 
 
 # -- node_col ----------------------------------------------------------------

@@ -26,11 +26,11 @@ test, so a regression can't sneak in behind a green differential:
    use ``_util.ranked_prefix`` instead).
 5. No unpruned partitioned scan: a ``FileScan`` whose
    ``PartitionFilters`` is empty while a ``Filter`` elsewhere in the
-   plan references one of that scan's partition columns (derived from
-   the scan line: in the output list, absent from ``ReadSchema``) —
-   the pruning-regression class nothing excuses. Plans are rendered
-   via ``doctor.full_plan`` (metadata un-truncated) so the rule can
-   read wide fact-table scan lines.
+   plan references one of that scan's partition columns (read from
+   the plan's file relations) — the pruning-regression class nothing
+   excuses. Plans are rendered
+   via ``doctor.render``: the plan text with every output attribute,
+   plus the partition attributes read from the plan's relations.
 
 Coverage is the WHOLE registry (r11 closed the skip list): batch
 queries are linted from their DataFrame plan; queries whose build
@@ -69,10 +69,15 @@ _LINTABLE = [
 _ROW_PYTHON_OK = {"udf_scalar_python", "udf_sql_registered", "udf_python_udtf"}
 
 
+def _render(spark, name: str) -> tuple[str, frozenset[str]]:
+    """``doctor.render`` of the query's plan: its text and its
+    partition-column attributes."""
+    df = registry.get(name).fn(spark, SF)
+    return doctor.render(df._jdf.queryExecution())
+
+
 def _plan(spark, name: str) -> str:
-    # full_plan: metadata strings un-truncated, so the unpruned-scan
-    # rule can actually read ReadSchema on wide fact-table scans
-    return doctor.full_plan(registry.get(name).fn(spark, SF))
+    return _render(spark, name)[0]
 
 
 # the detection helpers live in nineinfra_spark.doctor — the
@@ -93,9 +98,8 @@ _TAG_EXCUSES = {
 @pytest.mark.parametrize("name", _LINTABLE)
 def test_plan_scale_rules(spark, name):
     tags = set(registry.get(name).tags)
-    plan = _plan(spark, name)
 
-    for f in doctor.scale_risks_in_plan(plan):
+    for f in doctor.scale_risks_in_plan(*_render(spark, name)):
         if f.kind == "row-python":
             assert name in _ROW_PYTHON_OK, (
                 f"{name}: {f.kind} — {f.hint}\n{f.line}"
@@ -152,11 +156,11 @@ _STATE_KEYED = {
 }
 
 
-def _microbatch_plan(spark, name: str) -> str:
+def _microbatch_plan(spark, name: str) -> tuple[str, frozenset[str]]:
     """Run the streaming query's replay (availableNow at the smoke SF)
-    and return the physical plan of the last executed micro-batch —
-    captured by ``streaming.ops.capture_microbatch_plan`` at every
-    harness exit point."""
+    and return the ``doctor.render`` result of the last executed
+    micro-batch — captured by ``streaming.ops.capture_microbatch_plan``
+    at every harness exit point."""
     from nineinfra_spark.streaming import ops
 
     ops.MICROBATCH_PLANS.pop("__last__", None)
@@ -173,9 +177,9 @@ def test_streaming_microbatch_plan_rules(spark, name):
     the incremental planner, with the state-store operators the batch
     plan never shows) passes the same rule engine, and the stateful
     witnesses prove their state is partitioned on its key."""
-    plan = _microbatch_plan(spark, name)
+    plan, part_attrs = _microbatch_plan(spark, name)
     tags = set(registry.get(name).tags)
-    for f in doctor.scale_risks_in_plan(plan):
+    for f in doctor.scale_risks_in_plan(plan, part_attrs):
         if f.kind == "row-python":
             assert name in _ROW_PYTHON_OK, (
                 f"{name}: {f.kind} — {f.hint}\n{f.line}"

@@ -19,6 +19,19 @@ SF = "/root/testdata/sf0.001"
 OUT = "/tmp/nineinfra_zorder_test"
 
 
+def _scan_metadata(df, key: str) -> str:
+    """``key`` of the file scan's metadata map (``PushedFilters``,
+    ``PartitionFilters``, ...), whole: the plan text cuts each metadata
+    value at ``spark.sql.maxMetadataStringLength`` chars."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            return leaf.metadata().apply(key)
+    raise AssertionError(f"no file scan in\n{plan.toString()}")
+
+
 def _interleave(cells: list[int], bits: int) -> int:
     z, k = 0, len(cells)
     for b in range(bits):
@@ -240,12 +253,7 @@ class TestSkippingRead:
             & (F.col("value") >= F.lit(10.0))
             & (F.col("value") <= F.lit(100.0))
         )
-        from nineinfra_spark.doctor import full_plan
-
-        plan = full_plan(boxed)  # untruncated metadata render
-        pushed = [
-            ln for ln in plan.splitlines() if "PushedFilters:" in ln
-        ][0]
+        pushed = _scan_metadata(boxed, "PushedFilters")
         for token in (
             "GreaterThanOrEqual(user_id", "LessThanOrEqual(user_id",
             "GreaterThanOrEqual(value", "LessThanOrEqual(value",
@@ -662,17 +670,15 @@ def test_append_reads_only_dirty_buckets(spark, tmp_path):
     ]
     import re
 
-    from nineinfra_spark.doctor import full_plan
-
     pruned = spark.read.parquet(out).filter(F.col("zb").isin(dirty))
-    plan = full_plan(pruned)
+    part_filters = _scan_metadata(pruned, "PartitionFilters")
     # the dirty-bucket predicate must land in the scan's
     # PartitionFilters (directory-level pruning — non-dirty files are
     # never OPENED), not merely in a post-scan Filter. NB
     # inputFiles() can't witness this: it reports the relation's file
     # index BEFORE partition-filter application.
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m, plan
+    m = re.fullmatch(r"\[(.*)\]", part_filters)
+    assert m, part_filters
     assert re.search(r"zb#\d+ IN \(", m.group(1)), m.group(1)
     for b in dirty:
         assert str(b) in m.group(1), (dirty, m.group(1))
